@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.iceberg.{CommitConflict, IcebergCommitter, TableIO}
 import graft.table.{Compaction, EventTable, Maintenance}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.net.InetSocketAddress
@@ -734,14 +734,19 @@ final class GatewayServer(
   }
 
   /** F2–F8 + F11: flush hot events past the committed watermark through the
-    * Spark write path, commit snapshots, evict covered events. One pass
-    * reads at most `maxFlushBytes` (the reference's `max_segment_size`
-    * bound) and commits one snapshot; passes repeat until the backlog is
-    * drained, each over per-partition sequence-contiguous prefixes so
-    * sequences stay dense. A `table_schema.json` in the table root switches
-    * the flush to schema-on-flush extraction (typed columns +
-    * `_payload_overflow`). Serialized per table with compaction — both
-    * rewrite the same table dir. */
+    * Spark write path, commit snapshots, evict covered events. The call
+    * captures the hot tier's high watermarks when it starts and commits
+    * every event acknowledged before that point — later arrivals wait for
+    * the next call, so under steady load one call makes one commit and
+    * always returns (the reference's timer tick, and a Structured Streaming
+    * trigger fixing its end offset). One pass reads at most
+    * `maxFlushBytes` (the reference's `max_segment_size` bound) and commits
+    * one snapshot; a backlog larger than that takes several passes, each
+    * over per-partition sequence-contiguous prefixes so sequences stay
+    * dense. A `table_schema.json` in the table root switches the flush to
+    * schema-on-flush extraction (typed columns + `_payload_overflow`).
+    * Serialized per table with compaction — both rewrite the same table
+    * dir. */
   def flushNow(topic: String): Option[Long] = tableLock(topic).synchronized {
     val c0   = committer(topic)
     val root = s"$baseDir/$topic"
@@ -790,66 +795,76 @@ final class GatewayServer(
             s"$topic: table_schema.json is missing or invalid but the committed schema declares " +
             "extraction without a payload field; restore the config (or evolve the schema) before flushing")
     }
-    var committed      = c.maxCommittedSequencePerPartition()
+    val upTo      = Some(hot.highWatermarks(topic))
+    var committed = c.maxCommittedSequencePerPartition()
     var last: Option[Long] = None
-    var done = false
-    while (!done) {
-      val batch = hot.pendingForFlush(topic, committed, maxFlushBytes)
-      if (batch.isEmpty) {
-        // still advance hot cleanup — covers a crash between a past commit
-        // and its eviction (the reference's cleanup cycle does the same)
-        hot.cleanup(topic, committed, retentionMs)
-        done = true
-      } else {
-        val t0 = System.nanoTime()
-        val schema = StructType(Seq(
-          StructField("sequence", LongType, nullable = false),
-          StructField("topic", StringType, nullable = false),
-          StructField("payload", BinaryType, nullable = false),
-          StructField("timestamp_ms", LongType, nullable = false),
-          StructField("idempotency_key", StringType, nullable = true),
-          StructField("partition", IntegerType, nullable = false)
-        ))
-        val rows = batch.map(e =>
-          Row(e.sequence, e.topic, e.payload, e.timestampMs, e.idempotencyKey.orNull, e.partition))
-        val base = spark
-          .createDataFrame(spark.sparkContext.parallelize(rows.toSeq, math.max(1, rows.size / 10000)), schema)
-          .withColumn("event_date", expr("date_add(date '1970-01-01', cast(timestamp_ms div 86400000 as int))"))
-          .withColumn("event_hour", expr("cast((timestamp_ms div 3600000) % 24 as int)"))
-
-        val df = tableSchemaConfig(topic) match {
-          case None =>
-            base.select("sequence", "topic", "payload", "timestamp_ms", "idempotency_key",
-                        "event_date", "event_hour", "partition")
-          case Some(cfg) =>
-            graft.extract.PayloadExtractor
-              .extract(base, col("payload"), cfg)
-              .select(Seq(col("sequence"), col("topic"), col("timestamp_ms"), col("idempotency_key"),
-                          col("event_date"), col("event_hour")) ++
-                      cfg.fields.map(f => col(f.name)) ++
-                      Seq(col("_payload_overflow"), col("partition")): _*)
-        }
-
-        val newFiles  = EventTable.writeData(df, root, // exact file list, no dir diff
-                                             dateLayout = EventTable.dateLayoutOf(c))
-        val dataFiles = EventTable.collectDataFiles(spark, root, newFiles)
-        val wm        = EventTable.watermarksOf(dataFiles)
-        val res       = c.commitAppend(dataFiles, wm)
-        hot.cleanup(topic, wm, retentionMs) // F11
-        metrics.inc("zombi_flushes_total")
-        metrics.inc("zombi_flush_events_total", batch.size.toLong)
-        metrics.inc("zombi_flush_bytes_total", batch.map(_.payload.length.toLong).sum)
-        metrics.inc("zombi_snapshots_total")
-        metrics.observeMs("zombi_flush_latency_ms", (System.nanoTime() - t0) / 1e6)
-        catalog.foreach { cl => // F13
-          val v = res.version
-          cl.register(namespace, topic, s"$root/${c.versionFile(v)}", new String(c.io.get(c.versionFile(v)), "UTF-8"))
-        }
-        committed = committed ++ wm
-        last = Some(res.snapshotId)
+    var batch = hot.pendingForFlush(topic, committed, maxFlushBytes, upTo)
+    while (batch.nonEmpty) {
+      val t0 = System.nanoTime()
+      val (frame, stats) = batchFrame(batch)
+      val base = frame
+        .withColumn("event_date", expr("date_add(date '1970-01-01', cast(timestamp_ms div 86400000 as int))"))
+        .withColumn("event_hour", expr("cast((timestamp_ms div 3600000) % 24 as int)"))
+      val df = tableSchemaConfig(topic) match {
+        case None =>
+          base.select("sequence", "topic", "payload", "timestamp_ms", "idempotency_key",
+                      "event_date", "event_hour", "partition")
+        case Some(cfg) =>
+          graft.extract.PayloadExtractor
+            .extract(base, col("payload"), cfg)
+            .select(Seq(col("sequence"), col("topic"), col("timestamp_ms"), col("idempotency_key"),
+                        col("event_date"), col("event_hour")) ++
+                    cfg.fields.map(f => col(f.name)) ++
+                    Seq(col("_payload_overflow"), col("partition")): _*)
       }
+      val newFiles  = EventTable.writeData(df, root, // exact file list, no dir diff
+                                           precomputedStats = Some(stats), clustered = true,
+                                           seqBase = committed, dateLayout = EventTable.dateLayoutOf(c))
+      val dataFiles = EventTable.collectDataFiles(spark, root, newFiles)
+      val wm        = EventTable.watermarksOf(dataFiles)
+      val res       = c.commitAppend(dataFiles, wm)
+      hot.cleanup(topic, wm, retentionMs) // F11
+      metrics.inc("zombi_flushes_total")
+      metrics.inc("zombi_flush_events_total", batch.size.toLong)
+      metrics.inc("zombi_flush_bytes_total", batch.map(_.payload.length.toLong).sum)
+      metrics.inc("zombi_snapshots_total")
+      metrics.observeMs("zombi_flush_latency_ms", (System.nanoTime() - t0) / 1e6)
+      catalog.foreach { cl => // F13
+        val v = res.version
+        cl.register(namespace, topic, s"$root/${c.versionFile(v)}", new String(c.io.get(c.versionFile(v)), "UTF-8"))
+      }
+      committed = committed ++ wm
+      last = Some(res.snapshotId)
+      batch = hot.pendingForFlush(topic, committed, maxFlushBytes, upTo)
     }
+    // still advance hot cleanup — covers a crash between a past commit and
+    // its eviction, and retained events of partitions this call did not
+    // touch (the reference's cleanup cycle does the same)
+    hot.cleanup(topic, committed, retentionMs)
     last
+  }
+
+  /** A flush batch as a DataFrame laid out on the Spark driver, with its
+    * per-partition `(partition, rows, bytes)` profile (the reference's
+    * payload+64B estimate) — so the write needs no profiling job. Slices
+    * hold whole log partitions, at most `defaultParallelism` of them,
+    * balanced by bytes (largest partition first onto the lightest slice),
+    * so the write needs no shuffle either. */
+  private def batchFrame(batch: Seq[StoredEvent]): (DataFrame, Seq[(Int, Long, Long)]) = {
+    val stats = batch.groupBy(_.partition).toSeq
+      .map { case (p, es) => (p, es, es.iterator.map(_.payload.length + 64L).sum) }
+      .sortBy { case (p, _, bytes) => (-bytes, p) }
+    val n      = math.max(1, math.min(stats.size, spark.sparkContext.defaultParallelism))
+    val load   = Array.fill(n)(0L)
+    val slices = Array.fill(n)(Vector.newBuilder[Row])
+    stats.foreach { case (_, es, bytes) =>
+      val k = load.indices.minBy(load(_))
+      es.foreach(e => slices(k) += Row(e.sequence, e.topic, e.payload, e.timestampMs, e.idempotencyKey.orNull, e.partition))
+      load(k) += bytes
+    }
+    val rows = spark.sparkContext.parallelize(slices.toSeq.map(_.result()), n).flatMap(identity)
+    (spark.createDataFrame(rows, GatewayServer.FlushSchema),
+     stats.map { case (p, es, bytes) => (p, es.size.toLong, bytes) })
   }
 
   // ----------------------------------------------------- auto-maintenance
@@ -1001,6 +1016,16 @@ final class GatewayServer(
 }
 
 object GatewayServer {
+  /** Hot events as the flush hands them to Spark. */
+  private val FlushSchema = StructType(Seq(
+    StructField("sequence", LongType, nullable = false),
+    StructField("topic", StringType, nullable = false),
+    StructField("payload", BinaryType, nullable = false),
+    StructField("timestamp_ms", LongType, nullable = false),
+    StructField("idempotency_key", StringType, nullable = true),
+    StructField("partition", IntegerType, nullable = false)
+  ))
+
   /** Thresholds for [[GatewayServer#maintainIfNeeded]] — sized so a
     * 5-minute-flush table vacuums a few times a day, and ANY lingering MoR
     * delete weight (5% of rows) triggers a fold rather than taxing every

@@ -135,14 +135,21 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
   def readPartition(topic: String, partition: Int, fromSeq: Long, limit: Int): Seq[StoredEvent] =
     synchronized {
       val buf = events.getOrElse((topic, partition), mutable.ArrayBuffer.empty)
-      var lo  = 0
-      var hi  = buf.size
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (buf(mid).sequence < fromSeq) lo = mid + 1 else hi = mid
-      }
+      val lo  = seek(buf, fromSeq)
       buf.slice(lo, math.min(buf.size, lo + limit)).toSeq
     }
+
+  /** Index of the first event with sequence >= `fromSeq` (binary search
+    * over the sequence-ordered buffer). */
+  private def seek(buf: mutable.ArrayBuffer[StoredEvent], fromSeq: Long): Int = {
+    var lo = 0
+    var hi = buf.size
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (buf(mid).sequence < fromSeq) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
 
   /** Q2+Q3: all-partition merge read ordered by event time, with optional
     * since filter (`rocksdb.rs:1017-1062`). */
@@ -156,27 +163,31 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
       .take(limit)
   }
 
-  /** Buffered events past the committed watermark — the flush input.
-    * `maxBytes` bounds one flush pass (the reference's `max_segment_size`,
-    * `/root/reference/src/flusher/mod.rs:338-456`): per-partition
-    * SEQUENCE-CONTIGUOUS prefixes are taken until the budget is spent (at
-    * least one event is always taken so a pass makes progress), so repeated
-    * passes drain a backlog with dense sequences preserved. */
+  /** Buffered events in `(committed, upTo]` per partition — the flush
+    * input. `upTo` is the bound a flush captured when it started (absent:
+    * no bound); events past it are neither returned nor charged to the
+    * budget. `maxBytes` bounds one flush pass (the reference's
+    * `max_segment_size`, its `src/flusher/mod.rs:338-456`):
+    * per-partition SEQUENCE-CONTIGUOUS prefixes are taken until the budget
+    * is spent (at least one event is always taken so a pass makes
+    * progress), so repeated passes cover a backlog with dense sequences
+    * preserved. Each partition's first uncommitted event is found by
+    * binary search, as in [[readPartition]], not by walking the retained
+    * committed prefix. */
   def pendingForFlush(topic: String, committed: Map[Int, Long],
-                      maxBytes: Long = Long.MaxValue): Seq[StoredEvent] = synchronized {
+                      maxBytes: Long = Long.MaxValue,
+                      upTo: Option[Map[Int, Long]] = None): Seq[StoredEvent] = synchronized {
     var budget = maxBytes
     val out    = Seq.newBuilder[StoredEvent]
     events.toSeq.collect { case ((t, p), buf) if t == topic => (p, buf) }.sortBy(_._1)
       .foreach { case (p, buf) =>
-        val pend = buf.iterator.filter(_.sequence > committed.getOrElse(p, 0L))
-        var go   = true
-        while (go && pend.hasNext) {
-          if (budget <= 0L) go = false
-          else {
-            val e = pend.next()
-            out += e
-            budget -= e.payload.length.toLong + 64L
-          }
+        val hi = upTo.fold(Long.MaxValue)(_.getOrElse(p, 0L))
+        var i  = seek(buf, committed.getOrElse(p, 0L) + 1)
+        while (budget > 0L && i < buf.size && buf(i).sequence <= hi) {
+          val e = buf(i)
+          out += e
+          budget -= e.payload.length.toLong + 64L
+          i += 1
         }
       }
     out.result()

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * configuration with the reference's names and defaults, start the HTTP
   * gateway over a local Spark session, and run the flusher timer loop
   * (F1: wake every `ZOMBI_FLUSH_INTERVAL_SECS`, flush every hot topic;
-  * `/root/reference/src/flusher/mod.rs:514-650`). Shutdown flushes
-  * everything pending (F12) before stopping.
+  * the reference's `src/flusher/mod.rs:514-650`). Shutdown stops
+  * admission, then flushes every acknowledged event (F12).
   */
 object Serve {
   final case class Config(
@@ -52,14 +52,17 @@ object Serve {
       catalog = cfg.catalog
     )
 
-  /** F1: the flusher timer thread — wake on interval, flush what arrived;
-    * with `maintain` on, the SAME clock then probes each topic's metadata
+  /** F1: the flusher timer thread — wake on interval and flush, per topic,
+    * what was acknowledged by then; events arriving during the flush wait
+    * for the next tick, so each tick commits its own backlog and returns
+    * (the reference's timer loop, `flusher/mod.rs:514-650`). With
+    * `maintain` on, the SAME clock then probes each topic's metadata
     * thresholds and vacuums the ones that crossed one
     * ([[GatewayServer#maintainIfNeeded]] — the reference's timer loop runs
-    * every eroding invariant, `flusher/mod.rs:514-650`, and snapshot/
-    * manifest/delete-mask accretion is this engine's). The probe is
-    * summary-reads only, so per-tick over all topics is cheap; a triggered
-    * vacuum interleaves with flushes via the per-table step lock. */
+    * every eroding invariant, and snapshot/manifest/delete-mask accretion
+    * is this engine's). The probe is summary-reads only, so per-tick over
+    * all topics is cheap; a triggered vacuum interleaves with flushes via
+    * the per-table step lock. */
   def flushDaemon(gw: GatewayServer, intervalMs: Long, maintain: Boolean = true): Thread = {
     val t = new Thread(() => {
       try while (!Thread.currentThread().isInterrupted) {
@@ -105,12 +108,18 @@ object Serve {
     val port = gw.start()
     val daemon = flushDaemon(gw, cfg.flushIntervalSecs * 1000L, maintain = cfg.autoMaintenance)
     daemon.start()
-    sys.addShutdownHook {
+    // F12. Registered with Hadoop's hook manager ahead of Spark's own hook
+    // (priority FileSystem.SHUTDOWN_HOOK_PRIORITY + 30), which stops the
+    // SparkContext: a plain JVM hook would run concurrently with it and
+    // flush on a stopped context.
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
       daemon.interrupt()
-      gw.hot.topics.foreach(t => try gw.flushNow(t) catch { case _: Exception => () }) // F12
+      // stop admission first, so the final flush (which commits what was
+      // acknowledged before it started) covers every acked event
       gw.stop()
+      gw.hot.topics.foreach(t => try gw.flushNow(t) catch { case _: Exception => () })
       graft.core.SessionMemo.release(spark) // free memoized cached frames
-    }
+    }, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 40)
     println(s"""{"status":"serving","port":$port,"data_dir":"${cfg.dataDir}","flush_interval_secs":${cfg.flushIntervalSecs}}""")
     Thread.currentThread().join() // serve until killed
   }

@@ -245,4 +245,57 @@ class DurabilitySpec extends AnyFunSuite {
     // nothing left pending
     assert(gw.hot.pendingForFlush("capt", c.maxCommittedSequencePerPartition()).isEmpty)
   }
+
+  test("flush is tick-bounded: commits what was acked before the call, later arrivals wait") {
+    val dir = Files.createTempDirectory("graft-flushtick-").toString
+    val gw  = new GatewayServer(spark, dir)
+    val stop    = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val failed  = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    // a producer that keeps posting for as long as the flush runs: an
+    // unbounded drain would chase it and never return
+    val writer = new Thread(() =>
+      try while (!stop.get()) {
+        val i = written.incrementAndGet()
+        gw.hot.write("tickt", (i % 4).toInt, ("y" * 40).getBytes, 1000L + i, Some(s"k$i"))
+        if (i % 20 == 0) Thread.sleep(1)
+      } catch { case t: Throwable => failed.set(t) })
+    writer.start()
+    var before = Map.empty[Int, Long]
+    try {
+      while (written.get() < 500) Thread.sleep(5)
+      before = gw.hot.highWatermarks("tickt")
+      val call   = new Thread(() => try gw.flushNow("tickt") catch { case t: Throwable => failed.set(t) })
+      call.start()
+      call.join(120000)
+      assert(!call.isAlive, "flushNow must return while the producer keeps posting")
+      // events posted after the call returned are certainly past its bound
+      val after = written.get()
+      while (written.get() < after + 50) Thread.sleep(5)
+    } finally { stop.set(true); writer.join() }
+    assert(failed.get() == null, String.valueOf(failed.get()))
+
+    val c    = new graft.iceberg.IcebergCommitter(new graft.iceberg.LocalTableIO(s"$dir/tickt"), "tickt")
+    val wm   = c.maxCommittedSequencePerPartition()
+    assert(before.forall { case (p, h) => wm.getOrElse(p, 0L) >= h },
+      s"committed $wm must cover the marks read before the call $before")
+    val high = gw.hot.highWatermarks("tickt")
+    assert(high.exists { case (p, h) => h > wm.getOrElse(p, 0L) }, "later events must stay pending")
+    val pending = gw.hot.pendingForFlush("tickt", wm)
+    assert(pending.nonEmpty && pending.forall(e => e.sequence > wm.getOrElse(e.partition, 0L)))
+    // the next call commits the rest: every written event exactly once,
+    // sequences dense per partition
+    gw.flushNow("tickt")
+    val committed = EventTable.readCommitted(spark, s"$dir/tickt")
+    assert(committed.count() === written.get())
+    import org.apache.spark.sql.functions._
+    committed.groupBy("partition")
+      .agg(count(lit(1)).as("n"), min("sequence").as("mn"), max("sequence").as("mx"),
+           countDistinct("sequence").as("nd"))
+      .collect().foreach { r =>
+        assert(r.getAs[Long]("mn") === 1L)
+        assert(r.getAs[Long]("mx") === r.getAs[Long]("n"))
+        assert(r.getAs[Long]("nd") === r.getAs[Long]("n"))
+      }
+  }
 }

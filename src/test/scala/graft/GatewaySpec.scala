@@ -810,4 +810,66 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bp.rejected503 > 0, "overload must surface 503s")
     } finally bpGw.stop()
   }
+
+  test("F2: a flush is one shuffle-free Spark job writing one sorted file per (partition, bucket)") {
+    import org.apache.spark.scheduler._
+    // skewed batch: partition 0 is hot; timestamps arrive out of order so
+    // the per-file sort is observable
+    val topic = "flush_shape"
+    (1 to 3000).foreach(i => server.hot.write(topic, 0, s"hot-$i".getBytes, 5000L - (i * 7919) % 4000, None))
+    (1 to 6).foreach(p => (1 to 25).foreach(i =>
+      server.hot.write(topic, p, ("c" * (10 * p)).getBytes, 3000L - i * 11, None)))
+
+    val group        = "flush-shape"
+    val jobs         = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages       = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val fenceJob     = new java.util.concurrent.atomic.AtomicInteger(-1)
+    @volatile var fenceDone = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_))
+          case Some("fence") => fenceJob.set(e.jobId)
+          case _             => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceJob.get()) fenceDone = true
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "flush under test")
+      try assert(server.flushNow(topic).isDefined)
+      finally sc.clearJobGroup()
+      // the listener bus is FIFO: once a later marker job is seen, every
+      // event of the flush has been delivered
+      sc.setJobGroup("fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!fenceDone && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+
+    assert(jobs.get() === 1, "the flush must run exactly one Spark job")
+    assert(shuffleBytes.get() === 0L, "the flush must write no shuffle data")
+    val root  = s"$baseDir/$topic"
+    val files = new graft.iceberg.IcebergCommitter(graft.iceberg.TableIO.forRoot(root), topic)
+      .activeDataFiles().map(_.filePath)
+    val keys = files.map { f =>
+      val m = ".*partition=(\\d+)/b(\\d+)-[^/]+$".r.findFirstMatchIn(f).getOrElse(fail(s"unexpected path $f"))
+      (m.group(1).toInt, m.group(2).toInt)
+    }
+    assert(keys.distinct.size === files.size, s"one file per (partition, bucket): $keys")
+    assert(keys.map(_._1).toSet === (0 to 6).toSet)
+    files.foreach { f =>
+      val path = if (f.startsWith("/") || f.contains(":")) f else s"$root/$f"
+      val rows = spark.read.parquet(path).select("timestamp_ms", "sequence").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(rows === rows.sorted, s"$f is not sorted by (timestamp_ms, sequence)")
+    }
+  }
 }

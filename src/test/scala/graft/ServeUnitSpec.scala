@@ -64,6 +64,20 @@ class ServeUnitSpec extends AnyFunSuite {
     assert(h.readPartition("t", 0, 0L, 10).map(_.sequence) === Seq(102L))
   }
 
+  test("hot buffer: flush input is bounded by the captured marks, which spend no budget") {
+    val h = new HotBuffer
+    (1 to 10).foreach(i => h.write("t", 0, "x".getBytes, i, None))
+    (1 to 3).foreach(i => h.write("t", 1, "y".getBytes, i, None))
+    val upTo = Some(Map(0 -> 6L, 1 -> 3L))
+    def seqs(committed: Map[Int, Long], maxBytes: Long) =
+      h.pendingForFlush("t", committed, maxBytes, upTo).map(e => (e.partition, e.sequence))
+    assert(seqs(Map(0 -> 3L), Long.MaxValue) === Seq((0, 4L), (0, 5L), (0, 6L), (1, 1L), (1, 2L), (1, 3L)))
+    // a 5-event budget (65 B each): partition 0's events past its mark
+    // must not use it up before partition 1 is reached
+    assert(seqs(Map(0 -> 3L), 5 * 65L) === Seq((0, 4L), (0, 5L), (0, 6L), (1, 1L), (1, 2L)))
+    assert(seqs(Map(0 -> 6L, 1 -> 3L), Long.MaxValue).isEmpty)
+  }
+
   test("hot buffer: merged read is time-ordered with since filter and limit") {
     val h = new HotBuffer
     h.write("t", 0, "a".getBytes, 30, None)
