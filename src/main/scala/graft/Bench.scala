@@ -430,7 +430,7 @@ object Bench {
           val t1      = System.nanoTime()
           new streaming.StreamIngest(spark, root, shufflePartitions = Some(8)).runFileStream(staging, schema)
           val t2      = System.nanoTime()
-          val events  = spark.read.parquet(staging).count()
+          val events  = spark.read.schema(schema).parquet(staging).count()
           val sec     = (t2 - t1) / 1e9
           // slope between the 1× and 10× runs; needs a positive time delta
           val slope: Option[Long] = streaming.StreamedTables.lastBuild
@@ -533,7 +533,7 @@ object Bench {
           //    semantic blow-up that would mask what the PLAN does at 4x).
           val shift = 1000000000L
           def rep(table: String, f: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
-            val base = spark.read.parquet(s"$sfDir/$table.parquet")
+            val base = graft.core.ParquetTables.read(spark, s"$sfDir/$table.parquet")
             (0 until factor).map(i => f(base, i)).reduce(_ unionByName _)
               .write.mode("overwrite").parquet(s"$dir/$table.parquet")
           }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * appears in BOTH maps (or intentionally has no SQL twin — weaker check).
   */
 object SparkEntry {
-  private def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private lazy val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (core.HotQueries.queries, core.HotQueries.oracles),
       (table.IcebergQueries.queries, table.IcebergQueries.oracles),
@@ -34,11 +34,11 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), max("sequence").as("max_seq"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     modules.map(_._2).reduce(_ ++ _)
 }

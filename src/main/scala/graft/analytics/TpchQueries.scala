@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object TpchQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.core.ParquetTables.read(s, s"$dir/$name.parquet")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: pricing summary over lineitem

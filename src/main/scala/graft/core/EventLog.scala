@@ -47,7 +47,9 @@ object EventLog {
     * matching the oracle's `epoch_ms(ts)`. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     ensureNanosAsLong(spark)
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
+    // the reader keys its cached schema on nanosAsLong, so `ts` keeps the
+    // type this session reads it as
+    val df = ParquetTables.read(spark, s"$sfDir/events.parquet")
     // The generator has shipped `ts` as both nanosecond timestamps (read as
     // LONG nanos under nanosAsLong) and µs TIMESTAMP(_NTZ); accept either.
     // NTZ is interpreted in the session zone — all entry points pin UTC, so

@@ -1320,16 +1320,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
   * metadata version ever written), and entries for files physically removed
   * by [[IcebergCommitter.expireSnapshots]] are dropped eagerly. */
 object IcebergCommitter {
-  private final class Lru[V](max: Int) {
-    private val m = new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = size() > max
-    }
-    def get(k: String)(load: => V): V = synchronized {
-      val hit = m.get(k)
-      if (hit != null) hit else { val v = load; m.put(k, v); v }
-    }
-    def remove(k: String): Unit = synchronized { m.remove(k); () }
-  }
+  import graft.core.Lru
 
   private val metaCache     = new Lru[TableMetadata](512)
   private val listCache     = new Lru[Seq[ManifestListEntry]](2048)

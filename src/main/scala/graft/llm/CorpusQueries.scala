@@ -270,7 +270,7 @@ object CorpusQueries {
        |)""".stripMargin
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    graft.core.ParquetTables.read(s, s"$dir/documents.parquet")
 
   /** [[LlmQueries.spread]] applied to the corpus: opt-in for the queries
     * whose per-rep compute is single-task-dominated (t25, t23 — measured

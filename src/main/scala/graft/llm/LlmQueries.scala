@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.ParquetTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -237,14 +238,14 @@ object LlmQueries {
   private def docs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val path = s"$dir/documents.parquet"
-    spreadIfUnderSplit(s, s.read.parquet(path), "doc_id", path)
+    spreadIfUnderSplit(s, ParquetTables.read(s, path), "doc_id", path)
   }
 
   private def emb(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val path = s"$dir/embeddings.parquet"
     spreadIfUnderSplit(s,
-      s.read.parquet(path)
+      ParquetTables.read(s, path)
         .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v")),
       "vec_id", path)
   }
@@ -255,7 +256,7 @@ object LlmQueries {
   private val embCountCache = new graft.core.SessionMemo[Long]()
   private def embCount(s: SparkSession, dir: String): Long =
     embCountCache.getOrElseUpdate(s, dir)(
-      s.read.parquet(s"$dir/embeddings.parquet").count())
+      ParquetTables.read(s, s"$dir/embeddings.parquet").count())
 
   /** words: lowercase, whitespace-split, empties dropped. */
   /** Shared corpus tokenization — ONE definition for d2/d4/d9 shingles and
@@ -1344,7 +1345,7 @@ object LlmQueries {
   private def streamSinkFor(s: SparkSession, dir: String, variant: String)(
       run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery): String =
     streamDupSink.synchronized {
-      val prefix = s"$dir@${docsStamp(dir)}"
+      val prefix = s"$dir@${ParquetTables.stamp(s, s"$dir/documents.parquet")}"
       val key = s"$prefix$variant"
       streamDupSinkCache.keys.filter(k => k.startsWith(dir + "@") && !k.startsWith(prefix)).toSeq
         .foreach { k =>
@@ -1375,27 +1376,6 @@ object LlmQueries {
         sink
       })
     }
-
-  /** Content signature over the dir's documents.parquet file(s) — the
-    * invalidation component of the d12 sink-cache key. Per-file
-    * (name, length, mtime) tuples, name-sorted, folded to one md5: an
-    * aggregated max(mtime)+total-length stamp would collide for a fixture
-    * regenerated within the same millisecond at identical total size. */
-  private def docsStamp(dir: String): String = fileStamp(dir, "documents.parquet")
-
-  /** [[docsStamp]] generalized to any input table — w6's sink cache stamps
-    * embeddings.parquet the same way. */
-  private def fileStamp(dir: String, name: String): String = {
-    val p = new java.io.File(dir, name)
-    val files =
-      if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-      else Array(p)
-    val detail = files.sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-      .mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(detail.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
   /** Cosine similarity between array columns `x` and `y` as a SQL
     * fragment — the one formula every embedding operator shares. */
@@ -1460,7 +1440,7 @@ object LlmQueries {
   private val qaSinkCache = scala.collection.mutable.Map.empty[String, String]
 
   private def streamQualitySink(s: SparkSession, dir: String): String = streamDupSink.synchronized {
-    val key = s"$dir@${fileStamp(dir, "documents.parquet")}"
+    val key = s"$dir@${ParquetTables.stamp(s, s"$dir/documents.parquet")}"
     dropStaleSinkKeys(qaSinkCache, dir, key)
     qaSinkCache.getOrElseUpdate(key, {
       graft.functions.GraftFunctions.ensureRegistered(s)
@@ -1564,7 +1544,7 @@ object LlmQueries {
     // memo (belt: the common regenerate-then-re-query flow stays
     // consistent even without an evictDir call, whenever a prior build's
     // key makes the regeneration detectable).
-    val key = s"$dir@${fileStamp(dir, "embeddings.parquet")}"
+    val key = s"$dir@${ParquetTables.stamp(s, s"$dir/embeddings.parquet")}"
     if (dropStaleSinkKeys(bitextSinkCache, dir, key)) evictIvfIndex(s, dir)
     bitextSinkCache.getOrElseUpdate(key, {
       graft.functions.GraftFunctions.ensureRegistered(s)
@@ -2074,7 +2054,7 @@ object LlmQueries {
           .format("parquet").option("path", sink)
           .outputMode("append").start()
       }
-      s.read.parquet(out)
+      ParquetTables.read(s, out)
         .select(col("doc_a"), col("doc_b"), col("band").cast("long").as("band"), col("est_permille"))
     },
 
@@ -2710,7 +2690,7 @@ object LlmQueries {
       // side. The oracle rebuilds every per-shard mining pass from the
       // same trained chain, so a dropped shard, a wrong cell assignment,
       // or drifted margin arithmetic all hash-fail.
-      s.read.parquet(streamBitextSink(s, dir))
+      ParquetTables.read(s, streamBitextSink(s, dir))
         .select(col("drop_id"), col("a_id"), col("b_id"), col("cell"), col("margin_permille"))
     },
     "w7_stream_quality_gate" -> { (s, dir) =>
@@ -2718,7 +2698,7 @@ object LlmQueries {
       // oracle recomputes every shard's rollup from the raw corpus with
       // the same shared scorer, so a skipped shard, a drifted score, or a
       // lost rollup row all hash-fail.
-      s.read.parquet(streamQualitySink(s, dir))
+      ParquetTables.read(s, streamQualitySink(s, dir))
         .select(col("drop_id"), col("source"), col("n_docs"), col("n_keep"), col("sum_score"))
     },
     "w6_mining_audit" -> { (s, dir) =>
@@ -2728,7 +2708,7 @@ object LlmQueries {
       // batch sizes derive from the corpus arithmetic, mined counts from
       // the sink — a silently skipped refresh shows as n_mined=0 against
       // a nonzero n_batch.
-      val mined = s.read.parquet(streamBitextSink(s, dir))
+      val mined = ParquetTables.read(s, streamBitextSink(s, dir))
         .groupBy("drop_id")
         .agg(count(lit(1)).as("n_mined"), countDistinct(col("cell")).as("n_cells"))
       emb(s, dir).filter(col("label") % 2 === 1)

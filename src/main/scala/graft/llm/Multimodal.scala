@@ -37,8 +37,7 @@ object Multimodal {
   /** Documents recast as media records: the text bytes play the opaque
     * payload; source maps to a modality. */
   def mediaTable(s: SparkSession, dir: String): DataFrame =
-    s.read
-      .parquet(s"$dir/documents.parquet")
+    graft.core.ParquetTables.read(s, s"$dir/documents.parquet")
       .select(
         col("doc_id"),
         expr("""CASE source WHEN 'src0' THEN 'image' WHEN 'src1' THEN 'audio'

@@ -39,7 +39,7 @@ object JsonlCorpus {
     * (one file per partition). */
   def write(spark: SparkSession, sfDir: String, out: String, nFiles: Int = 4,
             compression: String = "gzip"): Unit =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.core.ParquetTables.read(spark, s"$sfDir/documents.parquet")
       .repartition(nFiles)
       // corpora ship compressed; the reader decompresses per file by
       // extension, so the round-trip gate covers the codec path too (gzip:

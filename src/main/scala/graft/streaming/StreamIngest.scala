@@ -638,7 +638,7 @@ object StreamedTables {
         new StreamIngest(spark, root, shufflePartitions = Some(8)).runFileStream(staging, schema)
         val t2 = System.nanoTime()
         // input events = staged chunk rows (pre-dedup), footer counts only
-        val events = spark.read.parquet(staging).count()
+        val events = spark.read.schema(schema).parquet(staging).count()
         lastBuild = Some(BuildStats(sfDir, events, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
         if (sys.env.contains("GRAFT_TIMING"))
           println(f"[graft-timing] s5 build: staging=${(t1 - t0) / 1e9}%.2fs ingest=${(t2 - t1) / 1e9}%.2fs events=$events")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Oracle
+import graft.core.{Oracle, ParquetTables}
 import graft.table.EventTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -178,7 +178,7 @@ object StreamQueries {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "w3_stream_sessions" -> { (s, dir) =>
       val out = streamSessionTable(s, dir)
-      s.read.parquet(out).select(
+      ParquetTables.read(s, out).select(
         col("user_id"),
         col("first_ts").as("session_start_ms"),
         col("last_ts").as("session_last_ms"),
@@ -187,7 +187,7 @@ object StreamQueries {
     "w4_stream_hll" -> { (s, dir) =>
       import graft.llm.CorpusQueries.{HllM, HllFp, HllAlpha16, HllLinearCount}
       val out = streamHllTable(s, dir)
-      s.read.parquet(out)
+      ParquetTables.read(s, out)
         .groupBy(unix_millis(col("window.start")).as("window_start_ms"))
         .agg(count(lit(1)).as("n_registers_set"),
              sum(expr(s"shiftleft(cast(1 as bigint), $HllFp - m_rank)")).as("present_inv"))
@@ -216,7 +216,7 @@ object StreamQueries {
       import graft.llm.CorpusQueries.{CmsRows, CmsWidth}
       graft.functions.GraftFunctions.ensureRegistered(s)
       val out = streamCmsTable(s, dir)
-      val cells = s.read.parquet(out)
+      val cells = ParquetTables.read(s, out)
         .select(unix_millis(col("window.start")).as("window_start_ms"),
                 col("r"), col("c"), col("cnt"))
       val (staging, schema) = stagedRaw(s, dir)
@@ -243,7 +243,7 @@ object StreamQueries {
     },
     "w2_stream_window" -> { (s, dir) =>
       val out = streamWindowTable(s, dir)
-      s.read.parquet(out).select(
+      ParquetTables.read(s, out).select(
         unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"),
         col("n_events"),

@@ -377,7 +377,7 @@ object IcebergQueries {
     // the 555000-shifted k sum.
     "v3_stream_tail" -> { (s, dir) =>
       val sink = TailedTables.sinkDir(s, dir)
-      s.read.parquet(sink)
+      graft.core.ParquetTables.read(s, sink)
         .groupBy(col("partition").cast("int").as("part_id"))
         .agg(
           count(lit(1)).as("n"),
@@ -394,7 +394,7 @@ object IcebergQueries {
     // is gated row-for-row against the same derivation.
     "w8_stream_changefeed" -> { (s, dir) =>
       val sink = StreamedChangefeedTables.sinkDir(s, dir)
-      s.read.parquet(sink)
+      graft.core.ParquetTables.read(s, sink)
         .groupBy(col("partition").cast("int").as("part_id"),
                  col("_change_type").as("change_type"))
         .agg(

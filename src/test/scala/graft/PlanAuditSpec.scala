@@ -755,4 +755,31 @@ class PlanAuditSpec extends AnyFunSuite {
     // a bloom over inserted keys can never report a false negative
     assert(tagged.filter($"part_id" < 10 && !$"_maybe").count() === 0)
   }
+
+  test("warm query constructors run no Spark job (no schema inference per table read)") {
+    // CLAUDE.md: query constructors must not run jobs. A bare
+    // read.parquet(table) infers its schema with a one-task job on every
+    // call; ParquetTables.read pays it once per file set
+    assert(SparkEntry.queries eq SparkEntry.queries, "the registry is built once")
+    val qs = Seq("tpch_q3_shipping", "tpch_q18_large_orders", "s7_idempotency_dedup",
+                 "x1_payload_extract", "d1_exact_dedup")
+    qs.foreach(q => SparkEntry.queries(q)(spark, sf)) // warm-up: first reads infer
+    qs.foreach { q =>
+      assert(TestSpark.jobsDuring(SparkEntry.queries(q)(spark, sf)) === 0, q)
+    }
+  }
+
+  test("every sf0.001 fixture table reads through ParquetTables exactly as a bare read.parquet") {
+    val tables = new java.io.File(sf).listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted
+    assert(tables.length >= 10, tables.mkString(","))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    tables.foreach { t =>
+      val path = s"$sf/$t"
+      val bare = spark.read.parquet(path)
+      graft.core.ParquetTables.read(spark, path)
+      val warm = graft.core.ParquetTables.read(spark, path) // served from the cache
+      assert(warm.schema === bare.schema, t)
+      assert(rows(warm) === rows(bare), t)
+    }
+  }
 }
