@@ -34,11 +34,14 @@ object TableIO {
     * `file://…`) rather than a plain local path. */
   def hasScheme(root: String): Boolean = root.matches("^[a-zA-Z][a-zA-Z0-9+.-]*://.*")
 
-  /** The active Spark session's Hadoop configuration when one exists (so
+  /** The Spark session's Hadoop configuration when one exists (so
     * `spark.hadoop.*` settings — s3a credentials, endpoints, HA namenodes —
-    * reach every FileSystem the engine opens), else Hadoop defaults. */
+    * reach every FileSystem the engine opens), else Hadoop defaults. The
+    * active session is thread-local; shutdown hooks and non-Spark threads
+    * have none and fall back to the default session. */
   def hadoopConf(): org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 

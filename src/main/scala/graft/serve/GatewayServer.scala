@@ -817,10 +817,10 @@ final class GatewayServer(
                     cfg.fields.map(f => col(f.name)) ++
                     Seq(col("_payload_overflow"), col("partition")): _*)
       }
-      val newFiles  = EventTable.writeData(df, root, // exact file list, no dir diff
-                                           precomputedStats = Some(stats), clustered = true,
-                                           seqBase = committed, dateLayout = EventTable.dateLayoutOf(c))
-      val dataFiles = EventTable.collectDataFiles(spark, root, newFiles)
+      val dataFiles = EventTable.writeFiles(df, root, // exact file list, no dir diff
+                                            precomputedStats = Some(stats), clustered = true,
+                                            seqBase = committed, dateLayout = EventTable.dateLayoutOf(c))
+        .map(_._1)
       val wm        = EventTable.watermarksOf(dataFiles)
       val res       = c.commitAppend(dataFiles, wm)
       hot.cleanup(topic, wm, retentionMs) // F11

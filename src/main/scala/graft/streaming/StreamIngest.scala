@@ -255,7 +255,7 @@ final class StreamIngest(
     // branch persists below, because the range partitioner's sampling job
     // adds a third traversal that precedes the shuffle.
     val deduped = afterSince
-    val newPaths =
+    val withRaw =
       try {
         // resolvedVersion, not currentVersion: the CAS base must be the
         // version load() actually resolves (highest parseable) — a torn
@@ -280,15 +280,15 @@ final class StreamIngest(
           }
           val sequenced = EventLog.deriveDateHour(seq)
           timed("write", batchId) {
-            EventTable.writeData(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
-                                 precomputedStats = Some(lastStats.getOrElse(Map.empty).toSeq
-                                   .map { case (p, (r, b)) => (p, r, b) }),
-                                 clustered = true, seqBase = wm,
-                                 dateLayout = dateLayout)
+            EventTable.writeFiles(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
+                                  precomputedStats = Some(lastStats.getOrElse(Map.empty).toSeq
+                                    .map { case (p, (r, b)) => (p, r, b) }),
+                                  clustered = true, seqBase = wm,
+                                  dateLayout = dateLayout)
           }
-          // the next batch's bucketing profile now comes from the written
-          // files' own footers (exact rows + uncompressed bytes), read in
-          // the footer pass below — no in-job accumulator side channel
+          // the next batch's bucketing profile comes from the written
+          // files' own footers (exact rows + uncompressed bytes), which the
+          // write returns — no in-job accumulator side channel
         } else {
           // Bulk path: persisted because the range partitioner's SAMPLING
           // job traverses the dedup chain once more before the shuffle map
@@ -305,10 +305,10 @@ final class StreamIngest(
             lastStats = Some(stats)
             val sequenced = EventLog.deriveDateHour(seq)
             timed("write", batchId) {
-              EventTable.writeData(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
-                                   precomputedStats = Some(stats.toSeq.map { case (p, (r, b)) => (p, r, b) }),
-                                   seqBase = wm,
-                                   dateLayout = dateLayout)
+              EventTable.writeFiles(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
+                                    precomputedStats = Some(stats.toSeq.map { case (p, (r, b)) => (p, r, b) }),
+                                    seqBase = wm,
+                                    dateLayout = dateLayout)
             }
           } finally cached.unpersist()
         }
@@ -317,9 +317,8 @@ final class StreamIngest(
       }
 
     // Marker AFTER the data write: files without a marker are orphans.
-    committer.io.put(markerPath(batchId), newPaths.mkString("\n").getBytes("UTF-8"))
-    val withRaw = timed("footers", batchId)(EventTable.collectDataFilesWithRaw(spark, tableRoot, newPaths))
     val written = withRaw.map(_._1)
+    committer.io.put(markerPath(batchId), written.map(_.filePath).mkString("\n").getBytes("UTF-8"))
     lastBatchRows = Some(written.map(_.recordCount).sum) // exact, from footers
     if (upstreamDeduped) lastStats = Some(EventTable.profileOf(withRaw))
     pending.update(batchId, written)

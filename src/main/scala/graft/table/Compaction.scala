@@ -238,13 +238,13 @@ object Compaction {
       }
     }
     // Same layout + sort invariant as the original segments; re-sliced
-    // toward cfg.targetFileSize by the size-aware writer (C2). writeData
+    // toward cfg.targetFileSize by the size-aware writer (C2). writeFiles
     // returns EXACTLY the files this job wrote — a concurrent flush's
     // files can neither be adopted into this commit nor deleted by the
     // rollback below.
-    val newPaths = EventTable.writeData(df, tableRoot, targetFileSize = cfg.targetFileSize,
-                                        dateLayout = EventTable.dateLayoutOf(committer))
-    val added    = EventTable.collectDataFiles(spark, tableRoot, newPaths)
+    val added    = EventTable.writeFiles(df, tableRoot, targetFileSize = cfg.targetFileSize,
+                                         dateLayout = EventTable.dateLayoutOf(committer)).map(_._1)
+    val newPaths = added.map(_.filePath)
 
     // Commit-site conservation bracket for the data-preserving stamp: the
     // rewrite applied the active masks, so the written rows must land in

@@ -3,7 +3,9 @@ package graft.table
 import graft.core.EventLog
 import graft.iceberg._
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,14 +29,15 @@ import scala.jdk.CollectionConverters._
   *    pruning is manifest-stat-driven (the Iceberg-native pattern —
   *    `/root/reference/SPEC.md:306-318` delegates pruning to file stats too)
   *  - per-file column statistics from parquet FOOTERS → Iceberg big-endian
-  *    bounds (`/root/reference/src/storage/parquet.rs:479-604`), read as a
-  *    DISTRIBUTED Spark job over the file list — never a serial driver loop
+  *    bounds (the reference's `storage/parquet.rs:479-604`), taken by each
+  *    write task from the footer it just wrote — no second pass over files
   *
-  * Scale notes: the write is one shuffle keyed on (partition, size-bucket);
-  * bucket sizing comes from a cheap columnar pre-agg (count + payload bytes
-  * per partition, the reference's `payload+64B` estimate,
-  * `flusher/mod.rs:361-390`). Stats collection parallelizes over files.
-  * Driver work is O(#files) metadata only.
+  * Scale notes: the write is one Spark job with at most one shuffle, keyed
+  * on (partition, size-bucket) — none for callers whose rows are already
+  * clustered per partition; bucket sizing comes from a cheap columnar
+  * pre-agg (count + payload bytes per partition, the reference's
+  * `payload+64B` estimate, `flusher/mod.rs:361-390`). Driver work is
+  * O(#files) metadata only.
   */
 object EventTable {
   val Topic = "events"
@@ -67,9 +70,10 @@ object EventTable {
       col("part_id").as("partition")
     )
 
-  /** F2+F3: size-targeted, sorted, partition-clustered Zstd parquet write.
-    * Returns the table-root-relative paths of EXACTLY the files this call
-    * wrote.
+  /** F2+F3: size-targeted, sorted, partition-clustered Zstd parquet write
+    * with F4 stats from the writer itself. Returns EXACTLY the files this
+    * call wrote, as (DataFile, uncompressed bytes — Σ block totalByteSize,
+    * the next streamed batch's bucketing profile), sorted by path.
     *
     * Two-phase like the reference's `flush_partition`: (1) a cheap agg
     * estimates bytes per log partition (`payload + 64B` per row); (2) each
@@ -78,31 +82,31 @@ object EventTable {
     * single-`partition` (the Hive dir guarantees it) and sorted
     * `(timestamp_ms, sequence)` within.
     *
-    * Exactness guarantees, both load-bearing for concurrent writers and the
-    * manifest-totals arithmetic:
-    *  - the job writes into a private staging dir and the finished files
-    *    are moved into `data/` one atomic rename each, so the returned list
-    *    is derived from the job's own output — never from a before/after
+    * The write is ONE Spark job of [[TaskWriter]] tasks: each task writes
+    * every (partition, bucket) run it holds straight to its final
+    * `data/partition=P/b<B>-<uuid>.parquet` name and returns the file's
+    * stats from the footer it just wrote — no staging dir, no rename, no
+    * footer re-read. Exactness guarantees, both load-bearing for
+    * concurrent writers and the manifest-totals arithmetic:
+    *  - the returned list is the job's own output, never a before/after
     *    directory diff that could adopt (or later delete) a concurrent
-    *    writer's files. (On an object store this maps to the standard
-    *    write-to-staging + commit-by-manifest pattern; the committed
-    *    snapshot only ever references files by name, never by listing.)
-    *  - `bucket` rides through the dynamic-partition writer (and is
-    *    stripped from the final path on move), so each (partition, bucket)
-    *    pair yields exactly one file even when two buckets hash to the same
-    *    shuffle task — file count is exactly Σ ceil(bytes/target) at any
-    *    scale.
+    *    writer's files; files are invisible until a snapshot references
+    *    them by NAME, and a failed job's leftovers are orphans
+    *    ([[graft.iceberg.OrphanGc]]);
+    *  - rows arrive sorted by (partition, bucket), so each pair yields
+    *    exactly one file even when two buckets hash to the same shuffle
+    *    task — file count is exactly Σ ceil(bytes/target) at any scale.
     *
     * `fragmentInto = Some(n)` overrides the target to `totalBytes / n` —
     * used by tests/compaction scenarios to force a fragmented layout.
     */
-  def writeData(df: DataFrame, tableRoot: String,
-                targetFileSize: Long = DefaultTargetFileSize,
-                fragmentInto: Option[Int] = None,
-                precomputedStats: Option[Seq[(Int, Long, Long)]] = None,
-                clustered: Boolean = false,
-                seqBase: Map[Int, Long] = Map.empty,
-                dateLayout: Boolean = false): Seq[String] = {
+  def writeFiles(df: DataFrame, tableRoot: String,
+                 targetFileSize: Long = DefaultTargetFileSize,
+                 fragmentInto: Option[Int] = None,
+                 precomputedStats: Option[Seq[(Int, Long, Long)]] = None,
+                 clustered: Boolean = false,
+                 seqBase: Map[Int, Long] = Map.empty,
+                 dateLayout: Boolean = false): Seq[(DataFile, Long)] = {
     val spark = df.sparkSession
     import spark.implicits._
     // reference's estimate: payload + 64B/row; extracted tables have no
@@ -129,8 +133,6 @@ object EventTable {
     }
     val totalBuckets = math.max(1, chunks.map(_._3).sum.toInt)
 
-    val stagingAbs = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(tableRoot), s".staging/${java.util.UUID.randomUUID()}")
     // Chunk lookup must not DROP uncovered partitions: `stats` may be an
     // approximate profile (e.g. a streaming batch reusing the previous
     // batch's) — a partition it doesn't cover still writes (single bucket,
@@ -160,17 +162,17 @@ object EventTable {
     val bucketed = withChunk
       .withColumn("bucket", ((col("sequence") - lit(1L) - baseCol) / col("_chunk")).cast("int"))
       .drop("_chunk")
+    // `dateLayout` = the evolved spec (identity partition + event_date):
+    // event_date becomes a directory key too. It derives from timestamp_ms,
+    // so each (partition, bucket) run splits into contiguous sorted runs.
+    val keys  = Seq("partition", "bucket") ++ (if (dateLayout) Seq("event_date") else Nil)
+    val order = (keys ++ Seq("timestamp_ms", "sequence")).map(col)
     // `clustered` callers (the streaming per-partition sequencing pass)
     // already hold each log partition whole on one task — write straight
     // from those tasks instead of paying a bucket re-shuffle.
     val arranged =
-      if (clustered) bucketed
-        .sortWithinPartitions(col("partition"), col("bucket"), col("timestamp_ms"), col("sequence"))
-      else bucketed
-        .repartition(totalBuckets, col("partition"), col("bucket"))
-        .sortWithinPartitions(col("partition"), col("bucket"), col("timestamp_ms"), col("sequence"))
-    val writer = arranged.write
-      .option("compression", "zstd")
+      if (clustered) bucketed.sortWithinPartitions(order: _*)
+      else bucketed.repartition(totalBuckets, col("partition"), col("bucket")).sortWithinPartitions(order: _*)
     // Guardrail for clustered writes whose bucketing profile may not cover
     // every partition (e.g. a stream's first batch): cap records per file so
     // an unprofiled huge partition still splits near the size target instead
@@ -178,119 +180,31 @@ object EventTable {
     // when one exists (footer-exact for streamed batches — event rows with
     // payloads run hundreds of bytes, where a flat 64 B assumption would
     // overshoot the target severalfold); batch 0 falls back to 64 B.
-    if (clustered) {
-      val (pr, pb) = stats.foldLeft((0L, 0L)) { case ((r, b), (_, rr, bb)) => (r + rr, b + bb) }
-      val bytesPerRow = if (pr > 0 && pb > 0) math.max(1L, pb / pr) else 64L
-      writer.option("maxRecordsPerFile", math.max(1L, target / bytesPerRow))
-    }
-    val tW0 = System.nanoTime()
-    writer
-      // direct task commit (no job-level rename pass): safe because the
-      // staging dir is private and the snapshot references files by NAME —
-      // nothing ever lists this directory for correctness
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // `dateLayout` = the evolved spec (identity partition + event_date):
-      // event_date becomes a directory key — within a (partition, bucket)
-      // task the rows arrive timestamp-sorted, so each date dir receives a
-      // contiguous sorted run and per-file sort order is preserved
-      .partitionBy(
-        (if (dateLayout) Seq("partition", "event_date", "bucket")
-         else Seq("partition", "bucket")): _*)
-      .parquet(stagingAbs.toString)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[graft-timing]   writeData.parquet ${(System.nanoTime() - tW0) / 1e6}%.0f ms")
-
-    // Move staging/partition=P/bucket=B/part-*.parquet → data/partition=P/,
-    // prefixing the bucket id so two buckets written by one task (same part
-    // file name) cannot collide in the flattened dir. All path work goes
-    // through the Hadoop FileSystem of the table root, so any supported
-    // scheme (file://, hdfs://, s3a://) works; moved files are renames
-    // within one store — data is never observable half-moved because the
-    // snapshot references files by NAME.
-    val tM0   = System.nanoTime()
-    val moved =
-      if (!graft.iceberg.TableIO.hasScheme(tableRoot) || tableRoot.startsWith("file:"))
-        movePlainLocal(stagingAbs, tableRoot)
-      else
-        moveViaHadoop(spark, stagingAbs, tableRoot)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[graft-timing]   writeData.move ${(System.nanoTime() - tM0) / 1e6}%.0f ms (${moved.size} files)")
-    moved
+    // Unclustered writes keep the session's `spark.sql.files.maxRecordsPerFile`.
+    val maxRecords =
+      if (clustered) {
+        val (pr, pb) = stats.foldLeft((0L, 0L)) { case ((r, b), (_, rr, bb)) => (r + rr, b + bb) }
+        val bytesPerRow = if (pr > 0 && pb > 0) math.max(1L, pb / pr) else 64L
+        math.max(1L, target / bytesPerRow)
+      } else spark.sessionState.conf.maxRecordsPerFile
+    TaskWriter.write(arranged, tableRoot, keys, if (maxRecords > 0) maxRecords else Long.MaxValue)(
+      TaskWriter.dataFilePath)
   }
 
-  /** Local-root move via java.nio. Hadoop's LocalFileSystem loads POSIX
-    * permissions by FORKING `ls -ld` per file status when the native
-    * library is absent — ~100 ms per streamed micro-batch just to list 8
-    * staged files. nio does the same walk+rename in ~1 ms. */
-  private def movePlainLocal(stagingAbs: org.apache.hadoop.fs.Path, tableRoot: String): Seq[String] = {
-    import java.nio.file.{Files => NF, Paths => NP}
-    val stagingDir = NP.get(stagingAbs.toUri.getPath)
-    val rootDir    = NP.get(new org.apache.hadoop.fs.Path(tableRoot).toUri.getPath)
-    val moved      = scala.collection.mutable.ArrayBuffer.empty[String]
-    val walk       = NF.walk(stagingDir)
-    try {
-      walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).foreach { src =>
-        val bucket = src.getParent.getFileName.toString.stripPrefix("bucket=")
-        val p2     = src.getParent.getParent.getFileName.toString // partition=P | event_date=D
-        // evolved date layout nests one level deeper; the basename gains a
-        // `p<P>-` prefix so the LAST TWO path segments (the MoR identity,
-        // morKeyOf) stay unique across partition dirs of one job
-        val relDest =
-          if (p2.startsWith("event_date=")) {
-            val partDir = src.getParent.getParent.getParent.getFileName.toString // partition=P
-            s"data/$partDir/$p2/p${partDir.stripPrefix("partition=")}-b$bucket-${src.getFileName}"
-          } else s"data/$p2/b$bucket-${src.getFileName}"
-        val dest = rootDir.resolve(relDest)
-        NF.createDirectories(dest.getParent)
-        NF.move(src, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        moved += relDest
-      }
-    } finally walk.close()
-    // recursive delete of the (now file-less) staging tree
-    graft.core.FsUtil.deleteRecursively(stagingDir)
-    moved.toSeq.sorted
-  }
+  /** [[writeFiles]]' table-root-relative paths — the same single write. */
+  def writeData(df: DataFrame, tableRoot: String,
+                targetFileSize: Long = DefaultTargetFileSize,
+                fragmentInto: Option[Int] = None,
+                precomputedStats: Option[Seq[(Int, Long, Long)]] = None,
+                clustered: Boolean = false,
+                seqBase: Map[Int, Long] = Map.empty,
+                dateLayout: Boolean = false): Seq[String] =
+    writeFiles(df, tableRoot, targetFileSize, fragmentInto, precomputedStats, clustered, seqBase,
+               dateLayout).map(_._1.filePath)
 
-  /** Scheme-root move through the root's Hadoop FileSystem (hdfs://,
-    * s3a:// …). Renames are independent single-file metadata ops — issued
-    * from a thread pool, since an object store pays a round trip per op. */
-  private def moveViaHadoop(spark: SparkSession, stagingAbs: org.apache.hadoop.fs.Path,
-                            tableRoot: String): Seq[String] = {
-    val rootP = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs    = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    val pairs = scala.collection.mutable.ArrayBuffer.empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path, String)]
-    val it    = fs.listFiles(stagingAbs, true)
-    while (it.hasNext) {
-      val src = it.next().getPath
-      if (src.getName.endsWith(".parquet")) {
-        val bucket = src.getParent.getName.stripPrefix("bucket=")
-        val p2     = src.getParent.getParent.getName // partition=P | event_date=D
-        val relDest =
-          if (p2.startsWith("event_date=")) {
-            val partDir = src.getParent.getParent.getParent.getName // partition=P
-            s"data/$partDir/$p2/p${partDir.stripPrefix("partition=")}-b$bucket-${src.getName}"
-          } else s"data/$p2/b$bucket-${src.getName}"
-        pairs += ((src, new org.apache.hadoop.fs.Path(rootP, relDest), relDest))
-      }
-    }
-    pairs.map(_._2.getParent).distinct.foreach(fs.mkdirs)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(pairs.size, 16)))
-    try {
-      pairs
-        .map { case (src, dest, _) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              if (!fs.rename(src, dest)) throw new java.io.IOException(s"rename $src -> $dest failed")
-          })
-        }
-        .foreach(_.get())
-    } finally pool.shutdown()
-    fs.delete(stagingAbs, true)
-    pairs.map(_._3).toSeq.sorted
-  }
-
-  /** GC for crashed writes: a writeData that died between the parquet job
-    * and its moves leaves a private `.staging/<uuid>` dir. Such dirs are
+  /** GC for crashed writes of earlier versions, whose writer staged each
+    * job in a private `.staging/<uuid>` dir before moving files into
+    * `data/`; tables they wrote may still hold such dirs. They are
     * invisible to every reader (snapshots reference files by name), so any
     * entry older than `olderThanMs` is garbage. Called from compaction —
     * the table-maintenance entry point. */
@@ -314,16 +228,16 @@ object EventTable {
     * loads, 100 TB compactions — ~800k footers) stay a distributed job. */
   val DriverFooterThreshold = 64
 
-  /** F4: DataFile stats from parquet footers — plus each file's UNCOMPRESSED
-    * data size (Σ block totalByteSize), the next batch's bucketing profile.
-    * Collected as a DISTRIBUTED job (one task per slice of the file list —
-    * at 100 TB this is ~800k footer reads spread over the cluster, not
-    * hours of driver time), or on a driver thread pool below
+  /** F4 stats re-read from the footers of files already on disk: the
+    * marker-adopted files of a crashed stream (`StreamIngest.reconcile`)
+    * and external callers. The engine's own writes get theirs from
+    * [[writeFiles]]. Collected as a DISTRIBUTED job (one task per slice of
+    * the file list — at 100 TB this is ~800k footer reads spread over the
+    * cluster, not hours of driver time), or on a driver thread pool below
     * [[DriverFooterThreshold]] where job scheduling would dominate.
     * Missing/empty footer stats omit the bound entry (consumers fall back
     * to conservative defaults) instead of encoding sentinel values. */
-  def collectDataFilesWithRaw(spark: SparkSession, tableRoot: String,
-                              newFiles: Seq[String]): Seq[(DataFile, Long)] = {
+  def collectDataFiles(spark: SparkSession, tableRoot: String, newFiles: Seq[String]): Seq[DataFile] = {
     if (newFiles.isEmpty) return Nil
     val root = tableRoot
     if (newFiles.size <= DriverFooterThreshold) {
@@ -331,13 +245,13 @@ object EventTable {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(newFiles.size, 16))
       try {
         newFiles
-          .map(rel => pool.submit(new java.util.concurrent.Callable[(DataFile, Long)] {
+          .map(rel => pool.submit(new java.util.concurrent.Callable[DataFile] {
             // Configuration is mutated during FileSystem init — copy per task
-            override def call(): (DataFile, Long) =
-              FileStats.dataFileAndRaw(root, rel, new Configuration(conf))
+            override def call(): DataFile =
+              FileStats.dataFileAndRaw(root, rel, new Configuration(conf))._1
           }))
           .map(_.get())
-          .sortBy(_._1.filePath)
+          .sortBy(_.filePath)
       } finally pool.shutdown()
     } else {
       // Ship the SESSION Hadoop conf to the footer tasks (Configuration is
@@ -346,15 +260,12 @@ object EventTable {
       val confW = new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf())
       spark.sparkContext
         .parallelize(newFiles, math.min(newFiles.size, 64))
-        .map(rel => FileStats.dataFileAndRaw(root, rel, confW.value))
+        .map(rel => FileStats.dataFileAndRaw(root, rel, confW.value)._1)
         .collect()
         .toSeq
-        .sortBy(_._1.filePath)
+        .sortBy(_.filePath)
     }
   }
-
-  def collectDataFiles(spark: SparkSession, tableRoot: String, newFiles: Seq[String]): Seq[DataFile] =
-    collectDataFilesWithRaw(spark, tableRoot, newFiles).map(_._1)
 
   /** Per-partition (rows, uncompressed bytes) profile of a written file set —
     * exact (footer record counts; files are single-partition), used as the
@@ -402,10 +313,9 @@ object EventTable {
     // or the precomputed size stats below would be wrong.
     val log = mapLog(EventLog.deriveDateHour(seq))
     val committer = new IcebergCommitter(TableIO.forRoot(tableRoot), Topic)
-    val newPaths = writeData(committedSchema(log), tableRoot, targetFileSize, fragmentInto,
+    val dataFiles = writeFiles(committedSchema(log), tableRoot, targetFileSize, fragmentInto,
               precomputedStats = Some(stats.toSeq.map { case (p, (r, b)) => (p, r, b) }),
-              dateLayout = dateLayoutOf(committer))
-    val dataFiles = collectDataFiles(spark, tableRoot, newPaths)
+              dateLayout = dateLayoutOf(committer)).map(_._1)
     committer.commitAppend(dataFiles, watermarksOf(dataFiles))
     committer
   }
@@ -453,9 +363,8 @@ object EventTable {
         .exists(_.fields.exists(_.id == graft.iceberg.FieldIds.Payload))
       committer.evolveSchema(IcebergSchema.withExtraction(names, keepPayload = keep))
     }
-    val newPaths  = writeData(df, tableRoot, fragmentInto = fragmentInto,
-                              dateLayout = dateLayoutOf(committer))
-    val dataFiles = collectDataFiles(spark, tableRoot, newPaths)
+    val dataFiles = writeFiles(df, tableRoot, fragmentInto = fragmentInto,
+                               dateLayout = dateLayoutOf(committer)).map(_._1)
     committer.commitAppend(dataFiles, watermarksOf(dataFiles))
     committer
   }
@@ -618,8 +527,7 @@ object EventTable {
     if (affected.isEmpty) return DeleteResult(0, active.size, 0L, None)
 
     val survivors = readForRewrite(spark, tableRoot, affected).filter(not(pred))
-    val newPaths  = writeData(survivors, tableRoot, dateLayout = dateLayoutOf(committer))
-    val added     = collectDataFiles(spark, tableRoot, newPaths)
+    val added     = writeFiles(survivors, tableRoot, dateLayout = dateLayoutOf(committer)).map(_._1)
     try {
       val res = committer.commitReplace(affected, added, base)
       affected.foreach(f => committer.io.delete(f.filePath))
@@ -628,7 +536,7 @@ object EventTable {
     } catch {
       case c: graft.iceberg.CommitConflict =>
         // roll back ONLY this delete's staged rewrite, exactly like compaction
-        newPaths.foreach(committer.io.delete)
+        added.foreach(f => committer.io.delete(f.filePath))
         throw c
     }
   }
@@ -703,83 +611,28 @@ object EventTable {
   private def writeDeleteFiles(spark: SparkSession, tableRoot: String,
                                delRows: DataFrame, content: Int = 1,
                                sortCols: Seq[String] = Seq("file_path", "pos")): Seq[DataFile] = {
-    val stagingAbs = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(tableRoot), s".staging/${java.util.UUID.randomUUID()}")
-    delRows.coalesce(1).sortWithinPartitions(sortCols.map(col): _*)
-      .write.option("compression", "zstd")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(stagingAbs.toString)
-    val conf  = spark.sessionState.newHadoopConf()
-    val fs    = stagingAbs.getFileSystem(conf)
-    val rootP = new org.apache.hadoop.fs.Path(tableRoot)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(rootP, "data/deletes"))
-    val moved = fs.listStatus(stagingAbs).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val relPath = s"data/deletes/${java.util.UUID.randomUUID()}.parquet"
-        require(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(rootP, relPath)),
-          s"failed to move delete file into $relPath")
-        relPath
-      }
-    fs.delete(stagingAbs, true)
-    val files = moved.map { relPath =>
-      val abs = new org.apache.hadoop.fs.Path(rootP, relPath)
-      // recordCount straight from the footer (a driver-local metadata read)
-      // — not a Spark count job per delete file
-      val in: org.apache.parquet.io.InputFile =
-        if (Option(abs.toUri.getScheme).forall(_ == "file"))
-          new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(abs.toUri.getPath))
-        else HadoopInputFile.fromPath(abs, conf)
-      val r = ParquetFileReader.open(in)
+    val written = TaskWriter.write(delRows.coalesce(1).sortWithinPartitions(sortCols.map(col): _*),
+                                   tableRoot, keys = Nil, maxRecords = Long.MaxValue)(
+      _ => s"data/deletes/${java.util.UUID.randomUUID()}.parquet")
+    written.map { case (f, _) =>
       // Manifest bounds for SCAN-SIDE delete-file pruning (a pruned scan
       // must not pay the tombstone read for deletes that cannot touch its
       // surviving files — pruneDeleteFiles):
       //  - equality files carry their (partition, sequence) KEY bounds
-      //    straight from the footer stats;
+      //    straight from the footer stats the writer returned;
       //  - positional files carry the TARGET partition range, parsed from
       //    the stored file_path values (footer string min/max is
       //    lexicographic — partition=10 < partition=2 — so one tiny Spark
       //    job over the batch-sized file parses instead).
       // Absent bounds stay conservative: every reader keeps the file.
-      var rows = 0L
-      var pMin = Int.MaxValue; var pMax = Int.MinValue
-      var sMin = Long.MaxValue; var sMax = Long.MinValue
-      try r.getFooter.getBlocks.asScala.foreach { b =>
-        rows += b.getRowCount
-        if (content == 2) b.getColumns.asScala.foreach { c =>
-          val st = c.getStatistics
-          if (st != null && !st.isEmpty && st.hasNonNullValue) c.getPath.toDotString match {
-            case "partition" =>
-              pMin = math.min(pMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
-              pMax = math.max(pMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
-            case "sequence" =>
-              sMin = math.min(sMin, st.genericGetMin.asInstanceOf[java.lang.Long])
-              sMax = math.max(sMax, st.genericGetMax.asInstanceOf[java.lang.Long])
-            case _ => ()
-          }
-        }
-      } finally r.close()
-      if (content == 1 && rows > 0) {
-        val pr = spark.read.parquet(abs.toString)
+      val range =
+        if (content != 1) None
+        else Some(spark.read.parquet(s"$tableRoot/${f.filePath}")
           .selectExpr("cast(regexp_extract(file_path, 'partition=([0-9]+)', 1) as int) AS p")
-          .agg(min(col("p")), max(col("p"))).head()
-        if (!pr.isNullAt(0)) { pMin = pr.getInt(0); pMax = pr.getInt(1) }
-      }
-      val bounds: Seq[(Int, Array[Byte], Array[Byte])] =
-        (if (pMin <= pMax)
-           Seq((FieldIds.Partition, graft.iceberg.Bounds.encodeInt(pMin), graft.iceberg.Bounds.encodeInt(pMax)))
-         else Nil) ++
-          (if (sMin <= sMax)
-             Seq((FieldIds.Sequence, graft.iceberg.Bounds.encodeLong(sMin), graft.iceberg.Bounds.encodeLong(sMax)))
-           else Nil)
-      DataFile(content = content, filePath = relPath, fileFormat = "PARQUET",
-               recordCount = rows, fileSizeInBytes = fs.getFileStatus(abs).getLen,
-               lowerBounds = bounds.map(b => b._1 -> b._2).toMap,
-               upperBounds = bounds.map(b => b._1 -> b._3).toMap)
-    }
-    files.filter(_.recordCount > 0) match {
-      case Nil => moved.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(rootP, p), false)); Nil
-      case fs2 => fs2
+          .agg(min(col("p")), max(col("p"))).head()).filterNot(_.isNullAt(0))
+      f.copy(content = content,
+             lowerBounds = f.lowerBounds ++ range.map(r => FieldIds.Partition -> Bounds.encodeInt(r.getInt(0))),
+             upperBounds = f.upperBounds ++ range.map(r => FieldIds.Partition -> Bounds.encodeInt(r.getInt(1))))
     }
   }
 
@@ -943,9 +796,8 @@ object EventTable {
     val inserts = alignToCommitted(spark, tableRoot,
       up.join(broadcast(matchedDf), Seq("partition", "sequence"), "left_anti"))
 
-    val newPaths = writeData(rewritten.unionByName(inserts), tableRoot,
-                             dateLayout = dateLayoutOf(committer))
-    val added    = collectDataFiles(spark, tableRoot, newPaths)
+    val added    = writeFiles(rewritten.unionByName(inserts), tableRoot,
+                              dateLayout = dateLayoutOf(committer)).map(_._1)
     // Watermarks only ADVANCE (a rewrite of early files must not regress one).
     val newWm = watermarksOf(added).filter { case (p, s) => s > wm.getOrElse(p, 0L) }
     try {
@@ -960,7 +812,7 @@ object EventTable {
                   matchedKeys.size.toLong, insertKeys.length.toLong, Some(res.snapshotId))
     } catch {
       case c: graft.iceberg.CommitConflict =>
-        newPaths.foreach(committer.io.delete)
+        added.foreach(f => committer.io.delete(f.filePath))
         throw c
     }
   }
@@ -1035,8 +887,7 @@ object EventTable {
             "committed sequences are taken or burned, never re-appendable")
       }
       val rows  = alignToCommitted(spark, tableRoot, b)
-      val paths = writeData(rows, tableRoot, dateLayout = dateLayoutOf(committer))
-      val added = collectDataFiles(spark, tableRoot, paths)
+      val added = writeFiles(rows, tableRoot, dateLayout = dateLayoutOf(committer)).map(_._1)
       val newWm = watermarksOf(added).filter { case (p, s) => s > wm.getOrElse(p, 0L) }
       if (staged) committer.commitStaged(added, newWm) else committer.commitAppend(added, newWm)
     } finally b.unpersist()
@@ -1117,8 +968,9 @@ object EventTable {
 
   /** The scan-side file identity for position-delete matching: the LAST
     * TWO path segments (`partition=P/<name>.parquet`). A bare basename is
-    * NOT unique — the dynamic-partition writer names every file of one
-    * task `part-<task>-<job uuid>`, so two partition dirs of the same job
+    * NOT unique in tables written by earlier versions, whose
+    * dynamic-partition writer named every file of one task
+    * `part-<task>-<job uuid>`, so two partition dirs of the same job
     * collide on basename (measured: 5 of 150 delete rows mis-matching at
     * sf0.001). Two segments are unique within a table (all data files live
     * in `data/partition=P/`), and avoid `input_file_name`-style full-path
@@ -1465,18 +1317,16 @@ object EventTable {
     }
 }
 
-/** Executor-side footer reader — kept in a standalone object so the closure
-  * shipped by [[EventTable.collectDataFiles]] stays small and serializable. */
+/** Footer → [[DataFile]] stats, shared by the task writer (the footer it
+  * just wrote) and footer re-reads. A standalone object so the closures
+  * that call it stay small and serializable. */
 object FileStats extends Serializable {
-  def dataFile(tableRoot: String, relPath: String,
-               conf: Configuration = new Configuration()): DataFile =
-    dataFileAndRaw(tableRoot, relPath, conf)._1
-
-  /** As [[dataFile]], also returning the file's UNCOMPRESSED data size
-    * (Σ block totalByteSize) — the size-profile input for streamed-batch
-    * bucketing, read from the same footer pass for free. */
-  def dataFileAndRaw(tableRoot: String, relPath: String,
-                     conf: Configuration = new Configuration()): (DataFile, Long) = {
+  /** A file's stats from its footer on disk, plus its UNCOMPRESSED data
+    * size (Σ block totalByteSize) — the size-profile input for
+    * streamed-batch bucketing. Read options come from `conf`: parquet's
+    * default options build a fresh Hadoop `Configuration` per file, which
+    * re-parses core-default.xml. */
+  def dataFileAndRaw(tableRoot: String, relPath: String, conf: Configuration): (DataFile, Long) = {
     // Hadoop Path resolution, so footer reads work for any scheme the
     // table root uses (file://, hdfs://, s3a://) — but local paths go
     // through parquet's nio LocalInputFile: Hadoop's local FileSystem
@@ -1487,40 +1337,50 @@ object FileStats extends Serializable {
       if (scheme.forall(_ == "file"))
         new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(abs.toUri.getPath))
       else HadoopInputFile.fromPath(abs, conf)
-    val reader = ParquetFileReader.open(inputFile)
+    val reader = ParquetFileReader.open(inputFile, HadoopReadOptions.builder(conf).build())
+    val footer = try reader.getFooter finally reader.close()
+    fromFooter(relPath, footer, inputFile.getLength)
+  }
+
+  /** Stats of one file from its footer. Page-column min/max give the
+    * sequence, timestamp, date and hour bounds, and the `partition` bounds
+    * of a file that stores it as a column (an equality-delete file); path
+    * keys override them. Missing/empty stats omit the bound entry. */
+  def fromFooter(relPath: String, footer: ParquetMetadata, fileSize: Long): (DataFile, Long) = {
     var rows = 0L
     var rawBytes = 0L
-    var seqMin, tsMin         = Long.MaxValue
-    var seqMax, tsMax         = Long.MinValue
-    var dateMin, hourMin      = Int.MaxValue
-    var dateMax, hourMax      = Int.MinValue
-    try {
-      reader.getFooter.getBlocks.asScala.foreach { b =>
-        rows += b.getRowCount
-        rawBytes += b.getTotalByteSize
-        b.getColumns.asScala.foreach { c =>
-          val st = c.getStatistics
-          if (st != null && !st.isEmpty && st.hasNonNullValue) c.getPath.toDotString match {
-            case "sequence" =>
-              seqMin = math.min(seqMin, st.genericGetMin.asInstanceOf[java.lang.Long])
-              seqMax = math.max(seqMax, st.genericGetMax.asInstanceOf[java.lang.Long])
-            case "timestamp_ms" =>
-              tsMin = math.min(tsMin, st.genericGetMin.asInstanceOf[java.lang.Long])
-              tsMax = math.max(tsMax, st.genericGetMax.asInstanceOf[java.lang.Long])
-            case "event_date" =>
-              dateMin = math.min(dateMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
-              dateMax = math.max(dateMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
-            case "event_hour" =>
-              hourMin = math.min(hourMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
-              hourMax = math.max(hourMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
-            case _ => ()
-          }
+    var seqMin, tsMin             = Long.MaxValue
+    var seqMax, tsMax             = Long.MinValue
+    var dateMin, hourMin, partMin = Int.MaxValue
+    var dateMax, hourMax, partMax = Int.MinValue
+    footer.getBlocks.asScala.foreach { b =>
+      rows += b.getRowCount
+      rawBytes += b.getTotalByteSize
+      b.getColumns.asScala.foreach { c =>
+        val st = c.getStatistics
+        if (st != null && !st.isEmpty && st.hasNonNullValue) c.getPath.toDotString match {
+          case "sequence" =>
+            seqMin = math.min(seqMin, st.genericGetMin.asInstanceOf[java.lang.Long])
+            seqMax = math.max(seqMax, st.genericGetMax.asInstanceOf[java.lang.Long])
+          case "timestamp_ms" =>
+            tsMin = math.min(tsMin, st.genericGetMin.asInstanceOf[java.lang.Long])
+            tsMax = math.max(tsMax, st.genericGetMax.asInstanceOf[java.lang.Long])
+          case "event_date" =>
+            dateMin = math.min(dateMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
+            dateMax = math.max(dateMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
+          case "event_hour" =>
+            hourMin = math.min(hourMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
+            hourMax = math.max(hourMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
+          case "partition" =>
+            partMin = math.min(partMin, st.genericGetMin.asInstanceOf[java.lang.Integer])
+            partMax = math.max(partMax, st.genericGetMax.asInstanceOf[java.lang.Integer])
+          case _ => ()
         }
       }
-    } finally reader.close()
+    }
 
     // Identity partition value from the Hive path: .../partition=P/file
-    val part = EventTable.pathPartitionOpt(relPath)
+    EventTable.pathPartitionOpt(relPath).foreach { p => partMin = p; partMax = p }
     // Evolved date spec: event_date is a DIRECTORY key, not a page column —
     // its identity bounds come from the path (files are single-date), so
     // date/time pruning stays manifest-stat-driven on both specs.
@@ -1546,14 +1406,14 @@ object FileStats extends Serializable {
         longBounds(FieldIds.TimestampMs, tsMin, tsMax) ++
         intBounds(FieldIds.EventDate, dateMin, dateMax) ++
         intBounds(FieldIds.EventHour, hourMin, hourMax) ++
-        part.toSeq.map(p => (FieldIds.Partition, Bounds.encodeInt(p), Bounds.encodeInt(p)))
+        intBounds(FieldIds.Partition, partMin, partMax)
 
     (DataFile(
       content = 0,
       filePath = relPath,
       fileFormat = "PARQUET",
       recordCount = rows,
-      fileSizeInBytes = inputFile.getLength,
+      fileSizeInBytes = fileSize,
       lowerBounds = bounds.map(b => b._1 -> b._2).toMap,
       upperBounds = bounds.map(b => b._1 -> b._3).toMap
     ), rawBytes)

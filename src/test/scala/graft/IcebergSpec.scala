@@ -585,6 +585,25 @@ class IcebergSpec extends AnyFunSuite {
     assert(c.maxCommittedSequencePerPartition() === Map.empty)
   }
 
+  test("TableIO.hadoopConf: a thread with no active session still gets the session's spark.hadoop.* keys") {
+    val spark = TestSpark.spark
+    spark.conf.set("spark.hadoop.graft.probe.key", "probe-value")
+    try {
+      @volatile var seen: Option[String] = None
+      @volatile var hadActive            = true
+      val t = new Thread(() => {
+        // the active session is an inheritable thread-local: clear it to
+        // stand in for a shutdown hook or a non-Spark worker thread
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        hadActive = org.apache.spark.sql.SparkSession.getActiveSession.isDefined
+        seen = Option(TableIO.hadoopConf().get("spark.hadoop.graft.probe.key"))
+      })
+      t.start(); t.join()
+      assert(!hadActive, "the probe thread must run without an active session")
+      assert(seen === Some("probe-value"))
+    } finally spark.conf.unset("spark.hadoop.graft.probe.key")
+  }
+
   test("HadoopTableIO: rename-CAS only on namenode-enforced schemes (lost-commit guard)") {
     // Object-store FileContext bindings emulate no-overwrite rename with a
     // CLIENT-SIDE exists check — two racing committers can both pass it and

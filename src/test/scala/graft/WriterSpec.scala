@@ -1,18 +1,26 @@
 package graft
 
 import graft.core.EventLog
-import graft.table.EventTable
+import graft.iceberg.{DataFile, IcebergCommitter, OrphanGc, TableIO}
+import graft.table.{EventTable, FileStats}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The size-targeted writer's file-count contract: exactly
   * Σ ceil(partition_bytes / target) files — the arithmetic the
   * a4_manifest_totals oracle (and manifest totals at any scale) relies on.
-  * Routing (partition, bucket) through the dynamic-partition writer makes
-  * the count exact even when two buckets hash to one shuffle task. */
+  * Rows reach the task writer sorted by (partition, bucket), and each run
+  * of one pair is one file, so the count is exact even when two buckets
+  * hash to one shuffle task. The task writer itself is held to Spark's own
+  * parquet writer (schema, codec, rows) and to a footer re-read (stats). */
 class WriterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private val sf         = "/root/testdata/sf0.001"
 
   test("writeData emits exactly ceil(bytes/target) files per partition; returns its own files") {
     val df   = EventTable.committedSchema(EventLog.log(spark, "/root/testdata/sf0.001"))
@@ -37,5 +45,100 @@ class WriterSpec extends AnyFunSuite {
         root
       })
     assert(back.count() === df.count())
+  }
+
+  private def footer(file: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(new LocalInputFile(file))
+    try r.getFooter finally r.close()
+  }
+
+  private def filesUnder(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally walk.close()
+  }
+
+  test("task-written files match Spark's own parquet writer: schema, ZSTD, rows, per-file sort") {
+    val df   = EventTable.committedSchema(EventLog.log(spark, sf))
+    val root = Files.createTempDirectory("graft-writer-parity-").toString
+    val ref  = Files.createTempDirectory("graft-writer-ref-").resolve("t").toString
+    val written = EventTable.writeFiles(df, root, targetFileSize = 16L * 1024)
+    assert(written.size > 1)
+    df.drop("partition").write.option("compression", "zstd").parquet(ref)
+    val refFooter = footer(filesUnder(Paths.get(ref)).find(_.toString.endsWith(".parquet")).get)
+    val rowMeta   = "org.apache.spark.sql.parquet.row.metadata"
+    written.foreach { case (f, _) =>
+      val meta = footer(Paths.get(root, f.filePath))
+      assert(meta.getFileMetaData.getSchema === refFooter.getFileMetaData.getSchema, f.filePath)
+      assert(meta.getFileMetaData.getKeyValueMetaData.get(rowMeta) ===
+               refFooter.getFileMetaData.getKeyValueMetaData.get(rowMeta), f.filePath)
+      meta.getBlocks.asScala.flatMap(_.getColumns.asScala).foreach { c =>
+        assert(c.getCodec === CompressionCodecName.ZSTD, s"${f.filePath} ${c.getPath}")
+      }
+    }
+    // identical rows (the partition column comes back from the directory)
+    val back = spark.read.option("basePath", s"$root/data")
+      .parquet(written.map(w => s"$root/${w._1.filePath}"): _*)
+      .select(df.columns.map(col).toIndexedSeq: _*)
+    assert(back.count() === df.count())
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    // every file sorted by (timestamp_ms, sequence) in physical row order
+    val rows = back.select(col("_metadata.file_path"), col("_metadata.row_index"),
+                           col("timestamp_ms"), col("sequence")).collect()
+    rows.groupBy(_.getString(0)).foreach { case (file, rs) =>
+      val keys = rs.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getLong(3))).toSeq
+      assert(keys === keys.sorted, s"$file is not sorted by (timestamp_ms, sequence)")
+    }
+  }
+
+  private def sameStats(a: (DataFile, Long), b: (DataFile, Long)): Unit = {
+    def norm(f: DataFile) = f.copy(lowerBounds = Map.empty, upperBounds = Map.empty)
+    def bounds(m: Map[Int, Array[Byte]]) = m.map { case (k, v) => k -> v.toSeq }
+    assert(norm(a._1) === norm(b._1))
+    assert(bounds(a._1.lowerBounds) === bounds(b._1.lowerBounds), a._1.filePath)
+    assert(bounds(a._1.upperBounds) === bounds(b._1.upperBounds), a._1.filePath)
+    assert(a._2 === b._2, s"${a._1.filePath} raw bytes")
+  }
+
+  test("writeFiles' returned stats equal a footer re-read, flat and date layouts") {
+    val df   = EventTable.committedSchema(EventLog.log(spark, sf))
+    val conf = spark.sessionState.newHadoopConf()
+    Seq(false, true).foreach { dateLayout =>
+      val root    = Files.createTempDirectory("graft-writer-stats-").toString
+      val written = EventTable.writeFiles(df, root, targetFileSize = 16L * 1024, dateLayout = dateLayout)
+      assert(written.nonEmpty)
+      assert(written.forall(_._1.filePath.contains("/event_date=")) === dateLayout)
+      assert(EventTable.listParquet(root) === written.map(_._1.filePath))
+      written.foreach(w => sameStats(w, FileStats.dataFileAndRaw(root, w._1.filePath, conf)))
+      assert(written.map(_._1.recordCount).sum === df.count())
+    }
+  }
+
+  test("a write whose input throws in one task commits nothing and leaves only reclaimable orphans") {
+    val boom = udf { (p: Int) =>
+      if (p == 3) { Thread.sleep(3000); throw new IllegalStateException("injected write failure") }
+      p
+    }
+    val df   = EventTable.committedSchema(EventLog.log(spark, sf))
+      .repartition(4, col("partition"))
+      .withColumn("partition", boom(col("partition")))
+    val root = Files.createTempDirectory("graft-writer-crash-").toString
+    val c    = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
+    val err = intercept[Exception] {
+      val files = EventTable.writeFiles(df, root, precomputedStats = Some(Nil), clustered = true).map(_._1)
+      c.commitAppend(files, EventTable.watermarksOf(files))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected write failure")), err)
+    assert(c.currentVersion() === 0, "nothing may be committed")
+    val rootP = Paths.get(root)
+    val left  = filesUnder(rootP).map(p => rootP.relativize(p).toString)
+    assert(left.nonEmpty && left.forall(_.startsWith("data/")), left)
+    Thread.sleep(20) // the orphan horizon is strict (mtime < now)
+    import spark.implicits._
+    val orphans = OrphanGc.orphans(spark, root, olderThanMs = 0).as[String].collect().toSet
+    assert(left.toSet.subsetOf(orphans), s"not reclaimable: ${left.toSet -- orphans}")
+    val dirs = { val w = Files.walk(rootP); try w.iterator().asScala.toSeq finally w.close() }
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString)
+    assert(!dirs.exists(d => d == ".staging" || d == "_temporary"), dirs)
   }
 }
