@@ -152,9 +152,13 @@ object Bench {
     //    min also reported as the noise floor.
     val reps  = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws is not a fast one: its first exception class goes
+    // to BENCH_FULL.json "errors", and the run exits 1 after the artifact
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { consume(fn(spark, sfDir)) } catch { case _: Throwable => () }
+      try { consume(fn(spark, sfDir)) }
+      catch { case e: Throwable => errors.getOrElseUpdate(name, e.getClass.getName) }
       (System.nanoTime() - t0) / 1e9
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
@@ -369,12 +373,12 @@ object Bench {
     }
     val results = bracket("sweep") { names.map { name =>
       val fn    = SparkEntry.queries(name)
-      val first = timeOne(fn)
+      val first = timeOne(name, fn)
       // warm-rep churn window: first touch legitimately builds fixtures, so
       // the counters bracket ONLY the reps the medians come from
       val b0       = core.SessionMemo.buildCount
       val (d0, c0) = storageSnap()
-      val warm  = Seq.fill(reps)(timeOne(fn))
+      val warm  = Seq.fill(reps)(timeOne(name, fn))
       val builds   = core.SessionMemo.buildCount - b0
       val (d1, c1) = storageSnap()
       val spill    = math.max(0L, d1 - d0)
@@ -1157,6 +1161,7 @@ object Bench {
     val shortKey: Map[String, String] = shortKeys(results.map(_._1))
     val queryKeysJson =
       results.map(r => s""""${shortKey(r._1)}":"${r._1}"""").mkString("{", ",", "}")
+    val errorsJson = errors.map { case (n, c) => s""""$n":"$c"""" }.mkString("{", ",", "}")
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
       s""""queries":${jmap(_._3)},"queries_min":${jmap(_._4)},"queries_max":${jmap(_._5)},""" +
       s""""first_touch":${jmap(_._2)},"first_touch_total":$firstTotal,""" +
@@ -1164,7 +1169,7 @@ object Bench {
       s""""dedup_recall":$dedupRecall,"retrieval_quality":$retrievalQuality,""" +
       s""""query_scale":$qScale,"mor_compact":$morCompact,"maint_scale":$maintScale,""" +
       s""""host":$hostJson,"query_health":$healthJson,"query_keys":$queryKeysJson,""" +
-      s""""gateway":${gatewayFull._1},"sf":"$sfDir","micro":$microJson}"""
+      s""""gateway":${gatewayFull._1},"sf":"$sfDir","micro":$microJson,"errors":$errorsJson}"""
     // filtered iteration runs (SPARK_GRAFT_BENCH_ONLY) must never clobber
     // the committed full-run artifact with a near-empty one — and the old
     // BENCH_FULL.partial.json sibling is retired (r20 verdict #6: a
@@ -1205,7 +1210,7 @@ object Bench {
       f"""{"metric":"total","value":$total%.2f,"unit":"sec","reps":$reps,"sf":"$sfShort",""" +
         s""""queries":${q2(_._3)},""" +
         s""""stream_ingest":$ingestCompact,"stream_ingest_10x":$ingest10xCompact,""" +
-        f""""regime":"$regime","full":"BENCH_FULL.json"}"""
+        f""""regime":"$regime","full":"$fullPath"}"""
     // micro with abbreviated keys (full names live in BENCH_FULL.json)
     val microCompact = Seq("write_64B_ops" -> "w64", "write_1KB_ops" -> "w1k",
       "write_4KB_ops" -> "w4k", "idempotent_dup_ops" -> "dup", "write_wal_64B_ops" -> "wal",
@@ -1250,7 +1255,7 @@ object Bench {
         (if (gw) s""""gateway":$gatewayCompact,""" else "") +
         (if (micro) s""""micro":$microCompact,""" else "") +
         (if (keys && only.isEmpty) s""""keys":"BENCH_FULL.json query_keys",""" else "") +
-        s""""full":"BENCH_FULL.json"}"""
+        s""""full":"$fullPath"}"""
     val rendered = Seq(assemble(true, true, true, true), assemble(false, true, true, true),
       assemble(false, false, true, true), assemble(false, false, false, true),
       assemble(false, false, false, false),
@@ -1265,6 +1270,7 @@ object Bench {
     println(driverFullLine)
     println(compact)
     spark.stop()
+    if (errors.nonEmpty) { System.err.println(s"[graft-bench] failed queries: $errorsJson"); sys.exit(1) }
   }
 
   /** L5 gateway scenarios against an in-process [[serve.GatewayServer]]

@@ -450,22 +450,75 @@ object LlmQueries {
       result
     }
 
+  /** The fixed-point scale of every Spark-side k-means mean and
+    * fixed-point cosine: values enter integer sums as floor(x·2^20). */
+  private final val FixedPoint = 1 << 20
+
+  /** THE Spark-side fixed-point mean, the one definition behind the IVF
+    * and PQ Lloyd updates ([[lloyd]]), the e1/e2 label centroids, e5's
+    * slice centroids and r7's feedback vectors. Per (keys, component): the
+    * sum of floor(x·2^20) as longs plus the count, through one
+    * partial-aggregatable shuffle; then a keys-bounded re-pack in
+    * component order and ONE binary64 division s / (n·2^20). Integer sums
+    * are order-independent, so any shuffle width and the DuckDB twins in
+    * oracleSql (`v[d] * 1048576`) derive bit-identical doubles. Returns
+    * (keys…, out: array<double>). */
+  private[graft] def fixedPointMeans(frame: DataFrame, keys: Seq[String], vec: String, out: String): DataFrame =
+    frame.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(sum(expr(s"cast(floor(x * $FixedPoint) as bigint)")).as("s"), count(lit(1)).as("n"))
+      .groupBy(keys.map(col): _*)
+      .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', s, 'n', n)))").as("pc"))
+      .select(keys.map(col) :+
+        expr(s"transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * ${FixedPoint}.0D))").as(out): _*)
+
+  /** Fixed-point cosine floor(cos(a, b)·2^20) as a long: how every
+    * hash-gated embedding audit emits a cosine. */
+  private def cosFp(a: String, b: String): String =
+    s"cast(floor((${cosSim(a, b)}) * $FixedPoint) as bigint)"
+
+  /** The one Lloyd loop: [[KMeansIters]] rounds from the `init` centroids,
+    * each assigning against the current centroids and taking the
+    * [[fixedPointMeans]] of every `keys` group's `vec`s as the next `cv`.
+    * Fully distributed: the centroids stay a frame, never a collect. */
+  private def lloyd(init: DataFrame, assign: DataFrame => DataFrame,
+                    keys: Seq[String], vec: String): DataFrame =
+    (1 to KMeansIters).foldLeft(init)((c, _) => fixedPointMeans(assign(c), keys, vec, "cv"))
+
+  /** Write `frame` to the parquet sidecar `path`, read it back and pin it.
+    * Persist caches data, not the plan: re-reading re-roots every consumer
+    * plan at a file scan instead of the training lineage. Parquet
+    * round-trips ints and binary64 exactly, so oracle parity holds. */
+  private def materialize(frame: DataFrame, path: String): DataFrame = {
+    frame.write.mode("overwrite").parquet(path)
+    val back = frame.sparkSession.read.parquet(path)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    back.count()
+    back
+  }
+
+  /** Eviction of a materialized index (ivfCache, pqCache): both pinned
+    * frames AND the sidecar dir. */
+  private val dropSidecar: ((DataFrame, DataFrame, String)) => Unit = {
+    case (a, b, side) =>
+      a.unpersist(); b.unpersist()
+      try graft.core.FsUtil.deleteTree(side)
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
+
   /** Trained IVF index per (session, sfDir): (centroids, assigned corpus),
     * both cached — training happens once and probe-1/probe-2 share it.
     *
-    * TRAINED centroids: deterministic Lloyd's k-means — first-N seeds,
-    * KMeansIters update steps. Cluster means are computed from FIXED-POINT
-    * integer sums (floor(x·2^20) per component), which are
-    * order-independent, so Spark's shuffle order and the DuckDB oracle
-    * produce bit-identical centroids and the whole query stays hash-gated.
-    * The Lloyd update is FULLY DISTRIBUTED: the k×dim fixed-point sums
-    * stay a frame end to end (no driver `.collect()`), so k follows the
-    * √N rule ([[centroidsFor]]) all the way to the [[MaxCentroids]]
-    * broadcast bound instead of a driver-memory cap. Assignment is a
-    * broadcast(k centroids) × corpus map, the standard distributed
-    * k-means shape, with the argmax as a partial-aggregatable max_by over
-    * a UNIQUE (c_sim, -c_id) key — map-side combine, no window
-    * shuffle+sort, same tie-break as the oracle's row_number ordering.
+    * TRAINED centroids: [[lloyd]] from the first-N seeds, so cluster means
+    * are [[fixedPointMeans]] and Spark's shuffle order and the DuckDB oracle
+    * produce bit-identical centroids; the whole query stays hash-gated.
+    * k follows the √N rule ([[centroidsFor]]) all the way to the
+    * [[MaxCentroids]] broadcast bound instead of a driver-memory cap.
+    * Assignment ([[ivfAssign]]) is a broadcast(k centroids) × corpus map,
+    * the standard distributed k-means shape, with the argmax as a
+    * partial-aggregatable max_by over a UNIQUE (c_sim, -c_id) key — map-side
+    * combine, no window shuffle+sort, same tie-break as the oracle's
+    * row_number ordering.
     *
     * MATERIALIZED SIDECAR (round 22 — the r21 verdict's #3): persist
     * caches data, not the plan, so every consumer of the trained frames
@@ -473,30 +526,34 @@ object LlmQueries {
     * plan — ann_ivfpq_topk's constructor plan carried 274 Exchange nodes
     * (plans/r21/ann_ivfpq_topk_before.txt), a re-ANALYSIS tax on every
     * cold build and a planner hazard at scale. Both trained frames now
-    * round-trip through a parquet sidecar exactly like [[pqIndexFull]]'s
+    * round-trip through [[materialize]] exactly like [[pqIndexFull]]'s
     * codes (FAISS materializes the same artifacts: centroids + invlist
     * assignments), re-rooting every consumer plan at a file scan bounded
-    * regardless of training iterations. Parquet round-trips binary64 and
-    * ints exactly, so oracle parity is untouched. Fresh uuid dir per
-    * build (no cross-run reuse); onEvict drops both frames AND the dir. */
-  private val ivfCache = new graft.core.SessionMemo[(DataFrame, DataFrame, String)](onEvict = {
-    case (c, a, side) =>
-      c.unpersist(); a.unpersist()
-      try graft.core.FsUtil.deleteTree(side)
-      catch { case scala.util.control.NonFatal(_) => () }
-      ()
-  })
+    * regardless of training iterations. Fresh uuid dir per build (no
+    * cross-run reuse); onEvict drops both frames AND the dir. */
+  private val ivfCache = new graft.core.SessionMemo[(DataFrame, DataFrame, String)](onEvict = dropSidecar)
 
-  /** Fresh uuid-suffixed sidecar directory under the configurable index
-    * root ($SPARK_GRAFT_INDEX_DIR / spark conf graft.index.root — an
-    * object-store URI every executor reaches on a real cluster),
-    * defaulting to a driver temp dir on local[*]. Registered with the
-    * FsUtil exit sweep; each build writes a FRESH dir and never reads a
-    * pre-existing one (no cross-run caching). */
+  /** Where a sidecar index lives: the configured root
+    * ($SPARK_GRAFT_INDEX_DIR, else spark conf graft.index.root — an
+    * object-store URI every executor reaches on a real cluster), or None
+    * for a driver temp dir, which only a `local` master may use. Any other
+    * master without a root fails here, before training: its executors
+    * could not write to a driver-local path. */
+  private[graft] def sidecarRoot(master: String, envRoot: Option[String],
+                                 confRoot: Option[String]): Option[String] = {
+    val root = envRoot.orElse(confRoot).map(_.stripSuffix("/"))
+    if (root.isEmpty && !master.startsWith("local"))
+      throw new IllegalStateException(s"master '$master' has no sidecar index root that every " +
+        "executor can reach: set SPARK_GRAFT_INDEX_DIR or spark conf graft.index.root")
+    root
+  }
+
+  /** Fresh uuid-suffixed sidecar directory under [[sidecarRoot]].
+    * Registered with the FsUtil exit sweep; each build writes a FRESH dir
+    * and never reads a pre-existing one (no cross-run caching). */
   private def sidecarDir(s: SparkSession, what: String): String = {
-    val side = sys.env.get("SPARK_GRAFT_INDEX_DIR")
-      .orElse(s.conf.getOption("graft.index.root"))
-      .map(_.stripSuffix("/"))
+    val side = sidecarRoot(s.sparkContext.master, sys.env.get("SPARK_GRAFT_INDEX_DIR"),
+                           s.conf.getOption("graft.index.root"))
       .map(r => s"$r/graft-$what-sidecar-${java.util.UUID.randomUUID()}")
       .getOrElse(java.nio.file.Files.createTempDirectory(s"graft-$what-sidecar-").toString)
     graft.core.FsUtil.deleteOnExit(side)
@@ -515,66 +572,41 @@ object LlmQueries {
     (cents, assigned)
   }
 
+  /** Nearest trained cell per vector by cosine: (vec_id, v, centroid_id).
+    * The per-vector norm is hoisted above the k-wide centroid cross join
+    * (one self-dot per vector, not per (vector, cell)). Shared by training,
+    * the corpus assignment and the incremental `add` path. */
+  private def ivfAssign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    vecs.withColumn("vn2", expr(dot("v", "v"))).crossJoin(broadcast(cents))
+      .withColumn("c_sim", expr(s"${dot("v", "cv")} / (sqrt(vn2) * sqrt(${dot("cv", "cv")}))"))
+      .groupBy(col("vec_id"))
+      .agg(max_by(struct(col("c_id").as("centroid_id"), col("v").as("v")),
+                  struct(col("c_sim").as("s"), (-col("c_id")).as("neg_id"))).as("best"))
+      .select(col("vec_id"), col("best.v").as("v"), col("best.centroid_id").as("centroid_id"))
+
   private def ivfIndexFull(s: SparkSession, dir: String): (DataFrame, DataFrame, String) =
     {
       ivfCache.getOrElseUpdate(s, dir)({
+        val side = sidecarDir(s, "ivf")
         // persisted only for the duration of the build (KMeansIters + 1
         // traversals), unpersisted before returning — holding it in the memo
         // value would leak the cached blocks past session eviction, whose
         // onEvict only covers the assigned frame
         val e = emb(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-        def assign(cents: DataFrame): DataFrame = {
-          // per-vector norm hoisted above the k-wide centroid cross join
-          // (round 22): one self-dot per vector, not per (vector, cell) —
-          // identical doubles, so training and the oracle are untouched
-          val simToCent = expr(s"${dot("v", "cv")} / (sqrt(vn2) * sqrt(${dot("cv", "cv")}))")
-          e.withColumn("vn2", expr(dot("v", "v"))).crossJoin(broadcast(cents))
-            .withColumn("c_sim", simToCent)
-            .groupBy(col("vec_id"))
-            .agg(max_by(struct(col("c_id").as("centroid_id"), col("v").as("v")),
-                        struct(col("c_sim").as("s"), (-col("c_id")).as("neg_id"))).as("best"))
-            .select(col("vec_id"), col("best.v").as("v"), col("best.centroid_id").as("centroid_id"))
-        }
-
         // √N cells ([[centroidsFor]]): the count also materializes the
         // persisted frame before the training traversals
         val nc = centroidsFor(e.count())
-        var cents = e.filter(col("vec_id") < nc)
+        val seeds = e.filter(col("vec_id") < nc)
           .select(col("vec_id").as("c_id"), col("v").as("cv"))
-        (1 to KMeansIters).foreach { _ =>
-          // Distributed Lloyd update: per-(cell, dim) fixed-point sums fold
-          // through one partial-aggregatable shuffle, then re-pack to a
-          // k-row (c_id, cv) frame — never touching the driver. The
-          // division is the same binary64 arithmetic as the collected
-          // version (and the oracle): CAST(s)/(CAST(n) * 1048576.0).
-          cents = assign(cents)
-            .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-            .groupBy("centroid_id", "pos")
-            .agg(sum(expr("cast(floor(x * 1048576) as bigint)")).as("s"), count(lit(1)).as("n"))
-            .groupBy(col("centroid_id"))
-            .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', s, 'n', n)))").as("pc"))
-            .select(col("centroid_id").as("c_id"),
-              expr("transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * 1048576.0D))").as("cv"))
-        }
-        // Materialize the trained index as a parquet sidecar (see the
-        // sidecar note at [[ivfCache]]): writing the centroids runs the
-        // training chain once (the old persist+count did the same work);
-        // reading them back re-roots every consumer — probe selection,
-        // ann_ivf_probe/2, ann_ivfsq/ivfpq, pqIndexFull's residual chain —
-        // at a bounded file scan instead of the KMeansIters lineage. Both
-        // frames stay persisted too: the centroids are re-broadcast by
-        // every probe-selection pass, the assignment is every consumer's
-        // corpus-side scan.
-        val side = sidecarDir(s, "ivf")
-        cents.write.mode("overwrite").parquet(s"$side/cents")
-        val trained = s.read.parquet(s"$side/cents")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        trained.count()
-        assign(trained).write.mode("overwrite").parquet(s"$side/assigned")
-        val assigned = s.read.parquet(s"$side/assigned")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        assigned.count() // materialize off `e` before releasing it
+        // Writing the centroids runs the training chain once; the final
+        // assignment is against the TRAINED centroids (the oracle's
+        // `assigned` CTE). Both frames stay persisted: the centroids are
+        // re-broadcast by every probe-selection pass, the assignment is
+        // every consumer's corpus-side scan.
+        val trained = materialize(
+          lloyd(seeds, c => ivfAssign(e, c).withColumnRenamed("centroid_id", "c_id"), Seq("c_id"), "v"),
+          s"$side/cents")
+        val assigned = materialize(ivfAssign(e, trained), s"$side/assigned") // off `e` before releasing it
         e.unpersist()
         (trained, assigned, side)
       })
@@ -639,22 +671,15 @@ object LlmQueries {
     * engines already derive bit-identically), so the DuckDB twin stays
     * hash-gated.
     *
-    * Training is the same fully distributed fixed-point Lloyd as
-    * [[ivfIndex]], run per SUBSPACE over residual subvectors: assignment
-    * by squared L2 (the PQ literature's metric; cosine is meaningless on
-    * subvectors) with ties to the smaller codeword id, update via
-    * order-independent floor(x·2^20) integer sums — bit-identical in the
-    * DuckDB twin. Empty codewords simply drop out of the update (both
-    * engines GROUP BY only assigned codewords), which is why codes store
-    * the DENSE re-key (row_number over the ≤ PqM×PqK trained codebook —
-    * a window over a bounded frame). */
-  private val pqCache = new graft.core.SessionMemo[(DataFrame, DataFrame, String)](onEvict = {
-    case (b, c, side) =>
-      b.unpersist(); c.unpersist()
-      try graft.core.FsUtil.deleteTree(side)
-      catch { case scala.util.control.NonFatal(_) => () }
-      ()
-  })
+    * Training is the same [[lloyd]] loop as [[ivfIndex]], run per
+    * SUBSPACE over residual subvectors: assignment by squared L2 (the PQ
+    * literature's metric; cosine is meaningless on subvectors) with ties
+    * to the smaller codeword id, update by [[fixedPointMeans]] —
+    * bit-identical in the DuckDB twin. Empty codewords simply drop out of
+    * the update (both engines GROUP BY only assigned codewords), which is
+    * why codes store the DENSE re-key (row_number over the ≤ PqM×PqK
+    * trained codebook — a window over a bounded frame). */
+  private val pqCache = new graft.core.SessionMemo[(DataFrame, DataFrame, String)](onEvict = dropSidecar)
 
   private def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (bkm, codes, _) = pqIndexFull(s, dir)
@@ -665,6 +690,7 @@ object LlmQueries {
     {
       pqCache.getOrElseUpdate(s, dir)({
         val (cents, assigned) = ivfIndex(s, dir)
+        val side = sidecarDir(s, "pq")
         // residuals vs the trained coarse cell: centroids are a bounded
         // broadcast; the frame is persisted only for the training
         // traversals and released once codes materialize
@@ -680,7 +706,7 @@ object LlmQueries {
           .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
 
         // nearest codeword per (vector, subspace) by squared L2 — the same
-        // partial-aggregatable max_by shape as ivfIndex.assign (maximize
+        // partial-aggregatable max_by shape as [[ivfAssign]] (maximize
         // (-dist, -c_id): ties go to the SMALLER codeword id)
         def assign(books: DataFrame): DataFrame =
           sub.join(broadcast(books), "m")
@@ -691,63 +717,38 @@ object LlmQueries {
                         struct((-col("dist")).as("nd"), (-col("c_id")).as("ni"))).as("best"))
             .select(col("vec_id"), col("m"), col("best.c_id").as("c_id"), col("best.sv").as("sv"))
 
-        var books = sub.filter(col("vec_id") < PqK)
+        val seeds = sub.filter(col("vec_id") < PqK)
           .select(col("m"), col("vec_id").as("c_id"), col("sv").as("cv"))
-        (1 to KMeansIters).foreach { _ =>
-          books = assign(books)
-            .select(col("m"), col("c_id"), posexplode(col("sv")).as(Seq("pos", "x")))
-            .groupBy("m", "c_id", "pos")
-            .agg(sum(expr("cast(floor(x * 1048576) as bigint)")).as("s"), count(lit(1)).as("n"))
-            .groupBy(col("m"), col("c_id"))
-            .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', s, 'n', n)))").as("pc"))
-            .select(col("m"), col("c_id"),
-              expr("transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * 1048576.0D))").as("cv"))
-        }
-        val trained = books.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val trained = lloyd(seeds, assign, Seq("m", "c_id"), "sv")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         trained.count()
         // dense re-key: c-th surviving codeword of subspace m → index c
         // (window over the ≤ PqM×PqK-row codebook — bounded by knobs)
         val wDense = Window.partitionBy(col("m")).orderBy(col("c_id"))
         val dense  = trained.withColumn("dc", row_number().over(wDense) - 1)
-        val bkm0 = dense
+        val bkm = dense
           .groupBy("m").agg(expr("array_sort(collect_list(named_struct('c', dc, 'cv', cv)))").as("cl"))
           .agg(expr("array_sort(collect_list(named_struct('m', m, 'cl', cl)))").as("ml"))
           .select(expr("transform(ml, x -> transform(x.cl, y -> y.cv))").as("bkm"))
         // the sidecar carries the vector's coarse cell (residual decode
         // needs it; IVFPQ's probe restriction reads it for free) — joined
         // from the long-lived assigned frame, not the transient rsd
-        val codes0 = assign(trained)
+        val codes = assign(trained)
           .join(broadcast(dense.select(col("m"), col("c_id"), col("dc"))), Seq("m", "c_id"))
           .groupBy(col("vec_id"))
           .agg(expr("array_sort(collect_list(named_struct('m', m, 'dc', dc)))").as("pc"))
           .select(col("vec_id"), expr("transform(pc, p -> p.dc)").as("code"))
           .join(assigned.select(col("vec_id"), col("centroid_id").as("cell")), "vec_id")
           .select(col("vec_id"), col("cell"), col("code"))
-        // MATERIALIZED SIDECAR: the residual chain's logical tree inlines
-        // the coarse Lloyd chain under the per-subspace one, and every
-        // warm consumer paid ~2 s of DRIVER re-analysis over it per
-        // execution (persist caches data, not the plan — the sigCache
-        // lesson one level up). Writing codes + codebook to parquet and
-        // reading them back re-roots every consumer plan at a file scan —
-        // which IS the deployment shape: FAISS materializes exactly these
-        // invlists (cell, code) next to the vectors. Parquet round-trips
-        // ints and binary64 exactly, so oracle parity is untouched.
-        // INDEX ROOT (round 21): on a real cluster, executors cannot write
-        // parquet to a driver-local temp path — [[sidecarDir]] resolves the
-        // configurable root; eviction deletes it scheme-aware, and the
-        // FsUtil exit sweep covers a JVM that dies without evicting.
-        val side = sidecarDir(s, "pq")
-        bkm0.write.mode("overwrite").parquet(s"$side/bkm")
-        codes0.write.mode("overwrite").parquet(s"$side/codes")
-        val bkm = s.read.parquet(s"$side/bkm")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bkm.count()
-        val codes = s.read.parquet(s"$side/codes")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        codes.count()
+        // MATERIALIZED SIDECAR: the residual chain inlines the coarse Lloyd
+        // chain under the per-subspace one (~2 s of driver re-analysis per
+        // warm consumer before); [[materialize]] re-roots every consumer at
+        // a file scan — FAISS's deployment shape, invlists (cell, code)
+        // next to the vectors.
+        val result = (materialize(bkm, s"$side/bkm"), materialize(codes, s"$side/codes"), side)
         rsd.unpersist()
         trained.unpersist()
-        (bkm, codes, side)
+        result
       })
     }
 
@@ -829,17 +830,11 @@ object LlmQueries {
   def evictLabelCentroids(s: SparkSession, dir: String): Unit = centroidCache.remove(s, dir)
   private def labelCentroids(s: SparkSession, dir: String): DataFrame =
     centroidCache.getOrElseUpdate(s, dir)(
-      emb(s, dir).select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("label", "pos")
-        .agg(sum(expr("cast(floor(x * 1048576) as bigint)")).as("s"), count(lit(1)).as("n"))
-        .groupBy("label")
-        .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', s, 'n', n)))").as("pc"))
-        .select(col("label"),
-          expr("transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * 1048576.0D))").as("cv"))
+      fixedPointMeans(emb(s, dir), Seq("label"), "v", "cv")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   private def labelScored(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).join(broadcast(labelCentroids(s, dir)), "label")
-      .withColumn("cos_fp", expr(s"cast(floor((${cosSim("v", "cv")}) * 1048576) as bigint)"))
+      .withColumn("cos_fp", expr(cosFp("v", "cv")))
       .select(col("label"), col("vec_id"), col("cos_fp"))
 
   private[graft] def collectMmrRels(rel: DataFrame): Seq[(Long, Long, Double)] =
@@ -958,13 +953,7 @@ object LlmQueries {
     * assignment, with NO retraining. The batch never shuffles. */
   private def incrementalAssigned(s: SparkSession, dir: String): DataFrame = {
     val (cents, _) = ivfIndex(s, dir)
-    incrementalBatch(s, dir).withColumn("vn2", expr(dot("v", "v")))
-      .crossJoin(broadcast(cents))
-      .withColumn("c_sim", expr(s"${dot("v", "cv")} / (sqrt(vn2) * sqrt(${dot("cv", "cv")}))"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id").as("centroid_id"), col("v").as("v")),
-                  struct(col("c_sim").as("s"), (-col("c_id")).as("neg_id"))).as("best"))
-      .select(col("vec_id"), col("best.v").as("v"), col("best.centroid_id").as("centroid_id"))
+    ivfAssign(incrementalBatch(s, dir), cents)
   }
 
   /** Bench probe: the ann_ivf_probe2 plan run over the MERGED index
@@ -2391,8 +2380,7 @@ object LlmQueries {
             |  CASE WHEN mm[d].mx = mm[d].mn THEN mm[d].mn
             |       ELSE mm[d].mn + ((CAST(c AS DOUBLE) + 128.0D) + 0.5D) * (mm[d].mx - mm[d].mn) / 255.0D
             |  END)""".stripMargin))
-        .withColumn("cos_fp", expr(
-          s"cast(floor((${dot("v", "xhat")} / (sqrt(${dot("v", "v")}) * sqrt(${dot("xhat", "xhat")}))) * 1048576) as bigint)"))
+        .withColumn("cos_fp", expr(cosFp("v", "xhat")))
         .groupBy(col("label").cast("long").as("label"))
         .agg(count(lit(1)).as("n_vecs"),
              expr("sum(cos_fp) div count(1)").as("avg_cos_fp"),
@@ -2417,8 +2405,7 @@ object LlmQueries {
       val (bkm, codes) = pqIndex(s, dir)
       val (cents, _)   = ivfIndex(s, dir)
       pqDecode(codes, bkm, cents).join(e, "vec_id")
-        .withColumn("cos_fp", expr(
-          s"cast(floor((${dot("v", "xhat")} / (sqrt(${dot("v", "v")}) * sqrt(xn2))) * 1048576) as bigint)"))
+        .withColumn("cos_fp", expr(cosFp("v", "xhat")))
         .groupBy(col("label").cast("long").as("label"))
         .agg(count(lit(1)).as("n_vecs"),
              expr("sum(cos_fp) div count(1)").as("avg_cos_fp"),
@@ -2445,16 +2432,10 @@ object LlmQueries {
       // broadcasts.
       graft.functions.GraftFunctions.ensureRegistered(s)
       val e = emb(s, dir).withColumn("slice", pmod(col("vec_id"), lit(2L)))
-      val cents = e.select(col("label"), col("slice"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("label", "slice", "pos")
-        .agg(sum(expr("cast(floor(x * 1048576) as bigint)")).as("s"), count(lit(1)).as("n"))
-        .groupBy("label", "slice")
-        .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', s, 'n', n)))").as("pc"))
-        .select(col("label"), col("slice"),
-          expr("transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * 1048576.0D))").as("cv"))
+      val cents = fixedPointMeans(e, Seq("label", "slice"), "v", "cv")
       val ca = cents.filter(col("slice") === 0).select(col("label"), col("cv").as("ca"))
       val cb = cents.filter(col("slice") === 1).select(col("label"), col("cv").as("cb"))
-      e.withColumn("norm_fp", expr(s"cast(floor(sqrt(${dot("v", "v")}) * 1048576) as bigint)"))
+      e.withColumn("norm_fp", expr(s"cast(floor(sqrt(${dot("v", "v")}) * $FixedPoint) as bigint)"))
         .groupBy("label")
         .agg(
           sum(when(col("slice") === 0, 1L).otherwise(0L)).as("n_a"),
@@ -2464,7 +2445,7 @@ object LlmQueries {
         .join(broadcast(ca), "label")
         .join(broadcast(cb), "label")
         .select(col("label").cast("long").as("label"), col("n_a"), col("n_b"),
-          expr(s"cast(floor((${cosSim("ca", "cb")}) * 1048576) as bigint)").as("drift_cos_fp"),
+          expr(cosFp("ca", "cb")).as("drift_cos_fp"),
           col("avg_norm_fp_a"), col("avg_norm_fp_b"))
     },
 
@@ -2574,15 +2555,8 @@ object LlmQueries {
           .select(col("q_id"), col("rank"), col("neighbor_id")).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       }.toDF("q_id", "rank", "neighbor_id")
-      val fb = first
-        .join(e.select(col("vec_id").as("neighbor_id"), col("v")), "neighbor_id")
-        .select(col("q_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("q_id", "pos")
-        .agg(sum(expr("cast(floor(x * 1048576) as bigint)")).as("fs"), count(lit(1)).as("n"))
-        .groupBy("q_id")
-        .agg(expr("array_sort(collect_list(named_struct('pos', pos, 's', fs, 'n', n)))").as("pc"))
-        .select(col("q_id"),
-          expr("transform(pc, p -> cast(p.s as double) / (cast(p.n as double) * 1048576.0D))").as("fv"))
+      val fb = fixedPointMeans(
+        first.join(e.select(col("vec_id").as("neighbor_id"), col("v")), "neighbor_id"), Seq("q_id"), "v", "fv")
       val q2 = e.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
         .join(fb, "q_id")

@@ -597,6 +597,58 @@ class LlmSpec extends AnyFunSuite {
       "trained cells must not depend on shuffle partitioning (fixed-point sums are order-independent)")
   }
 
+  test("distributed PQ training is partitioning-independent: same e4 rows under a different shuffle width") {
+    // The per-subspace Lloyd loop shares the IVF loop's fixed-point means,
+    // so the trained codebook, every code and e4's reconstruction cosines
+    // must be bit-identical under any shuffle width.
+    val sf = "/root/testdata/sf0.001"
+    def rows(s: org.apache.spark.sql.SparkSession): Seq[Seq[Long]] =
+      LlmQueries.queries("e4_pq_error")(s, sf).collect()
+        .map(r => Seq("label", "n_vecs", "avg_cos_fp", "worst_cos_fp", "worst_vec_id").map(r.getAs[Long]))
+        .sortBy(_.head).toSeq
+    val base = rows(spark)
+    assert(base.nonEmpty)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(rows(s2) === base,
+      "PQ codes must not depend on shuffle partitioning (fixed-point sums are order-independent)")
+  }
+
+  test("fixedPointMeans equals a serial Long-sum reference bit for bit at any shuffle width") {
+    // Uneven groups over two keys; negative components (floor rounds
+    // toward -inf, so -1e-7 scales to -1, not 0) and -0.0 (scales to 0:
+    // an all -0.0 component means +0.0).
+    val rnd = new scala.util.Random(17)
+    val sizes = Seq((0, "a") -> 1, (0, "b") -> 2, (1, "a") -> 5, (1, "b") -> 13, (2, "c") -> 40)
+    val rows = sizes.flatMap { case ((k1, k2), n) =>
+      Seq.fill(n)((k1, k2, Seq(rnd.nextGaussian() * 3.0, -rnd.nextDouble() * 1e-6, -0.0, -1e-7,
+                               rnd.nextDouble() - 0.5)))
+    }
+    val Scale = 1048576.0
+    val expected: Map[(Int, String), Seq[Long]] = rows.groupBy(r => (r._1, r._2)).map { case (k, g) =>
+      val sums = g.map(_._3.map(x => math.floor(x * Scale).toLong)).transpose.map(_.sum)
+      k -> sums.map(s => java.lang.Double.doubleToRawLongBits(s.toDouble / (g.size.toDouble * Scale)))
+    }
+    assert(expected((2, "c"))(2) === java.lang.Double.doubleToRawLongBits(0.0))
+    Seq("1", "7").foreach { width =>
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", width)
+      val df = s2.createDataFrame(rows).toDF("k1", "k2", "vec").repartition(3)
+      val got = LlmQueries.fixedPointMeans(df, Seq("k1", "k2"), "vec", "mean").collect()
+        .map(r => (r.getInt(0), r.getString(1)) -> r.getSeq[Double](2).map(java.lang.Double.doubleToRawLongBits))
+        .toMap
+      assert(got === expected, s"means differ from the serial reference at shuffle width $width")
+    }
+  }
+
+  test("sidecar root: only a local master may fall back to a driver temp dir") {
+    assert(LlmQueries.sidecarRoot("local[4]", None, None) === None)
+    assert(LlmQueries.sidecarRoot("spark://h:7077", None, Some("s3a://b/idx/")) === Some("s3a://b/idx"))
+    assert(LlmQueries.sidecarRoot("yarn", Some("hdfs:///idx"), Some("s3a://b/idx")) === Some("hdfs:///idx"))
+    val err = intercept[IllegalStateException](LlmQueries.sidecarRoot("yarn", None, None))
+    assert(err.getMessage.contains("SPARK_GRAFT_INDEX_DIR") && err.getMessage.contains("graft.index.root"))
+  }
+
   test("cached indexes are session-scoped: a second SparkSession reruns cleanly") {
     // sigCache/ivfCache/sqCache hold DataFrames bound to the creating
     // session — a dir-only key would hand session B a dead plan from
