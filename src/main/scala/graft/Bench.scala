@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
   * ran 62× degraded — the old gate sampled loadavg only around the sweep
   * and steal only whole-run, so a degradation RAMPING through the tail
   * phases passed both terms. Each phase brackets itself, and the
-  * top-level regime is noisy-host if ANY gating phase breached.
+  * top-level regime is noisy-host if ANY phase breached.
   *
   * Round 20 changed WHAT a phase bracket gates on. The r19 driver
   * artifact flipped its qscale phase noisy on loadavg 6.54 at steal
@@ -19,11 +19,9 @@ import org.apache.spark.sql.SparkSession
   * over the same window, as a percent of host capacity (`run` is forked
   * and Spark is local-mode, so one /proc/self/stat read covers every
   * bench thread). Loadavg stays RECORDED at phase entry/exit as
-  * adjudication evidence — and still gates the PRE-sweep sample, taken
-  * while the bench is idle (see the load gate in [[Bench.main]]) — it
-  * just no longer flips a phase the bench itself kept busy. The gateway
-  * phase records its bracket but never gates: its closed-loop HTTP
-  * harness IS the load it reads. Pulled out of the main sweep so the
+  * adjudication evidence; it just no longer flips a phase the bench
+  * itself kept busy. The stamp is recorded evidence: the bench never
+  * waits or retries on it. Pulled out of the main sweep so the
   * adjudication rule itself is unit-testable. */
 object BenchRegime {
   // extBusyPct is REQUIRED (no default): phaseQuiet treats a negative
@@ -32,13 +30,12 @@ object BenchRegime {
   // false-quiet stamps. Only measure() may produce the -1.0 sentinel, from
   // an explicit /proc-read failure.
   final case class PhaseBracket(name: String, loadIn: Double, loadOut: Double,
-                                stealPct: Double, gates: Boolean,
-                                extBusyPct: Double)
+                                stealPct: Double, extBusyPct: Double)
 
   /** Negative samples mean /proc was unavailable — excluded, same as the
     * old loadSamples convention. `maxExtBusy` is the external-CPU gate as
     * a percent of host capacity (the old 4.0-loadavg gate expressed
-    * capacity-relative: 100·maxLoad/cpus); false-noisy forces a re-run,
+    * capacity-relative: 100·4/cpus); false-noisy forces a re-run,
     * false QUIET is the adjudication hole this exists to close — but
     * self-load can no longer produce the false-noisy arm. */
   def phaseQuiet(p: PhaseBracket, maxExtBusy: Double, maxSteal: Double): Boolean =
@@ -48,31 +45,22 @@ object BenchRegime {
   def stamp(phases: Seq[PhaseBracket], wholeRunStealPct: Double,
             maxExtBusy: Double, maxSteal: Double): String =
     if (wholeRunStealPct <= maxSteal &&
-        phases.filter(_.gates).forall(phaseQuiet(_, maxExtBusy, maxSteal))) "quiet"
+        phases.forall(phaseQuiet(_, maxExtBusy, maxSteal))) "quiet"
     else "noisy-host"
 
   def phasesJson(phases: Seq[PhaseBracket], maxExtBusy: Double, maxSteal: Double): String =
     phases.map { p =>
       f"""{"name":"${p.name}","load_in":${p.loadIn}%.2f,"load_out":${p.loadOut}%.2f,""" +
         f""""steal_pct":${p.stealPct}%.3f,"ext_busy_pct":${p.extBusyPct}%.2f,""" +
-        f""""gates":${p.gates},""" +
         s""""quiet":${phaseQuiet(p, maxExtBusy, maxSteal)}}"""
     }.mkString("[", ",", "]")
 }
 
 object Bench {
-  /** Minimal-unique-prefix short keys for the compact driver line: each
-    * name maps to its shortest prefix (>= 2 chars) that exactly one name
-    * in the set starts with; a name that is itself a strict prefix of
-    * another keeps its full form (no shorter prefix can be unique, and
-    * the full name still cannot collide with the longer name's key).
-    * Deterministic in the name set; collision-free by construction. */
-  private[graft] def shortKeys(names: Seq[String]): Map[String, String] =
-    names.map { n =>
-      val p = (2 to n.length).iterator.map(n.substring(0, _))
-        .find(pfx => names.count(_.startsWith(pfx)) == 1)
-      n -> p.getOrElse(n)
-    }.toMap
+  /** One query's sweep record: first-touch and warm-rep wall seconds, and
+    * the warm reps' median JVM process CPU in milliseconds. */
+  private final case class Timing(name: String, first: Double, median: Double,
+                                  min: Double, max: Double, cpuMs: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -101,24 +89,34 @@ object Bench {
             println(s"[graft-stage-detail] id=${i.stageId} rdds=${i.rddInfos.map(r => s"${r.name}@${r.scope.map(_.name).getOrElse("?")}").mkString("; ").take(300)}")
         }
       })
+    // a temp dir that never outlives `body`: deleted even when body throws
+    def withTempDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
+      val dir = java.nio.file.Files.createTempDirectory(prefix)
+      try body(dir)
+      finally try core.FsUtil.deleteRecursively(dir)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
     // Steady-state warmup (standard bench practice): run the ingest and
     // dedup pipelines once at the smallest SF so timed queries measure the
     // engine, not first-call JIT/janino codegen compilation (~7s of
-    // one-time session cost measured at sf0.1 otherwise).
-    // SPARK_GRAFT_BENCH_WARM: "0" = no warmup, "nostream" = skip only the
-    // streaming-path warmup (A/B lever for adjudicating whether the r8
-    // warmup addition perturbed later query medians), default = full.
-    val warmMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "full")
-    if (warmMode != "0") try {
-      val warmRoot = java.nio.file.Files.createTempDirectory("graft-warm-").toString
-      table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", warmRoot)
-      llm.LlmQueries.queries("d2_minhash_lsh")(spark, "/root/testdata/sf0.001").count()
-      // warm the STREAMING path too (state store, checkpoint manager, the
-      // foreachBatch pipeline's codegen) so the measured sf build pays the
-      // engine, not first-stream JIT; sf0.001 caches under its own key
-      if (warmMode != "nostream")
-        streaming.StreamedTables.tableRoot(spark, "/root/testdata/sf0.001")
-    } catch { case _: Throwable => () }
+    // one-time session cost measured at sf0.1 otherwise). A failing step
+    // is reported and skipped: the sweep still runs, with that step's
+    // one-time cost landing in the first-touch numbers instead.
+    def warmStep(step: String)(body: => Any): Unit =
+      try body catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft-bench] warm-up step $step failed: $e")
+      }
+    warmStep("ingestAndCommit")(withTempDir("graft-warm-") { root =>
+      table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root.toString)
+    })
+    warmStep("d2_minhash_lsh")(
+      llm.LlmQueries.queries("d2_minhash_lsh")(spark, "/root/testdata/sf0.001").count())
+    // warm the STREAMING path too (state store, checkpoint manager, the
+    // foreachBatch pipeline's codegen) so the measured sf build pays the
+    // engine, not first-stream JIT; sf0.001 caches under its own key
+    warmStep("StreamedTables.tableRoot")(
+      streaming.StreamedTables.tableRoot(spark, "/root/testdata/sf0.001"))
     // Consume FULL tuples, not .count(): hashing every column of every row
     // forces Catalyst to materialize the complete projection, so map-only
     // queries (text stats, fingerprints) measure their real kernels instead
@@ -132,13 +130,14 @@ object Bench {
       ()
     }
     // MEASUREMENT ORDER (adjudicated in round 9, see BENCH_NOTES.md): the
-    // query sweep runs FIRST; the 10x backlog ingest, micro-benches, and
-    // gateway load all run AFTER it, so nothing heavyweight perturbs the
-    // measured medians. The round-8 "regression" was adjudicated to be
-    // (a) the artifact's 2000-char tail exposing only single-shot
-    // first-touch values (never the medians) and (b) ±60% run-to-run noise
-    // on first-touch fixture builds — 4 controlled reruns of identical
-    // round-8 code reproduced round-7-level numbers on a quiet machine.
+    // query sweep runs FIRST; the 10x backlog ingest and the scale, recall
+    // and maintenance probes all run AFTER it, so nothing heavyweight
+    // perturbs the measured medians. The round-8 "regression" was
+    // adjudicated to be (a) the artifact's 2000-char tail exposing only
+    // single-shot first-touch values (never the medians) and (b) ±60%
+    // run-to-run noise on first-touch fixture builds — 4 controlled reruns
+    // of identical round-8 code reproduced round-7-level numbers on a
+    // quiet machine.
     // optional comma-separated query filter — fast local iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
     // Repeatable measurement discipline (round-6 lesson: single-shot
@@ -155,11 +154,19 @@ object Bench {
     // a query that throws is not a fast one: its first exception class goes
     // to BENCH_FULL.json "errors", and the run exits 1 after the artifact
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
+    // JVM process CPU covers the driver and every local-mode executor
+    // thread: the column that holds steady where wall time moves with host
+    // load (summed thread CPU spread 0.06–0.12 IQR/median on a host whose
+    // wall spread read 0.27–1.5)
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // (wall seconds, process CPU milliseconds); a fatal error (OOM) ends
+    // the run instead of being filed as one query's failure
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+      val t0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
       try { consume(fn(spark, sfDir)) }
-      catch { case e: Throwable => errors.getOrElseUpdate(name, e.getClass.getName) }
-      (System.nanoTime() - t0) / 1e9
+      catch { case scala.util.control.NonFatal(e) => errors.getOrElseUpdate(name, e.getClass.getName) }
+      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e6)
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
     // SELF-ADJUDICATING SWEEP (round-15 verdict #1): the IVF-probe family
@@ -211,83 +218,18 @@ object Bench {
         val infos = spark.sparkContext.getRDDStorageInfo
         (infos.map(_.diskSize).sum, infos.map(_.numCachedPartitions.toLong).sum)
       } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
-    // LOAD GATE (round-17 verdict #1): three consecutive official artifacts
-    // (r15-r17) needed hand-written host-vs-code adjudication because the
-    // driver's run landed in an externally-loaded window (r17: 44.9k
-    // marginal at load 5.1-7.3, below the engine's own 53-67k identical-
-    // code band). Gate mechanically instead: sample /proc/loadavg BEFORE
-    // the sweep; above the threshold, back off once and re-sample. The
-    // artifact then stamps "regime":"noisy-host" whenever ANY phase-
-    // boundary sample exceeded the threshold — a below-band number
-    // self-classifies, no prose adjudication.
-    val maxLoad = sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD").flatMap(_.toDoubleOption).getOrElse(4.0)
-    val gateBackoffS = sys.env.get("SPARK_GRAFT_BENCH_LOAD_BACKOFF_S").flatMap(_.toIntOption).getOrElse(90)
-    var gateWaitedS = 0
-    // a PRE-sweep loadavg breach is a trustworthy external signal — the
-    // bench is idle when it samples — and it is the one place loadavg
-    // still GATES: mid-run loadavg can be self-load, but runnable/D-state
-    // pressure before the first job must be someone else's, including the
-    // IO-bound contention the steal/ext-CPU terms are blind to. A breach
-    // that survives the backoff pins the whole-run stamp noisy-host.
-    var preGateBreached = false
-    locally {
-      val l0 = hostLoad()
-      if (l0 > maxLoad) {
-        System.err.println(f"[graft-bench] host load $l0%.1f above gate $maxLoad%.1f — " +
-          s"backing off ${gateBackoffS}s before the sweep")
-        Thread.sleep(gateBackoffS * 1000L)
-        gateWaitedS = gateBackoffS
-        val l1 = hostLoad()
-        if (l1 > maxLoad) {
-          preGateBreached = true
-          System.err.println(f"[graft-bench] host load still $l1%.1f after backoff — " +
-            "proceeding; artifact will carry regime=noisy-host")
-        }
-      }
-    }
-    // STEAL pre-gate (round-19, next to the r17 load gate): hypervisor
-    // steal on this host class comes in MINUTES-long waves — three r19
-    // runs entered mid-wave and burned 12 minutes each to a noisy-host
-    // stamp a 20 s probe would have predicted. Probe steal over a short
-    // window; above the per-phase gate, back off and re-probe (bounded —
-    // a driver run must not stall forever). The waits land in
-    // gate_waited_s like the load gate's.
-    locally {
-      val probeS   = sys.env.get("SPARK_GRAFT_BENCH_STEAL_PROBE_S").flatMap(_.toIntOption).getOrElse(20)
-      val maxTries = sys.env.get("SPARK_GRAFT_BENCH_STEAL_BACKOFFS").flatMap(_.toIntOption).getOrElse(4)
-      val gate     = sys.env.get("SPARK_GRAFT_BENCH_MAX_STEAL").flatMap(_.toDoubleOption).getOrElse(1.0)
-      def probe(): Double = {
-        val (s0, j0) = cpuStat(); Thread.sleep(probeS * 1000L); val (s1, j1) = cpuStat()
-        gateWaitedS += probeS
-        if (j1 > j0) 100.0 * (s1 - s0) / (j1 - j0) else 0.0
-      }
-      var tries = 0
-      var st    = probe()
-      while (st > gate && tries < maxTries) {
-        tries += 1
-        System.err.println(f"[graft-bench] CPU steal $st%.2f%% above gate $gate%.1f%% — " +
-          s"backing off ${gateBackoffS}s (${tries}/$maxTries) before the sweep")
-        Thread.sleep(gateBackoffS * 1000L)
-        gateWaitedS += gateBackoffS
-        st = probe()
-      }
-      if (st > gate)
-        System.err.println(f"[graft-bench] CPU steal still $st%.2f%% after $tries backoffs — " +
-          "proceeding; artifact will carry regime=noisy-host")
-    }
     // PER-PHASE brackets feed the regime stamp (see [[BenchRegime]]): each
     // phase records loadavg in/out (evidence) + its own steal delta and
     // EXTERNAL busy-CPU share (host busy minus this JVM's own jiffies —
     // the two signals the bench cannot generate itself) and stamps itself
-    val maxSteal = sys.env.get("SPARK_GRAFT_BENCH_MAX_STEAL").flatMap(_.toDoubleOption).getOrElse(1.0)
-    // the old loadavg gate expressed capacity-relative: 4.0 runnable on a
-    // 32-cpu host = 12.5% of capacity demanded by OTHER processes
-    val maxExtBusy = sys.env.get("SPARK_GRAFT_BENCH_MAX_EXT_BUSY").flatMap(_.toDoubleOption)
-      .getOrElse(100.0 * maxLoad / Runtime.getRuntime.availableProcessors())
+    val maxSteal = 1.0
+    // the old loadavg gate of 4.0 expressed capacity-relative: 4.0 runnable
+    // on a 32-cpu host = 12.5% of capacity demanded by OTHER processes
+    val maxExtBusy = 100.0 * 4 / Runtime.getRuntime.availableProcessors()
     val phaseBrackets = scala.collection.mutable.ArrayBuffer.empty[BenchRegime.PhaseBracket]
     // one measured bracket around `body`, NOT recorded — bracket() records
     // phases; the qscale per-probe stamps reuse the same measurement
-    def measure[A](name: String, gates: Boolean = true)(body: => A): (A, BenchRegime.PhaseBracket) = {
+    def measure[A](name: String)(body: => A): (A, BenchRegime.PhaseBracket) = {
       val lin = hostLoad(); val (s0, i0, j0) = cpuSnap(); val self0 = selfJiffies()
       val out = body
       val lout = hostLoad(); val (s1, i1, j1) = cpuSnap(); val self1 = selfJiffies()
@@ -302,10 +244,10 @@ object Bench {
           val busy = dj - (i1 - i0) - (s1 - s0)
           100.0 * math.max(0L, busy - (self1 - self0)) / dj
         }
-      (out, BenchRegime.PhaseBracket(name, lin, lout, st, gates, ext))
+      (out, BenchRegime.PhaseBracket(name, lin, lout, st, ext))
     }
-    def bracket[A](name: String, gates: Boolean = true)(body: => A): A = {
-      val (out, pb) = measure(name, gates)(body)
+    def bracket[A](name: String)(body: => A): A = {
+      val (out, pb) = measure(name)(body)
       phaseBrackets += pb
       out
     }
@@ -373,7 +315,7 @@ object Bench {
     }
     val results = bracket("sweep") { names.map { name =>
       val fn    = SparkEntry.queries(name)
-      val first = timeOne(name, fn)
+      val first = timeOne(name, fn)._1
       // warm-rep churn window: first touch legitimately builds fixtures, so
       // the counters bracket ONLY the reps the medians come from
       val b0       = core.SessionMemo.buildCount
@@ -389,13 +331,14 @@ object Bench {
         cacheLastConsumer.foreach { case (last, hook) => if (last.contains(name)) hook() }
       // min AND max: the per-query rep spread lets the next round tell
       // noise from regression without rerunning this one
-      (name, first, median(warm), warm.min, warm.max)
+      val wall = warm.map(_._1)
+      Timing(name, first, median(wall), wall.min, wall.max, median(warm.map(_._2)))
     } }
     val loadAfterSweep = hostLoad()
-    def jmap(f: ((String, Double, Double, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    val total      = results.map(_._3).sum
-    val firstTotal = results.map(_._2).sum
+    def jmap(f: Timing => Double): String =
+      results.map(r => s"\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    val total      = results.map(_.median).sum
+    val firstTotal = results.map(_.first).sum
     // Streamed-ingest decomposition: staging simulates the producer writing
     // burst files; ingest is the engine (the reference's ev/s baseline
     // measures its server ingesting already-formed requests).
@@ -414,19 +357,18 @@ object Bench {
     // a number, not an argument. marginal_ev_per_sec is the slope between
     // the 1× and 10× runs: events added / seconds added, i.e. the steady
     // throughput with startup and first-trigger costs cancelled out.
-    // Skipped for filtered runs (SPARK_GRAFT_BENCH_ONLY) unless forced;
-    // SPARK_GRAFT_BENCH_10X=0 disables outright.
-    val (ingest10x, ingest10xCompact) = {
-      val enabled = sys.env.get("SPARK_GRAFT_BENCH_10X") match {
-        case Some("0") => false
-        case Some(_)   => true
-        case None      => only.isEmpty
-      }
-      if (!enabled) ("null", "null")
+    // Skipped for filtered runs (SPARK_GRAFT_BENCH_ONLY). The 10× table
+    // and its staging dir are deleted on the way out, failed or not.
+    // The ended stream's state-store maintenance keeps uploading RocksDB
+    // snapshots into the table's checkpoint for up to a maintenance
+    // interval, so its providers are unloaded before the table goes (a
+    // plain delete raced it and left checkpoint/state behind).
+    val (ingest10x, ingest10xCompact) =
+      if (only.nonEmpty) ("null", "null")
       else bracket("ingest10x") {
-        try {
-          val root    = java.nio.file.Files.createTempDirectory("graft-stream10x-").toString
-          val staging = java.nio.file.Files.createTempDirectory("graft-staging10x-").toString
+        try withTempDir("graft-stream10x-") { rootDir => try withTempDir("graft-staging10x-") { stagingDir =>
+          val root    = rootDir.toString
+          val staging = stagingDir.toString
           val load10x = hostLoad() // external pressure at ingest start — the
           // marginal-ev/s adjudication needs it alongside the rate itself
           val t0      = System.nanoTime()
@@ -485,7 +427,7 @@ object Bench {
             f""""load_at_start":$load10x%.2f,""" +
             f""""cold_read_sec":$coldSec%.3f,"cold_read_rows":$coldRows$cmpFull}""",
            f"""{"ev_s":${(events / sec).toLong}$marginalCompact,"cold_sec":$coldSec%.2f$cmpCompact}""")
-        } catch {
+        } finally org.apache.spark.sql.execution.streaming.state.StateStore.stop() } catch {
           case scala.util.control.NonFatal(e) =>
             // loud, not silent: a regression that kills the 10x run must be
             // visible in the log, not just a missing JSON block
@@ -493,21 +435,15 @@ object Bench {
             ("null", "null")
         }
       }
-    }
     // QUERY-SIDE SCALE PROBE: the same SparkEntry tpch code paths against a
     // 4x-replicated lineitem (other tables symlinked), run AFTER the sweep
     // so it cannot perturb the medians. The ratio (4x median / 1x median)
     // is the scaling evidence: well under 4 means per-query fixed cost
     // amortizes and the plan's shuffles grow sub-linearly in wall-clock on
-    // this box — the local proxy for "survives a scale-up". Disabled for
-    // filtered runs unless forced; SPARK_GRAFT_BENCH_QSCALE=0 disables.
-    val (qScale0, qScaleCompact0) = {
-      val enabled = sys.env.get("SPARK_GRAFT_BENCH_QSCALE") match {
-        case Some("0") => false
-        case Some(_)   => true
-        case None      => only.isEmpty
-      }
-      if (!enabled) ("null", "null")
+    // this box — the local proxy for "survives a scale-up". Skipped for
+    // filtered runs (SPARK_GRAFT_BENCH_ONLY).
+    val qScale0 =
+      if (only.nonEmpty) "null"
       else bracket("qscale") {
         var dir: java.nio.file.Path = null
         try {
@@ -645,72 +581,28 @@ object Bench {
                             "d17_substring_dedup",
                             "x10_mor_sql_read", "tt2_snapshot_diff",
                             "x11_expire", "x13_manifest_rewrite")
-          val med1x   = results.collect { case (n, _, med, _, _) if targets.contains(n) => n -> med }.toMap
+          val med1x   = results.collect { case r if targets.contains(r.name) => r.name -> r.median }.toMap
           // PER-PROBE brackets (r19 verdict #1): the r19 driver window
           // produced ZERO usable qscale numbers — its phase-level bracket
           // breached on the fixture build's own loadavg, condemning all 21
-          // probe readings at once. Each probe's warm reps now carry their
-          // own steal/external-CPU bracket (the fixture build and first
-          // touch land OUTSIDE it), a breached probe retries once after a
-          // short backoff (bounded budget — a driver run must not stall),
-          // and each reading ships with its own q/n stamp.
-          val probeRetryBudget = sys.env.get("SPARK_GRAFT_BENCH_PROBE_RETRIES")
-            .flatMap(_.toIntOption).getOrElse(4)
-          val probeBackoffS = sys.env.get("SPARK_GRAFT_BENCH_PROBE_BACKOFF_S")
-            .flatMap(_.toIntOption).getOrElse(30)
-          var probeRetriesLeft = probeRetryBudget
-          val probes = targets.map { n =>
+          // probe readings at once. Each probe's warm reps carry their own
+          // steal/external-CPU bracket (the fixture build and first touch
+          // land OUTSIDE it), and each reading ships with its own q/n stamp.
+          targets.map { n =>
             val fn = SparkEntry.queries(n)
             def t(): Double = {
               val t0 = System.nanoTime(); consume(fn(spark, dir.toString)); (System.nanoTime() - t0) / 1e9
             }
             t() // first touch pays plan compile + cold scan of the replica
-            def reps() = measure(s"qscale:$n")(median(Seq.fill(3)(t())))
-            var (m, pb) = reps()
-            if (!BenchRegime.phaseQuiet(pb, maxExtBusy, maxSteal) && probeRetriesLeft > 0) {
-              probeRetriesLeft -= 1
-              System.err.println(f"[graft-bench] qscale probe $n bracket breached " +
-                f"(steal ${pb.stealPct}%.2f%%, ext ${pb.extBusyPct}%.1f%%) — " +
-                s"backing off ${probeBackoffS}s and re-running")
-              Thread.sleep(probeBackoffS * 1000L)
-              val (m2, pb2) = reps()
-              // a quiet re-run replaces the breached reading; two breached
-              // readings keep the FASTER one (contention only inflates)
-              if (BenchRegime.phaseQuiet(pb2, maxExtBusy, maxSteal) || m2 < m) { m = m2; pb = pb2 }
-            }
-            (n, m, BenchRegime.phaseQuiet(pb, maxExtBusy, maxSteal))
-          }
-          val full = probes.map { case (n, m, quiet) =>
+            val (m, pb) = measure(s"qscale:$n")(median(Seq.fill(3)(t())))
+            val quiet   = BenchRegime.phaseQuiet(pb, maxExtBusy, maxSteal)
             val ratio = med1x.get(n).filter(_ > 0).map(b => f""","${n}_ratio":${m / b}%.2f""").getOrElse("")
             f""""${n}_sec":$m%.3f$ratio,"${n}_rg":"${if (quiet) "q" else "n"}""""
           }.mkString(s"""{"factor":$factor,""", ",", "}")
-          val short = Map("tpch_q1_pricing" -> "q1", "tpch_q3_shipping" -> "q3", "tpch_q6_revenue" -> "q6",
-                          "tpch_q18_large_orders" -> "q18", "d2_minhash_lsh" -> "d2",
-                          "d14_span_dedup" -> "d14", "d16_incremental_dedup" -> "d16",
-                          "t16_perplexity_filter" -> "t16", "d3_embedding_neardup" -> "d3",
-                          "d13_semdedup" -> "d13", "ann_lsh_nn" -> "lsh",
-                          "t21_hll_cardinality" -> "t21", "t23_langid" -> "t23",
-                          "r5_bitext_mining" -> "r5", "t24_dsir_select" -> "t24",
-                          "t25_gopher_repetition" -> "t25", "d17_substring_dedup" -> "d17",
-                          "x10_mor_sql_read" -> "x10", "tt2_snapshot_diff" -> "tt2",
-                          "x11_expire" -> "x11", "x13_manifest_rewrite" -> "x13")
-          val ratios = probes.flatMap { case (n, m, _) =>
-            med1x.get(n).filter(_ > 0).map(b => f""""${short(n)}":${m / b}%.2f""")
-          }
-          // the compact line carries only the EXCEPTIONS: probes whose own
-          // bracket stayed breached after the retry (full per-probe stamps
-          // live in BENCH_FULL.json) — absent nq means every reading is
-          // quiet-stamped and usable
-          val nonQuiet = probes.collect { case (n, _, false) => short(n) }
-          val nq = if (nonQuiet.isEmpty) Nil else Seq(s""""nq":"${nonQuiet.mkString(",")}"""")
-          // prefix carries no trailing comma: an empty ratio list (filtered
-          // sweep → no 1x medians) must still be valid JSON
-          val compact = (s""""f":$factor""" +: (ratios ++ nq)).mkString("{", ",", "}")
-          (full, compact)
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[graft-bench] query scale probe failed: $e")
-            ("null", "null")
+            "null"
         } finally if (dir != null) {
           // evict the replica-keyed persisted frames BEFORE deleting the
           // files they were built from: a pinned 4x signature frame would
@@ -723,16 +615,14 @@ object Bench {
           catch { case scala.util.control.NonFatal(_) => () }
         }
       }
-    }
     // the qscale section carries its OWN regime stamp: the r18 artifact's
     // 62x x11 reading was a degraded TAIL the whole-run stamp missed —
     // a probe ratio is only evidence under its own phase's regime
-    val (qScale, qScaleCompact) = phaseBrackets.find(_.name == "qscale") match {
+    val qScale = phaseBrackets.find(_.name == "qscale") match {
       case Some(p) if qScale0 != "null" =>
         val quiet = BenchRegime.phaseQuiet(p, maxExtBusy, maxSteal)
-        (qScale0.dropRight(1) + s""","regime":"${if (quiet) "quiet" else "noisy-host"}"}""",
-         qScaleCompact0.dropRight(1) + s""","rg":"${if (quiet) "q" else "n"}"}""")
-      case _ => (qScale0, qScaleCompact0)
+        qScale0.dropRight(1) + s""","regime":"${if (quiet) "quiet" else "noisy-host"}"}"""
+      case _ => qScale0
     }
     // ANN RECALL at the bench SF: fraction of the brute-force neighbors
     // each index path reproduces — the quality axis of the ANN speed
@@ -902,8 +792,8 @@ object Bench {
           System.err.println(s"[graft-bench] dedup recall failed: $e"); "null"
       } finally if (evictEnabled) {
         // merged eviction for BOTH recall blocks (ann + dedup): drop every
-        // index they rebuilt so the micro/gateway phases run
-        // storage-clean. Gated on the A/B lever: SPARK_GRAFT_BENCH_EVICT=0
+        // index they rebuilt so the later phases run storage-clean.
+        // Gated on the A/B lever: SPARK_GRAFT_BENCH_EVICT=0
         // must be hold-everything for the WHOLE run, including these.
         llm.LlmQueries.evictSignatures(spark, sfDir)
         llm.LlmQueries.evictSimSignatures(spark, sfDir)
@@ -1050,31 +940,25 @@ object Bench {
     val maintScale = bracket("maint_scale") {
       if (only.nonEmpty) "null"
       else try {
-        def chain(n: Int): (Double, Double) = {
-          val root = java.nio.file.Files.createTempDirectory("graft-maintscale-")
-          try {
-            val c = new iceberg.IcebergCommitter(iceberg.TableIO.forRoot(root.toString), "events")
-            (1 to n).foreach { i =>
-              val f = iceberg.DataFile(content = 0,
-                filePath = s"data/partition=0/f$i.parquet", fileFormat = "PARQUET",
-                recordCount = 100, fileSizeInBytes = 10000,
-                lowerBounds = Map(iceberg.FieldIds.Partition -> iceberg.Bounds.encodeInt(0),
-                                  iceberg.FieldIds.Sequence  -> iceberg.Bounds.encodeLong(i * 100L - 99)),
-                upperBounds = Map(iceberg.FieldIds.Partition -> iceberg.Bounds.encodeInt(0),
-                                  iceberg.FieldIds.Sequence  -> iceberg.Bounds.encodeLong(i * 100L)))
-              c.commitAppend(Seq(f), Map(0 -> i * 100L))
-            }
-            val t0 = System.nanoTime(); c.rewriteManifests()
-            val rw = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime(); val expired = c.expireSnapshots(2).size
-            val ex = (System.nanoTime() - t1) / 1e9
-            if (expired != n - 1) // n appends + 1 rewrite − keepLast(2)
-              System.err.println(s"[graft-bench] maint_scale chain($n) expired $expired, expected ${n - 1}")
-            (rw, ex)
-          } finally {
-            try core.FsUtil.deleteRecursively(root)
-            catch { case scala.util.control.NonFatal(_) => () }
+        def chain(n: Int): (Double, Double) = withTempDir("graft-maintscale-") { root =>
+          val c = new iceberg.IcebergCommitter(iceberg.TableIO.forRoot(root.toString), "events")
+          (1 to n).foreach { i =>
+            val f = iceberg.DataFile(content = 0,
+              filePath = s"data/partition=0/f$i.parquet", fileFormat = "PARQUET",
+              recordCount = 100, fileSizeInBytes = 10000,
+              lowerBounds = Map(iceberg.FieldIds.Partition -> iceberg.Bounds.encodeInt(0),
+                                iceberg.FieldIds.Sequence  -> iceberg.Bounds.encodeLong(i * 100L - 99)),
+              upperBounds = Map(iceberg.FieldIds.Partition -> iceberg.Bounds.encodeInt(0),
+                                iceberg.FieldIds.Sequence  -> iceberg.Bounds.encodeLong(i * 100L)))
+            c.commitAppend(Seq(f), Map(0 -> i * 100L))
           }
+          val t0 = System.nanoTime(); c.rewriteManifests()
+          val rw = (System.nanoTime() - t0) / 1e9
+          val t1 = System.nanoTime(); val expired = c.expireSnapshots(2).size
+          val ex = (System.nanoTime() - t1) / 1e9
+          if (expired != n - 1) // n appends + 1 rewrite − keepLast(2)
+            System.err.println(s"[graft-bench] maint_scale chain($n) expired $expired, expected ${n - 1}")
+          (rw, ex)
         }
         chain(8) // warm: avro codec + jackson init out of the measured pair
         val (rwS, exS) = chain(32)
@@ -1086,57 +970,42 @@ object Bench {
           System.err.println(s"[graft-bench] maint scale probe failed: $e"); "null"
       }
     }
-    val microJson = bracket("micro") { micro() }
-    // L5 gateway scenarios (HTTP tier) folded into the bench artifact so
-    // gateway throughput is tracked round-over-round like query medians.
-    // Runs LAST: closed-loop HTTP load must not perturb the query sweep or
-    // the ingest measurements above it.
-    val gatewayFull = bracket("gateway", gates = false) { gateway(spark, enabled = only.isEmpty) }
-    val gatewayCompact = gatewayFull._2
 
     // host + per-query churn evidence (see the SELF-ADJUDICATING SWEEP
     // comment above): load at bench start / after the query sweep / at end,
     // steal share over the whole run, and the nonzero warm-rep churn
     // entries. An elevated median with zero churn and elevated load is the
-    // host; churn with flat load is the engine.
-    // loadEnd is recorded but EXCLUDED from the regime samples: it is
-    // taken right after the gateway load-harness phase, whose 8-thread
-    // closed-loop HTTP load plus Spark probes ARE the 1-min loadavg it
-    // reads — self-load, not external contention (run-5 adjudication:
-    // steal 0.106%, sweep loads 1.3/2.85, loadEnd 5.26 from the bench's
-    // own tail phases). External contention during the tail phases is
-    // what the steal term measures.
+    // host; churn with flat load is the engine. loadEnd is evidence only:
+    // the tail phases' own work is part of the 1-min loadavg it reads, so
+    // external contention there is what the steal term measures.
     val loadEnd = hostLoad()
     val (steal1, jiffies1) = cpuStat()
     val stealPct =
       if (jiffies1 > jiffies0) 100.0 * (steal1 - steal0) / (jiffies1 - jiffies0) else 0.0
-    // the mechanical verdict the gate exists for: quiet = whole-run CPU
-    // steal under its threshold AND every GATING phase bracket quiet
-    // (loadavg in/out at or under the gate, the phase's own steal delta
-    // under the steal gate — [[BenchRegime]]). The steal term is from
-    // round 18's first closing run: loadavg 1.2-3.5 (quiet by the load
-    // gate) yet warm sums ~20% over the band — with steal_pct 4.0%.
+    // the mechanical verdict: quiet = whole-run CPU steal under its
+    // threshold AND every phase bracket quiet (the phase's own steal delta
+    // and external busy CPU under their thresholds — [[BenchRegime]]).
+    // The steal term is from round 18's first closing run: loadavg 1.2-3.5
+    // (quiet by the old load gate) yet warm sums ~20% over the band — with
+    // steal_pct 4.0%.
     // Hypervisor steal never shows in loadavg (runnable threads, not
     // unscheduled time), so it needs its own term; quiet recorded runs
     // measure 0.006-0.06%. The per-phase form closes the r18 hole: a
     // degradation RAMPING through the tail phases breaches ITS phase's
     // bracket even when the sweep-era samples read quiet.
-    val regime =
-      if (preGateBreached) "noisy-host" // idle-time loadavg breach survived the backoff
-      else BenchRegime.stamp(phaseBrackets.toSeq, stealPct, maxExtBusy, maxSteal)
+    val regime = BenchRegime.stamp(phaseBrackets.toSeq, stealPct, maxExtBusy, maxSteal)
     val hostJson =
       f"""{"load_start":$loadStart%.2f,"load_after_sweep":$loadAfterSweep%.2f,""" +
         f""""load_end":$loadEnd%.2f,"steal_pct":$stealPct%.3f,""" +
-        f""""regime":"$regime","load_gate":$maxLoad%.1f,"steal_gate":$maxSteal%.1f,""" +
-        f""""ext_busy_gate":$maxExtBusy%.1f,"gate_waited_s":$gateWaitedS,""" +
+        f""""regime":"$regime","steal_gate":$maxSteal%.1f,"ext_busy_gate":$maxExtBusy%.1f,""" +
         s""""phases":${BenchRegime.phasesJson(phaseBrackets.toSeq, maxExtBusy, maxSteal)}}"""
     // query_health carries EVERY query (r20 verdict #6 — an always-empty
     // block read as "checked" when it was merely never-churned): the warm
     // rep spread (max−min over median, permille — computed from the same
     // reps the medians come from) for all queries, plus the churn counters
     // (memo builds / spill / dropped cached parts) for the queries that
-    // had any. The compact line's "churn" count stays churned-queries-only.
-    val healthJson = results.map { case (n, _, med, mn, mx) =>
+    // had any.
+    val healthJson = results.map { case Timing(n, _, med, mn, mx, _) =>
       val spread = if (med > 0) math.round(1000.0 * (mx - mn) / med) else 0L
       val churn = queryHealth.get(n).map { case (b, sp, dr) =>
         s""","memo_builds":$b,"spill_to_disk_bytes":$sp,"cached_parts_dropped":$dr"""
@@ -1146,30 +1015,18 @@ object Bench {
 
     // TWO artifacts:
     //  - BENCH_FULL.json: everything at full precision (queries median/min/
-    //    first-touch, ingest, 10x, gateway scenario detail, micro) — written
-    //    to the CWD so the official run leaves a complete record in-repo.
-    //  - driver-facing stdout lines (see the DRIVER CONTRACT comment below).
-    //
-    // Short query keys for the compact line: the driver artifact keeps only
-    // the LAST ~2000 chars of output (measured: every BENCH_r*.json tail is
-    // exactly 2000 chars), and 141 full names alone are ~3.4 KB — the map
-    // can never fit whole under full names. Keys are the MINIMAL UNIQUE
-    // PREFIX (>= 2 chars) of each query name within the declared set — a
-    // deterministic, collision-free, human-decodable abbreviation ("d6_" ->
-    // d6_dedup_clusters). The short->full map is recorded in BENCH_FULL.json
-    // as "query_keys" so any consumer can expand the compact line exactly.
-    val shortKey: Map[String, String] = shortKeys(results.map(_._1))
-    val queryKeysJson =
-      results.map(r => s""""${shortKey(r._1)}":"${r._1}"""").mkString("{", ",", "}")
+    //    max/CPU, first-touch, ingest, 10x, recall and probe blocks) —
+    //    written to the CWD so the official run leaves a complete record.
+    //  - one driver-facing stdout line (see the DRIVER CONTRACT comment below).
     val errorsJson = errors.map { case (n, c) => s""""$n":"$c"""" }.mkString("{", ",", "}")
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""queries":${jmap(_._3)},"queries_min":${jmap(_._4)},"queries_max":${jmap(_._5)},""" +
-      s""""first_touch":${jmap(_._2)},"first_touch_total":$firstTotal,""" +
+      s""""queries":${jmap(_.median)},"queries_cpu_ms":${jmap(_.cpuMs)},""" +
+      s""""queries_min":${jmap(_.min)},"queries_max":${jmap(_.max)},""" +
+      s""""first_touch":${jmap(_.first)},"first_touch_total":$firstTotal,""" +
       s""""stream_ingest":$ingest,"stream_ingest_10x":$ingest10x,"ann_recall":$annRecall,""" +
       s""""dedup_recall":$dedupRecall,"retrieval_quality":$retrievalQuality,""" +
       s""""query_scale":$qScale,"mor_compact":$morCompact,"maint_scale":$maintScale,""" +
-      s""""host":$hostJson,"query_health":$healthJson,"query_keys":$queryKeysJson,""" +
-      s""""gateway":${gatewayFull._1},"sf":"$sfDir","micro":$microJson,"errors":$errorsJson}"""
+      s""""host":$hostJson,"query_health":$healthJson,"sf":"$sfDir","errors":$errorsJson}"""
     // filtered iteration runs (SPARK_GRAFT_BENCH_ONLY) must never clobber
     // the committed full-run artifact with a near-empty one — and the old
     // BENCH_FULL.partial.json sibling is retired (r20 verdict #6: a
@@ -1187,213 +1044,19 @@ object Bench {
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) => System.err.println(s"[graft-bench] $fullPath write failed: $e") }
 
-    def q2(f: ((String, Double, Double, Double, Double)) => Double): String =
-      results.map(r => f""""${r._1}":${f(r)}%.2f""").mkString("{", ",", "}")
-    def q2s(f: ((String, Double, Double, Double, Double)) => Double): String =
-      results.map(r => f""""${shortKey(r._1)}":${f(r)}%.2f""").mkString("{", ",", "}")
-    val sfShort = sfDir.split('/').last
-    // DRIVER CONTRACT (restored in round 22 — PERF_r20/r21 had per_query:{}
-    // because the per-query map was shed to a "BENCH_FULL.json" pointer
-    // string the driver does not follow). Two stdout lines, BOTH valid JSON
-    // in the contract shape {"metric","value","unit","queries":{...},"sf"},
-    // BOTH with a REAL per-query medians map:
-    //  1. a FULL-NAME line (~3.6 KB at 141 queries) printed first — parseable
-    //    by a consumer reading full stdout;
-    //  2. a SHORT-KEY compact line (minimal-unique-prefix keys, 2dp) printed
-    //    LAST and kept under 1900 chars so it survives WHOLE inside the
-    //    driver artifact's measured 2000-char tail window (the only line
-    //    shape that has ever parsed — round 9's 1927-char map line).
-    // Printing full-first/short-last means the tail window always holds the
-    // complete short line; a full-stdout consumer sees the full-name line.
-    // Keys decode via BENCH_FULL.json "query_keys".
+    val queriesLine = results.map(r => f""""${r.name}":${r.median}%.2f""").mkString("{", ",", "}")
+    // DRIVER CONTRACT (VERDICT.md item 1): ONE stdout line, printed LAST,
+    // valid JSON in the contract shape {"metric","value","unit","queries":
+    // {...},"sf"} with the REAL per-query warm medians under FULL query
+    // names. `full` names the file actually written (a temp file on a
+    // filtered run).
     val driverFullLine =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","reps":$reps,"sf":"$sfShort",""" +
-        s""""queries":${q2(_._3)},""" +
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","reps":$reps,"sf":"${sfDir.split('/').last}",""" +
+        s""""queries":$queriesLine,""" +
         s""""stream_ingest":$ingestCompact,"stream_ingest_10x":$ingest10xCompact,""" +
         f""""regime":"$regime","full":"$fullPath"}"""
-    // micro with abbreviated keys (full names live in BENCH_FULL.json)
-    val microCompact = Seq("write_64B_ops" -> "w64", "write_1KB_ops" -> "w1k",
-      "write_4KB_ops" -> "w4k", "idempotent_dup_ops" -> "dup", "write_wal_64B_ops" -> "wal",
-      "burst_1000_ops" -> "burst", "read_offset_ops" -> "rd", "mixed_80_20_ops" -> "mix")
-      .foldLeft(microJson) { case (s, (from, to)) => s.replace(from, to) }
-    // The compact line must fit WHOLE in the tail window together with its
-    // sbt "[info] " prefix and the trailing "[success] Total time ..." line
-    // (~85 chars), so the budget is 1900. The queries map is never shed —
-    // it is the block the driver exists to read; shed the adjudication and
-    // probe blocks instead (all live at full precision in BENCH_FULL.json),
-    // then the keys/full pointers, then (last resort) the value precision:
-    // the fully-shed 2dp floor sits only ~20 chars under the budget at 141
-    // queries, so query growth needs rungs BELOW the full map or the next
-    // few additions reproduce the truncated-tail artifact (review finding,
-    // round 22). 1dp (±0.05 s) still resolves every non-noise claim — the
-    // measured rep-spread bands are wider.
-    //
-    // FILTERED runs (SPARK_GRAFT_BENCH_ONLY) keep FULL names instead:
-    // their short keys would be minimal within the WRONG (filtered) name
-    // set, and the committed query_keys map could not decode them; a
-    // filtered map is small enough to never need abbreviation.
-    def qmap(onedp: Boolean): String =
-      if (only.nonEmpty) q2(_._3)
-      else if (onedp) results.map(r => f""""${shortKey(r._1)}":${r._3}%.1f""").mkString("{", ",", "}")
-      else q2s(_._3)
-    def assemble(micro: Boolean, gw: Boolean, qscale: Boolean, host: Boolean,
-                 keys: Boolean = true, onedp: Boolean = false): String =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","reps":$reps,"sf":"$sfShort",""" +
-        (if (host)
-          // host load start/after-sweep/end + the gate's mechanical verdict
-          // (one char per phase: q/n) + warm-rep churn count: enough to
-          // adjudicate an elevated median from the compact line alone
-          f""""ld":"$loadStart%.1f,$loadAfterSweep%.1f,$loadEnd%.1f",""" +
-            s""""ph":"${phaseBrackets.map(p =>
-              if (BenchRegime.phaseQuiet(p, maxExtBusy, maxSteal)) "q" else "n").mkString}",""" +
-            f""""churn":${queryHealth.size},"""
-         else "") +
-        f""""regime":"$regime",""" +
-        s""""queries":${qmap(onedp)},""" +
-        s""""stream_ingest":$ingestCompact,"stream_ingest_10x":$ingest10xCompact,""" +
-        (if (qscale) s""""qscale":$qScaleCompact,""" else "") +
-        (if (gw) s""""gateway":$gatewayCompact,""" else "") +
-        (if (micro) s""""micro":$microCompact,""" else "") +
-        (if (keys && only.isEmpty) s""""keys":"BENCH_FULL.json query_keys",""" else "") +
-        s""""full":"$fullPath"}"""
-    val rendered = Seq(assemble(true, true, true, true), assemble(false, true, true, true),
-      assemble(false, false, true, true), assemble(false, false, false, true),
-      assemble(false, false, false, false),
-      assemble(false, false, false, false, keys = false),
-      assemble(false, false, false, false, keys = false, onedp = true))
-    val compact = rendered.find(_.length <= 1900).getOrElse(rendered.last)
-    if (compact.length < rendered.head.length)
-      System.err.println(s"[graft-bench] compact line shed blocks to fit the driver tail " +
-        s"(${rendered.head.length} -> ${compact.length} chars); see BENCH_FULL.json")
-    if (compact.length > 1900)
-      System.err.println(s"[graft-bench] compact line ${compact.length} chars — may exceed the driver's tail capture")
     println(driverFullLine)
-    println(compact)
     spark.stop()
     if (errors.nonEmpty) { System.err.println(s"[graft-bench] failed queries: $errorsJson"); sys.exit(1) }
-  }
-
-  /** L5 gateway scenarios against an in-process [[serve.GatewayServer]]
-    * (WAL on — the durable configuration is the honest one). Returns
-    * (full per-scenario JSON, compact headline JSON). */
-  private def gateway(spark: SparkSession, enabled: Boolean): (String, String) = {
-    if (!enabled || sys.env.get("SPARK_GRAFT_BENCH_GATEWAY").contains("0")) return ("null", "null")
-    try {
-      // bp is constructed AND started inside the try: gw's constructor
-      // already holds a WAL handle, so any later failure (bp temp dir,
-      // bp constructor, either bind) must still reach gw.stop()
-      val dir = java.nio.file.Files.createTempDirectory("graft-benchgw-").toString
-      val gw  = new serve.GatewayServer(spark, dir)
-      var bp: serve.GatewayServer = null
-      try {
-        // backpressure needs a SATURABLE gateway: production admission
-        // budgets can't be overloaded from one machine, so it gets its
-        // own small-budget server (same as LoadHarness standalone mode)
-        val bpDir = java.nio.file.Files.createTempDirectory("graft-benchgwbp-").toString
-        bp = new serve.GatewayServer(spark, bpDir, maxInflight = 8,
-                                     maxInflightBytes = 256 * 1024, walEnabled = false)
-        val base   = s"http://127.0.0.1:${gw.start()}"
-        val bpBase = s"http://127.0.0.1:${bp.start()}"
-        // the reference's full no-S3 L5 grid (9 scenarios), short per-round
-        // durations — medians round-over-round, not one long soak
-        val w   = serve.LoadHarness.singleWrite(base, "bench_gw", seconds = 3, concurrency = 8)
-        val b   = serve.LoadHarness.bulkWrite(base, "bench_gwb", seconds = 3, concurrency = 8)
-        val r   = serve.LoadHarness.readThroughput(base, "bench_gw", seconds = 2, concurrency = 8)
-        val m   = serve.LoadHarness.mixedWorkload(base, "bench_gw", seconds = 2, concurrency = 8)
-        val lag = serve.LoadHarness.writeReadLag(base, "bench_gwlag", seconds = 2)
-        val bu  = serve.LoadHarness.burst(base, "bench_gwburst", seconds = 8, concurrency = 8)
-        val sk  = serve.LoadHarness.partitionSkew(base, "bench_gwskew", seconds = 2, concurrency = 8)
-        // 5 s halves: the soak gates (60% rate hold, 5x p99) need halves
-        // long enough that one GC pause can't flip the boolean
-        val so  = serve.LoadHarness.soak(base, "bench_gwsoak", seconds = 10, concurrency = 8)
-        // maintenance racing ingest, MEASURED (r19 verdict #7): the soak
-        // topic is seeded with a committed fragmented table carrying MoR
-        // delete weight past the ratio trigger; mid-soak, the EXACT
-        // flush-daemon path (flushNow + maintainIfNeeded) folds and
-        // compacts it while the writers keep posting — the p99/rate bands
-        // must hold through the vacuum, and the scenario row records the
-        // vacuum's own counts and duration
-        val msTable = "bench_gwms"
-        val msRoot  = s"$dir/$msTable"
-        table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", msRoot, fragmentInto = Some(32))
-        // the trigger must survive DILUTION: half 1 appends tens of
-        // thousands of soak rows before the mid-soak flush, so the seeded
-        // delete weight shrinks relative to total-records — the first run
-        // of this scenario seeded 199 rows against a 1% ratio and the
-        // flush diluted it to 0.99% (trigger missed by one part in a
-        // thousand). A third of the fixture deleted + a 0.1% threshold
-        // keeps ~7× headroom at the fastest observed soak rates.
-        val msDel = table.EventTable.deleteWhereMor(spark, msRoot,
-          org.apache.spark.sql.functions.expr("sequence % 3 = 2"))
-        val msPolicy = serve.GatewayServer.MaintenancePolicy(
-          deleteRowRatio = 0.001, keepSnapshots = 2, keepAgeMs = 0L)
-        val ms = serve.LoadHarness.maintenanceSoak(base, msTable, seconds = 10, concurrency = 8,
-          midSoak = () => {
-            gw.flushNow(msTable) // hot -> committed, step-locked against the vacuum
-            val rep = gw.maintainIfNeeded(msTable, msPolicy)
-              .getOrElse(throw new IllegalStateException(
-                s"ratio trigger did not fire mid-soak (seeded ${msDel.deletedRows} delete rows)"))
-            if (rep.compactions < 1)
-              throw new IllegalStateException(s"mid-soak vacuum compacted nothing: $rep")
-            s"vacuum=mid-window compactions=${rep.compactions} " +
-              s"expired=${rep.expiredSnapshots} orphans=${rep.orphansRemoved}"
-          })
-        val bpr = serve.LoadHarness.backpressure(bpBase, "bench_gwbp", seconds = 2, concurrency = 8)
-        val all = Seq(w, b, r, m, lag, bu, sk, so, ms, bpr)
-        val full = all.map(_.json).mkString("[", ",", "]")
-        def rps(x: serve.LoadHarness.Result): Long =
-          if (x.seconds <= 0) 0 else (x.requests / x.seconds).toLong
-        val compact =
-          f"""{"w_rps":${rps(w)},"w_p50":${w.p50Ms}%.2f,"w_p99":${w.p99Ms}%.2f,""" +
-          f""""bulk_ev_s":${b.evPerSec},"bulk_p99":${b.p99Ms}%.2f,""" +
-          f""""r_rps":${rps(r)},"r_p50":${r.p50Ms}%.2f,"mix_rps":${rps(m)},""" +
-          f""""burst_p99":${bu.p99Ms}%.2f,"skew_ev_s":${sk.evPerSec},""" +
-          f""""soak_ok":${so.ok},"ms_ok":${ms.ok},"ms_p99":${ms.p99Ms}%.2f,""" +
-          f""""bp_ok":${bpr.ok},"n":${all.size}}"""
-        (full, compact)
-      } finally { try gw.stop() finally if (bp != null) bp.stop() }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft-bench] gateway scenarios failed: $e")
-        ("null", "null")
-    }
-  }
-
-  /** Hot-path micro-benchmarks mirroring the reference's criterion suite
-    * shapes (write 64B/1KB/4KB, idempotent duplicate, burst-1000 bulk,
-    * offset-range read, mixed 80/20) — single-threaded ops/sec on the
-    * in-JVM hot tier, the direct comparable for the reference's
-    * single-node write path. `write_wal_64B` includes the durability
-    * append (the reference's RocksDB WAL analogue). */
-  private def micro(): String = {
-    def opsPerSec(n: Int)(op: Int => Unit): Long = {
-      (0 until math.min(n / 10, 5000)).foreach(op) // warm
-      val t0 = System.nanoTime()
-      (0 until n).foreach(op)
-      (n / ((System.nanoTime() - t0) / 1e9)).toLong
-    }
-    val p64  = Array.fill[Byte](64)('x')
-    val p1k  = Array.fill[Byte](1024)('x')
-    val p4k  = Array.fill[Byte](4096)('x')
-    val mem  = new serve.HotBuffer()
-    val w64  = opsPerSec(200000)(i => mem.write("b64", i % 4, p64, i.toLong, Some(s"k$i")))
-    val w1k  = opsPerSec(100000)(i => mem.write("b1k", i % 4, p1k, i.toLong, Some(s"k$i")))
-    val w4k  = opsPerSec(50000)(i => mem.write("b4k", i % 4, p4k, i.toLong, Some(s"k$i")))
-    val dup  = opsPerSec(200000)(_ => mem.write("b64", 0, p64, 1L, Some("k1"))) // always duplicate
-    val walDir = java.nio.file.Files.createTempDirectory("graft-microwal-")
-    val durable = new serve.HotBuffer(Some(new serve.WriteAheadLog(walDir)))
-    val wWal = opsPerSec(100000)(i => durable.write("bw", i % 4, p64, i.toLong, Some(s"k$i")))
-    val burst = opsPerSec(200)(b =>
-      mem.synchronized((0 until 1000).foreach(i => mem.write("burst", 0, p64, (b * 1000 + i).toLong, None))))
-    val rd = opsPerSec(50000)(i => mem.readPartition("b64", i % 4, (i % 5000).toLong, 100))
-    var n = 0
-    val mixed = opsPerSec(100000) { i =>
-      n += 1
-      if (n % 5 == 0) mem.readPartition("b64", i % 4, (i % 5000).toLong, 100)
-      else mem.write("mix", i % 4, p64, i.toLong, Some(s"m$i"))
-    }
-    s"""{"write_64B_ops":$w64,"write_1KB_ops":$w1k,"write_4KB_ops":$w4k,""" +
-      s""""idempotent_dup_ops":$dup,"write_wal_64B_ops":$wWal,"burst_1000_ops":$burst,""" +
-      s""""read_offset_ops":$rd,"mixed_80_20_ops":$mixed}"""
   }
 }

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * (`/root/reference/testing_strategy.md:496-575`, `tools/zombi_load.py`):
   * sustained HTTP load against the WHOLE serving path (gateway → admission
   * → hot buffer [+WAL] → flush → snapshot commit), reporting ev/s and
-  * p50/p99 latency per scenario, where the criterion-style micro-benches in
-  * [[graft.Bench]] measure only the in-JVM storage hot path.
+  * p50/p99 latency per scenario. The in-JVM storage hot path alone is
+  * timed by perfbench's `serve.hot.write_bulk_us_p50` and
+  * `serve.wal.append_us_p50`.
   *
   * Scenarios mirror the reference's no-S3 set:
   *
@@ -283,68 +284,6 @@ object LoadHarness {
            ok = h1.errors + h2.errors == 0 && holdRate && holdP99,
            note = s"ev_s_half1=${h1.evPerSec} ev_s_half2=${h2.evPerSec} hold=$holdRate p99_hold=$holdP99",
            minMs = math.min(h1.minMs, h2.minMs))
-  }
-
-  /** Sustained soak with the MAINTENANCE CLOCK racing ingest: half 1 is
-    * load-only baseline; at the start of half 2 `midSoak` runs on its own
-    * thread (the caller wires it to the gateway's real flush +
-    * `maintainIfNeeded` path against a table carrying committed fragments
-    * and MoR delete weight) while the writers keep hammering. The soak
-    * bands (≥60% rate hold, p99 within 5×) must hold THROUGH the vacuum —
-    * the measured form of the step-lock interleave and futile-backoff
-    * claims the unit specs assert. `midSoak` returns a note recorded in
-    * the result (vacuum report counts); a midSoak failure fails the
-    * scenario. */
-  def maintenanceSoak(base: String, table: String, seconds: Int, concurrency: Int,
-                      midSoak: () => String): Result = {
-    val c = client(concurrency)
-    def half(tag: String, sec: Int): Result = loop("maintenance-soak", sec, concurrency) { (tid, i) =>
-      val r = post(c, s"$base/tables/$table", singleBody((i % 8).toInt, s"ms-$tag-$tid-$i"))
-      (1L, r.statusCode() != 202, r.statusCode() == 503)
-    }
-    val h1 = half("a", seconds / 2)
-    @volatile var maintNote: String = null
-    @volatile var maintErr: String  = null
-    val t0 = System.nanoTime()
-    @volatile var maintMs = 0L
-    val m = new Thread(() => {
-      try { maintNote = midSoak(); maintMs = (System.nanoTime() - t0) / 1000000L }
-      catch { case e: Throwable => maintErr = s"${e.getClass.getSimpleName}: ${e.getMessage}" }
-    })
-    m.setDaemon(true); m.start()
-    // half 2 keeps the writers ON until the induced maintenance finishes
-    // (bounded): the p99/zero-errors claim must cover the WHOLE vacuum
-    // window — a fixed 5 s half would measure only its first seconds
-    // (the recorded vacuum runs ~12 s). Chunks merge conservatively:
-    // worst chunk percentiles, summed counts.
-    var chunks = List(half("b0", seconds - seconds / 2))
-    var ci = 1
-    while (m.isAlive && chunks.map(_.seconds).sum < 120 && ci < 24) {
-      chunks = chunks :+ half(s"b$ci", 5)
-      ci += 1
-    }
-    m.join(120000)
-    val h2 = chunks.reduce { (a, b) =>
-      Result(a.scenario, a.seconds + b.seconds, a.requests + b.requests,
-             a.events + b.events, a.errors + b.errors, a.rejected503 + b.rejected503,
-             math.max(a.p50Ms, b.p50Ms), math.max(a.p99Ms, b.p99Ms),
-             ok = true, minMs = math.min(a.minMs, b.minMs))
-    }
-    val maintOk  = maintNote != null && maintErr == null && !m.isAlive
-    // the CONTRACT is latency + correctness, not rate: the induced vacuum
-    // deliberately saturates the box's cores (on one host the executors
-    // ARE the gateway's cores), so admission throughput legitimately dips
-    // while it runs — recorded in the note, not gated. p99 within 5× and
-    // zero errors through the vacuum is the step-lock claim, measured.
-    val holdP99 = h1.p99Ms <= 0 || h2.p99Ms <= h1.p99Ms * 5
-    val note = (if (maintOk) s"${maintNote} maint_ms=$maintMs"
-                else s"maint_failed=${Option(maintErr).getOrElse("timeout")}") +
-      s" ev_s_half1=${h1.evPerSec} ev_s_half2=${h2.evPerSec} p99_hold=$holdP99"
-    Result("maintenance-soak", h1.seconds + h2.seconds, h1.requests + h2.requests,
-           h1.events + h2.events, h1.errors + h2.errors, h1.rejected503 + h2.rejected503,
-           h2.p50Ms, h2.p99Ms,
-           ok = h1.errors + h2.errors == 0 && holdP99 && maintOk,
-           note = note, minMs = math.min(h1.minMs, h2.minMs))
   }
 
   /** Hot-partition write skew: every worker hammers partition 0 — the

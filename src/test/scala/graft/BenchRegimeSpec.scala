@@ -24,7 +24,7 @@ class BenchRegimeSpec extends AnyFunSuite {
   private val maxExtBusy = 12.5
   private val maxSteal   = 1.0
   private def quiet(name: String) =
-    PhaseBracket(name, 1.2, 2.8, 0.02, gates = true, extBusyPct = 0.8)
+    PhaseBracket(name, 1.2, 2.8, 0.02, extBusyPct = 0.8)
 
   test("an all-quiet run stamps quiet") {
     val phases = Seq(quiet("sweep"), quiet("ingest10x"), quiet("qscale"), quiet("maint_scale"))
@@ -35,8 +35,8 @@ class BenchRegimeSpec extends AnyFunSuite {
     // sweep-era samples all pass; external work ramps through the tail —
     // visible as EXTERNAL busy CPU the bench did not generate
     val phases = Seq(quiet("sweep"),
-                     PhaseBracket("ingest10x", 2.9, 3.4, 0.01, gates = true, extBusyPct = 2.0),
-                     PhaseBracket("qscale", 3.6, 5.5, 0.02, gates = true, extBusyPct = 35.0))
+                     PhaseBracket("ingest10x", 2.9, 3.4, 0.01, extBusyPct = 2.0),
+                     PhaseBracket("qscale", 3.6, 5.5, 0.02, extBusyPct = 35.0))
     assert(stamp(phases, 0.02, maxExtBusy, maxSteal) === "noisy-host")
     assert(!phaseQuiet(phases.last, maxExtBusy, maxSteal), "the breached phase stamps itself")
     assert(phaseQuiet(phases.head, maxExtBusy, maxSteal), "the quiet sweep keeps its own stamp")
@@ -46,7 +46,7 @@ class BenchRegimeSpec extends AnyFunSuite {
     // the driver window: loadavg 6.54 from the bench's own fixture build,
     // steal 0.039%, next to no external CPU — the phase must stamp quiet
     // so its probe readings are usable without a manual repro
-    val p = PhaseBracket("qscale", 6.54, 3.1, 0.039, gates = true, extBusyPct = 1.2)
+    val p = PhaseBracket("qscale", 6.54, 3.1, 0.039, extBusyPct = 1.2)
     assert(phaseQuiet(p, maxExtBusy, maxSteal), "self-load must not condemn the phase")
     assert(stamp(Seq(quiet("sweep"), p), 0.04, maxExtBusy, maxSteal) === "quiet")
   }
@@ -55,22 +55,16 @@ class BenchRegimeSpec extends AnyFunSuite {
     // 3% steal for one short phase dilutes below 1% over the full run —
     // the whole-run term alone would miss it
     val phases = Seq(quiet("sweep"),
-                     PhaseBracket("qscale", 2.0, 2.5, 3.0, gates = true, extBusyPct = 0.5))
+                     PhaseBracket("qscale", 2.0, 2.5, 3.0, extBusyPct = 0.5))
     assert(stamp(phases, 0.4, maxExtBusy, maxSteal) === "noisy-host")
   }
 
   test("external busy CPU breaches a phase even at zero steal") {
     // a noisy neighbor on a non-virtualized host shows no steal at all —
     // the host-busy-minus-self term is the signal that catches it
-    val p = PhaseBracket("sweep", 8.0, 9.0, 0.0, gates = true, extBusyPct = 40.0)
+    val p = PhaseBracket("sweep", 8.0, 9.0, 0.0, extBusyPct = 40.0)
     assert(!phaseQuiet(p, maxExtBusy, maxSteal))
     assert(stamp(Seq(p), 0.0, maxExtBusy, maxSteal) === "noisy-host")
-  }
-
-  test("the gateway phase records its bracket but never gates (self-load)") {
-    val phases = Seq(quiet("sweep"),
-                     PhaseBracket("gateway", 5.8, 6.4, 0.02, gates = false, extBusyPct = 20.0))
-    assert(stamp(phases, 0.02, maxExtBusy, maxSteal) === "quiet")
   }
 
   test("the whole-run steal term still applies on its own") {
@@ -78,47 +72,16 @@ class BenchRegimeSpec extends AnyFunSuite {
   }
 
   test("unavailable /proc samples (negative) are excluded, not breaches") {
-    val p = PhaseBracket("sweep", -1.0, -1.0, 0.0, gates = true, extBusyPct = -1.0)
+    val p = PhaseBracket("sweep", -1.0, -1.0, 0.0, extBusyPct = -1.0)
     assert(stamp(Seq(p), 0.0, maxExtBusy, maxSteal) === "quiet")
   }
 
   test("phasesJson carries one self-stamped entry per phase with the external term") {
     val phases = Seq(quiet("sweep"),
-                     PhaseBracket("qscale", 3.6, 5.5, 0.02, gates = true, extBusyPct = 35.0))
+                     PhaseBracket("qscale", 3.6, 5.5, 0.02, extBusyPct = 35.0))
     val j = phasesJson(phases, maxExtBusy, maxSteal)
     assert(j.contains(""""name":"sweep"""") && j.contains(""""quiet":true"""))
     assert(j.contains(""""name":"qscale"""") && j.contains(""""quiet":false"""))
     assert(j.contains(""""ext_busy_pct":35.00"""))
-  }
-
-  test("shortKeys: collision-free, prefix-decodable, deterministic over the declared query set") {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val keys  = Bench.shortKeys(names)
-    // total and collision-free: one key per name, all keys distinct
-    assert(keys.size === names.size)
-    assert(keys.values.toSet.size === names.size, "short keys must be unique")
-    // decodable: every key is a prefix of its own name and of NO other
-    // name that holds a different key mapping back to it ambiguously —
-    // i.e., a key either matches exactly one name as a prefix, or is a
-    // FULL name (the strict-prefix-of-another case, decoded exactly)
-    keys.foreach { case (n, k) =>
-      assert(n.startsWith(k), s"$k must prefix $n")
-      val matches = names.count(_.startsWith(k))
-      assert(matches == 1 || k == n, s"key $k matches $matches names and is not a full name")
-    }
-    // deterministic in the set, order-independent
-    assert(Bench.shortKeys(scala.util.Random.shuffle(names)) === keys)
-    // the driver line stays under budget: 141 keys at 2dp must fit the
-    // fully-shed compact form (the round-22 review finding's guard)
-    val mapChars = names.map(n => keys(n).length + 8).sum
-    assert(mapChars < 1800, s"short map estimate $mapChars chars — name growth needs new shed rungs")
-  }
-
-  test("shortKeys: a name that is a strict prefix of another keeps its full form, still unique") {
-    val keys = Bench.shortKeys(Seq("ann_ivf_probe", "ann_ivf_probe2", "agg_stats"))
-    assert(keys("ann_ivf_probe") === "ann_ivf_probe") // no unique prefix exists
-    assert(keys("ann_ivf_probe2") === "ann_ivf_probe2")
-    assert(keys("agg_stats") === "ag")
-    assert(keys.values.toSet.size === 3)
   }
 }
