@@ -91,7 +91,7 @@ object Bench {
       })
     // a temp dir that never outlives `body`: deleted even when body throws
     def withTempDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
-      val dir = java.nio.file.Files.createTempDirectory(prefix)
+      val dir = java.nio.file.Paths.get(core.FsUtil.tempDir(prefix))
       try body(dir)
       finally try core.FsUtil.deleteRecursively(dir)
       catch { case scala.util.control.NonFatal(_) => () }
@@ -174,10 +174,10 @@ object Bench {
     // classification was hand-written host-noise prose. Record the evidence
     // mechanically instead: (a) /proc/loadavg + CPU steal-time snapshots,
     // so "external load" is a number in the artifact; (b) per-query warm-rep
-    // deltas of SessionMemo builds (an index evicted + re-pinned mid-sweep,
-    // the round-11 class), persisted-RDD disk bytes (storage pressure
-    // pushing MEMORY_AND_DISK blocks to disk — the suspected elevation
-    // mechanism), and cached-partition drops. All snapshots are synchronous
+    // deltas of SessionMemo builds (memos are held for the whole sweep, so
+    // any warm-rep build is a keying bug), persisted-RDD disk bytes
+    // (storage pressure pushing MEMORY_AND_DISK blocks to disk — the
+    // suspected elevation mechanism), and cached-partition drops. All snapshots are synchronous
     // reads of the status store; in local mode its listener lag between
     // queries is negligible, and the counters are adjudication evidence,
     // not accounting.
@@ -254,65 +254,6 @@ object Bench {
     val loadStart = hostLoad()
     val (steal0, jiffies0) = cpuStat()
     val queryHealth = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
-    // FAMILY-SCOPED CACHE EVICTION (adjudication of the round-10 tpch_q5/q7
-    // warm-median regression): the ANN/dedup index frames are persisted
-    // MEMORY_AND_DISK per (session, dir) and, without eviction, stay pinned
-    // through the rest of the sweep — storage-memory pressure that showed
-    // up as 2x+ medians on UNCHANGED tpch queries. Each cache is dropped
-    // right after its alphabetically-last consumer finishes its reps, so
-    // within-family reuse is untouched and later families run with the
-    // storage pool clean. SPARK_GRAFT_BENCH_EVICT=0 restores the
-    // hold-everything behavior (the A/B lever).
-    val evictEnabled = !sys.env.get("SPARK_GRAFT_BENCH_EVICT").contains("0")
-    val cacheLastConsumer: Seq[(Set[String], () => Unit)] = Seq(
-      (Set("d2_minhash_lsh", "d4_ngram_jaccard", "d6_dedup_clusters", "d7_curation_split",
-           "d9_decontaminate", "d11_band_skew_audit", "d12_state_audit",
-           "d16_incremental_dedup", "d18_bloom_decontaminate", "d19_containment",
-           "d20_cluster_canon", "d21_banding_loss", "d22_split_leakage",
-           "t3_winnowing", "t15_filter_funnel",
-           "t15_funnel_ppl", "t26_source_overlap"),
-        () => llm.LlmQueries.evictSignatures(spark, sfDir)),
-      (Set("d10_simhash_neardup", "d11_band_skew_audit"),
-        () => llm.LlmQueries.evictSimSignatures(spark, sfDir)),
-      (Set("d6_dedup_clusters", "d7_curation_split", "d20_cluster_canon"),
-        () => llm.LlmQueries.evictClusters(spark, sfDir)),
-      (Set("ann_incremental_add", "ann_ivf_probe", "ann_ivf_probe2",
-           "ann_ivfpq_topk", "ann_ivfsq_topk",
-           // residual-PQ consumers: codes decode through the coarse
-           // centroids, so every pqCache consumer consumes ivfCache too
-           "ann_pq_topk", "e4_pq_error",
-           "d13_semdedup", "d15_cell_skew_audit", "r2_hybrid_retrieve",
-           "r5_bitext_mining", "w6_stream_bitext", "w6_mining_audit"),
-        () => llm.LlmQueries.evictIvfIndex(spark, sfDir)),
-      (Set("ann_sq_topk", "ann_ivfsq_topk", "e3_quantization_error"),
-        () => llm.LlmQueries.evictSqIndex(spark, sfDir)),
-      (Set("ann_ivfpq_topk", "ann_pq_topk", "e4_pq_error"),
-        () => llm.LlmQueries.evictPqIndex(spark, sfDir)),
-      (Set("d3_embedding_neardup"),
-        () => llm.LlmQueries.evictLshTables(spark, sfDir)),
-      (Set("r2_hybrid_retrieve"),
-        () => llm.LlmQueries.evictQposts(spark, sfDir)),
-      (Set("t15_filter_funnel", "t15_funnel_ppl"),
-        () => llm.CorpusQueries.evictFunnel(spark, sfDir)),
-      (Set("t16_perplexity_filter", "t15_funnel_ppl"),
-        () => llm.CorpusQueries.evictLmToks(spark, sfDir)),
-      (Set("t19_bpe_learn", "t20_bpe_apply", "t27_fertility_hist"),
-        () => llm.CorpusQueries.evictBpeMerges(spark, sfDir)),
-      (Set("t23_langid"),
-        () => llm.CorpusQueries.evictLangProfiles(spark, sfDir)),
-      (Set("t22_cms_heavy_hitters"),
-        () => llm.CorpusQueries.evictCmsVocab(spark, sfDir)),
-      (Set("d18_bloom_decontaminate"),
-        () => llm.LlmQueries.evictBloom(spark, sfDir)),
-      (Set("t24_dsir_select"),
-        () => llm.CorpusQueries.evictDsirLm(spark, sfDir)),
-      (Set("e1_embedding_coherence", "e2_embedding_outliers"),
-        () => llm.LlmQueries.evictLabelCentroids(spark, sfDir)),
-      (Set("r7_rocchio_prf"),
-        () => llm.LlmQueries.evictRocchioFirst(spark, sfDir))
-    ).flatMap { case (consumers, hook) =>
-      names.filter(consumers.contains).lastOption.map(last => (Set(last), hook))
-    }
     val results = bracket("sweep") { names.map { name =>
       val fn    = SparkEntry.queries(name)
       val first = timeOne(name, fn)._1
@@ -327,13 +268,16 @@ object Bench {
       val dropped  = math.max(0L, c0 - c1)
       if (builds > 0 || spill > 0 || dropped > 0)
         queryHealth(name) = (builds, spill, dropped)
-      if (evictEnabled)
-        cacheLastConsumer.foreach { case (last, hook) => if (last.contains(name)) hook() }
       // min AND max: the per-query rep spread lets the next round tell
       // noise from regression without rerunning this one
       val wall = warm.map(_._1)
       Timing(name, first, median(wall), wall.min, wall.max, median(warm.map(_._2)))
     } }
+    // every memoized index/frame is held for the whole sweep: dropping one
+    // earlier needs the full list of its consumers, and a missed consumer
+    // rebuilds it mid-sweep. Released once here, so the later phases start
+    // storage-clean.
+    core.SessionMemo.release(spark)
     val loadAfterSweep = hostLoad()
     def jmap(f: Timing => Double): String =
       results.map(r => s"\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
@@ -448,7 +392,7 @@ object Bench {
         var dir: java.nio.file.Path = null
         try {
           val factor = 4
-          dir = java.nio.file.Files.createTempDirectory("graft-qscale-")
+          dir = java.nio.file.Paths.get(core.FsUtil.tempDir("graft-qscale-"))
           // absolute targets: a relative SPARK_GRAFT_SF_DIR would otherwise
           // produce symlinks that resolve against /tmp and dangle
           val src = java.nio.file.Paths.get(sfDir).toAbsolutePath
@@ -690,10 +634,6 @@ object Bench {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[graft-bench] ann recall failed: $e"); "null"
       }
-      // deliberately NO eviction here: the dedup-recall block immediately
-      // below reuses the IVF index this sweep rebuilt (its cell-locality
-      // probe), and evicting between the two forced a redundant full
-      // k-means train; the merged eviction lives in that block's finally
     }
     // DEDUP RECALL at the bench SF: the quality axis of the dedup speed
     // numbers, mirroring ann_recall — without it, the approximate families
@@ -790,17 +730,10 @@ object Bench {
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[graft-bench] dedup recall failed: $e"); "null"
-      } finally if (evictEnabled) {
-        // merged eviction for BOTH recall blocks (ann + dedup): drop every
-        // index they rebuilt so the later phases run storage-clean.
-        // Gated on the A/B lever: SPARK_GRAFT_BENCH_EVICT=0
-        // must be hold-everything for the WHOLE run, including these.
-        llm.LlmQueries.evictSignatures(spark, sfDir)
-        llm.LlmQueries.evictSimSignatures(spark, sfDir)
-        llm.LlmQueries.evictIvfIndex(spark, sfDir)
-        llm.LlmQueries.evictSqIndex(spark, sfDir)
-        llm.LlmQueries.evictPqIndex(spark, sfDir)
-        llm.LlmQueries.evictLshTables(spark, sfDir)
+      } finally {
+        // the ann and dedup recall blocks share the indexes they rebuilt;
+        // drop them all so the later phases run storage-clean
+        core.SessionMemo.release(spark)
       }
     }
     // RETRIEVAL QUALITY at the bench SF: the quality axis of the r3/r4

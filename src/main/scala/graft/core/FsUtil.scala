@@ -46,4 +46,13 @@ object FsUtil {
   /** Delete `path` recursively at JVM shutdown (idempotent; an earlier
     * explicit delete just makes the sweep a no-op). */
   def deleteOnExit(path: String): Unit = { hookInstalled; sweepOnExit.add(path); () }
+
+  /** A fresh local temp dir that is swept at JVM exit: a fixture cached
+    * for the process lifetime has no earlier point to delete it, and one
+    * deleted sooner just makes the sweep a no-op. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    deleteOnExit(dir)
+    dir
+  }
 }

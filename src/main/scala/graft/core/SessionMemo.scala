@@ -17,7 +17,13 @@ import org.apache.spark.sql.SparkSession
   * long-lived service creating request-scoped sessions is bounded at
   * `maxSessions` sessions' worth of index state — and can drop to zero
   * eagerly by calling [[SessionMemo.release]] when it retires a session,
-  * instead of waiting for LRU pressure. */
+  * instead of waiting for LRU pressure.
+  *
+  * Within a session an entry lives until the session is released: a batch
+  * driver that queries one corpus many times keeps every index and frame
+  * for the whole run. A caller that rewrites or deletes a corpus dir in
+  * place calls [[SessionMemo.evict]] for that dir, which drops every
+  * memo's entries built from it. */
 final class SessionMemo[V](maxSessions: Int = 8, onEvict: V => Unit = (_: V) => ()) {
   private val bySession =
     new java.util.LinkedHashMap[SparkSession, scala.collection.mutable.Map[String, V]](8, 0.75f, true) {
@@ -46,12 +52,16 @@ final class SessionMemo[V](maxSessions: Int = 8, onEvict: V => Unit = (_: V) => 
       try onEvict(v) catch { case _: Exception => () }))
   }
 
-  /** Drop ONE memoized key for `s`, running `onEvict` on its value —
-    * for throwaway keys (a benchmark's temp replica dir) whose cached
-    * values must not outlive the data they were built from. */
-  def remove(s: SparkSession, key: String): Unit = synchronized {
-    Option(bySession.get(s)).foreach(inner =>
-      inner.remove(key).foreach(v => try onEvict(v) catch { case _: Exception => () }))
+  /** Drop ONE memoized key for `s`, running `onEvict` on its value. */
+  def remove(s: SparkSession, key: String): Unit = removeWhere(s, _ == key)
+
+  /** Drop every key of `s` that `p` accepts, running `onEvict` once per
+    * dropped value. */
+  private[core] def removeWhere(s: SparkSession, p: String => Boolean): Unit = synchronized {
+    Option(bySession.get(s)).foreach { inner =>
+      inner.keys.filter(p).toSeq.foreach(k =>
+        inner.remove(k).foreach(v => try onEvict(v) catch { case _: Exception => () }))
+    }
   }
 
   // register LAST: a construction-ordered publish — the registry must never
@@ -61,10 +71,10 @@ final class SessionMemo[V](maxSessions: Int = 8, onEvict: V => Unit = (_: V) => 
 
 object SessionMemo {
   /** Process-wide count of memo BUILDS (getOrElseUpdate misses) across all
-    * memos. The bench snapshots it around each query's warm reps: a nonzero
-    * delta there means a memoized index/frame was evicted and re-pinned
-    * mid-sweep (the round-11 bench-regression class) — mechanical evidence
-    * for adjudicating elevated medians instead of prose. */
+    * memos. The bench snapshots it around each query's warm reps: memos
+    * live for the whole sweep, so a nonzero delta there means a warm rep
+    * rebuilt a memoized index/frame — a bug in that query's keying, not
+    * noise. */
   private val buildCounter = new java.util.concurrent.atomic.AtomicLong()
   def buildCount: Long = buildCounter.get
   private def noteBuild(): Unit = { buildCounter.incrementAndGet(); () }
@@ -86,8 +96,16 @@ object SessionMemo {
     * retired session's cached blocks free immediately instead of aging
     * out of the 8-session LRU. Call right before discarding a session
     * obtained from `newSession()` / `getOrCreate()`. */
-  def release(s: SparkSession): Unit = {
-    val live = synchronized { instances.flatMap(r => Option(r.get)).toSeq }
-    live.foreach(_.clear(s))
-  }
+  def release(s: SparkSession): Unit = live().foreach(_.clear(s))
+
+  /** Invalidate one corpus dir for `s` across ALL memos: drops every key
+    * equal to `dir` or under it (`dir/…` — per-file keys such as a
+    * table's split count), running `onEvict` once per dropped value. A
+    * sibling that merely shares the prefix (`dir-x`) is kept. For callers
+    * that rewrite a dir in place or delete a throwaway copy: the values
+    * built from the old files must not answer for the new ones. */
+  def evict(s: SparkSession, dir: String): Unit =
+    live().foreach(_.removeWhere(s, k => k == dir || k.startsWith(dir + "/")))
+
+  private def live(): Seq[SessionMemo[_]] = synchronized { instances.flatMap(r => Option(r.get)).toSeq }
 }

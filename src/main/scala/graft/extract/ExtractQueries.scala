@@ -104,7 +104,7 @@ object EvolvedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root  = java.nio.file.Files.createTempDirectory("graft-evolved-").toString
+        val root  = graft.core.FsUtil.tempDir("graft-evolved-")
         val log   = EventLog.log(spark, sfDir)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val half  = log.agg(org.apache.spark.sql.functions.max("event_id")).head().getLong(0) / 2
@@ -124,7 +124,7 @@ object ExtractedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-extracted-").toString
+        val root = graft.core.FsUtil.tempDir("graft-extracted-")
         graft.table.EventTable.ingestAndCommitExtracted(spark, sfDir, root, ExtractQueries.config)
         root
       }

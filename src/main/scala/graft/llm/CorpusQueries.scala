@@ -285,17 +285,12 @@ object CorpusQueries {
   /** t15's staged frame (doc_id, source, n_chars, stage) per (session,
     * dir): the funnel's survivor branch and its final rollup both read it,
     * so it persists narrow (verdict + rollup keys only) instead of
-    * re-running the per-word scoring per branch. Consumers: t15,
-    * t15_funnel_ppl — Bench evicts right after the LAST one's reps, like
-    * the other per-family memos. */
+    * re-running the per-word scoring per branch. */
   private val funnelCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictFunnel(s: SparkSession, dir: String): Unit = funnelCache.remove(s, dir)
 
   /** t16's bigram-token frame (doc_id, bigram, w1) per (session, dir): the
     * LM count, the context count, and the scoring join all read it — four
-    * corpus scans with the words/bigrams explode collapse to one build.
-    * Consumers: t16, t15_funnel_ppl (via [[lmDocBits]]) — Bench evicts
-    * right after the LAST one's reps. */
+    * corpus scans with the words/bigrams explode collapse to one build. */
   private val lmTokCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
   /** t16's vocabulary size per (session, dir) — a single Long (the
     * embCountCache pattern): without it every invocation re-scans the
@@ -308,21 +303,11 @@ object CorpusQueries {
     * lm2 shuffle + context broadcast + scoring join over the token
     * frame). */
   private val lmDocCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictLmToks(s: SparkSession, dir: String): Unit = {
-    lmTokCache.remove(s, dir)
-    lmVocabCache.remove(s, dir)
-    lmDocCache.remove(s, dir)
-  }
 
   /** t19/t20 shared: the learned BPE merge table per (session, dir) — K
     * (rank, l, r, count) rows, a decision value like compaction's
-    * candidate list. Driver-side Seq (no executor storage), but still
-    * evicted with the family so a rewritten corpus dir relearns and a
-    * bench sweep's throwaway replica doesn't pin a stale table.
-    * Consumers: t19_bpe_learn, t20_bpe_apply, t27_fertility_hist — Bench
-    * evicts after the LAST one's reps. */
+    * candidate list. Driver-side Seq (no executor storage). */
   private val bpeMergeCache = new graft.core.SessionMemo[Seq[(Long, String, String, Long)]]()
-  def evictBpeMerges(s: SparkSession, dir: String): Unit = bpeMergeCache.remove(s, dir)
 
   /** t23's trained language-ID model per (session, dir): the ranked
     * per-language trigram profile (lang, enc, lrank) — ≤ |langs| ×
@@ -330,41 +315,31 @@ object CorpusQueries {
     * classifies against forever (the IVF-centroid / d3-plane-table
     * pattern). Memoize-persisting it moves the training pass (corpus
     * trigram count + the vocab-bounded rank window) to first touch, so
-    * warm invocations pay only doc scoring. Consumers: t23_langid —
-    * Bench evicts after its reps. */
+    * warm invocations pay only doc scoring. */
   private val langProfCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictLangProfiles(s: SparkSession, dir: String): Unit = langProfCache.remove(s, dir)
 
   /** t22's exact word-count vocabulary (w, cnt) per (session, dir): BOTH
     * the CMS counter grid and the exact heavy-hitter cut fold out of it,
     * so the corpus-side words explode runs once per (session, dir)
     * instead of twice per invocation — at 100 TB that is one full corpus
     * pass instead of two (plus warm reps skipping it entirely).
-    * Vocab-bounded, hence the natural memo. Consumers:
-    * t22_cms_heavy_hitters — Bench evicts after its reps. */
+    * Vocab-bounded, hence the natural memo. */
   private val cmsVocabCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictCmsVocab(s: SparkSession, dir: String): Unit = cmsVocabCache.remove(s, dir)
 
   /** t24's trained importance model per (session, dir): the bucket weight
     * table (b, w) — ≤ [[DsirBuckets]] rows — plus the W0 mass normalizer.
     * This IS what DSIR materializes once and scores every shard against;
     * memoizing it means warm invocations pay one scoring scan (explode →
     * broadcast weight probe → per-doc sum), not the LM-building
-    * aggregation too. Consumers: t24_dsir_select — Bench evicts after
-    * its reps. */
+    * aggregation too. */
   private val dsirLmCache = new graft.core.SessionMemo[(DataFrame, Long)](onEvict = { case (df, _) => df.unpersist(); () })
   /** t24's selection threshold per (session, dir) — a single Long decision
     * value (the bpeMergeCache pattern). Computing it is the one stage of
     * DSIR that is NOT a plain broadcast-join rollup (a nearest-rank cut
     * over the importance distribution), so it runs ONCE at first touch via
     * the two-phase distributed prefix sum and the query constructor stays
-    * job-free on warm invocations. Consumers: t24_dsir_select — Bench
-    * evicts together with [[dsirLmCache]]. */
+    * job-free on warm invocations. */
   private val dsirThrCache = new graft.core.SessionMemo[Long]()
-  def evictDsirLm(s: SparkSession, dir: String): Unit = {
-    dsirLmCache.remove(s, dir)
-    dsirThrCache.remove(s, dir)
-  }
 
   /** One corpus pass over bigram OCCURRENCES (importance is linear over
     * occurrences — Σ_b c_b·w_b == Σ_occurrences w(b) — so no per-doc
@@ -655,7 +630,7 @@ object CorpusQueries {
     * persist). Shared by t15 and the t15_funnel_ppl variant; it feeds the
     * survivor semi-joins AND the rollup join of each, so without the memo
     * the per-word classifier scoring would run once per branch per
-    * query. Bench evicts after the LAST funnel consumer's reps. */
+    * query. */
   private def funnelStaged(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
     funnelCache.getOrElseUpdate(s, dir)(docs(s, dir)

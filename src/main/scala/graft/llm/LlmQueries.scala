@@ -387,10 +387,8 @@ object LlmQueries {
     * filter-build collect job; the probe enters the plan as ONE typedLit
     * array literal instead of a 2048-element parsed expression tree (the
     * giant-literal re-ANALYSIS cost CLAUDE.md flags — the d3 sigCache
-    * lesson). Consumers: d18_bloom_decontaminate — Bench evicts after its
-    * reps. */
+    * lesson). */
   private val bloomCache = new graft.core.SessionMemo[(Array[Long], Long)]()
-  def evictBloom(s: SparkSession, dir: String): Unit = bloomCache.remove(s, dir)
 
   private val sigCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
 
@@ -555,7 +553,7 @@ object LlmQueries {
     val side = sidecarRoot(s.sparkContext.master, sys.env.get("SPARK_GRAFT_INDEX_DIR"),
                            s.conf.getOption("graft.index.root"))
       .map(r => s"$r/graft-$what-sidecar-${java.util.UUID.randomUUID()}")
-      .getOrElse(java.nio.file.Files.createTempDirectory(s"graft-$what-sidecar-").toString)
+      .getOrElse(graft.core.FsUtil.tempDir(s"graft-$what-sidecar-"))
     graft.core.FsUtil.deleteOnExit(side)
     side
   }
@@ -827,7 +825,6 @@ object LlmQueries {
     * probe side — each pay only the narrow map-side cosine pass, never a
     * second (label, dim) centroid shuffle. */
   private val centroidCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
-  def evictLabelCentroids(s: SparkSession, dir: String): Unit = centroidCache.remove(s, dir)
   private def labelCentroids(s: SparkSession, dir: String): DataFrame =
     centroidCache.getOrElseUpdate(s, dir)(
       fixedPointMeans(emb(s, dir), Seq("label"), "v", "cv")
@@ -1196,27 +1193,15 @@ object LlmQueries {
           expr("graft_simhash_bands(transform(words, w -> md5(w)))").as("bands"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Evict everything this module memoized for (session, dir) — for
-    * callers that build a THROWAWAY copy of a corpus dir (the bench's 4×
-    * scale replica): without this, persisted signature/index frames keyed
-    * by the deleted temp dir stay pinned for the session's lifetime and
-    * any lost-block recompute would read a path that no longer exists. */
+  /** Invalidate one corpus dir for session `s`: every memoized value
+    * built from it, in any module ([[graft.core.SessionMemo.evict]]),
+    * plus the dir-keyed streaming sinks below. For callers that rewrite a
+    * corpus dir in place (the next query must see the new files) or
+    * delete a throwaway copy (the bench's 4× scale replica): without it,
+    * persisted frames keyed by the dir stay pinned for the session's
+    * lifetime and a lost-block recompute would read the old files. */
   def evictDir(s: SparkSession, dir: String): Unit = {
-    sigCache.remove(s, dir)
-    simSigCache.remove(s, dir)
-    clusterCache.remove(s, dir)
-    ivfCache.remove(s, dir)
-    sqCache.remove(s, dir)
-    pqCache.remove(s, dir)
-    lshCache.remove(s, dir)
-    bloomCache.remove(s, dir)
-    centroidCache.remove(s, dir)
-    CorpusQueries.evictCmsVocab(s, dir)
-    CorpusQueries.evictFunnel(s, dir)
-    CorpusQueries.evictLmToks(s, dir)
-    CorpusQueries.evictBpeMerges(s, dir)
-    CorpusQueries.evictLangProfiles(s, dir)
-    CorpusQueries.evictDsirLm(s, dir)
+    graft.core.SessionMemo.evict(s, dir)
     // d12's sink AND staging replica are dir-keyed (session-independent
     // files): drop the entries and their parquet so a reused dir path
     // recomputes instead of serving a stale pre-change pair set, and a
@@ -1243,61 +1228,11 @@ object LlmQueries {
     }
   }
 
-  /** Family-scoped eviction, keyed by the memo that backs each query
-    * family. A long bench sweep (or any batch driver that runs query
-    * families in sequence) calls the hook for a cache as soon as its LAST
-    * consumer finishes, releasing executor storage memory for the
-    * families still to run — holding every index for the whole sweep was
-    * measured pressuring unrelated queries (round-10 tpch_q5/q7 warm
-    * medians). Consumers per cache:
-    *   - signatures (sigCache): d2, d4, d6, d7, d9, d11, d12_state_audit,
-    *     d16, d18, d19, d20, d21, d22, t3, t15, t15_funnel_ppl, t26_source_overlap
-    *   - simhash signatures (simSigCache): d10, d11
-    *   - dedup clusters (clusterCache): d6, d7, d20
-    *   - IVF index (ivfCache): ann_ivf_probe, ann_ivf_probe2,
-    *     ann_ivfpq_topk, ann_ivfsq_topk, ann_incremental_add, d13_semdedup,
-    *     d15_cell_skew_audit, r2_hybrid_retrieve, r5_bitext_mining,
-    *     w6_stream_bitext + w6_mining_audit (via the sink BUILD — dir-keyed,
-    *     so only their first touch trains, but that first touch must come
-    *     before the eviction hook fires), and — since the residual-PQ
-    *     round — every pqCache consumer (ann_pq_topk, e4_pq_error):
-    *     residual codes train against and decode through the trained
-    *     coarse centroids
-    *     (ANY new ivfIndex/sqIndex/pqIndex consumer
-    *     MUST be added to Bench's cacheLastConsumer table too — an omitted
-    *     consumer silently rebuilds the index mid-sweep and re-pins it,
-    *     the exact storage-pressure failure the eviction prevents)
-    *   - SQ codes (sqCache): ann_sq_topk, ann_ivfsq_topk,
-    *     e3_quantization_error
-    *   - PQ codebook+codes (pqCache): ann_pq_topk, ann_ivfpq_topk,
-    *     e4_pq_error
-    *   - LSH tables (lshCache): d3_embedding_neardup (and the bench's
-    *     bucket-recall probe)
-    *   - BPE merge table (CorpusQueries.bpeMergeCache, driver-side Seq):
-    *     t19_bpe_learn, t20_bpe_apply
-    *   - language-ID profiles (CorpusQueries.langProfCache): t23_langid
-    *   - CMS word-count vocab (CorpusQueries.cmsVocabCache): t22_cms_heavy_hitters
-    *   - DSIR LM weights (CorpusQueries.dsirLmCache): t24_dsir_select
-    *   - d18 Bloom filter words (bloomCache, driver-side Array[Long]):
-    *     d18_bloom_decontaminate
-    *   - label centroids (centroidCache): e1_embedding_coherence,
-    *     e2_embedding_outliers
-    *   - r7 first-pass hits (rocchioFirstCache, driver-side Seq):
-    *     r7_rocchio_prf
-    *   - query-vocabulary postings (qpostsCache): r2_hybrid_retrieve */
-  def evictSignatures(s: SparkSession, dir: String): Unit  = sigCache.remove(s, dir)
-  def evictSimSignatures(s: SparkSession, dir: String): Unit = simSigCache.remove(s, dir)
-  def evictClusters(s: SparkSession, dir: String): Unit    = clusterCache.remove(s, dir)
-  def evictIvfIndex(s: SparkSession, dir: String): Unit    = ivfCache.remove(s, dir)
-  def evictSqIndex(s: SparkSession, dir: String): Unit     = sqCache.remove(s, dir)
-  def evictPqIndex(s: SparkSession, dir: String): Unit     = pqCache.remove(s, dir)
-
   /** r7's collected first pass (NumQueries × TopK (q_id, rank,
     * neighbor_id) tuples) per (session, dir): the brute scan executes
     * once per session, not once per invocation — plan inspection and
     * bench warm reps reuse the bounded decision values. */
   private val rocchioFirstCache = new graft.core.SessionMemo[Seq[(Long, Long, Long)]]()
-  def evictRocchioFirst(s: SparkSession, dir: String): Unit = rocchioFirstCache.remove(s, dir)
 
   /** r2's lexical-arm postings restricted to the QUERY vocabulary, per
     * (session, dir): (doc_id, w) pairs for w in the NumQueries query
@@ -1306,10 +1241,8 @@ object LlmQueries {
     * retrieval tier materializes per query batch). Persisted LAZILY (no
     * job at construction) because the arm reads it twice per execution —
     * the term-df fold and the scoring join — and each lazy reference
-    * would otherwise re-tokenize the whole corpus. Consumers: r2 only;
-    * Bench evicts after its reps (cacheLastConsumer). */
+    * would otherwise re-tokenize the whole corpus. */
   private val qpostsCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictQposts(s: SparkSession, dir: String): Unit = qpostsCache.remove(s, dir)
 
   /** d12 family: one parquet sink per (sfDir, variant) — the pair sink
     * (variant "") and the overflow-audit sink (variant "#audit"). File
@@ -1350,15 +1283,12 @@ object LlmQueries {
         }
       streamDupSinkCache.getOrElseUpdate(key, {
         val staging = streamStageCache.getOrElseUpdate(prefix, {
-          val st = java.nio.file.Files.createTempDirectory("graft-d12-stage-").toString
+          val st = graft.core.FsUtil.tempDir("graft-d12-stage-")
           docs(s, dir).repartition(3).write.mode("overwrite").parquet(st)
-          graft.core.FsUtil.deleteOnExit(st)
           st
         })
-        val sink = java.nio.file.Files.createTempDirectory("graft-d12-sink-").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-d12-ckpt-").toString
-        // batch drivers exit without evicting — sweep on JVM shutdown
-        Seq(sink, ckpt).foreach(graft.core.FsUtil.deleteOnExit)
+        val sink = graft.core.FsUtil.tempDir("graft-d12-sink-")
+        val ckpt = graft.core.FsUtil.tempDir("graft-d12-ckpt-")
         val src = s.readStream.schema(docs(s, dir).schema)
           .option("maxFilesPerTrigger", 1).parquet(staging)
         run(src, sink, ckpt).awaitTermination()
@@ -1378,10 +1308,10 @@ object LlmQueries {
     * sink builders (the per-shard filter version paid one corpus scan per
     * shard). Returns the staging dir. */
   private def stageShards(df: DataFrame, shardCol: String, prefix: String): String = {
-    val tmpRoot = java.nio.file.Files.createTempDirectory(s"$prefix-tmp-").toString
+    val tmpRoot = graft.core.FsUtil.tempDir(s"$prefix-tmp-")
     df.withColumn("_shard", pmod(col(shardCol), lit(3L)))
       .coalesce(1).write.partitionBy("_shard").mode("overwrite").parquet(tmpRoot)
-    val staging = java.nio.file.Files.createTempDirectory(s"$prefix-stage-").toString
+    val staging = graft.core.FsUtil.tempDir(s"$prefix-stage-")
     (0 until 3).foreach { i =>
       val dirF  = new java.io.File(s"$tmpRoot/_shard=$i")
       val parts = Option(dirF.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1436,9 +1366,8 @@ object LlmQueries {
       val src       = docs(s, dir).select("doc_id", "source", "text")
       val srcSchema = src.schema
       val staging   = stageShards(src, "doc_id", "graft-w7")
-      val sink = java.nio.file.Files.createTempDirectory("graft-w7-sink-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-w7-ckpt-").toString
-      Seq(staging, sink, ckpt).foreach(graft.core.FsUtil.deleteOnExit)
+      val sink = graft.core.FsUtil.tempDir("graft-w7-sink-")
+      val ckpt = graft.core.FsUtil.tempDir("graft-w7-ckpt-")
       val q = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1).parquet(staging)
         .writeStream
@@ -1528,13 +1457,13 @@ object LlmQueries {
     // sink (a fresh JVM must not serve a sink mined from a replaced
     // corpus); in-session invalidation after an in-place regeneration is
     // [[evictDir]]'s job — the documented contract for every (session,
-    // dir) memo in this file, which also evicts the IVF memo this build
-    // trains against. A stale-stamp drop here additionally evicts the IVF
+    // dir) memo, which also evicts the IVF memo this build trains
+    // against. A stale-stamp drop here additionally evicts the IVF
     // memo (belt: the common regenerate-then-re-query flow stays
     // consistent even without an evictDir call, whenever a prior build's
     // key makes the regeneration detectable).
     val key = s"$dir@${ParquetTables.stamp(s, s"$dir/embeddings.parquet")}"
-    if (dropStaleSinkKeys(bitextSinkCache, dir, key)) evictIvfIndex(s, dir)
+    if (dropStaleSinkKeys(bitextSinkCache, dir, key)) ivfCache.remove(s, dir)
     bitextSinkCache.getOrElseUpdate(key, {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val (cents, assigned) = ivfIndex(s, dir)
@@ -1547,9 +1476,8 @@ object LlmQueries {
       val src = emb(s, dir).filter(col("label") % 2 === 1).select("vec_id", "v")
       val srcSchema = src.schema
       val staging = stageShards(src, "vec_id", "graft-w6")
-      val sink = java.nio.file.Files.createTempDirectory("graft-w6-sink-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-w6-ckpt-").toString
-      Seq(staging, sink, ckpt).foreach(graft.core.FsUtil.deleteOnExit)
+      val sink = graft.core.FsUtil.tempDir("graft-w6-sink-")
+      val ckpt = graft.core.FsUtil.tempDir("graft-w6-ckpt-")
       val q = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1).parquet(staging)
         .writeStream
@@ -1628,7 +1556,6 @@ object LlmQueries {
     * derivation ([[hyperplane]] components are dyadic rationals exactly
     * expressible in SQL), bit-for-bit. */
   private val lshCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictLshTables(s: SparkSession, dir: String): Unit = lshCache.remove(s, dir)
 
   private def lshTabled(s: SparkSession, dir: String): DataFrame =
     lshCache.getOrElseUpdate(s, dir) {

@@ -362,9 +362,9 @@ object LoadHarness {
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.ui.enabled", "false").getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
-        val dir  = java.nio.file.Files.createTempDirectory("graft-load-").toString
+        val dir  = graft.core.FsUtil.tempDir("graft-load-")
         val main = new GatewayServer(spark, dir)
-        val bpDir = java.nio.file.Files.createTempDirectory("graft-load-bp-").toString
+        val bpDir = graft.core.FsUtil.tempDir("graft-load-bp-")
         val bp   = new GatewayServer(spark, bpDir, maxInflight = 8, maxInflightBytes = 256 * 1024,
                                      walEnabled = false)
         val p  = main.start()

@@ -68,11 +68,8 @@ object JsonlCorpus {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "src_jsonl_read" -> { (s, dir) =>
       val out = fixture.getOrElseUpdate(s, dir) {
-        val p = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
-        // session eviction deletes the export, but batch drivers (Verify,
-        // Bench) exit without evicting — also sweep on JVM shutdown (one
-        // process-wide hook, however many fixtures register)
-        graft.core.FsUtil.deleteOnExit(p)
+        // swept at JVM exit too: batch drivers (Verify) never release
+        val p = graft.core.FsUtil.tempDir("graft-jsonl-")
         write(s, dir, p)
         p
       }

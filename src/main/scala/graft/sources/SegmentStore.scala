@@ -89,7 +89,7 @@ object SegmentQueries {
   private def storeDir(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val dir = Files.createTempDirectory("graft-segments-").toString
+        val dir = graft.core.FsUtil.tempDir("graft-segments-")
         SegmentStore.write(EventLog.log(spark, sfDir), dir)
         dir
       }

@@ -581,7 +581,7 @@ object StreamIngest {
       }.reduce(_ unionByName _)
     val maxId = (maxId0 + 1) * replicate - 1
     val span  = maxId / nChunks + 1
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stage-chunks-").resolve("out")
+    val tmp = java.nio.file.Paths.get(graft.core.FsUtil.tempDir("graft-stage-chunks-"), "out")
     raw
       .withColumn("_chunk", (col("event_id") / span).cast("int"))
       .repartition(nChunks, col("_chunk"))
@@ -624,8 +624,8 @@ object StreamedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root    = java.nio.file.Files.createTempDirectory("graft-stream-").toString
-        val staging = java.nio.file.Files.createTempDirectory("graft-staging-").toString
+        val root    = graft.core.FsUtil.tempDir("graft-stream-")
+        val staging = graft.core.FsUtil.tempDir("graft-staging-")
         val t0      = System.nanoTime()
         val schema  = StreamIngest.stageChunks(spark, sfDir, staging, nChunks = 4)
         val t1      = System.nanoTime()

@@ -25,7 +25,7 @@ object StreamQueries {
   private def stagedRaw(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) =
     synchronized {
       stagingCache.getOrElseUpdate(dir, {
-        val staging = java.nio.file.Files.createTempDirectory("graft-wstage-").toString
+        val staging = graft.core.FsUtil.tempDir("graft-wstage-")
         val schema  = StreamIngest.stageChunks(s, dir, staging, nChunks = 3)
         (staging, schema)
       })
@@ -83,7 +83,7 @@ object StreamQueries {
   private def runStreamAgg(s: SparkSession, dir: String, sinkPrefix: String)(
       agg: DataFrame => DataFrame): String = withSmallStateConf(s) {
     val (staging, schema) = stagedRaw(s, dir)
-    val out = java.nio.file.Files.createTempDirectory(sinkPrefix).toString
+    val out = graft.core.FsUtil.tempDir(sinkPrefix)
     val q = agg(
       s.readStream
         .schema(schema)

@@ -1428,7 +1428,7 @@ object CommittedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = Files.createTempDirectory("graft-table-").toString
+        val root = graft.core.FsUtil.tempDir("graft-table-")
         EventTable.ingestAndCommit(spark, sfDir, root)
         root
       }

@@ -662,7 +662,7 @@ object DeletedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-delete-").toString
+        val root = graft.core.FsUtil.tempDir("graft-delete-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
           mapLog = _.withColumn("props",
             when(expr("event_id % 13 = 0"),
@@ -690,7 +690,7 @@ object MorDeletedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-mor-").toString
+        val root = graft.core.FsUtil.tempDir("graft-mor-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
           mapLog = _.withColumn("props",
             when(expr("event_id % 13 = 0"),
@@ -728,7 +728,7 @@ object EqDeletedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-eqdel-").toString
+        val root = graft.core.FsUtil.tempDir("graft-eqdel-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
           mapLog = _.withColumn("props",
             when(expr("event_id % 13 = 0"),
@@ -818,7 +818,7 @@ object MergedTables {
     cache.getOrElseUpdate(
       sfDir, {
         import org.apache.spark.sql.expressions.Window
-        val root = java.nio.file.Files.createTempDirectory("graft-merge-").toString
+        val root = graft.core.FsUtil.tempDir("graft-merge-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16))
         val committed = EventTable.readCommitted(spark, root)
         val evid = expr("cast(substring(idempotency_key, 2) as bigint)")
@@ -859,7 +859,7 @@ object RolledBackTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-rollback-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-rollback-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val base      = committer.load().get.currentSnapshotId.get
         val nRows     = EventTable.readCommitted(spark, root).count()
@@ -893,7 +893,7 @@ object ExpiredTables {
   def tableRootAndMid(spark: SparkSession, sfDir: String): (String, Long) = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-expire-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-expire-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val snap1     = committer.load().get.currentSnapshotId.get
         val a = TailBatch.of(EventTable.readCommitted(spark, root),
@@ -932,7 +932,7 @@ object SpecEvolvedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-spec-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-spec-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val oldFiles  = committer.activeDataFiles().map(_.filePath).toSet
         require(committer.evolvePartitionSpec(graft.iceberg.PartitionSpec.dateFields),
@@ -974,7 +974,7 @@ object ChangefeedTables {
   def rootAndBase(spark: SparkSession, sfDir: String): (String, Long) = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-feed-").toString
+        val root = graft.core.FsUtil.tempDir("graft-feed-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
           mapLog = _.withColumn("props",
             when(expr("event_id % 13 = 0"),
@@ -1021,7 +1021,7 @@ object RewrittenTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-rewrite-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-rewrite-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val snap1     = committer.load().get.currentSnapshotId.get
         val batch = TailBatch.of(EventTable.readCommitted(spark, root),
@@ -1069,7 +1069,7 @@ object TaggedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-tagged-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-tagged-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val base      = committer.load().get.currentSnapshotId.get
         committer.createTag("pre-tail", base)
@@ -1119,9 +1119,9 @@ object TailedTables {
     cache.getOrElseUpdate(
       sfDir, {
         import org.apache.spark.sql.expressions.Window
-        val root = java.nio.file.Files.createTempDirectory("graft-tail-").toString
+        val root = graft.core.FsUtil.tempDir("graft-tail-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val sink = java.nio.file.Files.createTempDirectory("graft-tailsink-").toString
+        val sink = graft.core.FsUtil.tempDir("graft-tailsink-")
         val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
         spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
           classOf[graft.streaming.NioCheckpointFileManager].getName)
@@ -1188,14 +1188,14 @@ object StreamedChangefeedTables {
   def sinkDir(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-w8-").toString
+        val root = graft.core.FsUtil.tempDir("graft-w8-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
           mapLog = _.withColumn("props",
             when(expr("event_id % 13 = 0"),
                  concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
               .otherwise(col("props"))))
         val base = committer.load().get.currentSnapshotId.get
-        val sink = java.nio.file.Files.createTempDirectory("graft-w8sink-").toString
+        val sink = graft.core.FsUtil.tempDir("graft-w8sink-")
         val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
         spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
           classOf[graft.streaming.NioCheckpointFileManager].getName)
@@ -1269,7 +1269,7 @@ object StagedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root      = java.nio.file.Files.createTempDirectory("graft-wap-").toString
+        val root      = graft.core.FsUtil.tempDir("graft-wap-")
         val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
         val nRows     = EventTable.readCommitted(spark, root).count()
         val batch = TailBatch.of(EventTable.readCommitted(spark, root),
@@ -1294,7 +1294,7 @@ object CompactedTables {
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
-        val root = java.nio.file.Files.createTempDirectory("graft-compact-").toString
+        val root = graft.core.FsUtil.tempDir("graft-compact-")
         EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(32))
         while (Compaction.compact(spark, root).isDefined) ()
         root

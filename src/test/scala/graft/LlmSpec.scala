@@ -421,7 +421,10 @@ class LlmSpec extends AnyFunSuite {
         "the stream must overflow exactly the buckets the batch frame predicts")
       assert(row.getAs[Long]("n_refused_stream") === row.getAs[Long]("n_refused_expected"),
         "streamed refusal totals must equal greatest(0, sz - cap) per bucket")
-    } finally LlmQueries.evictDir(spark, d)
+    } finally {
+      LlmQueries.evictDir(spark, d)
+      graft.core.FsUtil.deleteRecursively(d)
+    }
   }
 
   test("ann PQ: 5-bit codes rank the planted nearest neighbors first (dense re-key under short corpus)") {
@@ -978,6 +981,83 @@ class LlmSpec extends AnyFunSuite {
       assert(hot >= 1L, s"$algo: the planted bucket must be reported hot")
       assert(capped >= 5000L, s"$algo: every planted row is star-capped")
       assert(nb > hot, s"$algo: healthy buckets must remain")
+    }
+  }
+
+  /** A temp copy of sf0.001's corpus tables, the two every LLM memo reads. */
+  private def corpusCopy(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    Seq("documents.parquet", "embeddings.parquet").foreach(f =>
+      Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001", f), d.resolve(f)))
+    d.toString
+  }
+
+  test("evictDir: after an in-place corpus rewrite, r2 and r7 answer like a fresh session") {
+    // r7's collected first pass, r2's query postings and the corpus size
+    // the IVF cell count derives from are all memoized per (session, dir):
+    // evictDir must drop every one of them, not a hand-kept subset
+    val d = corpusCopy("graft-rewrite-")
+    val s = spark.newSession()
+    val qs = Seq("r7_rocchio_prf", "r2_hybrid_retrieve")
+    def rows(session: org.apache.spark.sql.SparkSession, q: String): Seq[String] =
+      SparkEntry.queries(q)(session, d).collect().map(_.toString).toSeq.sorted
+    try {
+      val before = qs.map(rows(s, _))
+      // corpus B: every third doc and vector dropped — a different row count
+      Seq("documents.parquet" -> "doc_id", "embeddings.parquet" -> "vec_id").foreach { case (f, id) =>
+        spark.read.parquet(s"/root/testdata/sf0.001/$f")
+          .filter(org.apache.spark.sql.functions.col(id) % 3 =!= 0)
+          .write.mode("overwrite").parquet(s"$d/$f")
+      }
+      LlmQueries.evictDir(s, d)
+      val fresh = spark.newSession()
+      try qs.zip(before).foreach { case (q, old) =>
+        val want = rows(fresh, q)
+        assert(want !== old, s"$q: corpus B must change the answer, or this test shows nothing")
+        assert(rows(s, q) === want, s"$q answered from the old corpus after evictDir")
+      } finally graft.core.SessionMemo.release(fresh)
+    } finally {
+      graft.core.SessionMemo.release(s)
+      graft.core.FsUtil.deleteRecursively(d)
+    }
+  }
+
+  test("evictDir releases every memo family a sweep touches: no pinned RDD, no sidecar left") {
+    val d   = corpusCopy("graft-lifecycle-")
+    val idx = Files.createTempDirectory("graft-lifecycle-idx-")
+    val s   = spark.newSession()
+    // sidecars under a root this test owns, so "gone" is checkable
+    s.conf.set("graft.index.root", idx.toString)
+    def sidecars(): Seq[String] = {
+      val ls = Files.list(idx)
+      try ls.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString) finally ls.close()
+    }
+    val sc       = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    // one consumer per memo family (signatures, clusters, SimHash, LSH,
+    // Bloom, label centroids, IVF + PQ, SQ, r2 postings, r7 first pass,
+    // funnel + LM, BPE, CMS vocab, language profiles, DSIR)
+    val consumers = Seq("d2_minhash_lsh", "d6_dedup_clusters", "d10_simhash_neardup",
+      "d3_embedding_neardup", "d18_bloom_decontaminate", "e1_embedding_coherence",
+      "ann_ivfpq_topk", "ann_sq_topk", "r2_hybrid_retrieve", "r7_rocchio_prf",
+      "t15_funnel_ppl", "t19_bpe_learn", "t22_cms_heavy_hitters", "t23_langid", "t24_dsir_select")
+    try {
+      consumers.foreach(q => SparkEntry.queries(q)(s, d).collect())
+      assert((sc.getPersistentRDDs.keySet -- baseline).nonEmpty)
+      assert(sidecars().exists(_.startsWith("graft-ivf-sidecar-")) &&
+             sidecars().exists(_.startsWith("graft-pq-sidecar-")), sidecars())
+      LlmQueries.evictDir(s, d)
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !baseline.contains(id) }
+      assert(left.isEmpty, s"${left.size} RDDs still pinned after evictDir")
+      assert(sidecars().isEmpty, "evictDir must delete the IVF/PQ sidecar dirs")
+      LlmQueries.evictDir(s, d) // idempotent
+      val b0 = graft.core.SessionMemo.buildCount
+      SparkEntry.queries("d2_minhash_lsh")(s, d).collect()
+      assert(graft.core.SessionMemo.buildCount > b0, "an evicted memo must rebuild on its next use")
+    } finally {
+      graft.core.SessionMemo.release(s)
+      graft.core.FsUtil.deleteRecursively(d)
+      graft.core.FsUtil.deleteRecursively(idx)
     }
   }
 }

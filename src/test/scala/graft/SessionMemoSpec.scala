@@ -57,4 +57,25 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(df1.storageLevel === StorageLevel.NONE, "retired session's blocks must free")
     assert(df2.storageLevel === StorageLevel.NONE, "every memo in the process is swept")
   }
+
+  test("evict(session, dir) drops dir and dir/… keys across memos, each value once, nothing else") {
+    // a DEDICATED session: evict() sweeps every memo in the process
+    val s     = spark.newSession()
+    val other = spark.newSession()
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val m1 = new SessionMemo[String](onEvict = evicted += _)
+    val m2 = new SessionMemo[String](onEvict = evicted += _)
+    Seq("/c", "/c/documents.parquet", "/c2").foreach(k => m1.getOrElseUpdate(s, k)(s"m1:$k"))
+    Seq("/c", "/c-x").foreach(k => m2.getOrElseUpdate(s, k)(s"m2:$k"))
+    m2.getOrElseUpdate(other, "/c")("other:/c")
+    SessionMemo.evict(s, "/c")
+    assert(evicted.sorted.toSeq === Seq("m1:/c", "m1:/c/documents.parquet", "m2:/c"))
+    SessionMemo.evict(s, "/c")
+    assert(evicted.size === 3, "a second evict is a no-op")
+    // a sibling dir, a prefix-sharing sibling and another session survive
+    assert(m1.getOrElseUpdate(s, "/c2")(fail("must be memoized")) === "m1:/c2")
+    assert(m2.getOrElseUpdate(s, "/c-x")(fail("must be memoized")) === "m2:/c-x")
+    assert(m2.getOrElseUpdate(other, "/c")(fail("must be memoized")) === "other:/c")
+    assert(m1.getOrElseUpdate(s, "/c")("rebuilt") === "rebuilt")
+  }
 }
