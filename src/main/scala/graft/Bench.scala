@@ -548,11 +548,13 @@ object Bench {
             System.err.println(s"[graft-bench] query scale probe failed: $e")
             "null"
         } finally if (dir != null) {
-          // evict the replica-keyed persisted frames BEFORE deleting the
-          // files they were built from: a pinned 4x signature frame would
-          // otherwise hold executor memory for the rest of the bench and
-          // recompute a lost block against a deleted path
-          try llm.LlmQueries.evictDir(spark, dir.toString)
+          // evict every memo built from the replica BEFORE deleting its
+          // files: a pinned 4x signature frame would otherwise hold
+          // executor memory for the rest of the bench and recompute a lost
+          // block against a deleted path, and its table fixtures and sinks
+          // (x10/x11/x13's tables, tt2's streamed table and its staging
+          // dir) would stay in /tmp until JVM exit
+          try core.SessionMemo.evict(spark, dir.toString)
           catch { case scala.util.control.NonFatal(_) => () }
           // the replica is 4x the largest table — never leave it in /tmp
           try core.FsUtil.deleteRecursively(dir)

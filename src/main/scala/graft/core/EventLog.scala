@@ -241,12 +241,9 @@ object EventLog {
     * from memory while the cold Iceberg tier holds history. Spark's
     * in-memory columnar cache still applies filter pushdown and column
     * pruning on scans. */
-  private val hotCache = scala.collection.mutable.Map.empty[String, DataFrame]
+  private val hotFrames = SessionMemo.frames()
 
-  def hot(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    hotCache.getOrElseUpdate(
-      sfDir,
-      log(spark, sfDir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    )
-  }
+  def hot(spark: SparkSession, sfDir: String): DataFrame =
+    hotFrames.getOrElseUpdate(spark, sfDir)(
+      log(spark, sfDir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 }

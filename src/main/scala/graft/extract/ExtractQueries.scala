@@ -99,35 +99,29 @@ object EvolvedTables {
   val cfg2: TableSchemaConfig =
     TableSchemaConfig(fields = Seq(FieldSpec("k", "k", "Int32"), FieldSpec("k_str", "k", "Utf8")))
 
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new graft.core.FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root  = graft.core.FsUtil.tempDir("graft-evolved-")
-        val log   = EventLog.log(spark, sfDir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val half  = log.agg(org.apache.spark.sql.functions.max("event_id")).head().getLong(0) / 2
-        graft.table.EventTable.appendExtracted(spark, log.filter(col("event_id") <= half), root, cfg1)
-        graft.table.EventTable.appendExtracted(spark, log.filter(col("event_id") > half), root, cfg2)
-        log.unpersist()
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root  = tmp("graft-evolved-")
+      val log   = EventLog.log(spark, sfDir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val half  = log.agg(org.apache.spark.sql.functions.max("event_id")).head().getLong(0) / 2
+      graft.table.EventTable.appendExtracted(spark, log.filter(col("event_id") <= half), root, cfg1)
+      graft.table.EventTable.appendExtracted(spark, log.filter(col("event_id") > half), root, cfg2)
+      log.unpersist()
+      root
+    }
 }
 
 /** One extracted committed table per (JVM, sfDir). */
 object ExtractedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new graft.core.FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-extracted-")
-        graft.table.EventTable.ingestAndCommitExtracted(spark, sfDir, root, ExtractQueries.config)
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-extracted-")
+      graft.table.EventTable.ingestAndCommitExtracted(spark, sfDir, root, ExtractQueries.config)
+      root
+    }
 }

@@ -286,12 +286,12 @@ object CorpusQueries {
     * dir): the funnel's survivor branch and its final rollup both read it,
     * so it persists narrow (verdict + rollup keys only) instead of
     * re-running the per-word scoring per branch. */
-  private val funnelCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val funnelCache = graft.core.SessionMemo.frames()
 
   /** t16's bigram-token frame (doc_id, bigram, w1) per (session, dir): the
     * LM count, the context count, and the scoring join all read it — four
     * corpus scans with the words/bigrams explode collapse to one build. */
-  private val lmTokCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val lmTokCache = graft.core.SessionMemo.frames()
   /** t16's vocabulary size per (session, dir) — a single Long (the
     * embCountCache pattern): without it every invocation re-scans the
     * corpus with the words explode just to recount distinct words. */
@@ -302,7 +302,7 @@ object CorpusQueries {
     * instead of once per invocation (each warm rep was re-running the
     * lm2 shuffle + context broadcast + scoring join over the token
     * frame). */
-  private val lmDocCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val lmDocCache = graft.core.SessionMemo.frames()
 
   /** t19/t20 shared: the learned BPE merge table per (session, dir) — K
     * (rank, l, r, count) rows, a decision value like compaction's
@@ -316,7 +316,7 @@ object CorpusQueries {
     * pattern). Memoize-persisting it moves the training pass (corpus
     * trigram count + the vocab-bounded rank window) to first touch, so
     * warm invocations pay only doc scoring. */
-  private val langProfCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val langProfCache = graft.core.SessionMemo.frames()
 
   /** t22's exact word-count vocabulary (w, cnt) per (session, dir): BOTH
     * the CMS counter grid and the exact heavy-hitter cut fold out of it,
@@ -324,7 +324,7 @@ object CorpusQueries {
     * instead of twice per invocation — at 100 TB that is one full corpus
     * pass instead of two (plus warm reps skipping it entirely).
     * Vocab-bounded, hence the natural memo. */
-  private val cmsVocabCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val cmsVocabCache = graft.core.SessionMemo.frames()
 
   /** t24's trained importance model per (session, dir): the bucket weight
     * table (b, w) — ≤ [[DsirBuckets]] rows — plus the W0 mass normalizer.

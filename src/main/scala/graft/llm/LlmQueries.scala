@@ -374,7 +374,7 @@ object LlmQueries {
 
   /** d10's narrow (doc_id, bands) signature frame, persisted per
     * (session, dir) so the banded self-join reads one copy. */
-  private val simSigCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
+  private val simSigCache = graft.core.SessionMemo.frames()
 
   /** One materialized signature table per (session, sfDir). Keyed by the
     * SparkSession too (identity), not just the dir: a cached DataFrame is
@@ -390,7 +390,7 @@ object LlmQueries {
     * lesson). */
   private val bloomCache = new graft.core.SessionMemo[(Array[Long], Long)]()
 
-  private val sigCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
+  private val sigCache = graft.core.SessionMemo.frames()
 
   /** Connected components over the near-dup pair graph (doc_id,
     * cluster_id), memoized per (session, dir): the converged label frame
@@ -403,7 +403,7 @@ object LlmQueries {
     * O(component diameter), and convergence is a metadata-sized driver
     * check. Dup clusters are tiny (diameter ≤ a few hops), so this is
     * the plan that holds at corpus scale; no union-find on one machine. */
-  private val clusterCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
+  private val clusterCache = graft.core.SessionMemo.frames()
 
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterCache.getOrElseUpdate(s, dir) {
@@ -824,7 +824,7 @@ object LlmQueries {
     * two consumers of the scored frame — the label-stats fold and the
     * probe side — each pay only the narrow map-side cosine pass, never a
     * second (label, dim) centroid shuffle. */
-  private val centroidCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
+  private val centroidCache = graft.core.SessionMemo.frames()
   private def labelCentroids(s: SparkSession, dir: String): DataFrame =
     centroidCache.getOrElseUpdate(s, dir)(
       fixedPointMeans(emb(s, dir), Seq("label"), "v", "cv")
@@ -1193,41 +1193,6 @@ object LlmQueries {
           expr("graft_simhash_bands(transform(words, w -> md5(w)))").as("bands"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Invalidate one corpus dir for session `s`: every memoized value
-    * built from it, in any module ([[graft.core.SessionMemo.evict]]),
-    * plus the dir-keyed streaming sinks below. For callers that rewrite a
-    * corpus dir in place (the next query must see the new files) or
-    * delete a throwaway copy (the bench's 4× scale replica): without it,
-    * persisted frames keyed by the dir stay pinned for the session's
-    * lifetime and a lost-block recompute would read the old files. */
-  def evictDir(s: SparkSession, dir: String): Unit = {
-    graft.core.SessionMemo.evict(s, dir)
-    // d12's sink AND staging replica are dir-keyed (session-independent
-    // files): drop the entries and their parquet so a reused dir path
-    // recomputes instead of serving a stale pre-change pair set, and a
-    // throwaway dir doesn't leave its staging replica on disk until JVM
-    // exit
-    streamDupSink.synchronized {
-      def drop(cache: scala.collection.mutable.Map[String, String]): Unit =
-        cache.keys.filter(k => k == dir || k.startsWith(dir + "@")).toSeq
-          .foreach { k =>
-            cache.remove(k).foreach(path =>
-              try graft.core.FsUtil.deleteRecursively(path)
-              catch { case scala.util.control.NonFatal(_) => () })
-          }
-      drop(streamDupSinkCache)
-      drop(streamStageCache)
-      drop(bitextSinkCache)
-      drop(qaSinkCache)
-      // w6/w7 staging replicas + checkpoints ride a parallel aux map
-      sinkAuxCache.keys.filter(k => k.startsWith(dir + "@")).toSeq.foreach { k =>
-        sinkAuxCache.remove(k).foreach(_.foreach(p =>
-          try graft.core.FsUtil.deleteRecursively(p)
-          catch { case scala.util.control.NonFatal(_) => () }))
-      }
-    }
-  }
-
   /** r7's collected first pass (NumQueries × TopK (q_id, rank,
     * neighbor_id) tuples) per (session, dir): the brute scan executes
     * once per session, not once per invocation — plan inspection and
@@ -1242,59 +1207,44 @@ object LlmQueries {
     * job at construction) because the arm reads it twice per execution —
     * the term-df fold and the scoring join — and each lazy reference
     * would otherwise re-tokenize the whole corpus. */
-  private val qpostsCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val qpostsCache = graft.core.SessionMemo.frames()
 
-  /** d12 family: one parquet sink per (sfDir, variant) — the pair sink
-    * (variant "") and the overflow-audit sink (variant "#audit"). File
-    * sinks are session-independent, so the key is the dir — any session
-    * reads the same files — PLUS a content stamp of the input: a
-    * documents.parquet rewritten at the same path must recompute, not
-    * serve the stale pre-change set. */
-  private val streamDupSink = new Object
-  private val streamDupSinkCache = scala.collection.mutable.Map.empty[String, String]
-  // staging replicas shared ACROSS variants, keyed by the same dir@stamp
-  // prefix: the pair sink and the audit sink replay the identical 3-drop
-  // input, so one corpus rewrite serves both
-  private val streamStageCache = scala.collection.mutable.Map.empty[String, String]
+  /** The dir-keyed streaming sinks: d12's pair sink (variant "") and
+    * overflow-audit sink ("#audit"), w6's ("#w6") and w7's ("#w7"). File
+    * sinks are session-independent, so any session reads the same files;
+    * the key is the input file under the dir PLUS its content stamp
+    * ([[stamped]]), so an input rewritten at the same path misses and
+    * rebuilds instead of serving the stale set. The superseded build stays
+    * until [[graft.core.SessionMemo.evict]] deletes it with its staging and
+    * checkpoint dirs. */
+  private val sinks = new graft.core.FileMemo[String]
+  // d12's staging replica, shared ACROSS its variants: the pair sink and
+  // the audit sink replay the identical 3-drop input
+  private val d12Staging = new graft.core.FileMemo[String]
+
+  private def stamped(s: SparkSession, dir: String, file: String): String =
+    s"$dir/$file@${ParquetTables.stamp(s, s"$dir/$file")}"
 
   /** The d12-family sink protocol: replay `dir`'s corpus as a 3-drop file
-    * stream into a cached parquet sink, returning the sink path. `run`
+    * stream into a memoized parquet sink, returning the sink path. `run`
     * starts the streaming query for its variant (pairs or overflow
-    * markers). Stale-STAMP keys of the whole family are dropped before
-    * computing (prefix compare — a stamp change invalidates both
-    * variants and the shared staging replica; a sibling variant under
-    * the CURRENT stamp, and its staging, are preserved). */
+    * markers) from the source, sink and checkpoint paths. */
   private def streamSinkFor(s: SparkSession, dir: String, variant: String)(
-      run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery): String =
-    streamDupSink.synchronized {
-      val prefix = s"$dir@${ParquetTables.stamp(s, s"$dir/documents.parquet")}"
-      val key = s"$prefix$variant"
-      streamDupSinkCache.keys.filter(k => k.startsWith(dir + "@") && !k.startsWith(prefix)).toSeq
-        .foreach { k =>
-          streamDupSinkCache.remove(k).foreach(sink =>
-            try graft.core.FsUtil.deleteRecursively(sink)
-            catch { case scala.util.control.NonFatal(_) => () })
-        }
-      streamStageCache.keys.filter(k => k.startsWith(dir + "@") && k != prefix).toSeq
-        .foreach { k =>
-          streamStageCache.remove(k).foreach(st =>
-            try graft.core.FsUtil.deleteRecursively(st)
-            catch { case scala.util.control.NonFatal(_) => () })
-        }
-      streamDupSinkCache.getOrElseUpdate(key, {
-        val staging = streamStageCache.getOrElseUpdate(prefix, {
-          val st = graft.core.FsUtil.tempDir("graft-d12-stage-")
-          docs(s, dir).repartition(3).write.mode("overwrite").parquet(st)
-          st
-        })
-        val sink = graft.core.FsUtil.tempDir("graft-d12-sink-")
-        val ckpt = graft.core.FsUtil.tempDir("graft-d12-ckpt-")
-        val src = s.readStream.schema(docs(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(staging)
-        run(src, sink, ckpt).awaitTermination()
-        sink
-      })
+      run: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val input = stamped(s, dir, "documents.parquet")
+    sinks.getOrElseUpdate(input + variant) { tmp =>
+      val staging = d12Staging.getOrElseUpdate(input) { tmp =>
+        val st = tmp("graft-d12-stage-")
+        docs(s, dir).repartition(3).write.mode("overwrite").parquet(st)
+        st
+      }
+      val sink = tmp("graft-d12-sink-")
+      val src = s.readStream.schema(docs(s, dir).schema)
+        .option("maxFilesPerTrigger", 1).parquet(staging)
+      run(src, sink, tmp("graft-d12-ckpt-")).awaitTermination()
+      sink
     }
+  }
 
   /** Cosine similarity between array columns `x` and `y` as a SQL
     * fragment — the one formula every embedding operator shares. */
@@ -1306,12 +1256,12 @@ object LlmQueries {
     * one file per present shard, which is then moved into a flat staging
     * dir the file-stream source replays in order. Shared by the w6/w7
     * sink builders (the per-shard filter version paid one corpus scan per
-    * shard). Returns the staging dir. */
-  private def stageShards(df: DataFrame, shardCol: String, prefix: String): String = {
-    val tmpRoot = graft.core.FsUtil.tempDir(s"$prefix-tmp-")
+    * shard). Returns the staging dir, made by `tmp`. */
+  private def stageShards(df: DataFrame, shardCol: String, prefix: String, tmp: String => String): String = {
+    val tmpRoot = tmp(s"$prefix-tmp-")
     df.withColumn("_shard", pmod(col(shardCol), lit(3L)))
       .coalesce(1).write.partitionBy("_shard").mode("overwrite").parquet(tmpRoot)
-    val staging = graft.core.FsUtil.tempDir(s"$prefix-stage-")
+    val staging = tmp(s"$prefix-stage-")
     (0 until 3).foreach { i =>
       val dirF  = new java.io.File(s"$tmpRoot/_shard=$i")
       val parts = Option(dirF.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1331,23 +1281,6 @@ object LlmQueries {
     staging
   }
 
-  /** Aux dirs (staging replica + checkpoint) per sink-cache key, for the
-    * w6/w7 stale-stamp sweeps: the d12 discipline — a superseded build's
-    * corpus replica must be deleted WITH its sink, not leak until JVM
-    * exit. */
-  private val sinkAuxCache = scala.collection.mutable.Map.empty[String, Seq[String]]
-
-  private def dropStaleSinkKeys(cache: scala.collection.mutable.Map[String, String],
-                                dir: String, liveKey: String): Boolean = {
-    val stale = cache.keys.filter(k => k.startsWith(dir + "@") && k != liveKey).toSeq
-    stale.foreach { k =>
-      (cache.remove(k).toSeq ++ sinkAuxCache.remove(k).getOrElse(Nil)).foreach(p =>
-        try graft.core.FsUtil.deleteRecursively(p)
-        catch { case scala.util.control.NonFatal(_) => () })
-    }
-    stale.nonEmpty
-  }
-
   /** w7: streaming corpus quality gate — t14's classifier run per
     * arriving shard, the admission QA a streaming ingestion pipeline
     * keeps in front of the corpus (score each incoming doc map-side,
@@ -1355,19 +1288,14 @@ object LlmQueries {
     * per refresh: the SHARED [[qualityScoreExpr]] scores (semantics
     * cannot drift from t14/t15), one bounded (drop, source) rollup per
     * micro-batch, nothing keyed to cap. Shard identity travels in the
-    * data (doc_id % 3). Sink is dir@stamp-keyed parquet like w6's. */
-  private val qaSinkCache = scala.collection.mutable.Map.empty[String, String]
-
-  private def streamQualitySink(s: SparkSession, dir: String): String = streamDupSink.synchronized {
-    val key = s"$dir@${ParquetTables.stamp(s, s"$dir/documents.parquet")}"
-    dropStaleSinkKeys(qaSinkCache, dir, key)
-    qaSinkCache.getOrElseUpdate(key, {
+    * data (doc_id % 3). Sink is stamp-keyed in [[sinks]] like w6's. */
+  private def streamQualitySink(s: SparkSession, dir: String): String =
+    sinks.getOrElseUpdate(stamped(s, dir, "documents.parquet") + "#w7") { tmp =>
       graft.functions.GraftFunctions.ensureRegistered(s)
       val src       = docs(s, dir).select("doc_id", "source", "text")
       val srcSchema = src.schema
-      val staging   = stageShards(src, "doc_id", "graft-w7")
-      val sink = graft.core.FsUtil.tempDir("graft-w7-sink-")
-      val ckpt = graft.core.FsUtil.tempDir("graft-w7-ckpt-")
+      val staging   = stageShards(src, "doc_id", "graft-w7", tmp)
+      val sink = tmp("graft-w7-sink-")
       val q = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1).parquet(staging)
         .writeStream
@@ -1385,24 +1313,12 @@ object LlmQueries {
           }
           ()
         }
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", tmp("graft-w7-ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      // aux dirs are registered only on SUCCESS (paired with the sink-cache
-      // entry); a failed build reclaims its dirs immediately instead of
-      // orphaning an aux entry no stale sweep can see
-      try q.awaitTermination()
-      catch {
-        case t: Throwable =>
-          Seq(staging, sink, ckpt).foreach(p =>
-            try graft.core.FsUtil.deleteRecursively(p)
-            catch { case scala.util.control.NonFatal(_) => () })
-          throw t
-      }
-      sinkAuxCache(key) = Seq(staging, ckpt)
+      q.awaitTermination()
       s"$sink/data"
-    })
-  }
+    }
 
   /** r5's margin miner between a static `a` side (a_id, av, cell) and a
     * `b` side (b_id, bv, cell) — ONE definition shared by the batch
@@ -1447,24 +1363,11 @@ object LlmQueries {
     * streaming state to cap — the audit (w6_mining_audit) instead gates
     * per-refresh COMPLETENESS (every staged shard mined, batch sizes
     * reconciled) and the cell fan-out. Sink is parquet, keyed by dir (any
-    * session reads the same files). */
-  private val bitextSinkCache = scala.collection.mutable.Map.empty[String, String]
-
-  private def streamBitextSink(s: SparkSession, dir: String): String = streamDupSink.synchronized {
-    // keyed by dir@embeddings-stamp (the d12 discipline) and guarded by the
-    // SAME monitor evictDir's drop() takes, so build and evict can never
-    // race on the map. The stamp protects the SESSION-INDEPENDENT file
-    // sink (a fresh JVM must not serve a sink mined from a replaced
-    // corpus); in-session invalidation after an in-place regeneration is
-    // [[evictDir]]'s job — the documented contract for every (session,
-    // dir) memo, which also evicts the IVF memo this build trains
-    // against. A stale-stamp drop here additionally evicts the IVF
-    // memo (belt: the common regenerate-then-re-query flow stays
-    // consistent even without an evictDir call, whenever a prior build's
-    // key makes the regeneration detectable).
-    val key = s"$dir@${ParquetTables.stamp(s, s"$dir/embeddings.parquet")}"
-    if (dropStaleSinkKeys(bitextSinkCache, dir, key)) ivfCache.remove(s, dir)
-    bitextSinkCache.getOrElseUpdate(key, {
+    * session reads the same files), stamped with the embeddings it mines
+    * ([[sinks]]). The IVF index it trains against is a session memo that
+    * [[graft.core.SessionMemo.evict]] drops together with the sink. */
+  private def streamBitextSink(s: SparkSession, dir: String): String =
+    sinks.getOrElseUpdate(stamped(s, dir, "embeddings.parquet") + "#w6") { tmp =>
       graft.functions.GraftFunctions.ensureRegistered(s)
       val (cents, assigned) = ivfIndex(s, dir)
       val lab = emb(s, dir).select(col("vec_id"), col("label"))
@@ -1475,9 +1378,8 @@ object LlmQueries {
       // the sink is correct under any file-source ordering
       val src = emb(s, dir).filter(col("label") % 2 === 1).select("vec_id", "v")
       val srcSchema = src.schema
-      val staging = stageShards(src, "vec_id", "graft-w6")
-      val sink = graft.core.FsUtil.tempDir("graft-w6-sink-")
-      val ckpt = graft.core.FsUtil.tempDir("graft-w6-ckpt-")
+      val staging = stageShards(src, "vec_id", "graft-w6", tmp)
+      val sink = tmp("graft-w6-sink-")
       val q = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1).parquet(staging)
         .writeStream
@@ -1500,22 +1402,12 @@ object LlmQueries {
           }
           ()
         }
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", tmp("graft-w6-ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      // success-only aux registration — see streamQualitySink
-      try q.awaitTermination()
-      catch {
-        case t: Throwable =>
-          Seq(staging, sink, ckpt).foreach(p =>
-            try graft.core.FsUtil.deleteRecursively(p)
-            catch { case scala.util.control.NonFatal(_) => () })
-          throw t
-      }
-      sinkAuxCache(key) = Seq(staging, ckpt)
+      q.awaitTermination()
       s"$sink/data"
-    })
-  }
+    }
 
   /** The SINGLE-TABLE hyperplane-LSH bucketed embedding frame —
     * ann_lsh_nn's generator. Its planes are [[lshTabled]]'s table 0
@@ -1555,7 +1447,7 @@ object LlmQueries {
     * no shuffle; the oracle rebuilds the planes from the same md5
     * derivation ([[hyperplane]] components are dyadic rationals exactly
     * expressible in SQL), bit-for-bit. */
-  private val lshCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
+  private val lshCache = graft.core.SessionMemo.frames()
 
   private def lshTabled(s: SparkSession, dir: String): DataFrame =
     lshCache.getOrElseUpdate(s, dir) {

@@ -60,16 +60,13 @@ object JsonlCorpus {
     spark.readStream.schema(DocumentsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).json(path)
 
-  // fixture path per (session, sfDir): the export is built once and reused
-  // across bench reps; evicting a session deletes its export from /tmp
-  private val fixture =
-    new graft.core.SessionMemo[String](onEvict = graft.core.FsUtil.deleteRecursively(_: String))
+  // the export per sfDir: built once, read by every session
+  private val exports = new graft.core.FileMemo[String]
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "src_jsonl_read" -> { (s, dir) =>
-      val out = fixture.getOrElseUpdate(s, dir) {
-        // swept at JVM exit too: batch drivers (Verify) never release
-        val p = graft.core.FsUtil.tempDir("graft-jsonl-")
+      val out = exports.getOrElseUpdate(dir) { tmp =>
+        val p = tmp("graft-jsonl-")
         write(s, dir, p)
         p
       }

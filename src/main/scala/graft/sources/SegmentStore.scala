@@ -84,17 +84,14 @@ object SegmentStore {
 
 /** One segment store per (JVM, sfDir), plus the Q8 oracle query. */
 object SegmentQueries {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new graft.core.FileMemo[String]
 
-  private def storeDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val dir = graft.core.FsUtil.tempDir("graft-segments-")
-        SegmentStore.write(EventLog.log(spark, sfDir), dir)
-        dir
-      }
-    )
-  }
+  private def storeDir(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val dir = tmp("graft-segments-")
+      SegmentStore.write(EventLog.log(spark, sfDir), dir)
+      dir
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q8_segment_read" -> { (s, dir) =>

@@ -603,6 +603,7 @@ object StreamIngest {
         } finally s.close()
       }
     }
+    graft.core.FsUtil.deleteRecursively(tmp.getParent) // only the job's markers are left
     raw.schema
   }
 }
@@ -610,7 +611,7 @@ object StreamIngest {
 /** One streamed table per (JVM, sfDir): the full chunked-stream pipeline,
   * shared by queries. */
 object StreamedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new graft.core.FileMemo[String]
 
   /** Staging-vs-ingest decomposition of the LAST table build: staging is the
     * producer simulation (writing the raw burst files the stream consumes),
@@ -621,28 +622,25 @@ object StreamedTables {
   @volatile var lastBuild: Option[StreamedTables.BuildStats] = None
   final case class BuildStats(sfDir: String, events: Long, stagingSec: Double, ingestSec: Double)
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root    = graft.core.FsUtil.tempDir("graft-stream-")
-        val staging = graft.core.FsUtil.tempDir("graft-staging-")
-        val t0      = System.nanoTime()
-        val schema  = StreamIngest.stageChunks(spark, sfDir, staging, nChunks = 4)
-        val t1      = System.nanoTime()
-        // Dedup-state width sized to this deployment's key cardinality
-        // (tens of thousands of keys per trigger): 8 state partitions keep
-        // the per-trigger store open/commit cost proportional to the work.
-        // A cluster ingesting an unbounded key space sizes this to executor
-        // count instead — the knob is per-stream, bound to its checkpoint.
-        new StreamIngest(spark, root, shufflePartitions = Some(8)).runFileStream(staging, schema)
-        val t2 = System.nanoTime()
-        // input events = staged chunk rows (pre-dedup), footer counts only
-        val events = spark.read.schema(schema).parquet(staging).count()
-        lastBuild = Some(BuildStats(sfDir, events, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
-        if (sys.env.contains("GRAFT_TIMING"))
-          println(f"[graft-timing] s5 build: staging=${(t1 - t0) / 1e9}%.2fs ingest=${(t2 - t1) / 1e9}%.2fs events=$events")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root    = tmp("graft-stream-")
+      val staging = tmp("graft-staging-")
+      val t0      = System.nanoTime()
+      val schema  = StreamIngest.stageChunks(spark, sfDir, staging, nChunks = 4)
+      val t1      = System.nanoTime()
+      // Dedup-state width sized to this deployment's key cardinality
+      // (tens of thousands of keys per trigger): 8 state partitions keep
+      // the per-trigger store open/commit cost proportional to the work.
+      // A cluster ingesting an unbounded key space sizes this to executor
+      // count instead — the knob is per-stream, bound to its checkpoint.
+      new StreamIngest(spark, root, shufflePartitions = Some(8)).runFileStream(staging, schema)
+      val t2 = System.nanoTime()
+      // input events = staged chunk rows (pre-dedup), footer counts only
+      val events = spark.read.schema(schema).parquet(staging).count()
+      lastBuild = Some(BuildStats(sfDir, events, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
+      if (sys.env.contains("GRAFT_TIMING"))
+        println(f"[graft-timing] s5 build: staging=${(t1 - t0) / 1e9}%.2fs ingest=${(t2 - t1) / 1e9}%.2fs events=$events")
+      root
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Oracle, ParquetTables}
+import graft.core.{FileMemo, Oracle, ParquetTables}
 import graft.table.EventTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,25 +11,22 @@ import org.apache.spark.sql.functions._
   * The oracle is the batch derivation over the same events — streamed and
   * batch ingestion must converge to the identical committed state. */
 object StreamQueries {
-  /** One streaming-windowed-agg PARQUET SINK per sfDir. A file sink (not a
-    * memory sink) is the 100 TB-honest emission path: closed windows land
-    * in executor-written parquet, never in driver memory, and the result is
-    * session-independent — any session reads the same files, so the cache
-    * key is just the sfDir. */
-  private val windowSinkCache = scala.collection.mutable.Map.empty[String, String]
-
   /** Staged chunked raw stream shared by the windowed streaming queries —
     * each query keeps its own checkpoint; the input files are immutable. */
-  private val stagingCache = scala.collection.mutable.Map.empty[String, (String, org.apache.spark.sql.types.StructType)]
+  private val staged = new FileMemo[(String, org.apache.spark.sql.types.StructType)]
 
   private def stagedRaw(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) =
-    synchronized {
-      stagingCache.getOrElseUpdate(dir, {
-        val staging = graft.core.FsUtil.tempDir("graft-wstage-")
-        val schema  = StreamIngest.stageChunks(s, dir, staging, nChunks = 3)
-        (staging, schema)
-      })
+    staged.getOrElseUpdate(dir) { tmp =>
+      val staging = tmp("graft-wstage-")
+      (staging, StreamIngest.stageChunks(s, dir, staging, nChunks = 3))
     }
+
+  /** The streaming-agg PARQUET SINKS, one per (sfDir, query), keyed
+    * `sfDir/<query>`. A file sink (not a memory sink) is the 100 TB-honest
+    * emission path: closed windows land in executor-written parquet, never
+    * in driver memory, and the result is session-independent — any
+    * session reads the same files. */
+  private val sinks = new FileMemo[String]
 
   /** Run a streaming query with state tuned for a SMALL keyed aggregation:
     * the heap-backed provider (no per-partition RocksDB instance spin-up)
@@ -62,6 +59,39 @@ object StreamQueries {
     }
   }
 
+  /** The shared streamed-aggregation scaffold for w2–w5: watermarked raw
+    * stream → caller's grouped agg → append-mode parquet sink, run to
+    * completion with AvailableNow, once per (dir, `name`) in [[sinks]].
+    * ONE definition of the read schema / trigger / watermark / sink /
+    * checkpoint wiring — the streaming tables differ only in their
+    * grouping, and a divergence in the scaffold (e.g. a checkpoint or
+    * watermark tweak applied to one copy) would silently change the
+    * others' emission semantics. */
+  private def runStreamAgg(s: SparkSession, dir: String, name: String)(
+      agg: DataFrame => DataFrame): String =
+    sinks.getOrElseUpdate(s"$dir/$name") { tmp =>
+      withSmallStateConf(s) {
+        val (staging, schema) = stagedRaw(s, dir)
+        val out = tmp(s"graft-$name-sink-")
+        val q = agg(
+          s.readStream
+            .schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staging)
+            .withColumn("ts", timestamp_millis(col("timestamp_ms")))
+            .withWatermark("ts", "0 seconds"))
+          .writeStream
+          .outputMode("append")
+          .format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", s"$out/_checkpoint") // _-prefixed: invisible to the parquet read
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        out
+      }
+    }
+
   /** Event-time windowed aggregation as a STRUCTURED STREAMING query:
     * watermarked 1-hour tumbling windows over the chunked raw stream
     * (`withWatermark` + `window()` — Spark's native streaming agg with
@@ -73,44 +103,12 @@ object StreamQueries {
     * a zero-delay watermark the final no-data batch closes every window
     * whose end is ≤ the stream's max event time — the oracle mirrors that
     * emission rule exactly, like w3's sessions. */
-  /** The shared streamed-aggregation scaffold for w2/w3: watermarked raw
-    * stream → caller's grouped agg → append-mode parquet sink, run to
-    * completion with AvailableNow. ONE definition of the read schema /
-    * trigger / watermark / sink / checkpoint wiring — the two streaming
-    * tables differ only in their grouping, and a divergence in the
-    * scaffold (e.g. a checkpoint or watermark tweak applied to one copy)
-    * would silently change the other's emission semantics. */
-  private def runStreamAgg(s: SparkSession, dir: String, sinkPrefix: String)(
-      agg: DataFrame => DataFrame): String = withSmallStateConf(s) {
-    val (staging, schema) = stagedRaw(s, dir)
-    val out = graft.core.FsUtil.tempDir(sinkPrefix)
-    val q = agg(
-      s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .withColumn("ts", timestamp_millis(col("timestamp_ms")))
-        .withWatermark("ts", "0 seconds"))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$out/_checkpoint") // _-prefixed: invisible to the parquet read
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    out
-  }
-
-  private def streamWindowTable(s: SparkSession, dir: String): String = synchronized {
-    windowSinkCache.getOrElseUpdate(dir, runStreamAgg(s, dir, "graft-w2-sink-")(
+  private def streamWindowTable(s: SparkSession, dir: String): String =
+    runStreamAgg(s, dir, "w2")(
       _.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              min("timestamp_ms").as("min_ts"),
-             max("timestamp_ms").as("max_ts"))))
-  }
-
-  private val sessionSinkCache = scala.collection.mutable.Map.empty[String, String]
+             max("timestamp_ms").as("max_ts")))
 
   /** Native STREAMING SESSION WINDOWS (`session_window`, 30-minute gap) in
     * append mode: a session is emitted exactly once, when the watermark
@@ -118,14 +116,11 @@ object StreamQueries {
     * closes every session whose last event is ≥ 30 minutes before the
     * stream's max event time — the oracle mirrors that emission rule
     * exactly, so streamed sessionization is hash-gated. */
-  private def streamSessionTable(s: SparkSession, dir: String): String = synchronized {
-    sessionSinkCache.getOrElseUpdate(dir, runStreamAgg(s, dir, "graft-w3-sink-")(
+  private def streamSessionTable(s: SparkSession, dir: String): String =
+    runStreamAgg(s, dir, "w3")(
       _.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), min("timestamp_ms").as("first_ts"),
-             max("timestamp_ms").as("last_ts"))))
-  }
-
-  private val hllSinkCache = scala.collection.mutable.Map.empty[String, String]
+             max("timestamp_ms").as("last_ts")))
 
   /** Streaming HLL (w4): the 256-register distinct-user sketch per 1-hour
     * tumbling window, maintained BY the streaming aggregation —
@@ -137,22 +132,18 @@ object StreamQueries {
     * the emitted register rows (t21's integer fixed-point math + the
     * shared linear-counting LUT) — finalization never lives in streaming
     * state. */
-  private def streamHllTable(s: SparkSession, dir: String): String = synchronized {
-    hllSinkCache.getOrElseUpdate(dir, {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val m       = graft.llm.CorpusQueries.HllM
-      val maxRank = graft.llm.CorpusQueries.HllRestBits + 1
-      runStreamAgg(s, dir, "graft-w4-sink-")(
-        _.withColumn("h", expr("graft_fnv32(concat('whll:', cast(user_id as string)))"))
-          .withColumn("reg", expr(s"h % $m"))
-          .withColumn("rank", expr(
-            s"CASE WHEN h div $m = 0 THEN $maxRank ELSE $maxRank - length(bin(h div $m)) END"))
-          .groupBy(window(col("ts"), "1 hour"), col("reg"))
-          .agg(max("rank").as("m_rank")))
-    })
+  private def streamHllTable(s: SparkSession, dir: String): String = {
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    val m       = graft.llm.CorpusQueries.HllM
+    val maxRank = graft.llm.CorpusQueries.HllRestBits + 1
+    runStreamAgg(s, dir, "w4")(
+      _.withColumn("h", expr("graft_fnv32(concat('whll:', cast(user_id as string)))"))
+        .withColumn("reg", expr(s"h % $m"))
+        .withColumn("rank", expr(
+          s"CASE WHEN h div $m = 0 THEN $maxRank ELSE $maxRank - length(bin(h div $m)) END"))
+        .groupBy(window(col("ts"), "1 hour"), col("reg"))
+        .agg(max("rank").as("m_rank")))
   }
-
-  private val cmsSinkCache = scala.collection.mutable.Map.empty[String, String]
 
   /** Streaming CMS (w5): t22's d×w count-min grid keyed by 1-hour tumbling
     * window — the CELLS are the mergeable streaming state
@@ -162,17 +153,15 @@ object StreamQueries {
     * streaming state: read time probes fixed keys against the emitted
     * cells (t22's min-over-rows), so the sketch streams exactly like a
     * production per-window heavy-hitter pipeline. */
-  private def streamCmsTable(s: SparkSession, dir: String): String = synchronized {
-    cmsSinkCache.getOrElseUpdate(dir, {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      import graft.llm.CorpusQueries.{CmsRows, CmsWidth}
-      runStreamAgg(s, dir, "graft-w5-sink-")(
-        _.select(col("ts"), explode(expr(
-          s"""transform(sequence(0, ${CmsRows - 1}),
-             |          r -> named_struct('r', r, 'c', graft_fnv32(concat('wcms', r, ':', cast(user_id as string))) % $CmsWidth))""".stripMargin)).as("rc"))
-          .groupBy(window(col("ts"), "1 hour"), col("rc.r").as("r"), col("rc.c").as("c"))
-          .agg(count(lit(1)).as("cnt")))
-    })
+  private def streamCmsTable(s: SparkSession, dir: String): String = {
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    import graft.llm.CorpusQueries.{CmsRows, CmsWidth}
+    runStreamAgg(s, dir, "w5")(
+      _.select(col("ts"), explode(expr(
+        s"""transform(sequence(0, ${CmsRows - 1}),
+           |          r -> named_struct('r', r, 'c', graft_fnv32(concat('wcms', r, ':', cast(user_id as string))) % $CmsWidth))""".stripMargin)).as("rc"))
+        .groupBy(window(col("ts"), "1 hour"), col("rc.r").as("r"), col("rc.c").as("c"))
+        .agg(count(lit(1)).as("cnt")))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1423,15 +1423,12 @@ object FileStats extends Serializable {
 /** One committed table per (JVM, sfDir), built lazily — queries over the
   * committed snapshot share a single ingest+commit. */
 object CommittedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new graft.core.FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-table-")
-        EventTable.ingestAndCommit(spark, sfDir, root)
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-table-")
+      EventTable.ingestAndCommit(spark, sfDir, root)
+      root
+    }
 }

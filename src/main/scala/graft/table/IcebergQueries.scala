@@ -1,6 +1,6 @@
 package graft.table
 
-import graft.core.Oracle
+import graft.core.{FileMemo, Oracle}
 import graft.iceberg.{FieldIds, IcebergCommitter, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -644,37 +644,24 @@ object IcebergQueries {
   )
 }
 
-/** Fragmented-then-compacted table per (JVM, sfDir) for compaction queries.
-  * Ingests into ~32 deliberately small files (≥3 per partition dir at every
-  * sf), then compacts with the REFERENCE defaults (<64 MB candidates,
-  * ≥3 files/group, ≤10 files/run, `/root/reference/src/storage/compaction.rs:25-34`)
-  * repeatedly — each run is one replace-snapshot, like repeated POSTs to the
-  * reference's compact endpoint. */
 /** One deleted-from table per (JVM, sfDir): full ingest (into several
   * files so the delete provably rewrites SOME files and leaves others
-  * untouched), then one copy-on-write deleteWhere pass. Every 13th event's
-  * payload is rewritten to `{"nk": …}` — NO `$.k` key — so the delete
-  * predicate evaluates NULL on real rows and the oracle genuinely gates
-  * SQL DELETE three-valued semantics (NULL-predicate rows must SURVIVE). */
+  * untouched), then one copy-on-write deleteWhere pass over
+  * [[TailBatch.kLessEvery13th]]'s rows, so the oracle gates SQL DELETE's
+  * three-valued semantics. */
 object DeletedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-delete-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
-          mapLog = _.withColumn("props",
-            when(expr("event_id % 13 = 0"),
-                 concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
-              .otherwise(col("props"))))
-        val res = EventTable.deleteWhere(spark, root,
-          expr("cast(get_json_object(cast(payload as string), '$.k') as int) % 7 = 0"))
-        require(res.deletedRows > 0, "delete fixture must remove rows")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-delete-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
+        mapLog = TailBatch.kLessEvery13th)
+      val res = EventTable.deleteWhere(spark, root,
+        expr("cast(get_json_object(cast(payload as string), '$.k') as int) % 7 = 0"))
+      require(res.deletedRows > 0, "delete fixture must remove rows")
+      root
+    }
 }
 
 /** One merge-on-read-deleted table per (JVM, sfDir): the x4 ingest shape
@@ -685,35 +672,29 @@ object DeletedTables {
   * whole point), exactly two delete files are active, and the masked-row
   * accounting is exact across the passes. */
 object MorDeletedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-mor-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
-          mapLog = _.withColumn("props",
-            when(expr("event_id % 13 = 0"),
-                 concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
-              .otherwise(col("props"))))
-        val committer = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
-        val before    = EventTable.readCommitted(spark, root).count()
-        val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
-        val r1 = EventTable.deleteWhereMor(spark, root,
-          expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
-        require(r1.deletedRows > 0, "MoR pass 1 must mask rows")
-        val r2 = EventTable.deleteWhereMor(spark, root, expr("sequence % 500 = 3"))
-        require(r2.deletedRows > 0, "MoR pass 2 must mask rows")
-        require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
-          "merge-on-read must leave every data file byte-identical")
-        require(committer.activeDeleteFiles().size == 2,
-          s"expected one delete file per pass, got ${committer.activeDeleteFiles().size}")
-        require(EventTable.readCommitted(spark, root).count() == before - r1.deletedRows - r2.deletedRows,
-          "the MoR read must mask exactly the delete files' rows")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-mor-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
+        mapLog = TailBatch.kLessEvery13th)
+      val committer = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
+      val before    = EventTable.readCommitted(spark, root).count()
+      val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
+      val r1 = EventTable.deleteWhereMor(spark, root,
+        expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
+      require(r1.deletedRows > 0, "MoR pass 1 must mask rows")
+      val r2 = EventTable.deleteWhereMor(spark, root, expr("sequence % 500 = 3"))
+      require(r2.deletedRows > 0, "MoR pass 2 must mask rows")
+      require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
+        "merge-on-read must leave every data file byte-identical")
+      require(committer.activeDeleteFiles().size == 2,
+        s"expected one delete file per pass, got ${committer.activeDeleteFiles().size}")
+      require(EventTable.readCommitted(spark, root).count() == before - r1.deletedRows - r2.deletedRows,
+        "the MoR read must mask exactly the delete files' rows")
+      root
+    }
 }
 
 /** One equality-deleted table per (JVM, sfDir): the x8 ingest shape, a
@@ -723,57 +704,70 @@ object MorDeletedTables {
   * accounting is exact. Asserts both delete KINDS are active at once and
   * no data file changed. */
 object EqDeletedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-eqdel-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
-          mapLog = _.withColumn("props",
-            when(expr("event_id % 13 = 0"),
-                 concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
-              .otherwise(col("props"))))
-        val committer = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
-        val before    = EventTable.readCommitted(spark, root).count()
-        val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
-        val r1 = EventTable.deleteWhereMor(spark, root,
-          expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
-        require(r1.deletedRows > 0, "positional pass must mask rows")
-        val keys = EventTable.readCommitted(spark, root)
-          .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
-          .select(col("partition"), col("sequence"))
-        val r2 = EventTable.deleteWhereEq(spark, root, keys)
-        require(r2.keys > 0, "equality pass must tombstone keys")
-        require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
-          "merge-on-read must leave every data file byte-identical")
-        require(committer.activeDeleteFiles().map(_.content).toSet == Set(1, 2),
-          "both delete kinds must be active at once")
-        require(EventTable.readCommitted(spark, root).count() == before - r1.deletedRows - r2.keys,
-          "the MoR read must apply both delete kinds exactly")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-eqdel-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
+        mapLog = TailBatch.kLessEvery13th)
+      val committer = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
+      val before    = EventTable.readCommitted(spark, root).count()
+      val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
+      val r1 = EventTable.deleteWhereMor(spark, root,
+        expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
+      require(r1.deletedRows > 0, "positional pass must mask rows")
+      val keys = EventTable.readCommitted(spark, root)
+        .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
+        .select(col("partition"), col("sequence"))
+      val r2 = EventTable.deleteWhereEq(spark, root, keys)
+      require(r2.keys > 0, "equality pass must tombstone keys")
+      require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
+        "merge-on-read must leave every data file byte-identical")
+      require(committer.activeDeleteFiles().map(_.content).toSet == Set(1, 2),
+        "both delete kinds must be active at once")
+      require(EventTable.readCommitted(spark, root).count() == before - r1.deletedRows - r2.keys,
+        "the MoR read must apply both delete kinds exactly")
+      root
+    }
 }
 
-/** One merged-into table per (JVM, sfDir): full fragmented ingest, then one
-  * copy-on-write mergeUpsert whose batch is derived deterministically from
-  * the committed table itself — every 11th ORIGINAL event (id recovered
-  * from the idempotency key, so retry-surviving rows resolve to the
-  * retried event) in partitions 0–3 gets payload k+100000 (matched
-  * updates); every 101st
-  * spawns a tail insert at watermark + rank with k = -id and a fresh
-  * 'm<id>' idempotency key. Both merge arms and the untouched-file
-  * invariant are enforced here so the oracle genuinely gates them. */
-/** Shared tail-batch builder for the x6/x7/v3 fixtures: the first `n`
-  * rows (by sequence) of each partition below `maxPart` spawn rows at
-  * watermark + rank, payload `{"k": kShift + original event id}` (or the
-  * constant 999999 when `kShift` is None — x6's poison, whose arithmetic
-  * never reaches an oracle), idempotency key `<prefix><evid>`. ONE
-  * definition so a fix to the tail arithmetic (e.g. the evid recovery)
-  * can never apply to one fixture and not the others. */
+/** The pieces the table fixtures below share, each defined ONCE so a fix
+  * can never apply to one fixture and not the others. [[of]] is the
+  * tail-batch builder for the x6/x7/v3 fixtures: the first `n` rows (by
+  * sequence) of each partition below `maxPart` spawn rows at watermark +
+  * rank, payload `{"k": kShift + original event id}` (or the constant
+  * 999999 when `kShift` is None — x6's poison, whose arithmetic never
+  * reaches an oracle), idempotency key `<prefix><evid>`. */
 object TailBatch {
+  /** The x4/x8/tt3/w8 ingest `mapLog`: every 13th event's payload is
+    * rewritten to `{"nk": …}` — NO `$.k` key — so a `$.k` predicate
+    * evaluates NULL on real rows and the oracle genuinely gates SQL's
+    * three-valued semantics (NULL-predicate rows must SURVIVE a delete). */
+  val kLessEvery13th: DataFrame => DataFrame = _.withColumn("props",
+    when(expr("event_id % 13 = 0"),
+         concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
+      .otherwise(col("props")))
+
+  /** One checkpointed AvailableNow run of `stream` (a graft streaming
+    * read) into `$sink/data`, under the nio checkpoint file manager; the
+    * session's own setting is restored after. A second run resumes the
+    * checkpoint at `$sink/_cp`, so only commits since the last run land. */
+  def drain(spark: SparkSession, sink: String)(stream: => DataFrame): Unit = {
+    val cfm  = "spark.sql.streaming.checkpointFileManagerClass"
+    val prev = spark.conf.getOption(cfm)
+    spark.conf.set(cfm, classOf[graft.streaming.NioCheckpointFileManager].getName)
+    try stream.writeStream.format("parquet")
+      .option("path", s"$sink/data")
+      .option("checkpointLocation", s"$sink/_cp")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    finally prev match {
+      case Some(v) => spark.conf.set(cfm, v)
+      case None    => spark.conf.unset(cfm)
+    }
+  }
+
   def of(committed: DataFrame, n: Int, maxPart: Int,
          kShift: Option[Long], prefix: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -811,41 +805,47 @@ object TailBatch {
        |FROM merged GROUP BY 1""".stripMargin
 }
 
+/** One merged-into table per (JVM, sfDir): full fragmented ingest, then one
+  * copy-on-write mergeUpsert whose batch is derived deterministically from
+  * the committed table itself — every 11th ORIGINAL event (id recovered
+  * from the idempotency key, so retry-surviving rows resolve to the
+  * retried event) in partitions 0–3 gets payload k+100000 (matched
+  * updates); every 101st
+  * spawns a tail insert at watermark + rank with k = -id and a fresh
+  * 'm<id>' idempotency key. Both merge arms and the untouched-file
+  * invariant are enforced here so the oracle genuinely gates them. */
 object MergedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        import org.apache.spark.sql.expressions.Window
-        val root = graft.core.FsUtil.tempDir("graft-merge-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16))
-        val committed = EventTable.readCommitted(spark, root)
-        val evid = expr("cast(substring(idempotency_key, 2) as bigint)")
-        val k    = expr("cast(get_json_object(cast(payload as string), '$.k') as bigint)")
-        // updates confined to partitions 0–3 so partitions 4–7's original
-        // files provably survive the merge untouched (1-in-11 density blankets
-        // every sequence bucket of a touched partition at any fragmentation)
-        val updates = committed.filter(evid % 11 === 0 && col("partition").cast("int") < 4)
-          .select(col("partition"), col("sequence"), col("timestamp_ms"),
-                  concat(lit("{\"k\": "), (k + 100000).cast("string"), lit("}")).cast("binary").as("payload"),
-                  col("idempotency_key"))
-        val wmDf = committed.groupBy("partition").agg(max("sequence").as("_wm"))
-        val inserts = committed.filter(evid % 101 === 0)
-          .join(wmDf, "partition")
-          .withColumn("_rn", row_number().over(Window.partitionBy("partition").orderBy("sequence")).cast("long"))
-          .select(col("partition"), (col("_wm") + col("_rn")).as("sequence"),
-                  (col("timestamp_ms") + 86400000L).as("timestamp_ms"),
-                  concat(lit("{\"k\": "), (-evid).cast("string"), lit("}")).cast("binary").as("payload"),
-                  concat(lit("m"), evid.cast("string")).as("idempotency_key"))
-        val res = EventTable.mergeUpsert(spark, root, updates.unionByName(inserts))
-        require(res.updatedRows > 0 && res.insertedRows > 0,
-          s"merge fixture must exercise both arms: $res")
-        require(res.untouchedFiles > 0, s"merge must leave unmatched files untouched: $res")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      import org.apache.spark.sql.expressions.Window
+      val root = tmp("graft-merge-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16))
+      val committed = EventTable.readCommitted(spark, root)
+      val evid = expr("cast(substring(idempotency_key, 2) as bigint)")
+      val k    = expr("cast(get_json_object(cast(payload as string), '$.k') as bigint)")
+      // updates confined to partitions 0–3 so partitions 4–7's original
+      // files provably survive the merge untouched (1-in-11 density blankets
+      // every sequence bucket of a touched partition at any fragmentation)
+      val updates = committed.filter(evid % 11 === 0 && col("partition").cast("int") < 4)
+        .select(col("partition"), col("sequence"), col("timestamp_ms"),
+                concat(lit("{\"k\": "), (k + 100000).cast("string"), lit("}")).cast("binary").as("payload"),
+                col("idempotency_key"))
+      val wmDf = committed.groupBy("partition").agg(max("sequence").as("_wm"))
+      val inserts = committed.filter(evid % 101 === 0)
+        .join(wmDf, "partition")
+        .withColumn("_rn", row_number().over(Window.partitionBy("partition").orderBy("sequence")).cast("long"))
+        .select(col("partition"), (col("_wm") + col("_rn")).as("sequence"),
+                (col("timestamp_ms") + 86400000L).as("timestamp_ms"),
+                concat(lit("{\"k\": "), (-evid).cast("string"), lit("}")).cast("binary").as("payload"),
+                concat(lit("m"), evid.cast("string")).as("idempotency_key"))
+      val res = EventTable.mergeUpsert(spark, root, updates.unionByName(inserts))
+      require(res.updatedRows > 0 && res.insertedRows > 0,
+        s"merge fixture must exercise both arms: $res")
+      require(res.untouchedFiles > 0, s"merge must leave unmatched files untouched: $res")
+      root
+    }
 }
 
 /** One rolled-back table per (JVM, sfDir): full ingest, then a poison
@@ -854,28 +854,25 @@ object MergedTables {
   * poison was visible before the rollback and the snapshot log grew, so
   * the oracle (plain ingest derivation) genuinely gates the undo. */
 object RolledBackTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-rollback-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val base      = committer.load().get.currentSnapshotId.get
-        val nRows     = EventTable.readCommitted(spark, root).count()
-        val junk = TailBatch.of(EventTable.readCommitted(spark, root),
-                                n = 10, maxPart = 8, kShift = None, prefix = "j")
-        EventTable.appendBatch(spark, root, junk)
-        require(EventTable.readCommitted(spark, root).count() > nRows,
-          "the poison append must be visible before the rollback")
-        committer.rollbackTo(base)
-        require(committer.load().get.currentSnapshotId.contains(base), "rollback must re-point current")
-        require(EventTable.readCommitted(spark, root).count() == nRows,
-          "the rolled-back read must no longer see the poison rows")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-rollback-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val base      = committer.load().get.currentSnapshotId.get
+      val nRows     = EventTable.readCommitted(spark, root).count()
+      val junk = TailBatch.of(EventTable.readCommitted(spark, root),
+                              n = 10, maxPart = 8, kShift = None, prefix = "j")
+      EventTable.appendBatch(spark, root, junk)
+      require(EventTable.readCommitted(spark, root).count() > nRows,
+        "the poison append must be visible before the rollback")
+      committer.rollbackTo(base)
+      require(committer.load().get.currentSnapshotId.contains(base), "rollback must re-point current")
+      require(EventTable.readCommitted(spark, root).count() == nRows,
+        "the rolled-back read must no longer see the poison rows")
+      root
+    }
 }
 
 /** One expired-history table per (JVM, sfDir): ingest (snap1), tail append
@@ -888,33 +885,30 @@ object RolledBackTables {
   * physical GC deleted nothing a retained snapshot references. x11 then
   * time-travels to snap2, which the oracle derives as evlog + tail A. */
 object ExpiredTables {
-  private val cache = scala.collection.mutable.Map.empty[String, (String, Long)]
+  private val memo = new FileMemo[(String, Long)]
 
-  def tableRootAndMid(spark: SparkSession, sfDir: String): (String, Long) = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-expire-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val snap1     = committer.load().get.currentSnapshotId.get
-        val a = TailBatch.of(EventTable.readCommitted(spark, root),
-                             n = 5, maxPart = 2, kShift = Some(777000L), prefix = "e")
-        val mid = EventTable.appendBatch(spark, root, a).snapshotId
-        val b = TailBatch.of(EventTable.readCommitted(spark, root),
-                             n = 5, maxPart = 2, kShift = Some(778000L), prefix = "f")
-        EventTable.appendBatch(spark, root, b)
-        val nAll = EventTable.readCommitted(spark, root).count()
-        val expired = committer.expireSnapshots(keepLast = 2)
-        require(expired == Seq(snap1), s"expected exactly snap1 to expire, got $expired")
-        val loud =
-          try { EventTable.readCommitted(spark, root, atSnapshot = Some(snap1)).count(); false }
-          catch { case _: IllegalArgumentException => true }
-        require(loud, "time travel to an expired snapshot must fail loud, not read empty")
-        require(EventTable.readCommitted(spark, root).count() == nAll,
-          "expiry must not change the current read")
-        (root, mid)
-      }
-    )
-  }
+  def tableRootAndMid(spark: SparkSession, sfDir: String): (String, Long) =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-expire-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val snap1     = committer.load().get.currentSnapshotId.get
+      val a = TailBatch.of(EventTable.readCommitted(spark, root),
+                           n = 5, maxPart = 2, kShift = Some(777000L), prefix = "e")
+      val mid = EventTable.appendBatch(spark, root, a).snapshotId
+      val b = TailBatch.of(EventTable.readCommitted(spark, root),
+                           n = 5, maxPart = 2, kShift = Some(778000L), prefix = "f")
+      EventTable.appendBatch(spark, root, b)
+      val nAll = EventTable.readCommitted(spark, root).count()
+      val expired = committer.expireSnapshots(keepLast = 2)
+      require(expired == Seq(snap1), s"expected exactly snap1 to expire, got $expired")
+      val loud =
+        try { EventTable.readCommitted(spark, root, atSnapshot = Some(snap1)).count(); false }
+        catch { case _: IllegalArgumentException => true }
+      require(loud, "time travel to an expired snapshot must fail loud, not read empty")
+      require(EventTable.readCommitted(spark, root).count() == nAll,
+        "expiry must not change the current read")
+      (root, mid)
+    }
 }
 
 /** One spec-evolved table per (JVM, sfDir): ingest under spec-0 (identity
@@ -927,36 +921,33 @@ object ExpiredTables {
   * files carry path-derived event_date identity bounds (single-date
   * files). x12 then hash-gates a manifest-pruned mixed-spec read. */
 object SpecEvolvedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-spec-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val oldFiles  = committer.activeDataFiles().map(_.filePath).toSet
-        require(committer.evolvePartitionSpec(graft.iceberg.PartitionSpec.dateFields),
-          "the evolution must commit a new default spec")
-        val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                 n = 5, maxPart = 2, kShift = Some(999000L), prefix = "s")
-        EventTable.appendBatch(spark, root, batch)
-        val newFiles = committer.activeDataFiles().map(_.filePath).toSet -- oldFiles
-        require(newFiles.nonEmpty && newFiles.forall(_.contains("/event_date=")),
-          s"post-evolution files must carry event_date dirs: $newFiles")
-        require(oldFiles.forall(p => !p.contains("/event_date=")),
-          "pre-evolution files must keep their spec-0 layout")
-        require(committer.currentManifests().map(_.partitionSpecId).toSet == Set(0, 1),
-          "both specs must be live in the manifest list")
-        // evolved files are single-date with path-derived identity bounds
-        val dated = committer.activeDataFiles().filter(f => newFiles(f.filePath))
-        require(dated.forall(f =>
-          f.lowerInt(FieldIds.EventDate).isDefined &&
-            f.lowerInt(FieldIds.EventDate) == f.upperInt(FieldIds.EventDate)),
-          "evolved files must carry single-date identity bounds for pruning")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-spec-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val oldFiles  = committer.activeDataFiles().map(_.filePath).toSet
+      require(committer.evolvePartitionSpec(graft.iceberg.PartitionSpec.dateFields),
+        "the evolution must commit a new default spec")
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(999000L), prefix = "s")
+      EventTable.appendBatch(spark, root, batch)
+      val newFiles = committer.activeDataFiles().map(_.filePath).toSet -- oldFiles
+      require(newFiles.nonEmpty && newFiles.forall(_.contains("/event_date=")),
+        s"post-evolution files must carry event_date dirs: $newFiles")
+      require(oldFiles.forall(p => !p.contains("/event_date=")),
+        "pre-evolution files must keep their spec-0 layout")
+      require(committer.currentManifests().map(_.partitionSpecId).toSet == Set(0, 1),
+        "both specs must be live in the manifest list")
+      // evolved files are single-date with path-derived identity bounds
+      val dated = committer.activeDataFiles().filter(f => newFiles(f.filePath))
+      require(dated.forall(f =>
+        f.lowerInt(FieldIds.EventDate).isDefined &&
+          f.lowerInt(FieldIds.EventDate) == f.upperInt(FieldIds.EventDate)),
+        "evolved files must carry single-date identity bounds for pruning")
+      root
+    }
 }
 
 /** One changefeed fixture per (JVM, sfDir): the x8 ingest shape (every
@@ -969,41 +960,35 @@ object SpecEvolvedTables {
   * passes' masked totals) so the oracle's rollup genuinely gates the
   * reconstruction, not just the fixture arithmetic. */
 object ChangefeedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, (String, Long)]
+  private val memo = new FileMemo[(String, Long)]
 
-  def rootAndBase(spark: SparkSession, sfDir: String): (String, Long) = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-feed-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
-          mapLog = _.withColumn("props",
-            when(expr("event_id % 13 = 0"),
-                 concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
-              .otherwise(col("props"))))
-        val base = committer.load().get.currentSnapshotId.get
-        val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                 n = 5, maxPart = 2, kShift = Some(444000L), prefix = "c")
-        EventTable.appendBatch(spark, root, batch)
-        val r1 = EventTable.deleteWhereMor(spark, root,
-          expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
-        require(r1.deletedRows > 0, "positional pass must mask rows")
-        val keys = EventTable.readCommitted(spark, root)
-          .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
-          .select(col("partition"), col("sequence"))
-        val r2 = EventTable.deleteWhereEq(spark, root, keys)
-        require(r2.keys > 0, "equality pass must tombstone keys")
-        val head = committer.load().get.currentSnapshotId.get
-        val feed = EventTable.changesBetween(spark, root, base, head)
-          .groupBy("_change_type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(feed.getOrElse("insert", 0L) == 10L,
-          s"feed must reconstruct exactly the 10 appended rows: $feed")
-        require(feed.getOrElse("delete", 0L) == r1.deletedRows + r2.keys,
-          s"feed must reconstruct both delete passes exactly: $feed vs ${r1.deletedRows} + ${r2.keys}")
-        (root, base)
-      }
-    )
-  }
+  def rootAndBase(spark: SparkSession, sfDir: String): (String, Long) =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-feed-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
+        mapLog = TailBatch.kLessEvery13th)
+      val base = committer.load().get.currentSnapshotId.get
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(444000L), prefix = "c")
+      EventTable.appendBatch(spark, root, batch)
+      val r1 = EventTable.deleteWhereMor(spark, root,
+        expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
+      require(r1.deletedRows > 0, "positional pass must mask rows")
+      val keys = EventTable.readCommitted(spark, root)
+        .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
+        .select(col("partition"), col("sequence"))
+      val r2 = EventTable.deleteWhereEq(spark, root, keys)
+      require(r2.keys > 0, "equality pass must tombstone keys")
+      val head = committer.load().get.currentSnapshotId.get
+      val feed = EventTable.changesBetween(spark, root, base, head)
+        .groupBy("_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      require(feed.getOrElse("insert", 0L) == 10L,
+        s"feed must reconstruct exactly the 10 appended rows: $feed")
+      require(feed.getOrElse("delete", 0L) == r1.deletedRows + r2.keys,
+        s"feed must reconstruct both delete passes exactly: $feed vs ${r1.deletedRows} + ${r2.keys}")
+      (root, base)
+    }
 }
 
 /** One manifest-rewritten table per (JVM, sfDir): ingest (snap1), tail
@@ -1016,40 +1001,37 @@ object ChangefeedTables {
   * input), a pre-rewrite snapshot still time-travels, and an incremental
   * append scan may cross the rewrite. */
 object RewrittenTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-rewrite-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val snap1     = committer.load().get.currentSnapshotId.get
-        val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                 n = 5, maxPart = 2, kShift = Some(888000L), prefix = "g")
-        EventTable.appendBatch(spark, root, batch)
-        val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
-        val seqsBefore  = committer.activeFilesWithSeq(0).map { case (f, sq) => f.filePath -> sq }.toMap
-        val totalsBefore = committer.load().get.currentSnapshot.get.summary
-          .view.filterKeys(Set("total-records", "total-data-files")).toMap
-        require(committer.currentManifests().size == 2, "fixture expects two pre-rewrite manifests")
-        val res = committer.rewriteManifests()
-        require(res.isDefined, "the two-manifest list must coalesce")
-        require(committer.currentManifests().size == 1, "rewrite must produce ONE data manifest")
-        require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
-          "a manifest rewrite must not change file identity")
-        require(committer.activeFilesWithSeq(0).map { case (f, sq) => f.filePath -> sq }.toMap == seqsBefore,
-          "per-file data sequence numbers must survive the coalesce")
-        val totalsAfter = committer.load().get.currentSnapshot.get.summary
-          .view.filterKeys(Set("total-records", "total-data-files")).toMap
-        require(totalsAfter == totalsBefore, s"totals drifted: $totalsBefore -> $totalsAfter")
-        require(committer.activeDataFilesAt(snap1).nonEmpty,
-          "pre-rewrite snapshots must still time-travel")
-        require(committer.appendsSince(snap1).nonEmpty,
-          "an incremental append scan must cross a manifest rewrite")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-rewrite-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val snap1     = committer.load().get.currentSnapshotId.get
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(888000L), prefix = "g")
+      EventTable.appendBatch(spark, root, batch)
+      val filesBefore = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
+      val seqsBefore  = committer.activeFilesWithSeq(0).map { case (f, sq) => f.filePath -> sq }.toMap
+      val totalsBefore = committer.load().get.currentSnapshot.get.summary
+        .view.filterKeys(Set("total-records", "total-data-files")).toMap
+      require(committer.currentManifests().size == 2, "fixture expects two pre-rewrite manifests")
+      val res = committer.rewriteManifests()
+      require(res.isDefined, "the two-manifest list must coalesce")
+      require(committer.currentManifests().size == 1, "rewrite must produce ONE data manifest")
+      require(committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet == filesBefore,
+        "a manifest rewrite must not change file identity")
+      require(committer.activeFilesWithSeq(0).map { case (f, sq) => f.filePath -> sq }.toMap == seqsBefore,
+        "per-file data sequence numbers must survive the coalesce")
+      val totalsAfter = committer.load().get.currentSnapshot.get.summary
+        .view.filterKeys(Set("total-records", "total-data-files")).toMap
+      require(totalsAfter == totalsBefore, s"totals drifted: $totalsBefore -> $totalsAfter")
+      require(committer.activeDataFilesAt(snap1).nonEmpty,
+        "pre-rewrite snapshots must still time-travel")
+      require(committer.appendsSince(snap1).nonEmpty,
+        "an incremental append scan must cross a manifest rewrite")
+      root
+    }
 }
 
 /** One TAGGED table per (JVM, sfDir): ingest (base), `createTag("pre-tail",
@@ -1064,41 +1046,38 @@ object RewrittenTables {
   * to the wrong snapshot (or a tagged state damaged by the expiry's
   * physical GC) breaks the hash. */
 object TaggedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-tagged-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val base      = committer.load().get.currentSnapshotId.get
-        committer.createTag("pre-tail", base)
-        val b1 = TailBatch.of(EventTable.readCommitted(spark, root),
-                              n = 5, maxPart = 2, kShift = Some(666000L), prefix = "t1")
-        EventTable.appendBatch(spark, root, b1)
-        val mid = committer.load().get.currentSnapshotId.get
-        val b2 = TailBatch.of(EventTable.readCommitted(spark, root),
-                              n = 5, maxPart = 2, kShift = Some(667000L), prefix = "t2")
-        EventTable.appendBatch(spark, root, b2)
-        val meta = committer.load().get
-        require(meta.refs.get("pre-tail").exists(r => r.snapshotId == base && r.refType == "tag"),
-          s"the user tag must ride the refs map: ${meta.refs}")
-        require(meta.refs.get("main").exists(_.snapshotId == meta.currentSnapshotId.get),
-          "derived main must keep tracking the head")
-        require(committer.resolveVersionOf(meta, "main") == meta.currentSnapshotId.get)
-        require(scala.util.Try(committer.createTag("main", base)).isFailure,
-          "derived names must refuse")
-        require(scala.util.Try(committer.createTag("pre-tail", mid)).isFailure,
-          "duplicate names must refuse")
-        // expire: the untagged middle snapshot goes; the tagged base stays
-        val expired = committer.expireSnapshots(keepLast = 1)
-        require(expired == Seq(mid), s"only the untagged middle snapshot may expire: $expired")
-        require(committer.activeDataFilesAt(base).nonEmpty,
-          "the tagged snapshot must survive expiry and still time-travel")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-tagged-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val base      = committer.load().get.currentSnapshotId.get
+      committer.createTag("pre-tail", base)
+      val b1 = TailBatch.of(EventTable.readCommitted(spark, root),
+                            n = 5, maxPart = 2, kShift = Some(666000L), prefix = "t1")
+      EventTable.appendBatch(spark, root, b1)
+      val mid = committer.load().get.currentSnapshotId.get
+      val b2 = TailBatch.of(EventTable.readCommitted(spark, root),
+                            n = 5, maxPart = 2, kShift = Some(667000L), prefix = "t2")
+      EventTable.appendBatch(spark, root, b2)
+      val meta = committer.load().get
+      require(meta.refs.get("pre-tail").exists(r => r.snapshotId == base && r.refType == "tag"),
+        s"the user tag must ride the refs map: ${meta.refs}")
+      require(meta.refs.get("main").exists(_.snapshotId == meta.currentSnapshotId.get),
+        "derived main must keep tracking the head")
+      require(committer.resolveVersionOf(meta, "main") == meta.currentSnapshotId.get)
+      require(scala.util.Try(committer.createTag("main", base)).isFailure,
+        "derived names must refuse")
+      require(scala.util.Try(committer.createTag("pre-tail", mid)).isFailure,
+        "duplicate names must refuse")
+      // expire: the untagged middle snapshot goes; the tagged base stays
+      val expired = committer.expireSnapshots(keepLast = 1)
+      require(expired == Seq(mid), s"only the untagged middle snapshot may expire: $expired")
+      require(committer.activeDataFilesAt(base).nonEmpty,
+        "the tagged snapshot must survive expiry and still time-travel")
+      root
+    }
 }
 
 /** One TAILED table per (JVM, sfDir): ingest, then the committed table is
@@ -1113,54 +1092,34 @@ object TaggedTables {
   * compaction's data-preserving replaces), so v3's oracle row also gates
   * tail survival across the maintenance clock. */
 object TailedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def sinkDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        import org.apache.spark.sql.expressions.Window
-        val root = graft.core.FsUtil.tempDir("graft-tail-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val sink = graft.core.FsUtil.tempDir("graft-tailsink-")
-        val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
-        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-          classOf[graft.streaming.NioCheckpointFileManager].getName)
-        try {
-          def run(): Unit = {
-            val q = spark.readStream.format("graft").load(root)
-              .writeStream.format("parquet")
-              .option("path", s"$sink/data")
-              .option("checkpointLocation", s"$sink/_cp")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-          run()
-          val n1 = spark.read.parquet(s"$sink/data").count()
-          val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                   n = 5, maxPart = 2, kShift = Some(555000L), prefix = "v")
-          EventTable.appendBatch(spark, root, batch)
-          run()
-          val n2 = spark.read.parquet(s"$sink/data").count()
-          require(n2 == n1 + 10,
-            s"the resumed tail must read exactly the appended rows: $n1 -> $n2")
-          // run 3, AFTER a full vacuum: the compaction's data-preserving
-          // replaces (every merged file already consumed) must be crossed
-          // emitting NOTHING — v3's oracle row now also gates tail
-          // survival across the maintenance clock
-          val vr = Maintenance.vacuum(spark, root, keepSnapshots = 64)
-          require(vr.compactions > 0, "the vacuum must compact (replace commits in range)")
-          run()
-          val n3 = spark.read.parquet(s"$sink/data").count()
-          require(n3 == n2, s"a checkpointed tail must cross a vacuum emitting nothing: $n2 -> $n3")
-          s"$sink/data"
-        } finally prevCfm match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", v)
-          case None    => spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
-        }
-      }
-    )
-  }
+  def sinkDir(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-tail-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val sink = tmp("graft-tailsink-")
+      def run(): Unit = TailBatch.drain(spark, sink)(spark.readStream.format("graft").load(root))
+      run()
+      val n1 = spark.read.parquet(s"$sink/data").count()
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(555000L), prefix = "v")
+      EventTable.appendBatch(spark, root, batch)
+      run()
+      val n2 = spark.read.parquet(s"$sink/data").count()
+      require(n2 == n1 + 10,
+        s"the resumed tail must read exactly the appended rows: $n1 -> $n2")
+      // run 3, AFTER a full vacuum: the compaction's data-preserving
+      // replaces (every merged file already consumed) must be crossed
+      // emitting NOTHING — v3's oracle row now also gates tail
+      // survival across the maintenance clock
+      val vr = Maintenance.vacuum(spark, root, keepSnapshots = 64)
+      require(vr.compactions > 0, "the vacuum must compact (replace commits in range)")
+      run()
+      val n3 = spark.read.parquet(s"$sink/data").count()
+      require(n3 == n2, s"a checkpointed tail must cross a vacuum emitting nothing: $n2 -> $n3")
+      s"$sink/data"
+    }
 }
 
 /** One STREAMED-changefeed sink per (JVM, sfDir): the ChangefeedTables
@@ -1183,79 +1142,55 @@ object TailedTables {
   * The accumulated sink is then hash-gated against the SAME oracle as the
   * batch feed (tt3) — streamed and batch reconstruction must agree. */
 object StreamedChangefeedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def sinkDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-w8-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
-          mapLog = _.withColumn("props",
-            when(expr("event_id % 13 = 0"),
-                 concat(lit("{\"nk\": "), expr("get_json_object(props, '$.k')"), lit("}")))
-              .otherwise(col("props"))))
-        val base = committer.load().get.currentSnapshotId.get
-        val sink = graft.core.FsUtil.tempDir("graft-w8sink-")
-        val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
-        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-          classOf[graft.streaming.NioCheckpointFileManager].getName)
-        try {
-          def run(): Unit = {
-            val q = spark.readStream.format("graft")
-              .option("changefeed", "true")
-              .option("fromSnapshot", base.toString)
-              .load(root)
-              .writeStream.format("parquet")
-              .option("path", s"$sink/data")
-              .option("checkpointLocation", s"$sink/_cp")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-          val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                   n = 5, maxPart = 2, kShift = Some(444000L), prefix = "c")
-          EventTable.appendBatch(spark, root, batch)
-          val r1 = EventTable.deleteWhereMor(spark, root,
-            expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
-          require(r1.deletedRows > 0, "positional pass must mask rows")
-          run()
-          val after1 = spark.read.parquet(s"$sink/data")
-          val n1     = after1.count()
-          require(after1.filter(col("_change_type") === "insert").count() == 10L,
-            "run 1 must reconstruct exactly the 10 appended rows as inserts")
-          require(after1.filter(col("_change_type") === "delete").count() == r1.deletedRows,
-            "run 1 must reconstruct exactly the positional pass's deletes")
-          val keys = EventTable.readCommitted(spark, root)
-            .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
-            .select(col("partition"), col("sequence"))
-          val r2 = EventTable.deleteWhereEq(spark, root, keys)
-          require(r2.keys > 0, "equality pass must tombstone keys")
-          run()
-          val n2 = spark.read.parquet(s"$sink/data").count()
-          require(n2 == n1 + r2.keys,
-            s"the resumed feed must emit exactly the equality pass's deletes: $n1 -> $n2 (+${r2.keys})")
-          // run 3, AFTER a full vacuum (compaction folding both delete
-          // passes + manifest rewrite + expire): the data-preserving
-          // replaces must be crossed emitting NOTHING — the oracle row
-          // that gates this sink now also gates consumer survival across
-          // the maintenance clock. Retention stays wide so the
-          // checkpointed range never crosses expired history.
-          val vr = Maintenance.vacuum(spark, root,
-            Compaction.Config(deleteRatioTrigger = 0.01, maxFilesPerRun = 10000),
-            keepSnapshots = 64)
-          require(vr.compactions > 0, "the vacuum must fold (replace commits in range)")
-          run()
-          val n3 = spark.read.parquet(s"$sink/data").count()
-          require(n3 == n2,
-            s"a checkpointed feed must cross a vacuum emitting nothing: $n2 -> $n3")
-          s"$sink/data"
-        } finally prevCfm match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", v)
-          case None    => spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
-        }
-      }
-    )
-  }
+  def sinkDir(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-w8-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(16),
+        mapLog = TailBatch.kLessEvery13th)
+      val base = committer.load().get.currentSnapshotId.get
+      val sink = tmp("graft-w8sink-")
+      def run(): Unit = TailBatch.drain(spark, sink)(spark.readStream.format("graft")
+        .option("changefeed", "true").option("fromSnapshot", base.toString).load(root))
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(444000L), prefix = "c")
+      EventTable.appendBatch(spark, root, batch)
+      val r1 = EventTable.deleteWhereMor(spark, root,
+        expr("cast(get_json_object(cast(payload as string), '$.k') as bigint) % 9 = 0"))
+      require(r1.deletedRows > 0, "positional pass must mask rows")
+      run()
+      val after1 = spark.read.parquet(s"$sink/data")
+      val n1     = after1.count()
+      require(after1.filter(col("_change_type") === "insert").count() == 10L,
+        "run 1 must reconstruct exactly the 10 appended rows as inserts")
+      require(after1.filter(col("_change_type") === "delete").count() == r1.deletedRows,
+        "run 1 must reconstruct exactly the positional pass's deletes")
+      val keys = EventTable.readCommitted(spark, root)
+        .filter(expr("cast(substring(idempotency_key, 2) as bigint) % 17 = 0"))
+        .select(col("partition"), col("sequence"))
+      val r2 = EventTable.deleteWhereEq(spark, root, keys)
+      require(r2.keys > 0, "equality pass must tombstone keys")
+      run()
+      val n2 = spark.read.parquet(s"$sink/data").count()
+      require(n2 == n1 + r2.keys,
+        s"the resumed feed must emit exactly the equality pass's deletes: $n1 -> $n2 (+${r2.keys})")
+      // run 3, AFTER a full vacuum (compaction folding both delete
+      // passes + manifest rewrite + expire): the data-preserving
+      // replaces must be crossed emitting NOTHING — the oracle row
+      // that gates this sink now also gates consumer survival across
+      // the maintenance clock. Retention stays wide so the
+      // checkpointed range never crosses expired history.
+      val vr = Maintenance.vacuum(spark, root,
+        Compaction.Config(deleteRatioTrigger = 0.01, maxFilesPerRun = 10000),
+        keepSnapshots = 64)
+      require(vr.compactions > 0, "the vacuum must fold (replace commits in range)")
+      run()
+      val n3 = spark.read.parquet(s"$sink/data").count()
+      require(n3 == n2,
+        s"a checkpointed feed must cross a vacuum emitting nothing: $n2 -> $n3")
+      s"$sink/data"
+    }
 }
 
 /** One write-audit-publish table per (JVM, sfDir): full ingest, then a
@@ -1264,41 +1199,41 @@ object StreamedChangefeedTables {
   * Both the invisibility window and the post-publish visibility are
   * asserted here so the oracle genuinely gates the pointer mechanics. */
 object StagedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root      = graft.core.FsUtil.tempDir("graft-wap-")
-        val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
-        val nRows     = EventTable.readCommitted(spark, root).count()
-        val batch = TailBatch.of(EventTable.readCommitted(spark, root),
-                                 n = 5, maxPart = 2, kShift = Some(1000000L), prefix = "w")
-        val staged = EventTable.appendBatch(spark, root, batch, staged = true)
-        require(EventTable.readCommitted(spark, root).count() == nRows,
-          "a staged snapshot must be invisible to readers until publish")
-        require(committer.activeDataFilesAt(staged.snapshotId).nonEmpty,
-          "the staged snapshot must be fully formed for the audit read")
-        committer.publish(staged.snapshotId)
-        require(EventTable.readCommitted(spark, root).count() == nRows + 10,
-          "publish must fast-forward readers onto the staged rows")
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root      = tmp("graft-wap-")
+      val committer = EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
+      val nRows     = EventTable.readCommitted(spark, root).count()
+      val batch = TailBatch.of(EventTable.readCommitted(spark, root),
+                               n = 5, maxPart = 2, kShift = Some(1000000L), prefix = "w")
+      val staged = EventTable.appendBatch(spark, root, batch, staged = true)
+      require(EventTable.readCommitted(spark, root).count() == nRows,
+        "a staged snapshot must be invisible to readers until publish")
+      require(committer.activeDataFilesAt(staged.snapshotId).nonEmpty,
+        "the staged snapshot must be fully formed for the audit read")
+      committer.publish(staged.snapshotId)
+      require(EventTable.readCommitted(spark, root).count() == nRows + 10,
+        "publish must fast-forward readers onto the staged rows")
+      root
+    }
 }
 
+/** Fragmented-then-compacted table per (JVM, sfDir) for compaction queries.
+  * Ingests into ~32 deliberately small files (≥3 per partition dir at every
+  * sf), then compacts with the REFERENCE defaults (<64 MB candidates,
+  * ≥3 files/group, ≤10 files/run, the reference's `src/storage/compaction.rs:25-34`)
+  * repeatedly — each run is one replace-snapshot, like repeated POSTs to the
+  * reference's compact endpoint. */
 object CompactedTables {
-  private val cache = scala.collection.mutable.Map.empty[String, String]
+  private val memo = new FileMemo[String]
 
-  def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(
-      sfDir, {
-        val root = graft.core.FsUtil.tempDir("graft-compact-")
-        EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(32))
-        while (Compaction.compact(spark, root).isDefined) ()
-        root
-      }
-    )
-  }
+  def tableRoot(spark: SparkSession, sfDir: String): String =
+    memo.getOrElseUpdate(sfDir) { tmp =>
+      val root = tmp("graft-compact-")
+      EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(32))
+      while (Compaction.compact(spark, root).isDefined) ()
+      root
+    }
 }

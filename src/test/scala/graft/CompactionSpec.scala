@@ -49,7 +49,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("C2+C3: compaction merges fragments and preserves every row") {
-    val root = Files.createTempDirectory("graft-compact-spec-").toString
+    val root = TestSpark.tempDir("graft-compact-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val committer   = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val filesBefore = committer.activeDataFiles().size
@@ -66,7 +66,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("copy-on-write delete rewrites only files with matches; rows and files reconcile") {
-    val root = Files.createTempDirectory("graft-delete-spec-").toString
+    val root = TestSpark.tempDir("graft-delete-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     val committer = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val before    = committer.activeDataFiles().map(_.filePath).toSet
@@ -95,7 +95,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("MoR deletes, the changefeed, and folding all work on a spec-evolved mixed-layout table") {
-    val root = Files.createTempDirectory("graft-specmor-").toString
+    val root = TestSpark.tempDir("graft-specmor-").toString
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8))
     assert(c.evolvePartitionSpec(graft.iceberg.PartitionSpec.dateFields))
     val batch = graft.table.TailBatch.of(EventTable.readCommitted(spark, root),
@@ -129,7 +129,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("vacuum restores every bounded-metadata invariant in one call") {
-    val root = Files.createTempDirectory("graft-vacuum-").toString
+    val root = TestSpark.tempDir("graft-vacuum-").toString
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     // grow history: a tail append, two MoR delete passes
     val batch = graft.table.TailBatch.of(EventTable.readCommitted(spark, root),
@@ -161,7 +161,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("changefeed refuses rewrites in range and expired endpoints") {
-    val root = Files.createTempDirectory("graft-feed-spec-").toString
+    val root = TestSpark.tempDir("graft-feed-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val committer = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val base = committer.load().get.currentSnapshotId.get
@@ -197,7 +197,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("a user tag keeps its snapshot readable across compaction's eager delete") {
-    val root = Files.createTempDirectory("graft-tagcomp-").toString
+    val root = TestSpark.tempDir("graft-tagcomp-").toString
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8))
     val base     = c.load().get.currentSnapshotId.get
     val baseRows = EventTable.readCommitted(spark, root).count()
@@ -220,7 +220,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("delete-ratio trigger selects a delete-heavy file the size rules never would") {
-    val root = Files.createTempDirectory("graft-ratio-spec-").toString
+    val root = TestSpark.tempDir("graft-ratio-spec-").toString
     // NO fragmentation: one file per partition dir — below minFilesPerGroup,
     // so the size-based rules can never pick anything
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root)
@@ -251,7 +251,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("merge-on-read delete masks rows without rewriting files; compaction folds the delete files in") {
-    val root = Files.createTempDirectory("graft-mor-spec-").toString
+    val root = TestSpark.tempDir("graft-mor-spec-").toString
     // 32 fragments → every partition dir qualifies as a compaction group
     // (≥3 files), so the fold loop can eventually cover every live
     // reference of the partition-spanning delete file
@@ -298,7 +298,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("equality delete tombstones by key without scanning; compaction folds by sequence-number scope") {
     import org.apache.spark.sql.functions.lit
-    val root = Files.createTempDirectory("graft-eqdel-spec-").toString
+    val root = TestSpark.tempDir("graft-eqdel-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val committer  = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val before     = committer.activeDataFiles().map(f => f.filePath -> f.fileSizeInBytes).toSet
@@ -337,7 +337,7 @@ class CompactionSpec extends AnyFunSuite {
   test("copy-on-write merge updates matched payloads, appends inserts, leaves unmatched files alone") {
     import org.apache.spark.sql.functions.expr
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-merge-spec-").toString
+    val root = TestSpark.tempDir("graft-merge-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     val committer  = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val before     = committer.activeDataFiles().map(_.filePath).toSet
@@ -406,7 +406,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("compaction of a schema-EVOLVED table keeps the added column (projected rewrite)") {
-    val root = Files.createTempDirectory("graft-compact-evo-").toString
+    val root = TestSpark.tempDir("graft-compact-evo-").toString
     val log  = graft.core.EventLog.log(spark, "/root/testdata/sf0.001")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val half = log.agg(org.apache.spark.sql.functions.max("event_id")).head().getLong(0) / 2
@@ -435,7 +435,7 @@ class CompactionSpec extends AnyFunSuite {
     // The empty branch once derived nullability from metadata required
     // flags while the non-empty branch hardcoded nullable=true — the
     // same table must present one schema regardless of row count.
-    val root = Files.createTempDirectory("graft-proj-schema-").toString
+    val root = TestSpark.tempDir("graft-proj-schema-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root)
     val nonEmpty = EventTable.readCommittedProjected(spark, root).schema
     val empty    = EventTable.readCommittedProjected(spark, root, Seq.empty).schema
@@ -443,7 +443,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("C3 rollback: a concurrent commit aborts compaction and removes rewrites") {
-    val root = Files.createTempDirectory("graft-compact-conflict-").toString
+    val root = TestSpark.tempDir("graft-compact-conflict-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val committer  = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val rowsBefore = EventTable.readCommitted(spark, root).count()
@@ -471,7 +471,7 @@ class CompactionSpec extends AnyFunSuite {
     // trigger the orphan rollback — at that point the rewritten files are
     // data files of a COMMITTED snapshot and deleting them corrupts the
     // table. The exception still propagates.
-    val root = Files.createTempDirectory("graft-compact-postfail-").toString
+    val root = TestSpark.tempDir("graft-compact-postfail-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val committer  = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val rowsBefore = EventTable.readCommitted(spark, root).count()
@@ -495,7 +495,7 @@ class CompactionSpec extends AnyFunSuite {
     // rollback discipline applied to the delete path. The engine has no
     // beforeCommit hook here, so race the CAS directly: derive the base,
     // land a foreign commit, then commitDeletes against the stale base.
-    val root = Files.createTempDirectory("graft-mor-cas-").toString
+    val root = TestSpark.tempDir("graft-mor-cas-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     val committer = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
     val staleBase = committer.load().get.currentSnapshotId.get
@@ -518,7 +518,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("C4: an extracted-schema table compacts and keeps its typed columns") {
-    val root = Files.createTempDirectory("graft-compact-extracted-").toString
+    val root = TestSpark.tempDir("graft-compact-extracted-").toString
     val cfg  = graft.extract.ExtractQueries.config
     EventTable.ingestAndCommitExtracted(spark, "/root/testdata/sf0.001", root, cfg, fragmentInto = Some(32))
     val sumBefore = EventTable.readCommitted(spark, root).agg(org.apache.spark.sql.functions.sum("k")).head().getLong(0)
@@ -536,7 +536,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("DELETE keeps rows whose predicate evaluates NULL (SQL three-valued semantics)") {
     import org.apache.spark.sql.functions.{concat, expr, get_json_object, lit, when}
-    val root = Files.createTempDirectory("graft-delete-null-").toString
+    val root = TestSpark.tempDir("graft-delete-null-").toString
     // every 13th event's payload loses its `$.k` key → predicate is NULL there
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8),
       mapLog = _.withColumn("props",
@@ -558,7 +558,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("DELETE with a predicate over a schema-EVOLVED column resolves for pre-evolution files") {
-    val root = Files.createTempDirectory("graft-delete-evo-").toString
+    val root = TestSpark.tempDir("graft-delete-evo-").toString
     val log  = graft.core.EventLog.log(spark, "/root/testdata/sf0.001")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val half = log.agg(org.apache.spark.sql.functions.max("event_id")).head().getLong(0) / 2
@@ -587,7 +587,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("DELETE still rewrites when the table root contains URI-hostile characters") {
-    val root = Files.createTempDirectory("graft delete spec ").toString // space in path
+    val root = TestSpark.tempDir("graft delete spec ").toString // space in path
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8))
     val rowsBefore = EventTable.readCommitted(spark, root).count()
     val res = EventTable.deleteWhere(spark, root, col("partition") === 3)
@@ -597,8 +597,8 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("fragmented and compacted tables agree with the directly ingested table") {
-    val rootA = Files.createTempDirectory("graft-compare-a-").toString
-    val rootB = Files.createTempDirectory("graft-compare-b-").toString
+    val rootA = TestSpark.tempDir("graft-compare-a-").toString
+    val rootB = TestSpark.tempDir("graft-compare-b-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", rootA)
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", rootB, fragmentInto = Some(32))
     while (Compaction.compact(spark, rootB).isDefined) ()

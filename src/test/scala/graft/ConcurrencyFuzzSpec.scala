@@ -35,7 +35,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite {
   }
 
   test("L3: concurrent HTTP writes through the gateway stay consistent") {
-    val gw   = new graft.serve.GatewayServer(spark, java.nio.file.Files.createTempDirectory("graft-conc-").toString)
+    val gw   = new graft.serve.GatewayServer(spark, TestSpark.tempDir("graft-conc-").toString)
     val port = gw.start()
     val pool = Executors.newFixedThreadPool(8)
     try {
@@ -64,7 +64,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite {
   }
 
   test("L3: concurrent flush and compact on one table never lose or duplicate rows") {
-    val dir  = java.nio.file.Files.createTempDirectory("graft-fc-race-").toString
+    val dir  = TestSpark.tempDir("graft-fc-race-").toString
     val gw   = new graft.serve.GatewayServer(spark, dir)
     val port = gw.start()
     val http = HttpClient.newHttpClient()
@@ -108,7 +108,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite {
 
   test("L3/L6: racing committers + torn-file chaos — every reported commit survives, versions stay parseable") {
     import graft.iceberg._
-    val root  = java.nio.file.Files.createTempDirectory("graft-cas-fuzz-").toString
+    val root  = TestSpark.tempDir("graft-cas-fuzz-").toString
     val local = new LocalTableIO(root)
     def df(path: String, records: Long): DataFile =
       DataFile(0, path, "PARQUET", records, records * 100,

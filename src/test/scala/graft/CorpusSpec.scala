@@ -189,7 +189,7 @@ class CorpusSpec extends AnyFunSuite {
            s"s${id % 2}")
         } else (id, ws.mkString(" "), s"s${id % 2}")
       }
-      val d = java.nio.file.Files.createTempDirectory(s"graft-d17-fuzz$trial-").toString
+      val d = TestSpark.tempDir(s"graft-d17-fuzz$trial-").toString
       corpus.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -296,7 +296,7 @@ class CorpusSpec extends AnyFunSuite {
           .map(_ => Seq.fill(1 + rnd.nextInt(4))(syllables(rnd.nextInt(syllables.size))).mkString)
           .mkString(" ")
       }
-      val d = java.nio.file.Files.createTempDirectory(s"graft-t19-fuzz$trial-").toString
+      val d = TestSpark.tempDir(s"graft-t19-fuzz$trial-").toString
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -341,7 +341,7 @@ class CorpusSpec extends AnyFunSuite {
     // serial twin must agree on the BYTE ordering.
     import spark.implicits._
     val texts = Seq("aﬀ a𝕒")
-    val d = java.nio.file.Files.createTempDirectory("graft-t19-astral-").toString
+    val d = TestSpark.tempDir("graft-t19-astral-").toString
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -359,7 +359,7 @@ class CorpusSpec extends AnyFunSuite {
     // round 1, round 2's top pair must be (ma, ma) — only possible if
     // BOTH adjacent (m, a) occurrences merged in every word.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-t19-runs-").toString
+    val d = TestSpark.tempDir("graft-t19-runs-").toString
     Seq((0L, "mama mama mamama", "en", "s0", 16L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -417,7 +417,7 @@ class CorpusSpec extends AnyFunSuite {
     // verdict. Re-split the corpus into a different file count, run in a
     // fresh session with a prime shuffle width, compare full row sets.
     val src = spark.read.parquet(s"$dir/documents.parquet")
-    val alt = java.nio.file.Files.createTempDirectory("graft-resplit-").toString
+    val alt = TestSpark.tempDir("graft-resplit-").toString
     src.repartition(7).write.parquet(s"$alt/documents.parquet")
     // embeddings re-split too: e1's fixed-point centroid sums are the
     // order-independence claim under test
@@ -682,7 +682,7 @@ class CorpusSpec extends AnyFunSuite {
         }
         (id, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "), s"s${id % 2}")
       }
-      val d = java.nio.file.Files.createTempDirectory(s"graft-t7-fuzz$trial-").toString
+      val d = TestSpark.tempDir(s"graft-t7-fuzz$trial-").toString
       corpus.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -831,7 +831,7 @@ class CorpusSpec extends AnyFunSuite {
     // reconciliation: every doc lands in exactly one bucket
     got.values.foreach { case (n, d2, d3, d4, kept, _, _, _) => assert(n === d2 + d3 + d4 + kept) }
     // planted fixtures trip each rule in first-fail order
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rep-").toString
+    val tmp = TestSpark.tempDir("graft-rep-").toString
     try {
       import spark.implicits._
       Seq(
@@ -946,7 +946,7 @@ class CorpusSpec extends AnyFunSuite {
     // planted corpus: a 6-word source (n << m — the raw HLL estimator is
     // badly biased here; the LC branch must fire and land near-exact) and
     // a 2000-word source (most registers set — the raw branch must hold)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hllreg-").toString
+    val tmp = TestSpark.tempDir("graft-hllreg-").toString
     try {
       import spark.implicits._
       val sparse = (0 until 3).map(i =>
@@ -1062,7 +1062,7 @@ class CorpusSpec extends AnyFunSuite {
     // a source whose text has no [a-z0-9] tokens: src_tokens = 0 — the
     // division guard must yield max weight / keep-all instead of the
     // DIVIDE_BY_ZERO Spark's default ANSI mode would raise
-    val d = java.nio.file.Files.createTempDirectory("graft-zerotok-").toString
+    val d = TestSpark.tempDir("graft-zerotok-").toString
     import spark.implicits._
     Seq(
       (0L, "normal english words here", "en", "texty", 24L),
@@ -1083,11 +1083,11 @@ class CorpusSpec extends AnyFunSuite {
 
   test("JSONL streaming ingest: files are picked up incrementally, exactly once") {
     import java.nio.file.{Files => NF, Paths, StandardCopyOption}
-    val jsonlDir = NF.createTempDirectory("graft-jsonl-stream-src-")
-    val outDir   = NF.createTempDirectory("graft-jsonl-stream-out-").toString
-    val ckpt     = NF.createTempDirectory("graft-jsonl-stream-ckpt-").toString
+    val jsonlDir = TestSpark.tempDir("graft-jsonl-stream-src-")
+    val outDir   = TestSpark.tempDir("graft-jsonl-stream-out-").toString
+    val ckpt     = TestSpark.tempDir("graft-jsonl-stream-ckpt-").toString
     // export the corpus, then feed its files into the watched dir in two drops
-    val export = NF.createTempDirectory("graft-jsonl-stream-exp-").toString
+    val export = TestSpark.tempDir("graft-jsonl-stream-exp-").toString
     graft.sources.JsonlCorpus.write(spark, dir, export, nFiles = 4)
     val parts = NF.list(Paths.get(export)).toArray.map(_.toString)
       .filter(p => Paths.get(p).getFileName.toString.startsWith("part-")).sorted // skips .crc/_SUCCESS

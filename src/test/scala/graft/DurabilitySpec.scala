@@ -14,7 +14,7 @@ class DurabilitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("gateway crash after 202: restart replays the WAL, flush loses nothing") {
-    val dir = Files.createTempDirectory("graft-wal-crash-").toString
+    val dir = TestSpark.tempDir("graft-wal-crash-").toString
     val a   = new GatewayServer(spark, dir)
     (1 to 5).foreach(i => a.hot.write("walt", i % 2, s"p$i".getBytes, 1000L + i, Some(s"k$i")))
     // crash: instance A is abandoned with NOTHING flushed (its in-memory
@@ -30,7 +30,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("sequence counters survive even after all events were flushed and evicted") {
-    val dir = Files.createTempDirectory("graft-wal-seq-").toString
+    val dir = TestSpark.tempDir("graft-wal-seq-").toString
     val a   = new GatewayServer(spark, dir)
     (1 to 3).foreach(i => a.hot.write("seqt", 0, s"p$i".getBytes, 1000L + i, None))
     a.flushNow("seqt") // evicts + compacts the WAL down to seq-marks
@@ -48,7 +48,7 @@ class DurabilitySpec extends AnyFunSuite {
     // compact would vanish from the rewritten log — INV-2 broken on crash
     // replay. Stress the interleaving, then crash-replay and check every
     // event still live in the buffer is recoverable.
-    val dir = Files.createTempDirectory("graft-wal-race-")
+    val dir = TestSpark.tempDir("graft-wal-race-")
     val wal = new WriteAheadLog(dir)
     val hot = new HotBuffer(Some(wal))
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -96,7 +96,7 @@ class DurabilitySpec extends AnyFunSuite {
     // acked 202 via the dup path without EVER reaching the log — an acked
     // write lost on crash (INV-2). With rollback, the failed request
     // leaves no trace and the retry is logged normally.
-    val dir = Files.createTempDirectory("graft-wal-appendfail-")
+    val dir = TestSpark.tempDir("graft-wal-appendfail-")
     val wal = new WriteAheadLog(dir)
     val hot = new HotBuffer(Some(wal))
     wal.failNextAppend = true
@@ -112,7 +112,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("failed bulk WAL append rolls back the whole batch") {
-    val dir = Files.createTempDirectory("graft-wal-bulkfail-")
+    val dir = TestSpark.tempDir("graft-wal-bulkfail-")
     val wal = new WriteAheadLog(dir)
     val hot = new HotBuffer(Some(wal))
     val recs = Seq[(Array[Byte], Int, Long, Option[String])](
@@ -134,7 +134,7 @@ class DurabilitySpec extends AnyFunSuite {
     // rename throws, the failure path must reopen the stream on the (still
     // intact) old log — without that, every later append hits a closed
     // stream and the gateway 500s all writes until restart.
-    val dir = Files.createTempDirectory("graft-wal-swapfail-")
+    val dir = TestSpark.tempDir("graft-wal-swapfail-")
     val wal = new WriteAheadLog(dir)
     val e1  = StoredEvent(1L, "t", 0, "a".getBytes, 100L, None)
     val e2  = StoredEvent(2L, "t", 0, "b".getBytes, 101L, None)
@@ -156,7 +156,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("torn WAL tail: replay keeps the intact prefix and drops the partial frame") {
-    val dir = Files.createTempDirectory("graft-wal-torn-")
+    val dir = TestSpark.tempDir("graft-wal-torn-")
     val wal = new WriteAheadLog(dir)
     wal.appendEvent(StoredEvent(1L, "t", 0, "aaa".getBytes, 100L, Some("k1")))
     wal.appendEvent(StoredEvent(2L, "t", 0, "bbb".getBytes, 200L, None))
@@ -179,7 +179,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("S4: a chunked body without Content-Length cannot bypass the byte budget") {
-    val dir = Files.createTempDirectory("graft-chunked-").toString
+    val dir = TestSpark.tempDir("graft-chunked-").toString
     val gw  = new GatewayServer(spark, dir, maxInflightBytes = 64 * 1024)
     val port = gw.start()
     try {
@@ -199,7 +199,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("orphan GC: stale staging dirs and WAL compact tmps are swept") {
-    val root = Files.createTempDirectory("graft-sweep-").toString
+    val root = TestSpark.tempDir("graft-sweep-").toString
     val stale = java.nio.file.Paths.get(root, ".staging", "dead-beef")
     Files.createDirectories(stale)
     Files.writeString(stale.resolve("part-0.parquet"), "x")
@@ -213,7 +213,7 @@ class DurabilitySpec extends AnyFunSuite {
     assert(EventTable.sweepStaging(root) === 0)
     assert(Files.exists(fresh))
 
-    val walDir = Files.createTempDirectory("graft-walsweep-")
+    val walDir = TestSpark.tempDir("graft-walsweep-")
     Files.writeString(walDir.resolve("hot.wal.compact.abc"), "garbage")
     new WriteAheadLog(walDir).close()
     assert(!Files.exists(walDir.resolve("hot.wal.compact.abc")),
@@ -221,7 +221,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("bounded flush drains a backlog in multiple size-capped passes, sequences dense") {
-    val dir = Files.createTempDirectory("graft-flushcap-").toString
+    val dir = TestSpark.tempDir("graft-flushcap-").toString
     // ~100 B/event incl. overhead; cap one pass at ~1 KiB → several passes
     val gw = new GatewayServer(spark, dir, maxFlushBytes = 1024)
     (1 to 40).foreach(i => gw.hot.write("capt", i % 4, ("x" * 40).getBytes, 1000L + i, None))
@@ -247,7 +247,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("flush is tick-bounded: commits what was acked before the call, later arrivals wait") {
-    val dir = Files.createTempDirectory("graft-flushtick-").toString
+    val dir = TestSpark.tempDir("graft-flushtick-").toString
     val gw  = new GatewayServer(spark, dir)
     val stop    = new java.util.concurrent.atomic.AtomicBoolean(false)
     val written = new java.util.concurrent.atomic.AtomicLong(0)

@@ -150,4 +150,25 @@ class EventLogSpec extends AnyFunSuite {
     assert(multi.count() > 0, "synthetic retries must exist")
     assert(multi.filter(col("nparts") > 1).count() === 0L)
   }
+
+  test("hot: each session gets its own persisted frame, and release unpersists it") {
+    val dir = "/root/testdata/sf0.001"
+    val s1  = spark.newSession()
+    val s2  = spark.newSession()
+    try {
+      val h1 = EventLog.hot(s1, dir)
+      val h2 = EventLog.hot(s2, dir)
+      assert(h1.sparkSession eq s1)
+      assert(h2.sparkSession eq s2, "a second session must not get the first session's frame")
+      assert(EventLog.hot(s2, dir) eq h2, "memoized within the session")
+      assert(h2.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+      graft.core.SessionMemo.release(s2)
+      assert(h2.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+        "release must unpersist the retired session's hot frame")
+      assert(h1.storageLevel !== org.apache.spark.storage.StorageLevel.NONE, "other sessions keep theirs")
+    } finally {
+      graft.core.SessionMemo.release(s1)
+      graft.core.SessionMemo.release(s2)
+    }
+  }
 }

@@ -24,7 +24,7 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
   private var baseDir: String       = _
 
   override def beforeAll(): Unit = {
-    baseDir = Files.createTempDirectory("graft-gateway-").toString
+    baseDir = TestSpark.tempDir("graft-gateway-").toString
     server = new GatewayServer(spark, baseDir)
     base = s"http://127.0.0.1:${server.start()}"
   }
@@ -163,7 +163,7 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("S4: the byte budget rejects oversized in-flight writes with 503") {
-    val tiny = new GatewayServer(spark, Files.createTempDirectory("graft-bp-").toString, maxInflightBytes = 8)
+    val tiny = new GatewayServer(spark, TestSpark.tempDir("graft-bp-").toString, maxInflightBytes = 8)
     val p    = tiny.start()
     try {
       val r = http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/tables/bp"))
@@ -407,7 +407,7 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("X2: multi-level namespace — dotted config, %1F-separated paths, parent walks") {
     // a gateway configured with a dotted namespace serves ["accounting","tax"]
     // (`/root/reference/src/api/catalog.rs:92-114,157-190`)
-    val dir = Files.createTempDirectory("graft-gateway-ns-").toString
+    val dir = TestSpark.tempDir("graft-gateway-ns-").toString
     val gw  = new GatewayServer(spark, dir, namespace = "accounting.tax", walEnabled = false)
     val b   = s"http://127.0.0.1:${gw.start()}"
     def g(p: String) = http.send(HttpRequest.newBuilder(URI.create(b + p)).GET().build(),
@@ -714,7 +714,7 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
     stub.start()
     val cl = new CatalogClient(s"http://127.0.0.1:${stub.getAddress.getPort}",
       Retry.Config(maxAttempts = 3, baseDelayMs = 1, maxDelayMs = 2))
-    val gw = new GatewayServer(spark, Files.createTempDirectory("graft-reg-").toString, catalog = Some(cl))
+    val gw = new GatewayServer(spark, TestSpark.tempDir("graft-reg-").toString, catalog = Some(cl))
     val p  = gw.start()
     try {
       http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/tables/regtable"))
@@ -801,7 +801,7 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
     // (an in-flight write's data files land before its marker/commit)
     assert(mapper.readTree(gc.body()).get("older_than_ms").asLong >= 10L * 60 * 1000, gc.body())
     // S4 under deliberate overload: 503s surface and the server recovers
-    val bpGw = new GatewayServer(spark, Files.createTempDirectory("graft-soak-bp-").toString,
+    val bpGw = new GatewayServer(spark, TestSpark.tempDir("graft-soak-bp-").toString,
                                  maxInflight = 4, maxInflightBytes = 64 * 1024, walEnabled = false)
     val bpPort = bpGw.start()
     try {

@@ -8,7 +8,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("catalog lists committed tables and serves SQL with pushdown") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-cat-").toString
+    val warehouse = TestSpark.tempDir("graft-cat-").toString
     graft.table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", s"$warehouse/events")
     spark.conf.set("spark.sql.catalog.zcat", "graft.spark.GraftCatalog")
     spark.conf.set("spark.sql.catalog.zcat.warehouse", warehouse)
@@ -35,7 +35,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("df.write.format(graft) appends through the engine pipeline") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-v1-write-").toString
+    val root = TestSpark.tempDir("graft-v1-write-").toString
     val spark2 = spark
     import spark2.implicits._
     val df = (0 until 60).map(i => (i % 4, s"p$i", 1000L + i, s"k$i"))
@@ -56,7 +56,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("catalog serves extracted-schema tables with their typed columns") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-cat-ext-").toString
+    val warehouse = TestSpark.tempDir("graft-cat-ext-").toString
     val cfg = graft.extract.TableSchemaConfig(fields =
       Seq(graft.extract.FieldSpec("k", "k", "Int32")))
     graft.table.EventTable.ingestAndCommitExtracted(
@@ -70,7 +70,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("catalog reads schema-EVOLVED tables: old files yield null for added columns") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-cat-evo-").toString
+    val warehouse = TestSpark.tempDir("graft-cat-evo-").toString
     val root      = s"$warehouse/evolved"
     val log = graft.core.EventLog.log(spark, "/root/testdata/sf0.001")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -94,7 +94,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL time travel: VERSION AS OF and TIMESTAMP AS OF read historical snapshots") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-tt-cat-").toString
+    val warehouse = TestSpark.tempDir("graft-tt-cat-").toString
     val root      = s"$warehouse/ttable"
     val c         = graft.table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root)
     val snap1     = c.load().get.currentSnapshotId.get
@@ -156,7 +156,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val root: String = {
-    val r = Files.createTempDirectory("graft-v2-spec-").toString
+    val r = TestSpark.tempDir("graft-v2-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", r, fragmentInto = Some(32))
     r
   }
@@ -214,7 +214,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("MoR V2 scan: folds both delete kinds at read; streams, SQL, and time travel compose") {
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-morscan-").toString
+    val warehouse = TestSpark.tempDir("graft-morscan-").toString
     val root      = s"$warehouse/mortable"
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))
     val preDelete = c.load().get.currentSnapshotId.get
@@ -247,7 +247,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       s"SELECT count(*) FROM morcat.default.mortable VERSION AS OF $deleteEra")
       .head().getLong(0) === masked)
     // streaming bootstrap masks too — no masked row may enter the sink
-    val sink = java.nio.file.Files.createTempDirectory("graft-morscan-sink-").toString
+    val sink = TestSpark.tempDir("graft-morscan-sink-").toString
     val q = spark.readStream.format("graft").load(root)
       .writeStream.format("parquet")
       .option("path", s"$sink/data").option("checkpointLocation", s"$sink/_cp")
@@ -270,7 +270,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("over-cap MoR masks escalate to a broadcast, never shuffle, and refuse past the max") {
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-morbc-").toString
+    val root = TestSpark.tempDir("graft-morbc-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     val preRows = EventTable.readCommitted(spark, root).count()
     val r1 = EventTable.deleteWhereMor(spark, root, col("sequence") % 7 === 2)
@@ -309,7 +309,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("statistics subtract unfolded MoR mask rows; a masked dim auto-broadcasts on live size") {
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft-morstats-").toString
+    val root = TestSpark.tempDir("graft-morstats-").toString
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     val preRows = EventTable.readCommitted(spark, root).count()
     val r1 = EventTable.deleteWhereMor(spark, root, col("sequence") % 7 === 2)
@@ -365,7 +365,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // max(pos, eq) bound keeps the estimate at or above the true count.
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft-morstats2-").toString
+    val root = TestSpark.tempDir("graft-morstats2-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8))
     val preRows = EventTable.readCommitted(spark, root).count()
     // capture the keys FIRST (collected — the lazy frame would re-read
@@ -393,7 +393,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("a masked V2 scan stays COLUMNAR and a bounds-pruned scan opens zero delete files") {
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-morcol-").toString
+    val root = TestSpark.tempDir("graft-morcol-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(16))
     // confine BOTH delete kinds to partition 0, so a partition-pruned scan
     // of any other partition provably needs no tombstones at all
@@ -469,7 +469,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("V2 scan reads a spec-evolved table, recovering event_date from the path") {
     import graft.table.EventTable
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-specv2-").toString
+    val root = TestSpark.tempDir("graft-specv2-").toString
     val c = EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(8))
     assert(c.evolvePartitionSpec(graft.iceberg.PartitionSpec.dateFields))
     val committed0 = EventTable.readCommitted(spark, root)

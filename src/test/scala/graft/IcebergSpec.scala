@@ -28,7 +28,7 @@ class IcebergSpec extends AnyFunSuite {
     )
 
   private def freshCommitter(): IcebergCommitter = {
-    val root = Files.createTempDirectory("graft-iceberg-test-").toString
+    val root = TestSpark.tempDir("graft-iceberg-test-").toString
     new IcebergCommitter(new LocalTableIO(root), "t")
   }
 
@@ -531,7 +531,7 @@ class IcebergSpec extends AnyFunSuite {
   }
 
   test("a TRANSIENT read error never heals (deletes) a valid committed version") {
-    val root = Files.createTempDirectory("graft-iceberg-test-").toString
+    val root = TestSpark.tempDir("graft-iceberg-test-").toString
     val local = new LocalTableIO(root)
     val c0 = new IcebergCommitter(local, "t")
     c0.commitAppend(Seq(df("data/partition=0/a.parquet", 10, 0, 10)))
@@ -560,7 +560,7 @@ class IcebergSpec extends AnyFunSuite {
 
   test("a fully-pruned read returns an empty typed DataFrame, not an error") {
     val spark = TestSpark.spark
-    val root  = Files.createTempDirectory("graft-prune-empty-").toString
+    val root  = TestSpark.tempDir("graft-prune-empty-").toString
     val c     = graft.table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root)
     val none  = graft.table.EventTable.pruneByTimeRange(c, Long.MaxValue - 1, Long.MaxValue)
     assert(none.isEmpty)
@@ -624,7 +624,7 @@ class IcebergSpec extends AnyFunSuite {
   }
 
   test("HadoopTableIO: full commit/replace/expire lifecycle through file://") {
-    val dir = Files.createTempDirectory("graft-hadoop-io-").toString
+    val dir = TestSpark.tempDir("graft-hadoop-io-").toString
     // constructed directly: forRoot deliberately keeps file:// on the
     // O_EXCL LocalTableIO (Hadoop's local create-if-absent is not atomic);
     // this exercises the Hadoop binding itself against the local store
@@ -666,7 +666,7 @@ class IcebergSpec extends AnyFunSuite {
 
   test("scheme-qualified root: ingest, commit, read, and delete through the Hadoop data plane") {
     val spark = TestSpark.spark
-    val dir   = Files.createTempDirectory("graft-hadoop-table-").toString
+    val dir   = TestSpark.tempDir("graft-hadoop-table-").toString
     val root  = "file://" + dir
     val c     = graft.table.EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root)
     // metadata CAS stays on the O_EXCL local binding (decoded from the URI);
@@ -960,7 +960,7 @@ class IcebergSpec extends AnyFunSuite {
         |  {"name": "deleted_rows_count", "type": "long"}
         |]}""".stripMargin)
 
-    val root = Files.createTempDirectory("graft-iceberg-conform-").toString
+    val root = TestSpark.tempDir("graft-iceberg-conform-").toString
     val c = new IcebergCommitter(new LocalTableIO(root), "t")
     c.commitAppend(Seq(df("data/partition=0/a.parquet", 10, 0, 10)), Map(0 -> 10L))
     val metaFiles = new java.io.File(root, "metadata").listFiles().toSeq

@@ -12,7 +12,7 @@ class LlmSpec extends AnyFunSuite {
 
   /** Fixture dir with documents.parquet + embeddings.parquet. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-llm-fixture-").toString
+    val d = TestSpark.tempDir("graft-llm-fixture-").toString
     Seq(
       (0L, "the quick brown fox jumps over the lazy dog", "en", "src0", 43L),
       (1L, "the quick brown fox jumps over the lazy dog", "en", "src1", 43L), // exact dup of 0
@@ -77,7 +77,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("d16: within-batch duplicates admit the first arrival, reject the later copy") {
-    val d = Files.createTempDirectory("graft-d16-batch-").toString
+    val d = TestSpark.tempDir("graft-d16-batch-").toString
     Seq(
       (0L,  "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "s0", 40L),
       (5L,  "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "s0", 40L), // batch dup of 0
@@ -162,7 +162,7 @@ class LlmSpec extends AnyFunSuite {
           id -> (if (rnd.nextBoolean()) src else s"$src ${vocab(rnd.nextInt(vocab.size))}")
         } else id -> t
       }
-      val d = java.nio.file.Files.createTempDirectory(s"graft-d16-fuzz$trial-").toString
+      val d = TestSpark.tempDir(s"graft-d16-fuzz$trial-").toString
       import spark.implicits._
       corpus.map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -175,7 +175,7 @@ class LlmSpec extends AnyFunSuite {
               Option(r.getAs[java.lang.Long]("best_match")).map(_.toLong)))).toMap
         assert(got == naive(corpus), s"trial $trial diverged on corpus:\n${corpus.mkString("\n")}")
       } finally {
-        LlmQueries.evictDir(spark, d)
+        graft.core.SessionMemo.evict(spark, d)
         graft.core.FsUtil.deleteRecursively(d)
       }
     }
@@ -407,7 +407,7 @@ class LlmSpec extends AnyFunSuite {
     // greatest(0, sz − cap) contract the audit row's batch columns
     // predict. This is the nonzero path of the audit (the synthetic
     // corpora never heat a bucket past the production cap).
-    val d = Files.createTempDirectory("graft-hotbucket-").toString
+    val d = TestSpark.tempDir("graft-hotbucket-").toString
     val n = LlmQueries.BandMaxBucket + 4
     (0 until n).map(i =>
         (i.toLong, "the same exact duplicated text repeated for bucket heat", "en", "srch", 55L))
@@ -422,7 +422,7 @@ class LlmSpec extends AnyFunSuite {
       assert(row.getAs[Long]("n_refused_stream") === row.getAs[Long]("n_refused_expected"),
         "streamed refusal totals must equal greatest(0, sz - cap) per bucket")
     } finally {
-      LlmQueries.evictDir(spark, d)
+      graft.core.SessionMemo.evict(spark, d)
       graft.core.FsUtil.deleteRecursively(d)
     }
   }
@@ -868,7 +868,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("d19: a planted sub-document is flagged contained in its container, not vice versa") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-contain-").toString
+    val tmp = TestSpark.tempDir("graft-contain-").toString
     try {
       import spark.implicits._
       val container = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
@@ -945,7 +945,7 @@ class LlmSpec extends AnyFunSuite {
     // member pairs ONLY with the bucket's min doc_id — 4999 pairs, linear)
     // so the mega-cluster still collapses through the hub in d6, while the
     // healthy pairs (distinct texts, tiny buckets) still surface all-pairs.
-    val d = Files.createTempDirectory("graft-llm-skew-").toString
+    val d = TestSpark.tempDir("graft-llm-skew-").toString
     val planted = (0L until 5000L).map(i =>
       (i, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do", "en", "boiler", 61L))
     val healthy = Seq(
@@ -986,7 +986,7 @@ class LlmSpec extends AnyFunSuite {
 
   /** A temp copy of sf0.001's corpus tables, the two every LLM memo reads. */
   private def corpusCopy(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix)
+    val d = TestSpark.tempDir(prefix)
     Seq("documents.parquet", "embeddings.parquet").foreach(f =>
       Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001", f), d.resolve(f)))
     d.toString
@@ -995,7 +995,7 @@ class LlmSpec extends AnyFunSuite {
   test("evictDir: after an in-place corpus rewrite, r2 and r7 answer like a fresh session") {
     // r7's collected first pass, r2's query postings and the corpus size
     // the IVF cell count derives from are all memoized per (session, dir):
-    // evictDir must drop every one of them, not a hand-kept subset
+    // SessionMemo.evict must drop every one of them, not a hand-kept subset
     val d = corpusCopy("graft-rewrite-")
     val s = spark.newSession()
     val qs = Seq("r7_rocchio_prf", "r2_hybrid_retrieve")
@@ -1009,7 +1009,7 @@ class LlmSpec extends AnyFunSuite {
           .filter(org.apache.spark.sql.functions.col(id) % 3 =!= 0)
           .write.mode("overwrite").parquet(s"$d/$f")
       }
-      LlmQueries.evictDir(s, d)
+      graft.core.SessionMemo.evict(s, d)
       val fresh = spark.newSession()
       try qs.zip(before).foreach { case (q, old) =>
         val want = rows(fresh, q)
@@ -1024,7 +1024,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("evictDir releases every memo family a sweep touches: no pinned RDD, no sidecar left") {
     val d   = corpusCopy("graft-lifecycle-")
-    val idx = Files.createTempDirectory("graft-lifecycle-idx-")
+    val idx = TestSpark.tempDir("graft-lifecycle-idx-")
     val s   = spark.newSession()
     // sidecars under a root this test owns, so "gone" is checkable
     s.conf.set("graft.index.root", idx.toString)
@@ -1046,11 +1046,11 @@ class LlmSpec extends AnyFunSuite {
       assert((sc.getPersistentRDDs.keySet -- baseline).nonEmpty)
       assert(sidecars().exists(_.startsWith("graft-ivf-sidecar-")) &&
              sidecars().exists(_.startsWith("graft-pq-sidecar-")), sidecars())
-      LlmQueries.evictDir(s, d)
+      graft.core.SessionMemo.evict(s, d)
       val left = sc.getPersistentRDDs.filter { case (id, _) => !baseline.contains(id) }
       assert(left.isEmpty, s"${left.size} RDDs still pinned after evictDir")
       assert(sidecars().isEmpty, "evictDir must delete the IVF/PQ sidecar dirs")
-      LlmQueries.evictDir(s, d) // idempotent
+      graft.core.SessionMemo.evict(s, d) // idempotent
       val b0 = graft.core.SessionMemo.buildCount
       SparkEntry.queries("d2_minhash_lsh")(s, d).collect()
       assert(graft.core.SessionMemo.buildCount > b0, "an evicted memo must rebuild on its next use")

@@ -13,7 +13,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     new NioCheckpointFileManager(new Path(dir.toUri), new Configuration())
 
   test("createAtomic publishes all-or-nothing: no partial file visible before close") {
-    val dir = Files.createTempDirectory("cfm-")
+    val dir = TestSpark.tempDir("cfm-")
     val m   = mgr(dir)
     val target = new Path(dir.resolve("0").toUri)
     val out = m.createAtomic(target, overwriteIfPossible = false)
@@ -29,7 +29,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("losing a no-overwrite race raises FileAlreadyExistsException and leaves the winner intact") {
-    val dir = Files.createTempDirectory("cfm-")
+    val dir = TestSpark.tempDir("cfm-")
     val m   = mgr(dir)
     val target = new Path(dir.resolve("7").toUri)
     val a = m.createAtomic(target, overwriteIfPossible = false)
@@ -43,7 +43,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("cancel discards the temp file; overwrite=true replaces") {
-    val dir = Files.createTempDirectory("cfm-")
+    val dir = TestSpark.tempDir("cfm-")
     val m   = mgr(dir)
     val target = new Path(dir.resolve("metadata").toUri)
     val c = m.createAtomic(target, overwriteIfPossible = true)
@@ -58,7 +58,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("list returns length/mtime statuses and filters; missing dir raises FileNotFound") {
-    val dir = Files.createTempDirectory("cfm-")
+    val dir = TestSpark.tempDir("cfm-")
     val m   = mgr(dir)
     Seq("0", "1", ".tmp-x").foreach { n =>
       Files.write(dir.resolve(n), n.getBytes("UTF-8"))
@@ -72,7 +72,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("open supports seek and positioned reads (state-store changelog access shape)") {
-    val dir = Files.createTempDirectory("cfm-")
+    val dir = TestSpark.tempDir("cfm-")
     val m   = mgr(dir)
     val target = new Path(dir.resolve("log").toUri)
     val out = m.createAtomic(target, overwriteIfPossible = false)

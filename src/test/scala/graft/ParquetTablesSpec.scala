@@ -13,11 +13,7 @@ class ParquetTablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tempDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ptables-").toString
-    graft.core.FsUtil.deleteOnExit(d)
-    d
-  }
+  private def tempDir(): String = TestSpark.tempDir("graft-ptables-").toString
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 

@@ -20,7 +20,7 @@ class ServeMainSpec extends AnyFunSuite {
   }
 
   test("F1: the flush daemon commits hot topics on its interval") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-").toString
+    val dir = TestSpark.tempDir("graft-daemon-").toString
     val gw  = new graft.serve.GatewayServer(spark, dir)
     (1 to 5).foreach(i => gw.hot.write("dt", i % 2, s"p$i".getBytes, 1000L + i, None))
     val daemon = graft.serve.Serve.flushDaemon(gw, intervalMs = 300L)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.SessionMemo
+import graft.core.{FileMemo, SessionMemo}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -77,5 +77,40 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(m2.getOrElseUpdate(s, "/c-x")(fail("must be memoized")) === "m2:/c-x")
     assert(m2.getOrElseUpdate(other, "/c")(fail("must be memoized")) === "other:/c")
     assert(m1.getOrElseUpdate(s, "/c")("rebuilt") === "rebuilt")
+  }
+
+  test("FileMemo: one build per key for every session; release keeps it, evict deletes its dirs") {
+    val s    = spark.newSession()
+    val memo = new FileMemo[String]
+    val c0   = SessionMemo.buildCount
+    val made = scala.collection.mutable.ArrayBuffer.empty[String]
+    def build(tag: String)(tmp: String => String): String = {
+      val d = tmp(s"graft-filememo-$tag-"); made += d; d
+    }
+    val root = "/filememo-c"
+    val a    = memo.getOrElseUpdate(root)(build("a"))
+    val b    = memo.getOrElseUpdate(s"$root/documents.parquet@stamp")(build("b"))
+    val x    = memo.getOrElseUpdate(s"$root-x")(build("x"))
+    assert(SessionMemo.buildCount === c0 + 3, "file-memo builds tick the shared counter")
+    assert(memo.getOrElseUpdate(root)(_ => fail("must be memoized")) === a)
+    SessionMemo.release(s)
+    SessionMemo.release(spark.newSession())
+    assert(memo.getOrElseUpdate(root)(_ => fail("release must not touch file memos")) === a)
+    SessionMemo.evict(s, root)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(a)), "evict deletes the entry's dirs")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(b)), "keys under dir/ go too")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(x)), "a prefix-sharing sibling stays")
+    assert(memo.getOrElseUpdate(s"$root-x")(_ => fail("must be memoized")) === x)
+    assert(memo.getOrElseUpdate(root)(build("a2")) !== a, "an evicted key rebuilds")
+    // a failed build leaves no dir behind and no entry
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    intercept[IllegalStateException](memo.getOrElseUpdate("/filememo-f") { tmp =>
+      failed += tmp("graft-filememo-f-"); throw new IllegalStateException("boom")
+    })
+    assert(failed.nonEmpty && failed.forall(d => !java.nio.file.Files.exists(java.nio.file.Paths.get(d))))
+    assert(memo.getOrElseUpdate("/filememo-f")(_ => "ok") === "ok")
+    SessionMemo.evict(s, root)
+    SessionMemo.evict(s, s"$root-x")
+    assert(made.forall(d => !java.nio.file.Files.exists(java.nio.file.Paths.get(d))))
   }
 }

@@ -15,10 +15,10 @@ class StreamIngestSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("changefeed stream: checkpoint replay never duplicates; a replace in range fails loud") {
-    val root = Files.createTempDirectory("graft-cfstream-").toString
+    val root = TestSpark.tempDir("graft-cfstream-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(8))
     val base = c.load().get.currentSnapshotId.get
-    val sink = Files.createTempDirectory("graft-cfsink-").toString
+    val sink = TestSpark.tempDir("graft-cfsink-").toString
     val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
     spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[graft.streaming.NioCheckpointFileManager].getName)
@@ -86,12 +86,12 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("checkpointed changefeed AND append-tail streams survive Maintenance.vacuum between triggers") {
-    val root = Files.createTempDirectory("graft-vacsurv-").toString
+    val root = TestSpark.tempDir("graft-vacsurv-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(8))
     val base = c.load().get.currentSnapshotId.get
     val n0   = EventTable.readCommitted(spark, root).count()
-    val cfSink   = Files.createTempDirectory("graft-vacsurv-cf-").toString
-    val tailSink = Files.createTempDirectory("graft-vacsurv-tail-").toString
+    val cfSink   = TestSpark.tempDir("graft-vacsurv-cf-").toString
+    val tailSink = TestSpark.tempDir("graft-vacsurv-tail-").toString
     val prevCfm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
     spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[graft.streaming.NioCheckpointFileManager].getName)
@@ -170,7 +170,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("changefeed fromTimestamp resolves head ancestry; expired history names the restart point") {
-    val root = Files.createTempDirectory("graft-cfts-").toString
+    val root = TestSpark.tempDir("graft-cfts-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
     Thread.sleep(10)
     val cut = System.currentTimeMillis() // after ingest, before the tail
@@ -191,16 +191,16 @@ class StreamIngestSpec extends AnyFunSuite {
     }
     try {
     // from the cut: exactly the tail's 10 inserts (the ingest predates it)
-    val s1 = Files.createTempDirectory("graft-cfts-s1-").toString
+    val s1 = TestSpark.tempDir("graft-cfts-s1-").toString
     runFeed(s1, Map("fromTimestamp" -> cut.toString))
     assert(spark.read.parquet(s"$s1/data").count() === 10L)
     // from before ALL history: the whole chain replays from table creation
     val n0 = EventTable.readCommitted(spark, root).count()
-    val s2 = Files.createTempDirectory("graft-cfts-s2-").toString
+    val s2 = TestSpark.tempDir("graft-cfts-s2-").toString
     runFeed(s2, Map("fromTimestamp" -> "1000000000000"))
     assert(spark.read.parquet(s"$s2/data").count() === n0)
     // the two start options are mutually exclusive
-    val s3 = Files.createTempDirectory("graft-cfts-s3-").toString
+    val s3 = TestSpark.tempDir("graft-cfts-s3-").toString
     val exBoth = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       runFeed(s3, Map("fromTimestamp" -> cut.toString, "fromSnapshot" -> "1"))
     }
@@ -218,7 +218,7 @@ class StreamIngestSpec extends AnyFunSuite {
     val expired = new graft.iceberg.IcebergCommitter(
       graft.iceberg.TableIO.forRoot(root), EventTable.Topic).expireSnapshots(keepLast = 1)
     assert(expired.nonEmpty)
-    val s4 = Files.createTempDirectory("graft-cfts-s4-").toString
+    val s4 = TestSpark.tempDir("graft-cfts-s4-").toString
     val exLag = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       runFeed(s4, Map("fromTimestamp" -> "1000000000000"))
     }
@@ -254,7 +254,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // (spark.graft.mor.inlineMaskRows) fails its micro-batch loudly —
     // streams have no per-trigger broadcast lifecycle — and the error
     // tells the operator what to do (fold via vacuum, replay fresh).
-    val root = Files.createTempDirectory("graft-cfcap-").toString
+    val root = TestSpark.tempDir("graft-cfcap-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
     val base = c.load().get.currentSnapshotId.get
     val r = EventTable.deleteWhereMor(spark, root, col("sequence") % 3 === 1)
@@ -264,7 +264,7 @@ class StreamIngestSpec extends AnyFunSuite {
       classOf[graft.streaming.NioCheckpointFileManager].getName)
     spark.conf.set("spark.graft.mor.inlineMaskRows", "4")
     try {
-      val sink = Files.createTempDirectory("graft-cfcap-sink-").toString
+      val sink = TestSpark.tempDir("graft-cfcap-sink-").toString
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         val q = spark.readStream.format("graft").option("changefeed", "true")
           .option("fromSnapshot", base.toString).load(root)
@@ -285,8 +285,8 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("streamed ingest converges to the batch-derived table; listener feeds metrics") {
-    val root    = Files.createTempDirectory("graft-stream-spec-").toString
-    val staging = Files.createTempDirectory("graft-stream-stage-").toString
+    val root    = TestSpark.tempDir("graft-stream-spec-").toString
+    val staging = TestSpark.tempDir("graft-stream-stage-").toString
     val schema  = StreamIngest.stageChunks(spark, sf, staging, nChunks = 3)
     val ing     = new StreamIngest(spark, root)
     ing.runFileStream(staging, schema)
@@ -298,7 +298,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("a replayed batch id is a no-op (no duplicate files, no duplicate rows)") {
-    val root = Files.createTempDirectory("graft-replay-spec-").toString
+    val root = TestSpark.tempDir("graft-replay-spec-").toString
     val raw  = EventLog.raw(spark, sf)
     val ing  = new StreamIngest(spark, root, snapshotMinFiles = 1)
     ing.processBatch(raw, batchId = 0L)
@@ -310,7 +310,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("crash between staging and commit: reconcile + flush loses nothing, duplicates nothing") {
-    val root = Files.createTempDirectory("graft-crash-spec-").toString
+    val root = TestSpark.tempDir("graft-crash-spec-").toString
     val raw  = EventLog.raw(spark, sf).cache()
     val mid  = raw.agg(expr("percentile_approx(event_id, 0.5)")).head().get(0).toString.toDouble.toLong
 
@@ -335,7 +335,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // processBatch: per-partition sequencing fused into the write, size
     // profile carried batch-to-batch. Input is pre-deduped, as KeyedDedup
     // would deliver it.
-    val root = Files.createTempDirectory("graft-crash-fused-spec-").toString
+    val root = TestSpark.tempDir("graft-crash-fused-spec-").toString
     val raw  = graft.core.EventLog.deduped(EventLog.raw(spark, sf)).cache()
     val mid  = raw.agg(expr("percentile_approx(event_id, 0.5)")).head().get(0).toString.toDouble.toLong
 
@@ -356,7 +356,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("a marker whose data files are incomplete is dropped on reconcile, not adopted (and does not brick startup)") {
-    val root = Files.createTempDirectory("graft-marker-crash-").toString
+    val root = TestSpark.tempDir("graft-marker-crash-").toString
     val raw  = EventLog.raw(spark, sf).cache()
     val io   = new graft.iceberg.LocalTableIO(root)
 
@@ -382,7 +382,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("a replayed-but-staged batch is skipped after restart") {
-    val root = Files.createTempDirectory("graft-replay2-spec-").toString
+    val root = TestSpark.tempDir("graft-replay2-spec-").toString
     val raw  = EventLog.raw(spark, sf)
     val a    = new StreamIngest(spark, root, snapshotMinFiles = 1000)
     a.processBatch(raw, batchId = 0L)
@@ -396,8 +396,8 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("a streamed table compacts like a batch-ingested one (S x C interaction)") {
-    val root    = Files.createTempDirectory("graft-stream-compact-").toString
-    val staging = Files.createTempDirectory("graft-stream-compact-stage-").toString
+    val root    = TestSpark.tempDir("graft-stream-compact-").toString
+    val staging = TestSpark.tempDir("graft-stream-compact-stage-").toString
     val schema  = StreamIngest.stageChunks(spark, sf, staging, nChunks = 3)
     new StreamIngest(spark, root).runFileStream(staging, schema)
     val before = EventTable.listParquet(root).size
@@ -409,9 +409,9 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("F1 timer-loop: ProcessingTime trigger picks up files as they arrive") {
-    val root    = Files.createTempDirectory("graft-timer-spec-").toString
-    val srcDir  = Files.createTempDirectory("graft-timer-src-").toString
-    val staging = Files.createTempDirectory("graft-timer-stage-").toString
+    val root    = TestSpark.tempDir("graft-timer-spec-").toString
+    val srcDir  = TestSpark.tempDir("graft-timer-src-").toString
+    val staging = TestSpark.tempDir("graft-timer-stage-").toString
     val schema  = StreamIngest.stageChunks(spark, sf, srcDir, nChunks = 3)
     val ing     = new StreamIngest(spark, root, snapshotMinFiles = 1)
     val q = ing.startFileStream(staging, schema,
@@ -435,7 +435,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("cross-batch duplicate keys: since-start path (same instance) drops them") {
-    val root = Files.createTempDirectory("graft-xdup-spec-").toString
+    val root = TestSpark.tempDir("graft-xdup-spec-").toString
     val raw  = EventLog.raw(spark, sf).cache()
     val ing  = new StreamIngest(spark, root, snapshotMinFiles = 1)
     // batches OVERLAP on event ids [80, 100): same idempotency keys re-sent
@@ -449,7 +449,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("cross-batch duplicate keys: bootstrap path (new instance over existing table) drops them") {
-    val root = Files.createTempDirectory("graft-xdup2-spec-").toString
+    val root = TestSpark.tempDir("graft-xdup2-spec-").toString
     val raw  = EventLog.raw(spark, sf).cache()
     val a    = new StreamIngest(spark, root, snapshotMinFiles = 1)
     a.processBatch(raw.filter(col("event_id") < 100), batchId = 0L)
@@ -464,7 +464,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("NULL-key events pass the bootstrap bloom gate and the streaming state op intact") {
-    val root = Files.createTempDirectory("graft-nullkey-spec-").toString
+    val root = TestSpark.tempDir("graft-nullkey-spec-").toString
     val raw  = EventLog.raw(spark, sf).cache()
     val a = new StreamIngest(spark, root, snapshotMinFiles = 1)
     a.processBatch(raw.filter(col("event_id") < 100), batchId = 0L)
@@ -484,7 +484,7 @@ class StreamIngestSpec extends AnyFunSuite {
 
   test("appendEvents: library bulk append dedupes, continues sequences, commits") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-append-spec-").toString
+    val root = TestSpark.tempDir("graft-append-spec-").toString
     def mk(ids: Range, keyed: Boolean) =
       ids.map(i => (i % 4, s"payload-$i", 1000L + i, if (keyed) s"k$i" else null))
         .toDF("partition", "payload", "timestamp_ms", "idempotency_key")
@@ -515,7 +515,7 @@ class StreamIngestSpec extends AnyFunSuite {
 
   test("appendEvents: concurrent appends retry on conflict, never overlap sequences") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-append-race-").toString
+    val root = TestSpark.tempDir("graft-append-race-").toString
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       val futures = (0 until 4).map { t =>
@@ -544,8 +544,8 @@ class StreamIngestSpec extends AnyFunSuite {
 
   test("dedup state TTL: keys idle past the cleanup watermark are evicted and re-admitted") {
     import spark.implicits._
-    val root    = Files.createTempDirectory("graft-ttl-spec-").toString
-    val staging = Files.createTempDirectory("graft-ttl-stage-").toString
+    val root    = TestSpark.tempDir("graft-ttl-spec-").toString
+    val staging = TestSpark.tempDir("graft-ttl-stage-").toString
     def chunk(ids: Range, keyPrefix: String): org.apache.spark.sql.DataFrame =
       ids.map(i => (i.toLong, 1000L + i, i.toLong, "ev", 1.0, s"p$i", i % 4, s"$keyPrefix$i"))
         .toDF("event_id", "timestamp_ms", "user_id", "event_type", "value", "props", "part_id", "idempotency_key")
@@ -585,7 +585,7 @@ class StreamIngestSpec extends AnyFunSuite {
   test("w2 append mode: events arriving later than the watermark are dropped") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val staging = Files.createTempDirectory("graft-late-stage-").toString
+    val staging = TestSpark.tempDir("graft-late-stage-").toString
     val hour = 3600L * 1000
     // burst 1: three events in hour 0, one in hour 4 (advances the
     // watermark to hour 3 once the batch completes)
@@ -625,7 +625,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("sequence continuation across batches: dense, no overlap") {
-    val root = Files.createTempDirectory("graft-seqcont-spec-").toString
+    val root = TestSpark.tempDir("graft-seqcont-spec-").toString
     val raw  = EventLog.raw(spark, sf)
     val mid  = 500L
     val ing  = new StreamIngest(spark, root, snapshotMinFiles = 1)
@@ -649,8 +649,8 @@ class StreamIngestSpec extends AnyFunSuite {
     // JSONL drops, stream in incrementally (file source, one file per
     // trigger), flow through the SAME dedup/sequence/commit pipeline as the
     // event gateway, and the committed cold tier must reproduce every text.
-    val root  = Files.createTempDirectory("graft-jsonl-ingest-").toString
-    val jsonl = Files.createTempDirectory("graft-jsonl-drop-").toString
+    val root  = TestSpark.tempDir("graft-jsonl-ingest-").toString
+    val jsonl = TestSpark.tempDir("graft-jsonl-drop-").toString
     graft.sources.JsonlCorpus.write(spark, sf, jsonl, nFiles = 3)
     val ing = new StreamIngest(spark, root, snapshotMinFiles = 1)
     ing.runSourceStream { ss =>

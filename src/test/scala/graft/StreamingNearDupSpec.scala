@@ -35,9 +35,9 @@ class StreamingNearDupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   test("a document arriving in a LATER drop pairs against state from an earlier run") {
-    val staging = Files.createTempDirectory("graft-snd-stage-").toString
-    val ckpt    = Files.createTempDirectory("graft-snd-ckpt-").toString
-    val sink    = Files.createTempDirectory("graft-snd-sink-").toString
+    val staging = TestSpark.tempDir("graft-snd-stage-").toString
+    val ckpt    = TestSpark.tempDir("graft-snd-ckpt-").toString
+    val sink    = TestSpark.tempDir("graft-snd-sink-").toString
     val textA   = "the quick brown fox jumps over the lazy dog"
     docsDf(0L -> textA, 3L -> "completely different words entirely here now")
       .coalesce(1).write.mode("append").parquet(staging)
@@ -59,9 +59,9 @@ class StreamingNearDupSpec extends AnyFunSuite {
   }
 
   test("a hot bucket stops admitting at the cap: bounded pairs + surfaced overflow") {
-    val staging = Files.createTempDirectory("graft-snd-hot-stage-").toString
-    val ckpt    = Files.createTempDirectory("graft-snd-hot-ckpt-").toString
-    val sink    = Files.createTempDirectory("graft-snd-hot-sink-").toString
+    val staging = TestSpark.tempDir("graft-snd-hot-stage-").toString
+    val ckpt    = TestSpark.tempDir("graft-snd-hot-ckpt-").toString
+    val sink    = TestSpark.tempDir("graft-snd-hot-sink-").toString
     val boiler  = "lorem ipsum dolor sit amet consectetur adipiscing elit"
     val cap     = 3
     docsDf((0L until 10L).map(i => i -> boiler): _*)
@@ -73,13 +73,13 @@ class StreamingNearDupSpec extends AnyFunSuite {
     assert(pairs.nonEmpty)
 
     // the overflow audit reports the refused arrivals on a fresh replay
-    val ckpt2 = Files.createTempDirectory("graft-snd-hot-ckpt2-").toString
+    val ckpt2 = TestSpark.tempDir("graft-snd-hot-ckpt2-").toString
     val src = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType))))
       .option("maxFilesPerTrigger", 1).parquet(staging)
-    val sink2 = Files.createTempDirectory("graft-snd-hot-ovf-").toString
+    val sink2 = TestSpark.tempDir("graft-snd-hot-ovf-").toString
     val q = StreamingNearDup.overflow(src, cap).toDF("band", "band_hash", "n_refused")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckpt2)
@@ -107,9 +107,9 @@ class StreamingNearDupSpec extends AnyFunSuite {
     }
     val textA = "the quick brown fox jumps over the lazy dog"
     // inside the horizon: the drop-2 duplicate pairs against drop 1
-    val (st1, ck1, sk1) = (Files.createTempDirectory("graft-ttl-in-s").toString,
-      Files.createTempDirectory("graft-ttl-in-c").toString,
-      Files.createTempDirectory("graft-ttl-in-k").toString)
+    val (st1, ck1, sk1) = (TestSpark.tempDir("graft-ttl-in-s").toString,
+      TestSpark.tempDir("graft-ttl-in-c").toString,
+      TestSpark.tempDir("graft-ttl-in-k").toString)
     docsDf(0L -> textA).coalesce(1).write.mode("append").parquet(st1)
     runWithTtl(st1, ck1, sk1, ttlMs = 3600 * 1000L)
     docsDf(5L -> textA).coalesce(1).write.mode("append").parquet(st1)
@@ -118,9 +118,9 @@ class StreamingNearDupSpec extends AnyFunSuite {
       "a duplicate inside the TTL horizon must pair")
 
     // beyond the horizon: the idle bucket restarts empty, so no pair
-    val (st2, ck2, sk2) = (Files.createTempDirectory("graft-ttl-out-s").toString,
-      Files.createTempDirectory("graft-ttl-out-c").toString,
-      Files.createTempDirectory("graft-ttl-out-k").toString)
+    val (st2, ck2, sk2) = (TestSpark.tempDir("graft-ttl-out-s").toString,
+      TestSpark.tempDir("graft-ttl-out-c").toString,
+      TestSpark.tempDir("graft-ttl-out-k").toString)
     docsDf(0L -> textA).coalesce(1).write.mode("append").parquet(st2)
     runWithTtl(st2, ck2, sk2, ttlMs = 300L)
     Thread.sleep(1200)

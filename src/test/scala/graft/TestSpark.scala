@@ -17,6 +17,11 @@ object TestSpark {
     s
   }
 
+  /** A fresh temp dir that is deleted when the test JVM exits
+    * ([[graft.core.FsUtil.tempDir]]), as a `Path`. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Paths.get(graft.core.FsUtil.tempDir(prefix))
+
   /** Spark jobs `body` starts on this thread, counted by a listener under a
     * private job group. The listener bus is FIFO, so once a fence job
     * submitted after `body` has been delivered, so has every job of `body`. */

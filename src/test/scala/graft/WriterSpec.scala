@@ -24,7 +24,7 @@ class WriterSpec extends AnyFunSuite {
 
   test("writeData emits exactly ceil(bytes/target) files per partition; returns its own files") {
     val df   = EventTable.committedSchema(EventLog.log(spark, "/root/testdata/sf0.001"))
-    val root = Files.createTempDirectory("graft-writer-").toString
+    val root = TestSpark.tempDir("graft-writer-").toString
     val target = 8L * 1024 // force several buckets per partition
     val expected = df
       .groupBy("partition")
@@ -59,8 +59,8 @@ class WriterSpec extends AnyFunSuite {
 
   test("task-written files match Spark's own parquet writer: schema, ZSTD, rows, per-file sort") {
     val df   = EventTable.committedSchema(EventLog.log(spark, sf))
-    val root = Files.createTempDirectory("graft-writer-parity-").toString
-    val ref  = Files.createTempDirectory("graft-writer-ref-").resolve("t").toString
+    val root = TestSpark.tempDir("graft-writer-parity-").toString
+    val ref  = TestSpark.tempDir("graft-writer-ref-").resolve("t").toString
     val written = EventTable.writeFiles(df, root, targetFileSize = 16L * 1024)
     assert(written.size > 1)
     df.drop("partition").write.option("compression", "zstd").parquet(ref)
@@ -103,7 +103,7 @@ class WriterSpec extends AnyFunSuite {
     val df   = EventTable.committedSchema(EventLog.log(spark, sf))
     val conf = spark.sessionState.newHadoopConf()
     Seq(false, true).foreach { dateLayout =>
-      val root    = Files.createTempDirectory("graft-writer-stats-").toString
+      val root    = TestSpark.tempDir("graft-writer-stats-").toString
       val written = EventTable.writeFiles(df, root, targetFileSize = 16L * 1024, dateLayout = dateLayout)
       assert(written.nonEmpty)
       assert(written.forall(_._1.filePath.contains("/event_date=")) === dateLayout)
@@ -121,7 +121,7 @@ class WriterSpec extends AnyFunSuite {
     val df   = EventTable.committedSchema(EventLog.log(spark, sf))
       .repartition(4, col("partition"))
       .withColumn("partition", boom(col("partition")))
-    val root = Files.createTempDirectory("graft-writer-crash-").toString
+    val root = TestSpark.tempDir("graft-writer-crash-").toString
     val c    = new IcebergCommitter(TableIO.forRoot(root), EventTable.Topic)
     val err = intercept[Exception] {
       val files = EventTable.writeFiles(df, root, precomputedStats = Some(Nil), clustered = true).map(_._1)
