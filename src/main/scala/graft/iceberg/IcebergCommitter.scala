@@ -1234,20 +1234,12 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     Some(CommitResult(snapshotId, won, next))
   }
 
-  /** Every file path named by ANY snapshot's manifests (both contents, all
-    * statuses) — the "is it referenced at all" set expire's physical GC and
-    * orphan GC subtract from. Computed over the UNION of unique manifests,
-    * not per snapshot: the carry-forward list makes snapshot i reference
-    * O(i) manifests, so a per-snapshot entry walk is QUADRATIC in chain
-    * length (the shape a per-trigger-committing table's nightly vacuum
-    * pays at ~17k snapshots/day) while the union parses and walks each
-    * manifest exactly once. Status-2 entries still count as references on
-    * purpose: a file named only by history belongs to expire's
-    * keep-set arithmetic, and orphan GC must never sweep it. */
-  private def allReferencedFilePaths(meta: TableMetadata): Set[String] =
-    filePathsIn(allManifestPaths(meta))
-
-  /** Union of every manifest path any snapshot's list carries. */
+  /** Union of every manifest path any snapshot's list carries. Expire's
+    * physical GC walks this UNION, not each snapshot's list: the
+    * carry-forward list makes snapshot i reference O(i) manifests, so a
+    * per-snapshot entry walk is QUADRATIC in chain length (the shape a
+    * per-trigger-committing table's nightly vacuum pays at ~17k
+    * snapshots/day) while the union parses each manifest exactly once. */
   private def allManifestPaths(meta: TableMetadata): Set[String] =
     meta.snapshots.iterator
       .flatMap(s => IcebergCommitter.cachedManifestList(io, s.manifestList))
@@ -1274,46 +1266,6 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     load().flatMap(_.currentSnapshot).map(_.summary).getOrElse(Map.empty).collect {
       case (k, v) if k.startsWith("zombi.watermark.") => k.stripPrefix("zombi.watermark.").toInt -> v.toLong
     }
-
-  /** Orphan-file GC: physically delete `data/` files referenced by NO
-    * snapshot (any status, any retained snapshot) and NO staged-batch
-    * marker. Such files are crash leftovers — a writer that died between
-    * its data write and its marker/commit (the reference's stranded
-    * uncommitted S3 uploads) — invisible to every reader but accumulating
-    * storage forever. `olderThanMs` protects in-flight writes that have
-    * finished their data files but not yet published a marker or snapshot:
-    * only files older than the horizon are eligible. Returns deleted paths.
-    *
-    * This is a SCHEDULED-MAINTENANCE operation, not an inline step: it
-    * lists `data/` recursively and parses every snapshot's manifest chain
-    * (at 100 TB, ~800k-file listings), and the horizon must comfortably
-    * exceed the longest possible write→commit window of any UNMARKED
-    * writer (batch ingest / compaction / delete rewrites stage files in
-    * `data/` for the duration of their footer-stats pass + commit — only
-    * streamed batches carry markers). The 24 h default dwarfs any such
-    * window; operators with faster guarantees can pass a tighter horizon.
-    *
-    * Status-2 (deleted) manifest entries count as references on purpose:
-    * their physical files are removed by compaction/DELETE themselves, and
-    * a file that reappears in no active set but is still named by history
-    * belongs to `expireSnapshots`, not to this sweep. */
-  def removeOrphans(olderThanMs: Long = 24L * 60 * 60 * 1000): Seq[String] = synchronized {
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    // BOTH contents: live position/equality delete files sit under
-    // `data/deletes/` — a content=0-only walk would sweep them as orphans
-    // once past the horizon and silently unmask their rows
-    val referenced: Set[String] =
-      load().map(allReferencedFilePaths).getOrElse(Set.empty)
-    val staged: Set[String] = io.list("staged")
-      .filter(_.endsWith(".marker"))
-      .flatMap(m => new String(io.get(m), "UTF-8").split('\n').filter(_.nonEmpty))
-      .toSet
-    val orphans = io.listFilesRecursive("data").collect {
-      case (rel, mtime) if mtime < cutoff && !referenced(rel) && !staged(rel) => rel
-    }
-    orphans.foreach(io.delete)
-    orphans.sorted
-  }
 }
 
 /** Process-wide parse caches for IMMUTABLE table files: a `v{N}.metadata.json`

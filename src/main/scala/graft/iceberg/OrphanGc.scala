@@ -4,12 +4,32 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Distributed orphan-file GC — the scale path for
-  * [[IcebergCommitter.removeOrphans]] (which walks the listing and every
-  * manifest on the driver: fine for 10⁴ files, a bottleneck at the ~800k
-  * files a 100 TB table carries).
+/** Orphan-file GC: physically delete `data/` files referenced by NO
+  * snapshot (any status, any retained snapshot) and NO staged-batch marker.
+  * Such files are crash leftovers — a writer that died between its data
+  * write and its marker/commit — invisible to every reader but
+  * accumulating storage forever.
   *
-  * Shape (the same one Iceberg's own `remove_orphan_files` action uses):
+  *  - `olderThanMs` protects in-flight writes that have finished their
+  *    data files but not yet published a marker or snapshot: only files
+  *    older than the horizon are eligible. The horizon must comfortably
+  *    exceed the longest write→commit window of any UNMARKED writer (batch
+  *    ingest / compaction / delete rewrites stage files in `data/` for the
+  *    duration of their footer-stats pass + commit — only streamed batches
+  *    carry markers). The 24 h default dwarfs any such window; operators
+  *    with faster guarantees can pass a tighter horizon.
+  *  - References cover BOTH contents: live position/equality delete files
+  *    sit under `data/deletes/`, and sweeping one would silently unmask
+  *    its rows.
+  *  - Status-2 (deleted) manifest entries count as references on purpose:
+  *    their physical files are removed by compaction/DELETE themselves, and
+  *    a file still named by history belongs to `expireSnapshots`, not to
+  *    this sweep.
+  *
+  * It is a SCHEDULED-MAINTENANCE operation (admin `POST /tables/{t}/gc`,
+  * `Maintenance.vacuum`), never an inline step, and it runs as a Spark job
+  * in the shape Iceberg's own `remove_orphan_files` action uses — at 100 TB
+  * a table carries ~800k files, too many to list and match on the driver:
   *  - the driver enumerates only NAMESPACE-SIZED inputs — the first level
   *    of `data/` (partition dirs), the manifest-LIST files (one per
   *    snapshot), and the staged-batch markers;
@@ -17,10 +37,7 @@ import org.apache.spark.util.SerializableConfiguration
   *    its `data/` subtree (path + mtime) and parses its slice of manifests
   *    into referenced paths;
   *  - eligibility is one `left_anti` join: listing minus (manifest entries
-  *    ∪ staged markers), mtime-gated by the same `olderThanMs` horizon as
-  *    the driver path (files younger than the horizon may belong to an
-  *    in-flight writer that has not yet published a marker or snapshot —
-  *    see the horizon discussion on [[IcebergCommitter.removeOrphans]]).
+  *    ∪ staged markers), mtime-gated by the horizon.
   *
   * Only the RESULT (the orphans themselves — crash leftovers, bounded by
   * failure frequency, not table size) is ever collected to the driver.
@@ -85,8 +102,7 @@ object OrphanGc {
       .select("path")
   }
 
-  /** Run the sweep and delete. Same contract as
-    * [[IcebergCommitter.removeOrphans]]: returns the deleted paths sorted.
+  /** Run the sweep and delete; returns the deleted paths sorted.
     * Deletes run executor-side (object-store DELETE is a per-file
     * round-trip — serializing them on the driver would make the reclaim
     * latency-bound); only the path LIST is collected, which is safe —

@@ -285,7 +285,7 @@ final class GatewayServer(
         val expired = committer(t).expireSnapshots(keep)
         sendJson(ex, 200, s"""{"table":"${escape(t)}","expired":[${expired.mkString(",")}]}""")
       // scheduled-maintenance orphan GC (crash leftovers in data/) — see
-      // IcebergCommitter.removeOrphans for why this is an admin call, not
+      // OrphanGc for why this is an admin call, not
       // an inline compaction step
       case ("POST", List("tables", t, "gc")) =>
         validated(t)
@@ -295,7 +295,7 @@ final class GatewayServer(
         // staged-batch marker (and bulk flushes carry no marker at all), so
         // a tiny/zero horizon racing an in-flight write would GC files the
         // imminent commit references. Unclamped horizons are reachable only
-        // through direct IcebergCommitter.removeOrphans calls (tests).
+        // through direct OrphanGc.remove calls (tests).
         val horizon = math.max(requested, minGcHorizonMs)
         // the DISTRIBUTED sweep (OrphanGc): listing and manifest parsing run
         // as a Spark job, so an admin gc on an 800k-file table doesn't pin

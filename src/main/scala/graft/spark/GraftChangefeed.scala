@@ -1,19 +1,11 @@
 package graft.spark
 
-import graft.iceberg.{FieldIds, IcebergCommitter, TableIO}
+import graft.iceberg.{IcebergCommitter, TableIO}
 import graft.table.EventTable
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** STREAMING CDC source: `spark.readStream.format("graft")
   * .option("changefeed", "true").load(root)` — the committed table as a
@@ -86,17 +78,6 @@ final class GraftChangefeedScan(tableRoot: String, required: StructType,
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftChangefeedStream(tableRoot, required, fromSnapshot, fromTimestampMs)
 }
-
-/** One changefeed file read: `changeType` is the constant `_change_type`
-  * value; delete partitions carry the resolution masks — a row emits iff
-  * it survives every `drop*` mask (live at the parent) AND hits a `keep*`
-  * mask (this commit deleted it). Insert partitions carry no masks. */
-final case class ChangefeedPartition(tableRoot: String, relPath: String,
-                                     changeType: String,
-                                     dropPos: Array[Long] = Array.empty,
-                                     dropEq: Array[Long] = Array.empty,
-                                     keepPos: Array[Long] = Array.empty,
-                                     keepEq: Array[Long] = Array.empty) extends InputPartition
 
 final class GraftChangefeedStream(tableRoot: String, required: StructType,
                                   fromSnapshot: Option[Long],
@@ -187,11 +168,10 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
 
     val meta = committer.load().getOrElse(throw new IllegalStateException(
       s"table $tableRoot metadata unreadable while planning changefeed $from -> $to"))
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
     // the checkpointed END of a replayed batch can itself have expired
     // while the stream was down — validate it BEFORE the walk, or the
     // lag guard's own recovery-point resolution would crash on it
-    if (!byId.contains(to)) {
+    if (!meta.snapshots.exists(_.snapshotId == to)) {
       val recovery = meta.currentSnapshotId
         .map(h => committer.oldestRetainedAncestorOf(meta, h))
         .map(r => s"snapshot ${r.snapshotId} (history before ${r.timestampMs} is expired) or ")
@@ -200,49 +180,21 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
         s"changefeed history expired: end snapshot $to of range ($from, $to] is no longer " +
           s"in metadata — restart from ${recovery}a full read")
     }
-    // walk the parent chain to the base (or to table creation for -1);
-    // an expired snapshot in the range fails LOUD here
-    var cur = to
-    val rangeBuf = scala.collection.mutable.ArrayBuffer.empty[graft.iceberg.Snapshot]
-    while (cur != from && cur != -1L) {
-      // LAG GUARD: a consumer lagging past the maintenance clock's
-      // retention hits expired history here — name the restart point, not
-      // a generic unknown-snapshot error
-      val s = byId.getOrElse(cur, {
-        val oldest = committer.oldestRetainedAncestorOf(meta, to)
-        throw new IllegalStateException(
-          s"changefeed history expired at ${oldest.timestampMs}: snapshot $cur in range " +
-            s"($from, $to] is no longer in metadata — restart from snapshot " +
-            s"${oldest.snapshotId} (or a full read)")
-      })
-      rangeBuf += s
-      cur = s.parentSnapshotId.getOrElse(
-        if (from == -1L) -1L
-        else throw new IllegalArgumentException(
-          s"changefeed checkpoint snapshot $from is not an ancestor of $to"))
-    }
-    val ordered = rangeBuf.reverse.toSeq
-    // validate the WHOLE range before building any partition (the
-    // changesBetween discipline: a replace's physically-deleted files must
-    // surface as the refusal, not a missing-path read error). The shared
-    // rule also admits DATA-PRESERVING replaces (compaction/MoR folds),
-    // which contribute nothing below — a checkpointed feed survives the
-    // maintenance clock's vacuums instead of dying at every compaction.
-    // Validation returns each delete commit's resolved inputs, reused
-    // below instead of a second manifest walk.
+    // from = -1 walks to table creation; validation admits DATA-PRESERVING
+    // replaces (compaction/MoR folds), which contribute nothing below, so
+    // a checkpointed feed survives the maintenance clock's vacuums
+    val ordered      = EventTable.feedRange(committer, meta, from, to)
     val deleteInputs = EventTable.validateFeedRange(committer, meta, ordered, from, to)
 
     val spark = org.apache.spark.sql.SparkSession.active
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    ordered.foreach { s =>
-      val op = s.summary.getOrElse("operation", "append")
-      if (s.summary.get("zombi.rewrite-manifests").contains("true") ||
-          s.summary.get("zombi.data-preserving").contains("true")) ()
-      else op match {
+    ordered.filterNot(EventTable.feedSkips).foreach { s =>
+      s.summary.getOrElse("operation", "append") match {
         case "append" =>
           committer.entriesAtOf(meta, s.snapshotId)
             .filter(e => e.status == 1 && e.snapshotId == s.snapshotId)
-            .foreach(e => parts += ChangefeedPartition(tableRoot, e.dataFile.filePath, "insert"))
+            .foreach(e => parts += GraftInputPartition(tableRoot, e.dataFile.filePath,
+              changeType = Some("insert")))
         case "delete" =>
           val inputs = deleteInputs(s.snapshotId) // resolved once, in validation
           val newDels     = inputs.newDels
@@ -262,29 +214,17 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
               s"changefeed delete snapshot ${s.snapshotId} resolves $totalRows mask rows " +
                 s"(> inline cap ${GraftScan.inlineMaskCap(spark)}): the delete commit " +
                 "predates a fold — vacuum the table and replay from a full read instead")
-            // both mask sets ride the cached driver index reads
+            // both mask sets ride the cached driver index reads; the prior
+            // masks drop rows already dead at the parent, this commit's
+            // masks keep exactly the rows it deleted
             val (dropPosBy, dropEqBy) = GraftScan.deleteMasksFor(tableRoot, priorDels)
             val (keepPosBy, keepEqBy) = GraftScan.deleteMasksFor(tableRoot, newDels)
             parentFiles.foreach { f =>
-              val key = EventTable.morKeyOf(f.filePath)
-              val pid = EventTable.pathPartitionOf(f.filePath)
-              def seqSlice(m: Map[Int, Array[Long]]): Array[Long] = {
-                val all = m.getOrElse(pid, Array.empty[Long])
-                if (all.isEmpty) all
-                else {
-                  val lo = f.lowerLong(FieldIds.Sequence).getOrElse(Long.MinValue)
-                  val hi = f.upperLong(FieldIds.Sequence).getOrElse(Long.MaxValue)
-                  all.filter(x => x >= lo && x <= hi)
-                }
-              }
-              val keepPos = keepPosBy.getOrElse(key, Array.empty[Long])
-              val keepEq  = seqSlice(keepEqBy)
+              val hit = GraftScan.maskedPartition(tableRoot, f, keepPosBy, keepEqBy)
               // a parent file none of this commit's masks touch emits nothing
-              if (keepPos.nonEmpty || keepEq.nonEmpty)
-                parts += ChangefeedPartition(tableRoot, f.filePath, "delete",
-                  dropPos = dropPosBy.getOrElse(key, Array.empty[Long]),
-                  dropEq  = seqSlice(dropEqBy),
-                  keepPos = keepPos, keepEq = keepEq)
+              if (hit.delPositions.nonEmpty || hit.eqSeqs.nonEmpty)
+                parts += GraftScan.maskedPartition(tableRoot, f, dropPosBy, dropEqBy).copy(
+                  keepPositions = hit.delPositions, keepSeqs = hit.eqSeqs, changeType = Some("delete"))
             }
           }
         case other => throw new IllegalStateException( // unreachable: validated above
@@ -294,95 +234,5 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
     parts.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangefeedReaderFactory(required)
-}
-
-final class ChangefeedReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ChangefeedPartitionReader(partition.asInstanceOf[ChangefeedPartition], required)
-}
-
-/** Row reader for one changefeed file: inserts emit every row; deletes
-  * emit exactly the rows live at the parent (survive `drop*`) that this
-  * commit masked (hit `keep*`). `_change_type` and directory-key columns
-  * ride as per-reader constants. */
-final class ChangefeedPartitionReader(p: ChangefeedPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(s"${p.tableRoot}/${p.relPath}"),
-    new org.apache.hadoop.conf.Configuration()))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val columnIO   = new ColumnIOFactory().getColumnIO(fileSchema)
-  private val inPages: Array[Boolean] =
-    required.fields.map(f => f.name != "_change_type" && fileSchema.containsField(f.name))
-  private val consts: Array[AnyRef] =
-    required.fields.map { f =>
-      if (f.name == "_change_type") UTF8String.fromString(p.changeType)
-      else GraftPathValues.constOf(p.relPath, f)
-    }
-  private val isDelete = p.changeType == "delete"
-  require(!isDelete || (p.keepEq.isEmpty && p.dropEq.isEmpty) || fileSchema.containsField("sequence"),
-    s"${p.relPath} carries equality masks but has no sequence column")
-
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var current: InternalRow = _
-  private var ordinal  = -1L
-  private var dropIdx  = 0
-  private var keepIdx  = 0
-
-  /** emit = survives EVERY drop mask (live at the parent) AND — for
-    * deletes — hits a keep mask. Both positional cursors advance before
-    * any verdict so ordinals stay aligned across early returns. */
-  private def emits(g: Group): Boolean = {
-    var droppedPos = false
-    if (dropIdx < p.dropPos.length && p.dropPos(dropIdx) == ordinal) { dropIdx += 1; droppedPos = true }
-    var keptPos = false
-    if (keepIdx < p.keepPos.length && p.keepPos(keepIdx) == ordinal) { keepIdx += 1; keptPos = true }
-    if (droppedPos) return false
-    if (!isDelete) return true
-    if (p.dropEq.isEmpty && p.keepEq.isEmpty) return keptPos
-    val seq = g.getLong("sequence", 0)
-    if (p.dropEq.nonEmpty && java.util.Arrays.binarySearch(p.dropEq, seq) >= 0) return false
-    keptPos || (p.keepEq.nonEmpty && java.util.Arrays.binarySearch(p.keepEq, seq) >= 0)
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      while (rowsLeftInGroup == 0) {
-        val pages = reader.readNextRowGroup()
-        if (pages == null) return false
-        recordReader = columnIO.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-        rowsLeftInGroup = pages.getRowCount
-      }
-      val g = recordReader.read()
-      rowsLeftInGroup -= 1
-      ordinal += 1
-      if (emits(g)) { current = toRow(g); return true }
-    }
-    false // unreachable
-  }
-
-  private def toRow(g: Group): InternalRow = {
-    val vals = required.fields.zipWithIndex.map { case (f, i) =>
-      if (!inPages(i)) consts(i)
-      else if (g.getFieldRepetitionCount(f.name) > 0) {
-        f.dataType match {
-          case LongType    => g.getLong(f.name, 0)
-          case IntegerType => g.getInteger(f.name, 0)
-          case DateType    => g.getInteger(f.name, 0)
-          case StringType  => UTF8String.fromString(g.getString(f.name, 0))
-          case BinaryType  => g.getBinary(f.name, 0).getBytes
-          case DoubleType  => g.getDouble(f.name, 0)
-          case BooleanType => g.getBoolean(f.name, 0)
-          case other       => throw new IllegalArgumentException(s"unsupported type $other")
-        }
-      } else null
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(required)
 }

@@ -2,20 +2,28 @@ package graft.spark
 
 import graft.iceberg.{DataFile, FieldIds, IcebergCommitter, TableIO}
 import graft.table.EventTable
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
@@ -203,11 +211,19 @@ object GraftScanBuilder {
   * reader factory resolves this file's masks from a shared Spark broadcast
   * instead — one driver copy, torrent-distributed, so the scan degrades
   * gracefully rather than bloating every task. Past the absolute
-  * [[GraftScan.maxMaskCap]] the scan refuses — compact first. */
+  * [[GraftScan.maxMaskCap]] the scan refuses — compact first.
+  *
+  * A changefeed DELETE partition adds keep masks — `keepPositions` /
+  * `keepSeqs`, the rows its delete commit masked: a row is emitted only
+  * if it survives the drop masks above AND hits a keep mask. `changeType`
+  * is the changefeed's constant `_change_type` value. */
 final case class GraftInputPartition(tableRoot: String, relPath: String,
                                      delPositions: Array[Long] = Array.empty,
                                      eqSeqs: Array[Long] = Array.empty,
-                                     broadcastMasks: Boolean = false) extends InputPartition
+                                     broadcastMasks: Boolean = false,
+                                     keepPositions: Array[Long] = Array.empty,
+                                     keepSeqs: Array[Long] = Array.empty,
+                                     changeType: Option[String] = None) extends InputPartition
 
 final class GraftScan(tableRoot: String, tableSchema: StructType, required: StructType,
                       pushed: Array[Filter], snapshotId: Option[Long] = None,
@@ -310,12 +326,10 @@ final class GraftScan(tableRoot: String, tableSchema: StructType, required: Stru
   /** One partition per data file that SURVIVES manifest-bound pruning;
     * `snapshotId` pins the file set to a historical snapshot (SQL
     * `VERSION AS OF` / `TIMESTAMP AS OF` time travel). */
-  /** ONE metadata load shared by the file listing, the delete masks, and
-    * the reader-factory's columnar decision: separate loads would let a
-    * delete+append race the listing (silent masked rows), and Spark
-    * requires a SCAN-UNIFORM columnar/row choice — the factory must know
-    * whether ANY planned file carries masks. A Scan plans once; lazy is
-    * the per-query memo. */
+  /** ONE metadata load shared by the file listing, the delete masks and
+    * the statistics: separate loads would let a delete+append race the
+    * listing (silent masked rows). A Scan plans once; lazy is the
+    * per-query memo. */
   private lazy val planState: Option[(graft.iceberg.TableMetadata, Seq[DataFile], Seq[DataFile])] = {
     val committer = new IcebergCommitter(TableIO.forRoot(tableRoot), EventTable.Topic)
     committer.load().map { meta =>
@@ -327,7 +341,7 @@ final class GraftScan(tableRoot: String, tableSchema: StructType, required: Stru
   }
 
   // merge-on-read: delete files AT THE READ SNAPSHOT become per-file masks
-  // the readers apply: positional rows by file identity + row ordinal,
+  // the reader applies: positional rows by file identity + row ordinal,
   // equality keys by (partition, sequence). Time travel composes: a
   // delete-era snapshot reads masked while its delete files exist; after a
   // fold physically deletes them, planning fails loud on the missing
@@ -369,10 +383,7 @@ final class GraftScan(tableRoot: String, tableSchema: StructType, required: Stru
   override def planInputPartitions(): Array[InputPartition] = planned._1
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // ALWAYS columnar-capable: masked partitions decode through the same
-    // vectorized reader and apply their masks batch-side (selection-copy),
-    // so one delete file no longer de-vectorizes the whole scan
-    new GraftReaderFactory(required, masks = planned._2)
+    GraftReaderFactory(required, masks = planned._2)
 
   override def description(): String =
     s"GraftScan pruned on [${pushed.mkString(", ")}]"
@@ -689,181 +700,139 @@ final class GraftMicroBatchStream(tableRoot: String, required: StructType, pushe
     // the bootstrap is the only batch that can carry masks (incremental
     // batches are append-only by appendsBetween's guard, appended rows
     // postdate every equality tombstone via the watermark pin, and
-    // positional deletes reference only pre-existing files); masked
-    // partitions stay columnar — the masked reader applies them batch-side
-    new GraftReaderFactory(required, masks = bootstrapMasks)
+    // positional deletes reference only pre-existing files)
+    GraftReaderFactory(required, masks = bootstrapMasks)
 }
 
-final class GraftReaderFactory(required: StructType,
-                               masks: GraftScan.MaskBroadcast = None) extends PartitionReaderFactory {
-  /** This partition's mask slices: inline from the task binary, or
-    * resolved executor-side from the shared broadcast (same keying as the
-    * inline path: file identity + path partition; bounds pruning of the
-    * equality slice is a task-binary optimization the broadcast path
-    * doesn't need — the readers binary-search anyway). */
-  private def masksOf(p: GraftInputPartition): (Array[Long], Array[Long]) =
-    if (!p.broadcastMasks) (p.delPositions, p.eqSeqs)
+final class GraftReaderFactory(required: StructType, masks: GraftScan.MaskBroadcast,
+                               conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
+  /** This partition with its delete masks in hand: inline from the task
+    * binary, or resolved executor-side from the shared broadcast (same
+    * keying as the inline path: file identity + path partition; bounds
+    * pruning of the equality slice is a task-binary optimization the
+    * broadcast path doesn't need — the reader binary-searches anyway). */
+  private def resolved(p: GraftInputPartition): GraftInputPartition =
+    if (!p.broadcastMasks) p
     else {
       val (posByFile, eqByPart) = masks.getOrElse(throw new IllegalStateException(
         s"${p.relPath} planned broadcast masks but the factory carries none")).value
-      val part = graft.table.EventTable.pathPartitionOf(p.relPath)
-      (posByFile.getOrElse(graft.table.EventTable.morKeyOf(p.relPath), Array.empty[Long]),
-       eqByPart.getOrElse(part, Array.empty[Long]))
+      p.copy(delPositions = posByFile.getOrElse(EventTable.morKeyOf(p.relPath), Array.empty[Long]),
+             eqSeqs = eqByPart.getOrElse(EventTable.pathPartitionOf(p.relPath), Array.empty[Long]))
     }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    val (dp, eqs) = masksOf(p)
-    new GraftPartitionReader(p.tableRoot, p.relPath, required, dp, eqs)
-  }
-
-  // Columnar ALWAYS: every committed column type is vectorizable, and a
-  // masked partition decodes through the same vectorized reader with its
-  // masks applied batch-side (GraftMaskedColumnarReader's selection-copy)
-  // — one delete file must not de-vectorize a 100 TB scan. The row reader
-  // above remains as the generic fallback.
+  // Columnar ALWAYS: every committed column type is vectorizable, and masks
+  // apply batch-side — one delete file must not de-vectorize a 100 TB scan.
+  // Spark asks for a row reader only when a partition refuses columnar.
   override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft reads are columnar")
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    val (dp, eqs) = masksOf(p)
-    if (dp.isEmpty && eqs.isEmpty) new GraftColumnarReader(p.tableRoot, p.relPath, required)
-    else new GraftMaskedColumnarReader(p.tableRoot, p.relPath, required, dp, eqs)
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new GraftFileReader(resolved(partition.asInstanceOf[GraftInputPartition]), required, conf.value.value)
+}
+
+object GraftReaderFactory {
+  /** The factory for one planned read. The session's Hadoop conf
+    * (`spark.hadoop.*`, `sparkContext.hadoopConfiguration`: s3a
+    * credentials, endpoints, `fs.<scheme>.impl`) ships once per read as a
+    * broadcast — the TaskWriter/OrphanGc pattern — so every executor-side
+    * footer and page read resolves the FileSystem the driver resolved. The
+    * read-support class and the SQL keys the vectorized decoder's schema
+    * converter requires are pinned here, once, to the values Spark's
+    * path-form `VectorizedParquetRecordReader.initialize` uses. */
+  def apply(required: StructType, masks: GraftScan.MaskBroadcast = None): GraftReaderFactory = {
+    val conf = TableIO.hadoopConf()
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
+        SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => conf.setBoolean(e.key, false))
+    val bc = org.apache.spark.sql.SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(conf))
+    new GraftReaderFactory(required, masks, bc)
   }
 }
 
 /** Vectorized read of one committed file through Spark's own
-  * VectorizedParquetRecordReader — the same decoder `spark.read.parquet`
-  * uses (column pruning honored file-side, batch-at-a-time decode), so a
-  * full scan through `format("graft")` tracks the native reader's speed
-  * while keeping OUR manifest-bound file pruning in planInputPartitions.
-  * The identity `partition` value is not in the data pages; it rides in as
-  * a constant partition column via initBatch. */
-final class GraftColumnarReader(tableRoot: String, relPath: String, required: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  // Schema-evolution + partition-spec support: columns requested but ABSENT
-  // from this file's pages cannot be projected by the vectorized decoder —
-  // they ride in as CONSTANT vectors through initBatch: directory keys
-  // (`partition` always; `event_date` under the evolved date spec) decode
-  // from the Hive path, columns added by schema evolution as null.
-  private val footerFields: Set[String] = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$tableRoot/$relPath"), new org.apache.hadoop.conf.Configuration()))
-    try fr.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-    finally fr.close()
-  }
-  private val present     = required.fields.filter(f => footerFields.contains(f.name))
-  private val constFields = required.fields.filterNot(f => footerFields.contains(f.name))
-  private val constValues: Array[Any] =
-    constFields.map(f => GraftPathValues.constOf(relPath, f): Any)
-
-  private val reader = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-    /* useOffHeap = */ false, /* capacity = */ 4096)
-  reader.initialize(s"$tableRoot/$relPath", present.map(_.name).toSeq.asJava)
-  reader.initBatch(StructType(constFields.toIndexedSeq), new GenericInternalRow(constValues))
-  reader.enableReturningBatches()
-
-  // The decoder emits [present..., missing-nulls..., partition]; when an
-  // evolved column sits mid-schema the batch must be permuted back to the
-  // requested order. Vectors are stable across batches, so the permuted
-  // wrapper is built once.
-  private val batchOrder  = (present ++ constFields).map(_.name)
-  private val perm        = required.fields.map(f => batchOrder.indexOf(f.name))
-  private val isIdentity  = perm.zipWithIndex.forall { case (p, i) => p == i }
-  private var permuted: org.apache.spark.sql.vectorized.ColumnarBatch = _
-
-  override def next(): Boolean = reader.nextKeyValue()
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-    val b = reader.getCurrentValue.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-    if (isIdentity) b
-    else {
-      if (permuted == null)
-        permuted = new org.apache.spark.sql.vectorized.ColumnarBatch(perm.map(b.column(_)))
-      permuted.setNumRows(b.numRows())
-      permuted
-    }
-  }
-  override def close(): Unit = reader.close()
-}
-
-/** Vectorized read of one MASKED committed file: the same
-  * VectorizedParquetRecordReader decode as [[GraftColumnarReader]], with
-  * the merge-on-read masks applied BATCH-SIDE — masked physical ordinals
-  * (position deletes) and tombstoned sequences (equality deletes) are
-  * dropped by a selection-copy into on-heap output vectors, so a
-  * delete-bearing snapshot keeps vectorized parquet decode (the expensive
-  * part) instead of degrading the whole scan to the row reader. A batch
-  * with nothing masked ships as a zero-copy view. When equality masks are
-  * present but the projection doesn't include `sequence`, the column is
-  * read as a HIDDEN extra for the mask check and excluded from the output
-  * order. */
-final class GraftMaskedColumnarReader(tableRoot: String, relPath: String, required: StructType,
-                                      delPositions: Array[Long], eqSeqs: Array[Long])
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  * VectorizedParquetRecordReader — the decoder `spark.read.parquet` uses
+  * (column pruning file-side, batch-at-a-time decode), so a scan through
+  * `format("graft")` tracks the native reader's speed while keeping OUR
+  * manifest-bound file pruning in planInputPartitions. It serves the batch
+  * scan, the SQL catalog, the append tail and the changefeed stream.
+  *
+  * Columns requested but absent from this file's pages ride in as
+  * CONSTANT vectors through initBatch: directory keys (`partition` always;
+  * `event_date` under the evolved date spec) decode from the Hive path,
+  * `_change_type` from the partition, columns added by schema evolution
+  * as null. The footer is read once, with the broadcast session conf, and
+  * handed to the decoder with its open stream.
+  *
+  * Masks apply BATCH-SIDE: a row is emitted iff no drop mask hits it
+  * (`delPositions`: masked physical ordinals; `eqSeqs`: tombstoned
+  * sequences) and — when keep masks are set (a changefeed delete
+  * partition) — a keep mask does (`keepPositions`/`keepSeqs`). Survivors
+  * of a partly-masked batch are selection-copied into on-heap vectors; a
+  * batch with nothing masked ships as a zero-copy view, and an unmasked
+  * partition never builds a selection at all. Sequence masks on a
+  * projection without `sequence` read it as a HIDDEN extra column. */
+final class GraftFileReader(p: GraftInputPartition, required: StructType, sharedConf: Configuration)
+    extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnVector
 
-  private val footerFields: Set[String] = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$tableRoot/$relPath"), new org.apache.hadoop.conf.Configuration()))
-    try fr.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-    finally fr.close()
-  }
-  require(eqSeqs.isEmpty || footerFields.contains("sequence"),
-    s"$relPath carries equality-delete masks but has no sequence column")
-  private val present     = required.fields.filter(f => footerFields.contains(f.name))
-  private val constFields = required.fields.filterNot(f => footerFields.contains(f.name))
-  private val constValues: Array[Any] = constFields.map(f => GraftPathValues.constOf(relPath, f): Any)
-  private val hiddenSeq   = eqSeqs.nonEmpty && !present.exists(_.name == "sequence")
-  private val readCols    = present.map(_.name).toSeq ++ (if (hiddenSeq) Seq("sequence") else Nil)
+  private val path   = new Path(s"${p.tableRoot}/${p.relPath}")
+  private val conf   = new Configuration(sharedConf) // the requested schema is per file
+  private val file   = HadoopInputFile.fromPath(path, conf)
+  private val stream = file.newStream()
+  private val reader = new VectorizedParquetRecordReader(/* useOffHeap = */ false, /* capacity = */ 4096)
 
-  private val reader = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-    /* useOffHeap = */ false, /* capacity = */ 4096)
-  reader.initialize(s"$tableRoot/$relPath", readCols.asJava)
-  reader.initBatch(StructType(constFields.toIndexedSeq), new GenericInternalRow(constValues))
-  reader.enableReturningBatches()
+  private val seqMasks  = p.eqSeqs.nonEmpty || p.keepSeqs.nonEmpty
+  private val selective = p.keepPositions.nonEmpty || p.keepSeqs.nonEmpty
+  private val masked    = selective || p.delPositions.nonEmpty || p.eqSeqs.nonEmpty
 
   // source batch column order: [present..., hidden seq?, const...]
-  private val batchOrder =
-    present.map(_.name) ++ (if (hiddenSeq) Seq("sequence") else Nil) ++ constFields.map(_.name)
-  private val srcIdx = required.fields.map(f => batchOrder.indexOf(f.name))
-  private val seqIdx = batchOrder.indexOf("sequence")
-  // all-kept fast path: a zero-copy wrapper of the source vectors in the
+  private val batchOrder: Seq[String] = try {
+    val footer = ParquetFileReader.readFooter(file, HadoopReadOptions.builder(conf, path).build(), stream)
+    val inPages = footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+    require(!seqMasks || inPages.contains("sequence"),
+      s"${p.relPath} carries sequence masks but has no sequence column")
+    val (present, consts) = required.fields.toSeq.partition(f => inPages.contains(f.name))
+    val hidden =
+      if (seqMasks && !present.exists(_.name == "sequence")) Seq(StructField("sequence", LongType))
+      else Nil
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, StructType(present ++ hidden).json)
+    reader.initialize(new FileSplit(path, 0L, file.getLength, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()), Some(file), Some(stream), Some(footer))
+    reader.initBatch(StructType(consts), new GenericInternalRow(consts.map(constOf).toArray[Any]))
+    reader.enableReturningBatches()
+    (present ++ hidden ++ consts).map(_.name)
+  } catch { case e: Throwable => reader.close(); stream.close(); throw e }
+
+  private val srcIdx   = required.fields.map(f => batchOrder.indexOf(f.name))
+  private val seqIdx   = batchOrder.indexOf("sequence")
+  // the raw batch is only safe when it IS the required projection
+  private val identity = batchOrder.length == srcIdx.length && srcIdx.zipWithIndex.forall { case (s, i) => s == i }
+  // all-kept path: a zero-copy wrapper of the source vectors in the
   // required order (vectors are stable across batches — built once)
   private var view: ColumnarBatch = _
-  // masked path: selection-copy targets, reset per batch
-  private val out: Array[OnHeapColumnVector] =
-    required.fields.map(f => new OnHeapColumnVector(4096, f.dataType))
-  private val outBatch = new ColumnarBatch(out.map(v => v: ColumnVector))
-  private val keep = new Array[Boolean](4096)
+  // masked path: per-batch selection and its copy targets, built on first use
+  private val keep = if (masked) new Array[Boolean](4096) else null
+  private var outBatch: ColumnarBatch = _
 
   private var ordinalBase = 0L // physical row index of the current batch's first row
-  private var delIdx      = 0  // cursor into the sorted delPositions
+  private var delIdx      = 0  // cursors into the sorted position masks
+  private var keepIdx     = 0
   private var current: ColumnarBatch = _
+
+  private def constOf(f: StructField): Any =
+    if (f.name == "_change_type" && p.changeType.isDefined) UTF8String.fromString(p.changeType.get)
+    else GraftFileReader.pathValue(p.relPath, f)
 
   override def next(): Boolean = {
     while (reader.nextKeyValue()) {
       val b = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-      val n = b.numRows()
-      java.util.Arrays.fill(keep, 0, n, true)
-      var kept = n
-      // positional masks: sorted ordinals falling in [base, base + n)
-      while (delIdx < delPositions.length && delPositions(delIdx) < ordinalBase + n) {
-        val off = delPositions(delIdx) - ordinalBase
-        if (off >= 0 && keep(off.toInt)) { keep(off.toInt) = false; kept -= 1 }
-        delIdx += 1
-      }
-      // equality masks: tombstoned sequences by value (binary search)
-      if (eqSeqs.nonEmpty) {
-        val seqVec = b.column(seqIdx)
-        var r = 0
-        while (r < n) {
-          if (keep(r) && java.util.Arrays.binarySearch(eqSeqs, seqVec.getLong(r)) >= 0) {
-            keep(r) = false; kept -= 1
-          }
-          r += 1
-        }
-      }
+      if (!masked) { current = viewOf(b); return true }
+      val n    = b.numRows()
+      val kept = select(b, n)
       ordinalBase += n
       if (kept == n) { current = viewOf(b); return true }
       if (kept > 0)  { current = compact(b, n, kept); return true }
@@ -872,19 +841,54 @@ final class GraftMaskedColumnarReader(tableRoot: String, relPath: String, requir
     false
   }
 
+  /** Fill `keep` for one batch; returns the kept-row count. Keep masks
+    * mark first, drop masks clear last, so a drop always wins. */
+  private def select(b: ColumnarBatch, n: Int): Int = {
+    java.util.Arrays.fill(keep, 0, n, !selective)
+    keepIdx = mark(p.keepPositions, keepIdx, n, value = true)
+    if (seqMasks) {
+      val seqVec = b.column(seqIdx)
+      var r = 0
+      while (r < n) {
+        if (keep(r) || p.keepSeqs.nonEmpty) {
+          val s = seqVec.getLong(r)
+          keep(r) = (keep(r) || GraftFileReader.hits(p.keepSeqs, s)) && !GraftFileReader.hits(p.eqSeqs, s)
+        }
+        r += 1
+      }
+    }
+    delIdx = mark(p.delPositions, delIdx, n, value = false)
+    var kept = 0
+    var r = 0
+    while (r < n) { if (keep(r)) kept += 1; r += 1 }
+    kept
+  }
+
+  /** Set `keep` at the sorted `positions` inside this batch; returns the
+    * advanced cursor. */
+  private def mark(positions: Array[Long], from: Int, n: Int, value: Boolean): Int = {
+    var i = from
+    while (i < positions.length && positions(i) < ordinalBase + n) {
+      val off = positions(i) - ordinalBase
+      if (off >= 0) keep(off.toInt) = value
+      i += 1
+    }
+    i
+  }
+
   private def viewOf(b: ColumnarBatch): ColumnarBatch = {
-    // the raw batch is only safe when it IS the required projection (no
-    // hidden column, no permutation)
-    if (!hiddenSeq && srcIdx.zipWithIndex.forall { case (s, i) => s == i }) return b
+    if (identity) return b
     if (view == null) view = new ColumnarBatch(srcIdx.map(b.column(_)))
     view.setNumRows(b.numRows())
     view
   }
 
   private def compact(b: ColumnarBatch, n: Int, kept: Int): ColumnarBatch = {
+    if (outBatch == null)
+      outBatch = new ColumnarBatch(required.fields.map(f => new OnHeapColumnVector(4096, f.dataType): ColumnVector))
     var i = 0
     while (i < required.fields.length) {
-      val dst = out(i); dst.reset()
+      val dst = outBatch.column(i).asInstanceOf[OnHeapColumnVector]; dst.reset()
       val src = b.column(srcIdx(i))
       val dt  = required.fields(i).dataType
       var r = 0; var o = 0
@@ -912,13 +916,16 @@ final class GraftMaskedColumnarReader(tableRoot: String, relPath: String, requir
   }
 
   override def get(): ColumnarBatch = current
-  override def close(): Unit = { reader.close(); outBatch.close() }
+  override def close(): Unit = { reader.close(); if (outBatch != null) outBatch.close() }
 }
 
-/** Typed constants recovered from a file's Hive path segments — the one
-  * decode both V2 readers share for directory-key columns. */
-object GraftPathValues {
-  def constOf(relPath: String, f: org.apache.spark.sql.types.StructField): AnyRef = {
+object GraftFileReader {
+  private def hits(sorted: Array[Long], s: Long): Boolean =
+    sorted.nonEmpty && java.util.Arrays.binarySearch(sorted, s) >= 0
+
+  /** A directory-key column's typed value, decoded from the file's Hive
+    * path segment; null when the path has no such segment. */
+  private def pathValue(relPath: String, f: StructField): AnyRef = {
     val raw = relPath.split('/').collectFirst {
       case seg if seg.startsWith(f.name + "=") => seg.substring(f.name.length + 1)
     }
@@ -937,86 +944,4 @@ object GraftPathValues {
       }
     }
   }
-}
-
-/** Reads one committed parquet file via parquet-mr's Group API and emits
-  * only the required columns; the identity `partition` value comes from the
-  * Hive path (it is not materialized in the data pages). Merge-on-read
-  * masks: `delPositions` (sorted physical ordinals) skip by a running row
-  * counter — the exact `_metadata.row_index` semantics the delete writer
-  * recorded; `eqSeqs` (sorted tombstoned sequences for this file's
-  * partition) skip by binary search on the row's sequence. */
-final class GraftPartitionReader(tableRoot: String, relPath: String, required: StructType,
-                                 delPositions: Array[Long] = Array.empty,
-                                 eqSeqs: Array[Long] = Array.empty)
-    extends PartitionReader[InternalRow] {
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(s"$tableRoot/$relPath"), new org.apache.hadoop.conf.Configuration()))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val columnIO   = new ColumnIOFactory().getColumnIO(fileSchema)
-  // per-READER constants for page-absent columns (directory keys, evolved
-  // nulls) — the path is parsed once here, never per row
-  private val inPages: Array[Boolean] =
-    required.fields.map(f => fileSchema.containsField(f.name))
-  private val pathConsts: Array[AnyRef] =
-    required.fields.map(f => GraftPathValues.constOf(relPath, f))
-  require(eqSeqs.isEmpty || fileSchema.containsField("sequence"),
-    s"$relPath carries equality-delete masks but has no sequence column")
-
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var current: InternalRow = _
-  private var ordinal = -1L // physical row index within the file
-  private var delIdx  = 0   // cursor into the sorted delPositions
-
-  private def masked(g: Group): Boolean = {
-    if (delIdx < delPositions.length && delPositions(delIdx) == ordinal) {
-      delIdx += 1
-      return true
-    }
-    eqSeqs.nonEmpty &&
-      java.util.Arrays.binarySearch(eqSeqs, g.getLong("sequence", 0)) >= 0
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      while (rowsLeftInGroup == 0) {
-        val pages = reader.readNextRowGroup()
-        if (pages == null) return false
-        recordReader = columnIO.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-        rowsLeftInGroup = pages.getRowCount
-      }
-      val g = recordReader.read()
-      rowsLeftInGroup -= 1
-      ordinal += 1
-      if (delPositions.isEmpty && eqSeqs.isEmpty) { current = toRow(g); return true }
-      if (!masked(g)) { current = toRow(g); return true }
-    }
-    false // unreachable
-  }
-
-  private def toRow(g: Group): InternalRow = {
-    val vals = required.fields.zipWithIndex.map { case (f, i) =>
-      if (!inPages(i))
-        // not in the pages: a directory key (partition; event_date under
-        // the evolved spec) decodes from the path, evolved columns null
-        pathConsts(i)
-      else if (g.getFieldRepetitionCount(f.name) > 0) {
-        f.dataType match {
-          case LongType    => g.getLong(f.name, 0)
-          case IntegerType => g.getInteger(f.name, 0)
-          case DateType    => g.getInteger(f.name, 0)
-          case StringType  => UTF8String.fromString(g.getString(f.name, 0))
-          case BinaryType  => g.getBinary(f.name, 0).getBytes
-          case DoubleType  => g.getDouble(f.name, 0)
-          case BooleanType => g.getBoolean(f.name, 0)
-          case other       => throw new IllegalArgumentException(s"unsupported type $other")
-        }
-      } else null
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

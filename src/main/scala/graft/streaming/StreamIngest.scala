@@ -89,7 +89,7 @@ final class StreamIngest(
   /** F9/F10 on startup: adopt staged-but-uncommitted batches back into the
     * pending set (their files are already on disk); drop markers of batches
     * that did commit. Data files referenced by neither are orphans and stay
-    * invisible ([[IcebergCommitter.removeOrphans]] reclaims them).
+    * invisible ([[graft.iceberg.OrphanGc.remove]] reclaims them).
     *
     * A marker whose data files are INCOMPLETE (e.g. a crash mid-abandon
     * deleted some files after the marker was written) is a failed stage,

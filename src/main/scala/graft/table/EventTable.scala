@@ -1146,9 +1146,9 @@ object EventTable {
     val committer = new IcebergCommitter(TableIO.forRoot(tableRoot), Topic)
     val meta = committer.load().getOrElse(
       throw new IllegalStateException(s"table $tableRoot has no committed metadata"))
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    require(byId.contains(toSnapshotId), s"unknown snapshot $toSnapshotId (expired?)")
-    if (!byId.contains(fromSnapshotId)) {
+    val known = meta.snapshots.map(_.snapshotId).toSet
+    require(known(toSnapshotId), s"unknown snapshot $toSnapshotId (expired?)")
+    if (!known(fromSnapshotId)) {
       // the typical lagging-consumer case: the base expired — name the
       // recovery point, not a generic unknown-snapshot error
       val oldest = committer.oldestRetainedAncestorOf(meta, toSnapshotId)
@@ -1156,35 +1156,16 @@ object EventTable {
         s"changefeed history expired at ${oldest.timestampMs}: base snapshot $fromSnapshotId " +
           s"is no longer in metadata — restart from snapshot ${oldest.snapshotId} (or a full read)")
     }
-    var cur = toSnapshotId
-    val rangeBuf = scala.collection.mutable.ArrayBuffer.empty[graft.iceberg.Snapshot]
-    while (cur != fromSnapshotId) {
-      // lag guard (same contract as the streaming feed): expired history
-      // names the restart point instead of a generic unknown-snapshot error
-      val s = byId.getOrElse(cur, {
-        val oldest = committer.oldestRetainedAncestorOf(meta, toSnapshotId)
-        throw new IllegalStateException(
-          s"changefeed history expired at ${oldest.timestampMs}: snapshot $cur in range " +
-            s"($fromSnapshotId, $toSnapshotId] is no longer in metadata — restart from " +
-            s"snapshot ${oldest.snapshotId} (or a full read)")
-      })
-      rangeBuf += s
-      cur = s.parentSnapshotId.getOrElse(throw new IllegalArgumentException(
-        s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId"))
-    }
     val schema  = committer.currentSchemaOf(meta)
-    val ordered = rangeBuf.reverse.toSeq
+    val ordered = feedRange(committer, meta, fromSnapshotId, toSnapshotId)
     // validate the WHOLE range before building any scan: a replace in the
     // range physically deleted files, so a lazily-discovered refusal would
     // surface as a missing-path read error instead of the real reason.
     // Validation returns each delete commit's resolved inputs — reused
     // below instead of a second manifest walk.
     val deleteInputs = validateFeedRange(committer, meta, ordered, fromSnapshotId, toSnapshotId)
-    val parts: Seq[DataFrame] = ordered.flatMap { s =>
-      val op = s.summary.getOrElse("operation", "append")
-      if (s.summary.get("zombi.rewrite-manifests").contains("true") ||
-          s.summary.get("zombi.data-preserving").contains("true")) None
-      else op match {
+    val parts: Seq[DataFrame] = ordered.filterNot(feedSkips).flatMap { s =>
+      s.summary.getOrElse("operation", "append") match {
         case "append" =>
           val added = committer.entriesAtOf(meta, s.snapshotId)
             .filter(e => e.status == 1 && e.snapshotId == s.snapshotId).map(_.dataFile)
@@ -1226,6 +1207,42 @@ object EventTable {
     parts.foldLeft(empty)(_ unionByName _)
   }
 
+  /** The parent-chain range (from, to] in commit order — the ONE walk both
+    * changefeed forms plan from. `from = -1` walks to table creation (the
+    * stream's empty-table start). A snapshot missing from metadata is
+    * expired history: the LAG GUARD names the restart point instead of a
+    * generic unknown-snapshot error. A chain that ends without meeting a
+    * real `from` refuses: `from` is not an ancestor of `to`. */
+  private[graft] def feedRange(committer: IcebergCommitter, meta: graft.iceberg.TableMetadata,
+                               from: Long, to: Long): Seq[graft.iceberg.Snapshot] = {
+    val byId  = meta.snapshots.map(s => s.snapshotId -> s).toMap
+    val range = scala.collection.mutable.ArrayBuffer.empty[graft.iceberg.Snapshot]
+    var cur = to
+    while (cur != from && cur != -1L) {
+      val s = byId.getOrElse(cur, {
+        val oldest = committer.oldestRetainedAncestorOf(meta, to)
+        throw new IllegalStateException(
+          s"changefeed history expired at ${oldest.timestampMs}: snapshot $cur in range " +
+            s"($from, $to] is no longer in metadata — restart from " +
+            s"snapshot ${oldest.snapshotId} (or a full read)")
+      })
+      range += s
+      cur = s.parentSnapshotId.getOrElse(
+        if (from == -1L) -1L
+        else throw new IllegalArgumentException(
+          s"changefeed snapshot $from is not an ancestor of $to"))
+    }
+    range.reverse.toSeq
+  }
+
+  /** A snapshot a changefeed crosses emitting nothing: a manifest rewrite
+    * (no file identity changes) or a DATA-PRESERVING replace (compaction /
+    * MoR fold — live row set identical). */
+  private[graft] def feedSkips(s: graft.iceberg.Snapshot): Boolean =
+    s.summary.get("zombi.rewrite-manifests").contains("true") ||
+      (s.summary.get("operation").contains("replace") &&
+        s.summary.get("zombi.data-preserving").contains("true"))
+
   /** What a changefeed builder needs to resolve one MoR delete snapshot:
     * the commit's own delete files, the parent's live data files, and the
     * parent's active delete files (prior masks). */
@@ -1256,17 +1273,15 @@ object EventTable {
     val readPaths = scala.collection.mutable.Set.empty[String]
     val resolved  = scala.collection.mutable.Map.empty[Long, FeedDeleteInputs]
     ordered.foreach { s =>
-      val op        = s.summary.getOrElse("operation", "append")
-      val isRewrite = s.summary.get("zombi.rewrite-manifests").contains("true")
-      val isDp      = op == "replace" && s.summary.get("zombi.data-preserving").contains("true")
-      require(op == "append" || op == "delete" || isRewrite || isDp,
+      val op = s.summary.getOrElse("operation", "append")
+      require(op == "append" || op == "delete" || feedSkips(s),
         s"changefeed range contains snapshot ${s.snapshotId} with operation '$op' — " +
           "a row-level diff cannot represent a rewrite; fall back to a full read")
-      if (isRewrite) ()
-      else if (isDp) {
+      if (feedSkips(s)) {
         // removed DATA files (the merge) and removed DELETE files (the
         // fold) are both physically deleted — either kind still needed by
-        // an earlier in-range read makes the range uncrossable
+        // an earlier in-range read makes the range uncrossable (a
+        // manifest rewrite removes none)
         val removed = (committer.entriesAtOf(meta, s.snapshotId) ++
             committer.entriesAtOf(meta, s.snapshotId, content = 1))
           .filter(e => e.status == 2 && e.snapshotId == s.snapshotId)

@@ -565,4 +565,35 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(df.count() === EventTable.readCommitted(spark, root)
       .filter(col("partition").isin(2, 5)).count())
   }
+
+  test("V2 reads resolve the session's Hadoop conf: a scheme registered only there reads, masked and unmasked") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftsession.impl", classOf[SessionOnlyFs].getName)
+    // uncached: a read that builds its own Configuration must not borrow
+    // the driver's instance from Hadoop's process-wide FileSystem cache
+    hc.setBoolean("fs.graftsession.impl.disable.cache", true)
+    try {
+      val root = "graftsession://" + TestSpark.tempDir("graft-session-conf-")
+      EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(4))
+      def v2()  = spark.read.format("graft").load(root).select("partition", "sequence")
+      def mor() = EventTable.readCommitted(spark, root).select(col("partition").cast("int"), col("sequence"))
+      val n0 = mor().count()
+      assert(n0 > 0 && v2().count() === n0)
+      assert(v2().exceptAll(mor()).count() === 0L)
+      val r = EventTable.deleteWhereMor(spark, root, col("sequence") % 7 === 2)
+      assert(r.deletedRows > 0)
+      assert(v2().count() === n0 - r.deletedRows, "the masked read must resolve the scheme too")
+      assert(v2().exceptAll(mor()).count() === 0L && mor().exceptAll(v2()).count() === 0L)
+    } finally {
+      hc.unset("fs.graftsession.impl")
+      hc.unset("fs.graftsession.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under its own `graftsession` scheme, for a table
+  * root only the session's Hadoop conf can resolve. */
+final class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def getScheme: String = "graftsession"
 }

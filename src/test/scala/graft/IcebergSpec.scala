@@ -425,7 +425,7 @@ class IcebergSpec extends AnyFunSuite {
     val r1 = c.commitAppend(Seq(a))
     c.commitDeletes(Seq(d), r1.snapshotId)
     // the LIVE delete file is referenced metadata, never an orphan
-    assert(c.removeOrphans(olderThanMs = -1) === Nil)
+    assert(OrphanGc.remove(TestSpark.spark, c.io.root, olderThanMs = -1) === Nil)
     assert(c.io.exists(d.filePath))
     // fold: rewrite a -> m, retiring the delete file in the same commit
     c.io.put(m.filePath, Array[Byte](1))
@@ -444,33 +444,6 @@ class IcebergSpec extends AnyFunSuite {
     c.commitAppend(Seq(df("data/partition=0/a.parquet", 10, 0, 10)))
     intercept[IllegalArgumentException] { c.activeDataFilesAt(12345L) }
     intercept[IllegalArgumentException] { c.activeDeleteFilesAt(12345L) }
-  }
-
-  test("orphan GC removes exactly the unreferenced-and-old data files") {
-    val c = freshCommitter()
-    val committed = df("data/partition=0/kept.parquet", 10, 0, 10)
-    c.io.put(committed.filePath, Array[Byte](1))
-    c.commitAppend(Seq(committed))
-    // a staged-but-uncommitted batch: files + marker (a crashed stream's
-    // recoverable state — must survive GC)
-    c.io.put("data/partition=1/staged.parquet", Array[Byte](1))
-    c.io.put("staged/batch-7.marker", "data/partition=1/staged.parquet".getBytes("UTF-8"))
-    // true orphans: written, marker never made it (crash between data write
-    // and marker put)
-    c.io.put("data/partition=0/orphan1.parquet", Array[Byte](1))
-    c.io.put("data/partition=2/orphan2.parquet", Array[Byte](1))
-
-    // a fresh-files horizon deletes nothing (in-flight protection)
-    assert(c.removeOrphans(olderThanMs = 60000) === Nil)
-    val gone = c.removeOrphans(olderThanMs = -1)
-    assert(gone === Seq("data/partition=0/orphan1.parquet", "data/partition=2/orphan2.parquet"))
-    assert(c.io.exists("data/partition=0/kept.parquet"))
-    assert(c.io.exists("data/partition=1/staged.parquet"))
-    assert(!c.io.exists("data/partition=0/orphan1.parquet"))
-    assert(!c.io.exists("data/partition=2/orphan2.parquet"))
-    // current read unaffected; sweep is idempotent
-    assert(c.activeDataFiles().map(_.filePath) === Seq("data/partition=0/kept.parquet"))
-    assert(c.removeOrphans(olderThanMs = -1) === Nil)
   }
 
   test("distributed orphan GC (job path): same contract, listing never driver-materialized") {
@@ -493,13 +466,14 @@ class IcebergSpec extends AnyFunSuite {
     assert(plan.contains("MapPartitions"), plan)
     assert(plan.contains("LeftAnti"), plan)
 
-    // in-flight protection, then the same result set as the driver path
+    // in-flight protection, then exactly the unreferenced-and-old files
     assert(OrphanGc.remove(spark, root, olderThanMs = 60000) === Nil)
     val gone = OrphanGc.remove(spark, root, olderThanMs = -1)
     assert(gone === Seq("data/partition=0/orphan1.parquet", "data/partition=2/orphan2.parquet"))
     assert(c.io.exists("data/partition=0/kept.parquet"))
     assert(c.io.exists("data/partition=1/staged.parquet"))
     assert(!c.io.exists("data/partition=0/orphan1.parquet"))
+    assert(!c.io.exists("data/partition=2/orphan2.parquet"))
     assert(c.activeDataFiles().map(_.filePath) === Seq("data/partition=0/kept.parquet"))
     assert(OrphanGc.remove(spark, root, olderThanMs = -1) === Nil)
   }

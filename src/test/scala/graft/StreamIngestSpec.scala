@@ -14,6 +14,46 @@ class StreamIngestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  test("the streamed changefeed equals changesBetween as a multiset over a mixed range") {
+    import graft.extract.{FieldSpec, TableSchemaConfig}
+    val root = TestSpark.tempDir("graft-cfeq-").toString
+    val log  = EventLog.log(spark, sf).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val half = log.agg(max("event_id")).head().getLong(0) / 2
+      val c = EventTable.appendExtracted(spark, log.filter(col("event_id") <= half), root,
+        TableSchemaConfig(fields = Seq(FieldSpec("k", "k", "Int32"))), fragmentInto = Some(8))
+      val base = c.load().get.currentSnapshotId.get
+      // the range: one data-preserving compaction of pre-range files, an
+      // append that evolves the schema (k_str), a positional MoR delete
+      // and an equality delete (some of its keys already pos-masked)
+      assert(graft.table.Compaction.compact(spark, root,
+        graft.table.Compaction.Config(minFilesPerGroup = 1)).isDefined, "fixture expects a compaction")
+      EventTable.appendExtracted(spark, log.filter(col("event_id") > half), root,
+        TableSchemaConfig(fields = Seq(FieldSpec("k", "k", "Int32"), FieldSpec("k_str", "k", "Utf8"))))
+      val r1 = EventTable.deleteWhereMor(spark, root, col("sequence") % 7 === 2)
+      val keys = EventTable.readCommittedProjected(spark, root)
+        .filter(col("sequence") % 11 === 3).select("partition", "sequence")
+      val r2 = EventTable.deleteWhereEq(spark, root, keys)
+      assert(r1.deletedRows > 0 && r2.keys > 0)
+      val head = c.load().get.currentSnapshotId.get
+
+      val sink = TestSpark.tempDir("graft-cfeq-sink-").toString
+      graft.table.TailBatch.drain(spark, sink) {
+        spark.readStream.format("graft")
+          .option("changefeed", "true").option("fromSnapshot", base.toString).load(root)
+      }
+      val streamed = spark.read.parquet(s"$sink/data")
+      val batch = EventTable.changesBetween(spark, root, base, head)
+        .select(streamed.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
+      assert(Seq("k", "k_str", "_change_type").forall(streamed.columns.contains), streamed.columns.mkString(","))
+      assert(streamed.filter(col("k_str").isNotNull).count() > 0, "the evolved column must stream")
+      assert(streamed.filter(col("_change_type") === "delete").count() > 0)
+      assert(streamed.count() === batch.count())
+      assert(streamed.exceptAll(batch).count() === 0L, "streamed rows missing from the batch feed")
+      assert(batch.exceptAll(streamed).count() === 0L, "batch rows missing from the streamed feed")
+    } finally log.unpersist()
+  }
+
   test("changefeed stream: checkpoint replay never duplicates; a replace in range fails loud") {
     val root = TestSpark.tempDir("graft-cfstream-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(8))
