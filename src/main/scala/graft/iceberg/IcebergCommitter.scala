@@ -154,6 +154,7 @@ final case class CommitResult(snapshotId: Long, version: Int, metadata: TableMet
   */
 final class IcebergCommitter(val io: TableIO, val topic: String = "events",
                              val schema: IcebergSchema = IcebergSchema.default) {
+  import IcebergCommitter.{Active, NewManifest}
   private val metaDir = "metadata"
 
   def versionFile(v: Int): String = s"$metaDir/v$v.metadata.json"
@@ -308,12 +309,26 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       throw CommitConflict(
         s"staged snapshot $snapshotId was built on ${snap.parentSnapshotId}, " +
           s"but the table advanced to ${base.currentSnapshotId} — restage")
+    casPublish(baseVersion, pointTo(base, snapshotId))
+  }
+
+  /** `base` with the current pointer moved to `snapshotId`, logged — the
+    * pointer change [[publish]] and [[rollbackTo]] commit. */
+  private def pointTo(base: TableMetadata, snapshotId: Long): TableMetadata = {
     val now = System.currentTimeMillis()
-    val next = base.copy(
-      lastUpdatedMs = now,
-      currentSnapshotId = Some(snapshotId),
-      snapshotLog = base.snapshotLog :+ SnapshotLogEntry(snapshotId, now))
+    base.copy(lastUpdatedMs = now, currentSnapshotId = Some(snapshotId),
+              snapshotLog = base.snapshotLog :+ SnapshotLogEntry(snapshotId, now))
+  }
+
+  /** THE CAS publish step every metadata change ends in: take the next
+    * version above `baseVersion` ([[publishNext]]), then advance the
+    * version hint, returning the version won. A lost race deletes the
+    * files this operation wrote (`written`: its manifests and manifest
+    * list, never anything a competitor can reference) and raises
+    * [[CommitConflict]] — retries are the caller's job. */
+  private def casPublish(baseVersion: Int, next: TableMetadata, written: Seq[String] = Nil): Int = {
     val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse {
+      written.foreach(io.delete)
       throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)")
     }
     io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
@@ -344,17 +359,11 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
         throw CommitConflict(s"expected base snapshot $exp but current is ${base.currentSnapshotId}")
     }
 
-    val snapshotId = newSnapshotId()
-    val seqNum     = base.lastSequenceNumber + 1
-    val mapper     = TableMetadata.mapper
-    val curSchema  = base.schemas.find(_.schemaId == base.currentSchemaId).getOrElse(base.schemas.head)
-    val schemaJson = mapper.writeValueAsString(curSchema.toNode(mapper))
     // new manifests are written (and their list entries stamped) under the
     // table's DEFAULT spec — after a partition-spec evolution, old
     // manifests keep their spec id and readers route per manifest
-    val curSpec  = base.partitionSpecs.find(_.specId == base.defaultSpecId)
+    val curSpec = base.partitionSpecs.find(_.specId == base.defaultSpecId)
       .getOrElse(base.partitionSpecs.head)
-    val specJson = curSpec.fieldsJson(mapper)
     // layout/spec consistency: writers derive their directory layout from
     // the default spec BEFORE writing, but the manifest's spec id resolves
     // HERE, at commit time — an evolution landing in between would
@@ -378,32 +387,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // content="deletes") holding position-delete file entries. Data and
     // delete files never share a manifest (the Iceberg v2 rule that lets
     // readers route by the list entry's content int alone).
-    val writtenManifests = scala.collection.mutable.ArrayBuffer.empty[String]
-    def writeManifestOf(entries: Seq[ManifestEntry], content: Int): ManifestListEntry = {
-      val name  = s"$metaDir/${UUID.randomUUID()}-m${writtenManifests.size}.avro"
-      val bytes = ManifestIO.writeManifest(entries, schemaJson, specJson,
-                                           if (content == 1) "deletes" else "data",
-                                           specId = curSpec.specId)
-      io.put(name, bytes)
-      writtenManifests += name
-      val adds = entries.filter(_.status != 2).map(_.dataFile)
-      val dels = entries.filter(_.status == 2).map(_.dataFile)
-      ManifestListEntry(
-        manifestPath = name,
-        manifestLength = bytes.length.toLong,
-        partitionSpecId = curSpec.specId,
-        content = content,
-        sequenceNumber = seqNum,
-        minSequenceNumber = seqNum,
-        addedSnapshotId = snapshotId,
-        addedFilesCount = adds.size,
-        existingFilesCount = 0,
-        deletedFilesCount = dels.size,
-        addedRowsCount = adds.map(_.recordCount).sum,
-        existingRowsCount = 0,
-        deletedRowsCount = dels.map(_.recordCount).sum
-      )
-    }
+    val snapshotId = newSnapshotId()
     val dataEntries =
       added.map(f => ManifestEntry(1, snapshotId, f)) ++
         removed.map(f => ManifestEntry(2, snapshotId, f))
@@ -416,44 +400,83 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // the data manifest is written unconditionally for data-bearing commits
     // (byte-compatible with every pre-MoR commit); a pure delete commit
     // writes only its delete manifest
-    val newEntries =
-      (if (dataEntries.nonEmpty || deleteEntries.isEmpty) Seq(writeManifestOf(dataEntries, 0)) else Nil) ++
-        (if (deleteEntries.nonEmpty) Seq(writeManifestOf(deleteEntries, 1)) else Nil)
-
+    val manifests =
+      (if (dataEntries.nonEmpty || deleteEntries.isEmpty) Seq(NewManifest(0, curSpec.specId, dataEntries)) else Nil) ++
+        (if (deleteEntries.nonEmpty) Seq(NewManifest(1, curSpec.specId, deleteEntries)) else Nil)
     // Carry forward the parent's manifest list (cumulative list semantics).
-    val parentList: Seq[ManifestListEntry] = base.currentSnapshot match {
-      case Some(s) => IcebergCommitter.cachedManifestList(io, s.manifestList)
-      case None    => Nil
+    val parentList = currentManifestsOf(base)
+    commitSnapshot(baseVersion, base, snapshotId, parentList, carried = parentList, manifests,
+                   operation, watermarks, extraSummary, stageOnly)
+  }
+
+  /** THE snapshot builder [[commit]] and [[rewriteManifests]] share: write
+    * `manifests`, list them after `carried` in a new manifest list, derive
+    * the summary, and CAS-publish the snapshot on top of `base`.
+    * `parentList` is the base snapshot's list (a commit carries all of it,
+    * a manifest rewrite none). */
+  private def commitSnapshot(baseVersion: Int, base: TableMetadata, snapshotId: Long,
+                             parentList: Seq[ManifestListEntry], carried: Seq[ManifestListEntry],
+                             manifests: Seq[NewManifest], operation: String,
+                             watermarks: Map[Int, Long], extraSummary: Map[String, String],
+                             stageOnly: Boolean = false): CommitResult = {
+    val seqNum     = base.lastSequenceNumber + 1
+    val mapper     = TableMetadata.mapper
+    val schemaJson = mapper.writeValueAsString(currentSchemaOf(base).toNode(mapper))
+    val written    = scala.collection.mutable.ArrayBuffer.empty[String]
+    // list-entry counts follow entry status: 0 existing, 1 added, 2
+    // deleted; an entry without an explicit data sequence inherits seqNum
+    val newList = manifests.map { m =>
+      val spec  = base.partitionSpecs.find(_.specId == m.specId).getOrElse(base.partitionSpecs.head)
+      val name  = s"$metaDir/${UUID.randomUUID()}-m${written.size}.avro"
+      val bytes = ManifestIO.writeManifest(m.entries, schemaJson, spec.fieldsJson(mapper),
+                                           if (m.content == 1) "deletes" else "data", specId = m.specId)
+      io.put(name, bytes)
+      written += name
+      def files(status: Int) = m.entries.filter(_.status == status).map(_.dataFile)
+      val (existing, adds, dels) = (files(0), files(1), files(2))
+      ManifestListEntry(
+        manifestPath = name,
+        manifestLength = bytes.length.toLong,
+        partitionSpecId = m.specId,
+        content = m.content,
+        sequenceNumber = seqNum,
+        minSequenceNumber = m.entries.map(_.dataSequenceNumber.getOrElse(seqNum)).minOption.getOrElse(seqNum),
+        addedSnapshotId = snapshotId,
+        addedFilesCount = adds.size,
+        existingFilesCount = existing.size,
+        deletedFilesCount = dels.size,
+        addedRowsCount = adds.map(_.recordCount).sum,
+        existingRowsCount = existing.map(_.recordCount).sum,
+        deletedRowsCount = dels.map(_.recordCount).sum
+      )
     }
-    val listEntries = parentList ++ newEntries
+    val listEntries = carried ++ newList
     val listName    = s"$metaDir/snap-$snapshotId-1-${UUID.randomUUID()}.avro"
     io.put(listName, ManifestIO.writeManifestList(listEntries))
 
     // Cumulative totals over the whole manifest list (adds + existing −
     // deletes), matching the reference's fold (`iceberg_storage.rs:973-983`).
     // `existing` counts are nonzero only for manifests written by
-    // [[rewriteManifests]] (coalesced carries); ordinary commits keep them
-    // zero, so pre-rewrite arithmetic is byte-identical. DATA manifests
-    // only: position-delete files are tracked by their own keys below,
-    // never folded into record/file totals.
+    // [[rewriteManifests]] (coalesced carries). DATA manifests only:
+    // delete files are tracked by their own keys below, never folded into
+    // record/file totals.
+    def fileTotal(content: Int): Long = listEntries.filter(_.content == content)
+      .map(e => (e.addedFilesCount + e.existingFilesCount - e.deletedFilesCount).toLong).sum
     val totalRows = listEntries.filter(_.content == 0)
       .map(e => e.addedRowsCount + e.existingRowsCount - e.deletedRowsCount).sum
-    val totalFiles = listEntries.filter(_.content == 0)
-      .map(e => (e.addedFilesCount + e.existingFilesCount - e.deletedFilesCount).toLong).sum
     // per-KIND delete totals need per-file content (a delete manifest may
     // mix position and equality files — a fold commit removes both kinds at
     // once), which the list entries don't carry — walk the path-cached
-    // delete manifests; delete-free tables walk nothing
+    // carried delete manifests; delete-free tables walk nothing
     val allDeleteEntries =
-      parentList.filter(_.content == 1)
-        .flatMap(mf => IcebergCommitter.cachedManifest(io, mf.manifestPath)) ++ deleteEntries
+      carried.filter(_.content == 1).flatMap(mf => IcebergCommitter.cachedManifest(io, mf.manifestPath)) ++
+        manifests.filter(_.content == 1).flatMap(_.entries)
     def deleteRowTotal(kind: Int): Long = allDeleteEntries
       .filter(_.dataFile.content == kind)
       .map(e => if (e.status == 2) -e.dataFile.recordCount else e.dataFile.recordCount).sum
-    val totalDeleteFiles = listEntries.filter(_.content == 1)
-      .map(e => (e.addedFilesCount + e.existingFilesCount - e.deletedFilesCount).toLong).sum
-    val totalPositionDeletes = deleteRowTotal(1)
-    val totalEqualityDeletes = deleteRowTotal(2)
+    def newFiles(content: Int, status: Int): Seq[DataFile] =
+      manifests.filter(_.content == content).flatMap(_.entries).filter(_.status == status).map(_.dataFile)
+    val (added, removed) = (newFiles(0, 1), newFiles(0, 2))
 
     val parentSummary = base.currentSnapshot.map(_.summary).getOrElse(Map.empty)
     val wmKeys = watermarks.map { case (p, wm) => s"zombi.watermark.$p" -> wm.toString } ++
@@ -471,12 +494,12 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // (or had) a delete manifest — delete-free tables keep byte-identical
     // summaries to the pre-MoR writer
     val deleteKeys =
-      if (listEntries.exists(_.content == 1))
-        Map("added-delete-files"     -> addedDeletes.size.toString,
-            "removed-delete-files"   -> removedDeletes.size.toString,
-            "total-delete-files"     -> totalDeleteFiles.toString,
-            "total-position-deletes" -> totalPositionDeletes.toString,
-            "total-equality-deletes" -> totalEqualityDeletes.toString)
+      if ((parentList ++ newList).exists(_.content == 1))
+        Map("added-delete-files"     -> newFiles(1, 1).size.toString,
+            "removed-delete-files"   -> newFiles(1, 2).size.toString,
+            "total-delete-files"     -> fileTotal(1).toString,
+            "total-position-deletes" -> deleteRowTotal(1).toString,
+            "total-equality-deletes" -> deleteRowTotal(2).toString)
       else Map.empty[String, String]
     val summary = Map(
       "operation"          -> operation,
@@ -486,7 +509,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       "deleted-data-files" -> removed.size.toString,
       "deleted-records"    -> removed.map(_.recordCount).sum.toString,
       "total-records"      -> totalRows.toString,
-      "total-data-files"   -> totalFiles.toString
+      "total-data-files"   -> fileTotal(0).toString
     ) ++ deleteKeys ++ carriedWm ++ wmKeys ++ extraSummary
 
     val now = System.currentTimeMillis()
@@ -502,13 +525,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
         if (stageOnly) base.snapshotLog
         else base.snapshotLog :+ SnapshotLogEntry(snapshotId, now)
     )
-
-    val wonVersion = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse {
-      writtenManifests.foreach(io.delete); io.delete(listName)
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)")
-    }
-    io.put(s"$metaDir/version-hint.text", wonVersion.toString.getBytes("UTF-8"))
-    CommitResult(snapshotId, wonVersion, next)
+    CommitResult(snapshotId, casPublish(baseVersion, next, written.toSeq :+ listName), next)
   }
 
   /** CAS publish: create-if-absent starting at `baseVersion + 1`, BURNING
@@ -545,62 +562,44 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     None
   }
 
-  /** All manifest entries of the current snapshot (in manifest-list order).
-    * Manifest and manifest-list files are immutable (UUID names, written
-    * once), so parses are cached per absolute path — repeated metadata
-    * queries never re-read the full chain (the reference caches the same
-    * way, `/root/reference/src/storage/iceberg_storage.rs:50-53,763-898`). */
-  def currentEntries(): Seq[ManifestEntry] = currentEntriesOf(content = 0)
-
-  /** Current position-delete manifest entries (Iceberg v2 content=1). */
-  def currentDeleteEntries(): Seq[ManifestEntry] = currentEntriesOf(content = 1)
-
-  /** Entries of the current snapshot, routed by the manifest LIST entry's
-    * content int — data (0) and position-delete (1) manifests are disjoint
-    * by construction, so the filter is the complete routing rule. */
-  private def currentEntriesOf(content: Int): Seq[ManifestEntry] = load() match {
-    case None => Nil
-    case Some(meta) =>
-      meta.currentSnapshot.toSeq.flatMap { s =>
-        IcebergCommitter
-          .cachedManifestList(io, s.manifestList)
-          .filter(_.content == content)
-          .flatMap(mf => IcebergCommitter.cachedManifest(io, mf.manifestPath))
-      }
-  }
-
-  /** Manifest entries as of an arbitrary snapshot — time travel: every
-    * snapshot's manifest list is retained in metadata, so any historical
-    * state is reconstructible until expired. */
-  def entriesAt(snapshotId: Long): Seq[ManifestEntry] =
-    load().toSeq.flatMap(m => entriesOf(m, snapshotId))
-
-  /** [[entriesAt]] against an ALREADY-LOADED metadata — so a multi-snapshot
-    * reader (the changefeed) resolves every snapshot of its validated range
-    * from ONE consistent metadata instead of N racing re-loads. */
-  def entriesAtOf(meta: TableMetadata, snapshotId: Long, content: Int = 0): Seq[ManifestEntry] =
-    entriesOf(meta, snapshotId, content)
-
-  /** [[entriesAt]] against an ALREADY-LOADED metadata — for callers that
-    * must resolve several snapshots of one consistent table version.
-    * An UNKNOWN snapshot id fails loud: after [[expireSnapshots]] removes a
-    * snapshot, a time-travel read of it must error ("expired"), never
+  /** Manifest-list entries of a snapshot — time travel: every snapshot's
+    * manifest list is retained in metadata, so any historical state is
+    * reconstructible until expired. Manifest and manifest-list files are
+    * immutable (UUID names, written once), so parses are cached per
+    * absolute path — repeated metadata queries never re-read the full
+    * chain (the reference caches the same way,
+    * `/root/reference/src/storage/iceberg_storage.rs:50-53,763-898`).
+    * An UNKNOWN snapshot id fails loud: after [[expireSnapshots]] removes
+    * a snapshot, a time-travel read of it must error ("expired"), never
     * silently return an empty table. */
-  private def entriesOf(meta: TableMetadata, snapshotId: Long, content: Int = 0): Seq[ManifestEntry] = {
+  private def manifestsOf(meta: TableMetadata, snapshotId: Long): Seq[ManifestListEntry] = {
     val s = meta.snapshots.find(_.snapshotId == snapshotId).getOrElse(
       throw new IllegalArgumentException(
         s"unknown snapshot $snapshotId — not in the table metadata (expired or never committed)"))
-    IcebergCommitter
-      .cachedManifestList(io, s.manifestList)
-      .filter(_.content == content)
-      .flatMap(mf => IcebergCommitter.cachedManifest(io, mf.manifestPath))
+    IcebergCommitter.cachedManifestList(io, s.manifestList)
   }
 
-  private def resolveActive(entries: Seq[ManifestEntry]): Seq[DataFile] = {
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, DataFile]
-    entries.foreach { e =>
-      if (e.status == 2) active.remove(e.dataFile.filePath)
-      else active.put(e.dataFile.filePath, e.dataFile)
+  /** Manifest entries of a snapshot against an ALREADY-LOADED metadata, in
+    * manifest-list order, routed by the list entry's content int — data
+    * (0) and delete (1) manifests are disjoint by construction, so the
+    * filter is the complete routing rule. A multi-snapshot reader (the
+    * changefeed) resolves every snapshot of its range from ONE consistent
+    * metadata instead of N racing re-loads. */
+  def entriesOf(meta: TableMetadata, snapshotId: Long, content: Int = 0): Seq[ManifestEntry] =
+    manifestsOf(meta, snapshotId).filter(_.content == content)
+      .flatMap(mf => IcebergCommitter.cachedManifest(io, mf.manifestPath))
+
+  /** THE active-file fold, over a snapshot's manifests of one list content
+    * (0 data, 1 deletes) in list order: a status-2 entry removes a file by
+    * path, every other entry keeps it (`iceberg_storage.rs:541-632`). */
+  private def activeEntries(meta: TableMetadata, snapshotId: Long, content: Int): Seq[Active] = {
+    val active = scala.collection.mutable.LinkedHashMap.empty[String, Active]
+    manifestsOf(meta, snapshotId).filter(_.content == content).foreach { mf =>
+      IcebergCommitter.cachedManifest(io, mf.manifestPath).foreach { e =>
+        if (e.status == 2) active.remove(e.dataFile.filePath)
+        else active.put(e.dataFile.filePath,
+          Active(e, e.dataSequenceNumber.getOrElse(mf.sequenceNumber), mf.partitionSpecId))
+      }
     }
     active.values.toSeq
   }
@@ -618,50 +617,34 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       IcebergCommitter.cachedManifestList(io, s.manifestList))
 
   /** Active files: adds (status 0/1) minus later deletes (status 2), by path. */
-  def activeDataFiles(): Seq[DataFile] = resolveActive(currentEntries())
+  def activeDataFiles(): Seq[DataFile] = load().toSeq.flatMap(activeFilesOf(_, 0))
 
   /** Active delete files (position content=1 AND equality content=2) —
     * the merge-on-read read path anti-joins their rows at scan; compaction
-    * folds and removes them. Same add/remove-by-path resolution as data
-    * files. */
-  def activeDeleteFiles(): Seq[DataFile] = resolveActive(currentDeleteEntries())
+    * folds and removes them. */
+  def activeDeleteFiles(): Seq[DataFile] = load().toSeq.flatMap(activeFilesOf(_, 1))
 
-  /** Active files of a content kind paired with their DATA SEQUENCE NUMBER
-    * (the commit sequence of the manifest that added them — the Iceberg
-    * ordering equality deletes are scoped by: an equality delete applies
-    * only to data files with a SMALLER sequence number, so compaction can
-    * fold one exactly when no live data file predates it). Sequence
-    * resolution follows the v2 inheritance rule: an entry's explicit
-    * `dataSequenceNumber` (written by [[rewriteManifests]]) wins; absent,
-    * the manifest-list entry's sequence number is inherited. */
-  def activeFilesWithSeq(content: Int): Seq[(DataFile, Long)] = load() match {
-    case None => Nil
-    case Some(meta) =>
-      meta.currentSnapshot.toSeq.flatMap { s =>
-        val active = scala.collection.mutable.LinkedHashMap.empty[String, (DataFile, Long)]
-        IcebergCommitter.cachedManifestList(io, s.manifestList)
-          .filter(_.content == (if (content == 0) 0 else 1))
-          .foreach { mf =>
-            IcebergCommitter.cachedManifest(io, mf.manifestPath).foreach { e =>
-              if (e.status == 2) active.remove(e.dataFile.filePath)
-              else if (content == 0 || e.dataFile.content == content)
-                active.put(e.dataFile.filePath,
-                  (e.dataFile, e.dataSequenceNumber.getOrElse(mf.sequenceNumber)))
-            }
-          }
-        active.values.toSeq
-      }
+  /** Active files of a FILE content kind (0 data, 1 position deletes, 2
+    * equality deletes) paired with their DATA SEQUENCE NUMBER — the
+    * Iceberg ordering equality deletes are scoped by: an equality delete
+    * applies only to data files with a SMALLER sequence number, so
+    * compaction can fold one exactly when no live data file predates it. */
+  def activeFilesWithSeq(content: Int): Seq[(DataFile, Long)] = {
+    val listContent = math.min(content, 1) // both delete kinds share the delete manifests
+    load().toSeq.flatMap(m => m.currentSnapshotId.toSeq.flatMap(activeEntries(m, _, listContent)))
+      .collect { case a if content == 0 || a.entry.dataFile.content == content => (a.entry.dataFile, a.dataSeq) }
   }
 
   /** Active files as of a historical snapshot (time-travel read). */
-  def activeDataFilesAt(snapshotId: Long): Seq[DataFile] = resolveActive(entriesAt(snapshotId))
+  def activeDataFilesAt(snapshotId: Long): Seq[DataFile] =
+    load().toSeq.flatMap(activeFilesAtOf(_, snapshotId, 0))
 
   /** Active delete files as of a historical snapshot — the MoR guard for
     * time-travel reads must check deletes AT the read snapshot (a
     * delete-era snapshot stays delete-bearing forever, even after a later
     * compaction folds the files out of the CURRENT snapshot). */
   def activeDeleteFilesAt(snapshotId: Long): Seq[DataFile] =
-    resolveActive(load().toSeq.flatMap(m => entriesOf(m, snapshotId, content = 1)))
+    load().toSeq.flatMap(activeFilesAtOf(_, snapshotId, 1))
 
   /** Roll the table back to a historical snapshot (Iceberg's
     * rollback-to-snapshot): a CAS metadata commit that re-points
@@ -677,8 +660,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     val (baseVersion, baseMeta) = resolveCurrent()
     val base = baseMeta.getOrElse(
       throw new IllegalArgumentException(s"cannot roll back an empty table to $snapshotId"))
-    val byId = base.snapshots.map(s => s.snapshotId -> s).toMap
-    require(byId.contains(snapshotId), s"unknown snapshot $snapshotId")
+    require(base.snapshots.exists(_.snapshotId == snapshotId), s"unknown snapshot $snapshotId")
     if (base.currentSnapshotId.contains(snapshotId)) return baseVersion
     // Walk the PARENT chain from the head: the target must be an ancestor
     // (list position lies once staged snapshots or earlier rollbacks
@@ -687,28 +669,26 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // behind one could dangle.
     val headId = base.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(s"no current snapshot to roll back from"))
-    var cur = headId
-    while (cur != snapshotId) {
-      val s = byId.getOrElse(cur,
-        throw new IllegalArgumentException(s"snapshot $cur missing from metadata"))
+    val (abandoned, rest) = ancestors(base, headId).span(_.snapshotId != snapshotId)
+    abandoned.foreach { s =>
       val op = s.summary.getOrElse("operation", "append")
       // manifest rewrites delete nothing physical — safe to roll across
       require(op == "append" || s.summary.get("zombi.rewrite-manifests").contains("true"),
         s"rollback across snapshot ${s.snapshotId} ('$op') would reference physically deleted files")
-      cur = s.parentSnapshotId.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot $snapshotId is not an ancestor of the current head $headId"))
     }
-    val now = System.currentTimeMillis()
-    val next = base.copy(
-      lastUpdatedMs = now,
-      currentSnapshotId = Some(snapshotId),
-      snapshotLog = base.snapshotLog :+ SnapshotLogEntry(snapshotId, now))
-    val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse {
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)")
-    }
-    io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
-    won
+    if (!rest.hasNext)
+      throw new IllegalArgumentException(s"snapshot $snapshotId is not an ancestor of the current head $headId")
+    casPublish(baseVersion, pointTo(base, snapshotId))
+  }
+
+  /** `id` and its ancestors, newest first, while they are in `meta` — THE
+    * parent-chain walk (rollback, incremental scans, the changefeed, the
+    * lag guard's recovery point). It stops at table creation or at the
+    * first parent expiry removed; a caller that needs to tell the two
+    * apart reads the last snapshot's `parentSnapshotId`. */
+  def ancestors(meta: TableMetadata, id: Long): Iterator[Snapshot] = {
+    val byId = meta.snapshots.iterator.map(s => s.snapshotId -> s).toMap
+    Iterator.unfold(Option(id))(_.flatMap(byId.get).map(s => (s, s.parentSnapshotId)))
   }
 
   /** Incremental append scan (Iceberg `appendsBetween` semantics): the data
@@ -757,9 +737,9 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
   // range past the guard.
   private def appendsBetween(meta: TableMetadata, fromSnapshotId: Long, toSnapshotId: Long,
                              skipDeleteSnapshots: Boolean): Seq[DataFile] = {
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    require(byId.contains(toSnapshotId), s"unknown snapshot $toSnapshotId")
-    if (!byId.contains(fromSnapshotId)) {
+    val known = meta.snapshots.iterator.map(_.snapshotId).toSet
+    require(known(toSnapshotId), s"unknown snapshot $toSnapshotId")
+    if (!known(fromSnapshotId)) {
       // a tail lagging past retention: name the restart point (same lag-
       // guard contract as the changefeed), same exception type as any
       // unknown id so existing callers' handling is unchanged
@@ -775,17 +755,12 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // a list-position range would validate abandoned appends as live and
     // return a diff the consumer cannot apply. Unreachable base = the
     // base was abandoned by a rollback → refuse.
-    var cur = toSnapshotId
-    val range = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-    while (cur != fromSnapshotId) {
-      val s = byId.getOrElse(cur,
-        throw new IllegalArgumentException(s"snapshot $cur missing from metadata"))
-      range += s
-      cur = s.parentSnapshotId.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
-            "(abandoned by a rollback?) — fall back to a full read"))
-    }
+    val (walk, rest) = ancestors(meta, toSnapshotId).span(_.snapshotId != fromSnapshotId)
+    val range = walk.toSeq
+    if (!rest.hasNext)
+      throw new IllegalArgumentException(
+        s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
+          "(abandoned by a rollback?) — fall back to a full read")
     // Forward walk: emit the files each APPEND added; a manifest REWRITE
     // changes no file identity and a DATA-PRESERVING replace changes no
     // live row — both contribute nothing. (For an append-only range this
@@ -839,7 +814,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     val (baseVersion, baseMeta) = resolveCurrent()
     require(baseVersion > 0, "cannot evolve the schema of a table with no committed metadata")
     val meta = baseMeta.get
-    val cur  = meta.schemas.find(_.schemaId == meta.currentSchemaId).getOrElse(meta.schemas.head)
+    val cur  = currentSchemaOf(meta)
     def key(f: IcebergField) = (f.id, f.name, f.fieldType)
     if (next.fields.map(key) == cur.fields.map(key)) return false
     val nextById = next.fields.map(f => f.id -> f).toMap
@@ -854,9 +829,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       schemas = meta.schemas :+ next.copy(schemaId = newId),
       currentSchemaId = newId,
       lastUpdatedMs = System.currentTimeMillis())
-    val wonVersion = publishNext(baseVersion, updated.toJson.getBytes("UTF-8")).getOrElse(
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)"))
-    io.put(s"$metaDir/version-hint.text", wonVersion.toString.getBytes("UTF-8"))
+    casPublish(baseVersion, updated)
     true
   }
 
@@ -883,10 +856,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     require(!base.storedRefs.contains(name), s"ref '$name' already exists — drop it first")
     val next = base.copy(lastUpdatedMs = System.currentTimeMillis(),
       storedRefs = base.storedRefs + (name -> SnapshotRef(snapshotId, "tag")))
-    val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse(
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)"))
-    io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
-    won
+    casPublish(baseVersion, next)
   }
 
   /** Drop a user tag — the snapshot becomes expirable again. Unknown names
@@ -899,10 +869,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       s"unknown ref '$name' (have: ${base.storedRefs.keys.toSeq.sorted.mkString(", ")})")
     val next = base.copy(lastUpdatedMs = System.currentTimeMillis(),
       storedRefs = base.storedRefs - name)
-    val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse(
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)"))
-    io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
-    won
+    casPublish(baseVersion, next)
   }
 
   /** Every file path a stored user TAG's snapshot still references — the
@@ -912,22 +879,19 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     * definition shared by compaction and merge; manual redaction
     * (`deleteWhere`) stays eager on purpose. */
   def tagProtectedPaths(meta: TableMetadata): Set[String] =
-    meta.storedRefs.values.map(_.snapshotId).toSet.flatMap { sid: Long =>
-      (activeFilesAtOf(meta, sid, 0) ++ activeFilesAtOf(meta, sid, 1)).map(_.filePath)
-    }
+    meta.storedRefs.values.map(_.snapshotId).toSet.flatMap(livePathsAt(meta, _))
+
+  /** Every data and delete file path live at a snapshot. */
+  private def livePathsAt(meta: TableMetadata, snapshotId: Long): Seq[String] =
+    (activeFilesAtOf(meta, snapshotId, 0) ++ activeFilesAtOf(meta, snapshotId, 1)).map(_.filePath)
 
   /** The OLDEST ancestor of `headId` still resolvable in `meta` — the
     * RECOVERY POINT a lagging incremental consumer can restart from once
     * expiry has truncated the history it needed. Walks the parent chain
     * until it leaves the metadata (or reaches table creation). */
-  def oldestRetainedAncestorOf(meta: TableMetadata, headId: Long): Snapshot = {
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    var cur = byId.getOrElse(headId, throw new IllegalArgumentException(
-      s"unknown snapshot $headId — not in the table metadata"))
-    var parent = cur.parentSnapshotId.flatMap(byId.get)
-    while (parent.isDefined) { cur = parent.get; parent = cur.parentSnapshotId.flatMap(byId.get) }
-    cur
-  }
+  def oldestRetainedAncestorOf(meta: TableMetadata, headId: Long): Snapshot =
+    ancestors(meta, headId).reduceOption((_, older) => older).getOrElse(
+      throw new IllegalArgumentException(s"unknown snapshot $headId — not in the table metadata"))
 
   /** Resolve a `VERSION AS OF` value against an already-loaded metadata:
     * a numeric snapshot id, or a ref NAME from the refs map (user tags +
@@ -967,9 +931,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       defaultSpecId = newId,
       lastPartitionId = math.max(meta.lastPartitionId, fields.map(_.fieldId).max),
       lastUpdatedMs = System.currentTimeMillis())
-    val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse(
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)"))
-    io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
+    casPublish(baseVersion, next)
     true
   }
 
@@ -986,13 +948,13 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
   /** Active files of a content kind against an already-loaded metadata —
     * the single-load companion of [[activeDataFiles]]/[[activeDeleteFiles]]. */
   def activeFilesOf(meta: TableMetadata, content: Int): Seq[DataFile] =
-    resolveActive(meta.currentSnapshotId.toSeq.flatMap(id => entriesOf(meta, id, content)))
+    meta.currentSnapshotId.toSeq.flatMap(activeFilesAtOf(meta, _, content))
 
   /** Active files of a content kind AT a snapshot, against an
     * already-loaded metadata — so a scan's MoR guard and its file listing
     * resolve against the SAME snapshot instead of two racing loads. */
   def activeFilesAtOf(meta: TableMetadata, snapshotId: Long, content: Int): Seq[DataFile] =
-    resolveActive(entriesOf(meta, snapshotId, content))
+    activeEntries(meta, snapshotId, content).map(_.entry.dataFile)
 
   /** Snapshot expiration + metadata GC — the maintenance op that keeps a
     * per-trigger-committing table's metadata BOUNDED (a 100 TB table at a
@@ -1084,9 +1046,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       .map(_.manifestPath).toSet
     // files (BOTH contents — a delete-era retained snapshot still needs its
     // delete files to read masked) referenced by any retained active set
-    def filesOf(s: Snapshot, content: Int): Seq[String] =
-      resolveActive(entriesOf(meta, s.snapshotId, content)).map(_.filePath)
-    val keptFiles = keep.flatMap(s => filesOf(s, 0) ++ filesOf(s, 1)).toSet
+    val keptFiles = keep.flatMap(s => livePathsAt(meta, s.snapshotId)).toSet
     val allManifests = allManifestPaths(meta)
     val allFiles = filePathsIn(allManifests)
     // (all ∖ kept) == (expired-referenced ∖ kept): a manifest referenced
@@ -1099,9 +1059,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       snapshots = keep,
       snapshotLog = meta.snapshotLog.filter(e => keepIds(e.snapshotId))
     )
-    val wonVersion = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse(
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)"))
-    io.put(s"$metaDir/version-hint.text", wonVersion.toString.getBytes("UTF-8"))
+    casPublish(baseVersion, next)
 
     expired.foreach { s => io.delete(s.manifestList); IcebergCommitter.invalidateList(io, s.manifestList) }
     expiredManifests.foreach { m => io.delete(m); IcebergCommitter.invalidateManifest(io, m) }
@@ -1130,7 +1088,7 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     if (baseVersion == 0) return None
     val meta = baseMeta.get
     val cur  = meta.currentSnapshot.getOrElse(return None)
-    val parentList = IcebergCommitter.cachedManifestList(io, cur.manifestList)
+    val parentList = currentManifestsOf(meta)
     // already coalesced = no (content, spec) GROUP holds more than one
     // manifest — a spec-evolved table legitimately keeps one manifest per
     // live spec, and a content-only count would make every nightly vacuum
@@ -1138,100 +1096,24 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     if (parentList.groupBy(mf => (mf.content, mf.partitionSpecId)).values.forall(_.size <= 1))
       return None
 
-    // active entries with resolved per-file sequence numbers AND the owning
-    // manifest's partition-spec id, in list order — a coalesced manifest
-    // may hold ONE spec only (readers route specs per manifest), so a
-    // spec-evolved table coalesces into one manifest per live spec
-    def activeOf(content: Int): Seq[(ManifestEntry, Long, Int)] = {
-      val active = scala.collection.mutable.LinkedHashMap.empty[String, (ManifestEntry, Long, Int)]
-      parentList.filter(_.content == content).foreach { mf =>
-        IcebergCommitter.cachedManifest(io, mf.manifestPath).foreach { e =>
-          if (e.status == 2) active.remove(e.dataFile.filePath)
-          else active.put(e.dataFile.filePath,
-            (e, e.dataSequenceNumber.getOrElse(mf.sequenceNumber), mf.partitionSpecId))
-        }
-      }
-      active.values.toSeq
-    }
-    val dataActive = activeOf(0)
-    val delActive  = activeOf(1)
-
+    // a coalesced manifest may hold ONE spec only (readers route specs per
+    // manifest), so a spec-evolved table coalesces into one manifest per
+    // live spec. Entries are status 0 (existing) with their original
+    // adding snapshot id and explicit data sequence: the spec's shape for
+    // carried entries — list-entry counts go under the existing columns,
+    // which the totals fold includes. ONLY watermarks carry forward
+    // (per-snapshot markers like zombi.staged must never leak downstream).
     val snapshotId = newSnapshotId()
-    val seqNum     = meta.lastSequenceNumber + 1
-    val mapper     = TableMetadata.mapper
-    val curSchema  = meta.schemas.find(_.schemaId == meta.currentSchemaId).getOrElse(meta.schemas.head)
-    val schemaJson = mapper.writeValueAsString(curSchema.toNode(mapper))
-    val written = scala.collection.mutable.ArrayBuffer.empty[String]
-    def coalesced(entries: Seq[(ManifestEntry, Long, Int)], content: Int): Seq[ManifestListEntry] =
-      entries.groupBy(_._3).toSeq.sortBy(_._1).map { case (specId, group) =>
-        // status 0 (existing) + original adding snapshot id + explicit seq:
-        // the spec's shape for carried entries — list-entry counts go under
-        // the existing columns, which the totals fold includes
-        val rewritten = group.map { case (e, sq, _) =>
-          ManifestEntry(0, e.snapshotId, e.dataFile, dataSequenceNumber = Some(sq))
-        }
-        val spec = meta.partitionSpecs.find(_.specId == specId).getOrElse(meta.partitionSpecs.head)
-        val name  = s"$metaDir/${UUID.randomUUID()}-m${written.size}.avro"
-        val bytes = ManifestIO.writeManifest(rewritten, schemaJson, spec.fieldsJson(mapper),
-                                             if (content == 1) "deletes" else "data",
-                                             specId = specId)
-        io.put(name, bytes)
-        written += name
-        ManifestListEntry(
-          manifestPath = name, manifestLength = bytes.length.toLong,
-          partitionSpecId = specId, content = content,
-          sequenceNumber = seqNum, minSequenceNumber = group.map(_._2).min,
-          addedSnapshotId = snapshotId,
-          addedFilesCount = 0, existingFilesCount = rewritten.size, deletedFilesCount = 0,
-          addedRowsCount = 0, existingRowsCount = rewritten.map(_.dataFile.recordCount).sum,
-          deletedRowsCount = 0)
+    val manifests = Seq(0, 1).flatMap { content =>
+      activeEntries(meta, cur.snapshotId, content).groupBy(_.specId).toSeq.sortBy(_._1).map {
+        case (specId, group) =>
+          NewManifest(content, specId, group.map(a =>
+            ManifestEntry(0, a.entry.snapshotId, a.entry.dataFile, dataSequenceNumber = Some(a.dataSeq))))
       }
-    val listEntries = coalesced(dataActive, 0) ++ coalesced(delActive, 1)
-    val listName    = s"$metaDir/snap-$snapshotId-1-${UUID.randomUUID()}.avro"
-    io.put(listName, ManifestIO.writeManifestList(listEntries))
-
-    // same summary keys as commit(), recomputed from the active sets (the
-    // fold over one existing-only manifest); ONLY watermarks carry forward
-    // (per-snapshot markers like zombi.staged must never leak downstream)
-    val carried = cur.summary.filter { case (k, _) =>
-      k.startsWith("zombi.watermark.") || k.startsWith("zombi.high_watermark.")
     }
-    val deleteKeys =
-      if (parentList.exists(_.content == 1))
-        Map("added-delete-files"     -> "0",
-            "removed-delete-files"   -> "0",
-            "total-delete-files"     -> delActive.size.toString,
-            "total-position-deletes" ->
-              delActive.filter(_._1.dataFile.content == 1).map(_._1.dataFile.recordCount).sum.toString,
-            "total-equality-deletes" ->
-              delActive.filter(_._1.dataFile.content == 2).map(_._1.dataFile.recordCount).sum.toString)
-      else Map.empty[String, String]
-    val summary = Map(
-      "operation"               -> "replace",
-      "zombi.rewrite-manifests" -> "true",
-      "added-data-files"        -> "0",
-      "added-records"           -> "0",
-      "added-files-size"        -> "0",
-      "deleted-data-files"      -> "0",
-      "deleted-records"         -> "0",
-      "total-records"           -> dataActive.map(_._1.dataFile.recordCount).sum.toString,
-      "total-data-files"        -> dataActive.size.toString
-    ) ++ deleteKeys ++ carried
-
-    val now      = System.currentTimeMillis()
-    val snapshot = Snapshot(snapshotId, meta.currentSnapshotId, now, listName, summary, meta.currentSchemaId)
-    val next = meta.copy(
-      lastSequenceNumber = seqNum,
-      lastUpdatedMs = now,
-      currentSnapshotId = Some(snapshotId),
-      snapshots = meta.snapshots :+ snapshot,
-      snapshotLog = meta.snapshotLog :+ SnapshotLogEntry(snapshotId, now))
-    val won = publishNext(baseVersion, next.toJson.getBytes("UTF-8")).getOrElse {
-      written.foreach(io.delete); io.delete(listName)
-      throw CommitConflict(s"a competitor committed past version $baseVersion (lost the race)")
-    }
-    io.put(s"$metaDir/version-hint.text", won.toString.getBytes("UTF-8"))
-    Some(CommitResult(snapshotId, won, next))
+    Some(commitSnapshot(baseVersion, meta, snapshotId, parentList, carried = Nil, manifests,
+                        operation = "replace", watermarks = Map.empty,
+                        extraSummary = Map("zombi.rewrite-manifests" -> "true")))
   }
 
   /** Union of every manifest path any snapshot's list carries. Expire's
@@ -1250,20 +1132,28 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
       .flatMap(p => IcebergCommitter.cachedManifest(io, p))
       .map(_.dataFile.filePath).toSet
 
-  /** Startup watermark reconciliation (F9): per-partition max committed
-    * sequence recovered purely from manifest upper bounds — no data read
-    * (`/root/reference/src/flusher/mod.rs:244-329`). Partition comes from
-    * identity bounds (lower == upper per file). */
+  /** THE sequence watermark — the F9 startup seed, the sequencers, and the
+    * append/merge insert guards: per partition, the max of the current
+    * summary watermark and the active files' sequence upper bounds, from
+    * one metadata load, no data read (`/root/reference/src/flusher/mod.rs:244-329`).
+    * The summary never regresses: a delete of a partition's top sequence
+    * lowers the file bounds but not it, and a sequencer seeded from the
+    * bounds alone re-issues that burned sequence — which an old equality
+    * tombstone on the same key then masks. The bounds cover tables whose
+    * summary predates watermark keys. */
   def maxCommittedSequencePerPartition(): Map[Int, Long] =
-    activeDataFiles()
-      .flatMap { f =>
-        for { p <- f.lowerInt(FieldIds.Partition); s <- f.upperLong(FieldIds.Sequence) } yield p -> s
-      }
+    load().map(maxCommittedSequenceOf).getOrElse(Map.empty)
+
+  /** [[maxCommittedSequencePerPartition]] against an already-loaded metadata. */
+  def maxCommittedSequenceOf(meta: TableMetadata): Map[Int, Long] =
+    (summaryWatermarksOf(meta).toSeq ++ IcebergCommitter.watermarksOf(activeFilesOf(meta, 0)).toSeq)
       .groupMapReduce(_._1)(_._2)(math.max)
 
   /** Watermarks embedded in the current snapshot summary (F7). */
-  def summaryWatermarks(): Map[Int, Long] =
-    load().flatMap(_.currentSnapshot).map(_.summary).getOrElse(Map.empty).collect {
+  def summaryWatermarks(): Map[Int, Long] = load().map(summaryWatermarksOf).getOrElse(Map.empty)
+
+  private def summaryWatermarksOf(meta: TableMetadata): Map[Int, Long] =
+    meta.currentSnapshot.map(_.summary).getOrElse(Map.empty).collect {
       case (k, v) if k.startsWith("zombi.watermark.") => k.stripPrefix("zombi.watermark.").toInt -> v.toLong
     }
 }
@@ -1276,6 +1166,25 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
   * by [[IcebergCommitter.expireSnapshots]] are dropped eagerly. */
 object IcebergCommitter {
   import graft.core.Lru
+
+  /** A manifest a snapshot writes: list content (0 data, 1 deletes), spec
+    * id, and its entries. */
+  private final case class NewManifest(content: Int, specId: Int, entries: Seq[ManifestEntry])
+
+  /** An active manifest entry, its DATA SEQUENCE NUMBER resolved by the v2
+    * inheritance rule (an explicit per-entry number, written by
+    * [[IcebergCommitter.rewriteManifests]], wins; absent, the manifest-list entry's is
+    * inherited), and the owning manifest's partition-spec id. */
+  private final case class Active(entry: ManifestEntry, dataSeq: Long, specId: Int)
+
+
+  /** Per-partition max sequence upper bound of `dataFiles` — exact per
+    * partition because files are single-partition (`partition=P/` dirs;
+    * identity bounds, lower == upper). */
+  def watermarksOf(dataFiles: Seq[DataFile]): Map[Int, Long] =
+    dataFiles
+      .flatMap(f => for { p <- f.lowerInt(FieldIds.Partition); s <- f.upperLong(FieldIds.Sequence) } yield p -> s)
+      .groupMapReduce(_._1)(_._2)(math.max)
 
   private val metaCache     = new Lru[TableMetadata](512)
   private val listCache     = new Lru[Seq[ManifestListEntry]](2048)

@@ -1,6 +1,5 @@
 package graft.spark
 
-import graft.iceberg.{IcebergCommitter, TableIO}
 import graft.table.EventTable
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
@@ -79,33 +78,15 @@ final class GraftChangefeedScan(tableRoot: String, required: StructType,
     new GraftChangefeedStream(tableRoot, required, fromSnapshot, fromTimestampMs)
 }
 
-final class GraftChangefeedStream(tableRoot: String, required: StructType,
+final class GraftChangefeedStream(protected val tableRoot: String, required: StructType,
                                   fromSnapshot: Option[Long],
-                                  fromTimestampMs: Option[Long] = None)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+                                  fromTimestampMs: Option[Long] = None) extends SnapshotOffsets {
   // validated at CONSTRUCTION, not in initialOffset: Spark only calls
   // initialOffset when no checkpoint exists, so a resumed query carrying
   // conflicting start options would otherwise silently ignore them — the
   // loud-refusal contract applies regardless of checkpoint state
   require(fromSnapshot.isEmpty || fromTimestampMs.isEmpty,
     "changefeed options fromSnapshot and fromTimestamp are mutually exclusive")
-  private def committer = new IcebergCommitter(TableIO.forRoot(tableRoot), EventTable.Topic)
-
-  private def headId(): Long =
-    committer.load().flatMap(_.currentSnapshotId).getOrElse(-1L)
-
-  @volatile private var availableNowEnd: Option[GraftOffset] = None
-  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = Some(GraftOffset(headId()))
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
-  override def latestOffset(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit):
-      org.apache.spark.sql.connector.read.streaming.Offset =
-    availableNowEnd.getOrElse(GraftOffset(headId()))
-  override def reportLatestOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    GraftOffset(headId())
 
   override def initialOffset(): org.apache.spark.sql.connector.read.streaming.Offset = {
     // a named base must exist NOW — failing at first plan would bury the
@@ -118,7 +99,7 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
     }
     val from = fromSnapshot
       .orElse(fromTimestampMs.map(resolveFromTimestamp))
-      .getOrElse(headId())
+      .getOrElse(headOffset().snapshotId)
     GraftOffset(from)
   }
 
@@ -131,27 +112,18 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
   private def resolveFromTimestamp(ts: Long): Long = {
     val meta = committer.load().getOrElse(throw new IllegalArgumentException(
       s"changefeed fromTimestamp=$ts but $tableRoot has no metadata"))
-    val head = meta.currentSnapshotId.getOrElse(return -1L)
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    var cur = head
-    while (cur != -1L) {
-      byId.get(cur) match {
-        case Some(s) if s.timestampMs < ts => return s.snapshotId
-        case Some(s)                       => cur = s.parentSnapshotId.getOrElse(-1L)
-        case None =>
-          val oldest = committer.oldestRetainedAncestorOf(meta, head)
-          throw new IllegalStateException(
-            s"changefeed history before ${oldest.timestampMs} is expired — cannot start from " +
-              s"fromTimestamp=$ts; restart from snapshot ${oldest.snapshotId} (or a full read)")
+    val head  = meta.currentSnapshotId.getOrElse(return -1L)
+    val chain = committer.ancestors(meta, head).toSeq
+    chain.find(_.timestampMs < ts).map(_.snapshotId).getOrElse {
+      if (chain.lastOption.flatMap(_.parentSnapshotId).isDefined) {
+        val oldest = chain.last
+        throw new IllegalStateException(
+          s"changefeed history before ${oldest.timestampMs} is expired — cannot start from " +
+            s"fromTimestamp=$ts; restart from snapshot ${oldest.snapshotId} (or a full read)")
       }
+      -1L // every retained ancestor is at or after ts: from table creation
     }
-    -1L // every retained ancestor is at or after ts: from table creation
   }
-  override def latestOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    GraftOffset(headId())
-  override def deserializeOffset(json: String): org.apache.spark.sql.connector.read.streaming.Offset =
-    GraftOffset(json.trim.toLong)
-  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
   override def stop(): Unit = ()
 
   override def planInputPartitions(
@@ -191,7 +163,7 @@ final class GraftChangefeedStream(tableRoot: String, required: StructType,
     ordered.filterNot(EventTable.feedSkips).foreach { s =>
       s.summary.getOrElse("operation", "append") match {
         case "append" =>
-          committer.entriesAtOf(meta, s.snapshotId)
+          committer.entriesOf(meta, s.snapshotId)
             .filter(e => e.status == 1 && e.snapshotId == s.snapshotId)
             .foreach(e => parts += GraftInputPartition(tableRoot, e.dataFile.filePath,
               changeType = Some("insert")))

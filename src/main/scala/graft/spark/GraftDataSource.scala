@@ -609,6 +609,31 @@ final case class GraftOffset(snapshotId: Long)
   override def json(): String = snapshotId.toString
 }
 
+/** The offset half both snapshot streams share (the append tail and the
+  * changefeed): offsets are snapshot ids, the latest offset is the
+  * current head (−1 on an empty table), and nothing is acknowledged back
+  * to the table on commit. */
+trait SnapshotOffsets extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+  protected def tableRoot: String
+  protected def committer = new IcebergCommitter(TableIO.forRoot(tableRoot), EventTable.Topic)
+
+  protected def headOffset(): GraftOffset =
+    GraftOffset(committer.load().flatMap(_.currentSnapshotId).getOrElse(-1L))
+
+  // Trigger.AvailableNow: pin the end offset ONCE at query start so every
+  // planned batch stops at that head even if writers keep committing.
+  @volatile private var availableNowEnd: Option[GraftOffset] = None
+  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = Some(headOffset())
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = availableNowEnd.getOrElse(headOffset())
+  override def reportLatestOffset(): Offset = headOffset()
+  override def latestOffset(): Offset = headOffset()
+  override def deserializeOffset(json: String): Offset = GraftOffset(json.trim.toLong)
+  override def commit(end: Offset): Unit = ()
+}
+
 /** `spark.readStream.format("graft").load(root)` — the committed table AS
   * a stream: each micro-batch reads exactly the data files appended
   * between the last checkpointed snapshot and the current head (never a
@@ -621,33 +646,9 @@ final case class GraftOffset(snapshotId: Long)
   * row-changing replace/overwrite fails the batch loudly (file diff ≠
   * row diff — resume requires a fresh full read). Partition planning
   * reuses the batch scan's manifest-bound pruning and reader. */
-final class GraftMicroBatchStream(tableRoot: String, required: StructType, pushed: Array[Filter],
-                                  skipDeleteSnapshots: Boolean = false)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  private def committer = new IcebergCommitter(TableIO.forRoot(tableRoot), EventTable.Topic)
-
-  private def headOffset(): GraftOffset =
-    GraftOffset(committer.load().flatMap(_.currentSnapshotId).getOrElse(-1L))
-
-  // Trigger.AvailableNow: pin the end offset ONCE at query start so every
-  // planned batch stops at that head even if writers keep committing.
-  @volatile private var availableNowEnd: Option[GraftOffset] = None
-  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = Some(headOffset())
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
-  override def latestOffset(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit):
-      org.apache.spark.sql.connector.read.streaming.Offset =
-    availableNowEnd.getOrElse(headOffset())
-  override def reportLatestOffset(): org.apache.spark.sql.connector.read.streaming.Offset = headOffset()
-
+final class GraftMicroBatchStream(protected val tableRoot: String, required: StructType, pushed: Array[Filter],
+                                  skipDeleteSnapshots: Boolean = false) extends SnapshotOffsets {
   override def initialOffset(): org.apache.spark.sql.connector.read.streaming.Offset = GraftOffset(-1L)
-  override def latestOffset(): org.apache.spark.sql.connector.read.streaming.Offset = headOffset()
-  override def deserializeOffset(json: String): org.apache.spark.sql.connector.read.streaming.Offset =
-    GraftOffset(json.trim.toLong)
-  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
   override def stop(): Unit = {
     // an over-cap bootstrap broadcast would otherwise pin its mask rows in
     // block storage until ContextCleaner happens to GC the reference

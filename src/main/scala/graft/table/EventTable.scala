@@ -10,7 +10,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The flush pipeline (SURVEY §2.3 F2–F4) + cold read, Spark-first.
@@ -501,29 +500,17 @@ object EventTable {
     val pred = coalesce(predicate, lit(false))
     // Projected read (current metadata schema, not per-file footers) so a
     // predicate over a schema-evolved column resolves for pre-evolution files.
-    val matchCounts = readCommittedProjected(spark, tableRoot, active)
-      .withColumn("_file", input_file_name())
-      .groupBy(col("_file"))
+    // Files match by the scan-level MoR identity (`_mor_fkey`, [[morKeyOf]]),
+    // never by full path: no URI decoding, no root normalization.
+    val matchCounts = readCommittedProjected(spark, tableRoot, active, morCols = true)
+      .groupBy(col("_mor_fkey"))
       .agg(count(when(pred, 1)).as("m"))
       .filter(col("m") > 0)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
-    // input_file_name() is a percent-encoded URI; decode before comparing so
-    // table roots with spaces/special characters still match their files.
-    val matchedPaths = matchCounts.map { case (uri, m) => decodeFileUri(uri) -> m }
-    // Compare on the decoded PATH portion: for scheme roots the URI path of
-    // the root; for plain local roots the absolute normalized path (both
-    // match what input_file_name()'s URI decodes to).
-    val rootPath =
-      if (graft.iceberg.TableIO.hasScheme(tableRoot))
-        Option(new org.apache.hadoop.fs.Path(tableRoot).toUri.getPath).getOrElse(tableRoot)
-      else Paths.get(tableRoot).toAbsolutePath.normalize.toString
-    // Set membership, not a linear scan per active file: at the 800k-file
-    // scale the README's audit contemplates, files × matched `exists`
-    // probes are ~10^10 driver-side string compares — O(files + matched)
-    // here keeps the driver out of the delete's critical path.
-    val matchedSet = matchedPaths.iterator.map(_._1).toSet
-    val affected   = active.filter(f => matchedSet.contains(s"$rootPath/${f.filePath}"))
+    // a Set, not a scan per active file: O(files + matched) on the driver
+    val matchedKeys = matchCounts.iterator.map(_._1).toSet
+    val affected    = active.filter(f => matchedKeys.contains(morKeyOf(f.filePath)))
     if (affected.isEmpty) return DeleteResult(0, active.size, 0L, None)
 
     val survivors = readForRewrite(spark, tableRoot, affected).filter(not(pred))
@@ -751,25 +738,17 @@ object EventTable {
     val keyDf = keys.toSeq.toDF("partition", "sequence")
     val probe =
       if (candidates.isEmpty) Array.empty[Row]
-      else readCommittedProjected(spark, tableRoot, candidates)
-        .withColumn("_file", input_file_name())
+      else readCommittedProjected(spark, tableRoot, candidates, morCols = true)
         .join(broadcast(keyDf), Seq("partition", "sequence"))
-        .select(col("_file"), col("partition"), col("sequence"))
+        .select(col("_mor_fkey"), col("partition"), col("sequence"))
         .collect() // ≤ |updates| rows — bounded decision values
     val matchedKeys  = probe.map(r => (r.getInt(1), r.getLong(2))).toSet
-    val matchedPaths = probe.map(r => decodeFileUri(r.getString(0))).toSet
-    val rootPath =
-      if (graft.iceberg.TableIO.hasScheme(tableRoot))
-        Option(new org.apache.hadoop.fs.Path(tableRoot).toUri.getPath).getOrElse(tableRoot)
-      else Paths.get(tableRoot).toAbsolutePath.normalize.toString
-    val affected = candidates.filter(f => matchedPaths.contains(s"$rootPath/${f.filePath}"))
+    val matchedFiles = probe.map(_.getString(0)).toSet
+    val affected     = candidates.filter(f => matchedFiles.contains(morKeyOf(f.filePath)))
 
-    // Burned-sequence guard against the MONOTONIC summary watermark
-    // max-merged with file stats: a delete of a partition's TOP sequence
-    // lowers the file bounds but never the summary (watermarks only
-    // advance), so file stats alone would let that burned top sequence
-    // resurrect.
-    val wm = mergedWatermarks(committer, active)
+    // Burned-sequence guard: unmatched keys at or below the watermark
+    // were taken or deleted, never free
+    val wm = committer.maxCommittedSequenceOf(meta)
     val insertKeys = keys.filterNot(matchedKeys)
     insertKeys.foreach { case (p, s) =>
       require(s > wm.getOrElse(p, 0L),
@@ -817,20 +796,6 @@ object EventTable {
     }
   }
 
-  /** Per-partition max sequence for INSERT guards: the snapshot summary's
-    * monotonic watermark max-merged with the active files' stats. The
-    * summary never regresses (a delete of a partition's top sequence
-    * lowers file bounds but not it); file stats cover tables whose
-    * summary predates watermark keys. Shared by the merge insert arm and
-    * [[appendBatch]]. */
-  private def mergedWatermarks(committer: IcebergCommitter, active: Seq[DataFile]): Map[Int, Long] = {
-    val stats   = watermarksOf(active)
-    val summary = committer.summaryWatermarks()
-    (stats.keySet ++ summary.keySet).map { p =>
-      p -> math.max(stats.getOrElse(p, 0L), summary.getOrElse(p, 0L))
-    }.toMap
-  }
-
   /** Batch rows (partition, sequence, timestamp_ms, payload,
     * idempotency_key) projected onto the table's CURRENT metadata schema:
     * topic constant, event_date/event_hour derived from the batch
@@ -866,7 +831,7 @@ object EventTable {
   def appendBatch(spark: SparkSession, tableRoot: String, batch: DataFrame,
                   staged: Boolean = false): CommitResult = {
     val committer = new IcebergCommitter(TableIO.forRoot(tableRoot), Topic)
-    val wm = mergedWatermarks(committer, committer.activeDataFiles())
+    val wm = committer.maxCommittedSequencePerPartition()
     val b = batch.select(
       col("partition").cast("int").as("partition"),
       col("sequence").cast("long").as("sequence"),
@@ -893,13 +858,6 @@ object EventTable {
     } finally b.unpersist()
   }
 
-  /** Decoded filesystem path of an `input_file_name()` URI. Spark returns
-    * percent-encoded `file:///...` URIs; `URI.getPath` decodes them. Falls
-    * back to the raw string for non-URI inputs (plain local paths). */
-  private def decodeFileUri(s: String): String =
-    try Option(new java.net.URI(s).getPath).getOrElse(s)
-    catch { case _: java.net.URISyntaxException => s }
-
   /** Whether the table's DEFAULT partition spec carries the evolved
     * event_date directory key — the writer-layout switch every rewrite
     * path consults, so post-evolution writes (appends, compactions,
@@ -911,12 +869,8 @@ object EventTable {
         .exists(_.fields.exists(_.name == "event_date"))
     }
 
-  /** Per-partition high watermark from file bounds — exact because files are
-    * single-partition (`partition=P/` dirs). */
-  def watermarksOf(dataFiles: Seq[DataFile]): Map[Int, Long] =
-    dataFiles
-      .flatMap(f => for { p <- f.lowerInt(FieldIds.Partition); s <- f.upperLong(FieldIds.Sequence) } yield p -> s)
-      .groupMapReduce(_._1)(_._2)(math.max)
+  /** Per-partition high watermark from file bounds ([[IcebergCommitter.watermarksOf]]). */
+  def watermarksOf(dataFiles: Seq[DataFile]): Map[Int, Long] = IcebergCommitter.watermarksOf(dataFiles)
 
   /** Cold read over the committed snapshot: manifest-driven file listing.
     * `basePath` recovers the identity `partition` column from the Hive
@@ -1167,7 +1121,7 @@ object EventTable {
     val parts: Seq[DataFrame] = ordered.filterNot(feedSkips).flatMap { s =>
       s.summary.getOrElse("operation", "append") match {
         case "append" =>
-          val added = committer.entriesAtOf(meta, s.snapshotId)
+          val added = committer.entriesOf(meta, s.snapshotId)
             .filter(e => e.status == 1 && e.snapshotId == s.snapshotId).map(_.dataFile)
           if (added.isEmpty) None
           else Some(readProjected(spark, tableRoot, schema, added)
@@ -1215,24 +1169,20 @@ object EventTable {
     * real `from` refuses: `from` is not an ancestor of `to`. */
   private[graft] def feedRange(committer: IcebergCommitter, meta: graft.iceberg.TableMetadata,
                                from: Long, to: Long): Seq[graft.iceberg.Snapshot] = {
-    val byId  = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val range = scala.collection.mutable.ArrayBuffer.empty[graft.iceberg.Snapshot]
-    var cur = to
-    while (cur != from && cur != -1L) {
-      val s = byId.getOrElse(cur, {
+    val (walk, rest) = committer.ancestors(meta, to).span(_.snapshotId != from)
+    val range = walk.toSeq
+    if (!rest.hasNext) range.lastOption.flatMap(_.parentSnapshotId) match {
+      case Some(expired) =>
         val oldest = committer.oldestRetainedAncestorOf(meta, to)
         throw new IllegalStateException(
-          s"changefeed history expired at ${oldest.timestampMs}: snapshot $cur in range " +
+          s"changefeed history expired at ${oldest.timestampMs}: snapshot $expired in range " +
             s"($from, $to] is no longer in metadata — restart from " +
             s"snapshot ${oldest.snapshotId} (or a full read)")
-      })
-      range += s
-      cur = s.parentSnapshotId.getOrElse(
-        if (from == -1L) -1L
-        else throw new IllegalArgumentException(
-          s"changefeed snapshot $from is not an ancestor of $to"))
+      case None if from != -1L =>
+        throw new IllegalArgumentException(s"changefeed snapshot $from is not an ancestor of $to")
+      case None => () // from = -1: the walk reached table creation
     }
-    range.reverse.toSeq
+    range.reverse
   }
 
   /** A snapshot a changefeed crosses emitting nothing: a manifest rewrite
@@ -1282,8 +1232,8 @@ object EventTable {
         // fold) are both physically deleted — either kind still needed by
         // an earlier in-range read makes the range uncrossable (a
         // manifest rewrite removes none)
-        val removed = (committer.entriesAtOf(meta, s.snapshotId) ++
-            committer.entriesAtOf(meta, s.snapshotId, content = 1))
+        val removed = (committer.entriesOf(meta, s.snapshotId) ++
+            committer.entriesOf(meta, s.snapshotId, content = 1))
           .filter(e => e.status == 2 && e.snapshotId == s.snapshotId)
         removed.find(e => readPaths.contains(e.dataFile.filePath)).foreach { e =>
           throw new IllegalStateException(
@@ -1292,11 +1242,11 @@ object EventTable {
               "the file is physically deleted; fall back to a full read")
         }
       } else if (op == "append") {
-        readPaths ++= committer.entriesAtOf(meta, s.snapshotId)
+        readPaths ++= committer.entriesOf(meta, s.snapshotId)
           .filter(e => e.status == 1 && e.snapshotId == s.snapshotId).map(_.dataFile.filePath)
       } else { // MoR delete: resolution reads the parent's live data files,
                // its own new delete parquet, and the parent's prior masks
-        val newDels = committer.entriesAtOf(meta, s.snapshotId, content = 1)
+        val newDels = committer.entriesOf(meta, s.snapshotId, content = 1)
           .filter(e => e.status == 1 && e.snapshotId == s.snapshotId).map(_.dataFile)
         if (newDels.nonEmpty) {
           val parentId = s.parentSnapshotId.getOrElse(throw new IllegalStateException(

@@ -607,4 +607,45 @@ class CompactionSpec extends AnyFunSuite {
     assert(a.exceptAll(b).count() === 0L)
     assert(b.exceptAll(a).count() === 0L)
   }
+
+  private def events(part: Int, n: Int, tag: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (1 to n).map(i => (part, s"$tag-$i", 1700000000000L + i, s"$tag-$part-$i"))
+      .toDF("partition", "payload", "timestamp_ms", "idempotency_key")
+  }
+
+  test("a deleted top sequence stays burned: the next append does not reuse it") {
+    import graft.streaming.StreamIngest
+    val root = TestSpark.tempDir("graft-burned-top-").toString
+    StreamIngest.appendEvents(spark, root, events(0, 20, "a"))
+    val del = EventTable.deleteWhere(spark, root, col("sequence") === 20)
+    assert(del.deletedRows === 1)
+    StreamIngest.appendEvents(spark, root, events(0, 1, "b"))
+    val seqs = EventTable.readCommitted(spark, root).filter(col("payload").cast("string") === "b-1")
+      .select("sequence").collect().map(_.getLong(0))
+    assert(seqs.toSeq === Seq(21L), "sequence 20 was deleted, so it is burned, not free")
+  }
+
+  test("an old equality tombstone never masks an acknowledged append after a partial fold") {
+    import graft.streaming.StreamIngest
+    import org.apache.spark.sql.functions.lit
+    val root = TestSpark.tempDir("graft-burned-eq-").toString
+    for (r <- 1 to 3) StreamIngest.appendEvents(spark, root, events(0, 10, s"p0r$r").union(events(1, 10, s"p1r$r")))
+    val committer = new IcebergCommitter(new LocalTableIO(root), EventTable.Topic)
+    EventTable.deleteWhereEq(spark, root, spark.range(1)
+      .select(lit(0).as("partition"), lit(30L).as("sequence"))
+      .union(spark.range(1).select(lit(1).as("partition"), lit(5L).as("sequence"))))
+    val p0Files = committer.activeDataFiles().count(_.lowerInt(FieldIds.Partition).contains(0))
+    assert(Compaction.compact(spark, root, Compaction.Config(maxFilesPerRun = p0Files)).isDefined)
+    // partition 0 folded, partition 1 still predates the tombstone
+    assert(committer.activeDeleteFiles().nonEmpty)
+    assert(EventTable.watermarksOf(committer.activeDataFiles()).get(0).contains(29L))
+    assert(committer.maxCommittedSequencePerPartition().get(0).contains(30L))
+    StreamIngest.appendEvents(spark, root, events(0, 1, "late"))
+    val late = EventTable.readCommitted(spark, root).filter(col("payload").cast("string") === "late-1")
+      .select("sequence").collect().map(_.getLong(0))
+    assert(late.toSeq === Seq(31L))
+    assert(EventTable.readCommitted(spark, root).filter(col("partition") === 0).count() === 30)
+    assert(spark.read.format("graft").load(root).filter(col("partition") === 0).count() === 30)
+  }
 }
