@@ -669,15 +669,16 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // behind one could dangle.
     val headId = base.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(s"no current snapshot to roll back from"))
-    val (abandoned, rest) = ancestors(base, headId).span(_.snapshotId != snapshotId)
+    val (walk, rest) = ancestors(base, headId).span(_.snapshotId != snapshotId)
+    val abandoned = walk.toSeq
     abandoned.foreach { s =>
       val op = s.summary.getOrElse("operation", "append")
       // manifest rewrites delete nothing physical — safe to roll across
       require(op == "append" || s.summary.get("zombi.rewrite-manifests").contains("true"),
         s"rollback across snapshot ${s.snapshotId} ('$op') would reference physically deleted files")
     }
-    if (!rest.hasNext)
-      throw new IllegalArgumentException(s"snapshot $snapshotId is not an ancestor of the current head $headId")
+    if (!rest.hasNext) throw new IllegalArgumentException(brokenChain(abandoned,
+      s"snapshot $snapshotId is not an ancestor of the current head $headId"))
     casPublish(baseVersion, pointTo(base, snapshotId))
   }
 
@@ -690,6 +691,12 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     val byId = meta.snapshots.iterator.map(s => s.snapshotId -> s).toMap
     Iterator.unfold(Option(id))(_.flatMap(byId.get).map(s => (s, s.parentSnapshotId)))
   }
+
+  /** Why an [[ancestors]] walk ended short of its target: a parent expiry
+    * removed (named), else table creation (`notAncestor`). */
+  private def brokenChain(walk: Seq[Snapshot], notAncestor: String): String =
+    walk.lastOption.flatMap(_.parentSnapshotId)
+      .fold(notAncestor)(id => s"snapshot $id missing from metadata")
 
   /** Incremental append scan (Iceberg `appendsBetween` semantics): the data
     * files added AFTER `fromSnapshotId` up to the current head — the CDC
@@ -757,10 +764,9 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
     // base was abandoned by a rollback → refuse.
     val (walk, rest) = ancestors(meta, toSnapshotId).span(_.snapshotId != fromSnapshotId)
     val range = walk.toSeq
-    if (!rest.hasNext)
-      throw new IllegalArgumentException(
-        s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
-          "(abandoned by a rollback?) — fall back to a full read")
+    if (!rest.hasNext) throw new IllegalArgumentException(brokenChain(range,
+      s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
+        "(abandoned by a rollback?) — fall back to a full read"))
     // Forward walk: emit the files each APPEND added; a manifest REWRITE
     // changes no file identity and a DATA-PRESERVING replace changes no
     // live row — both contribute nothing. (For an append-only range this

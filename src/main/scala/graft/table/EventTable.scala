@@ -1165,13 +1165,16 @@ object EventTable {
     * changefeed forms plan from. `from = -1` walks to table creation (the
     * stream's empty-table start). A snapshot missing from metadata is
     * expired history: the LAG GUARD names the restart point instead of a
-    * generic unknown-snapshot error. A chain that ends without meeting a
-    * real `from` refuses: `from` is not an ancestor of `to`. */
+    * generic unknown-snapshot error — except `from` itself, which a
+    * checkpointed stream may hold after expiry removed it: (from, to] is
+    * still whole. A chain that ends without meeting a real `from` refuses:
+    * `from` is not an ancestor of `to`. */
   private[graft] def feedRange(committer: IcebergCommitter, meta: graft.iceberg.TableMetadata,
                                from: Long, to: Long): Seq[graft.iceberg.Snapshot] = {
     val (walk, rest) = committer.ancestors(meta, to).span(_.snapshotId != from)
     val range = walk.toSeq
-    if (!rest.hasNext) range.lastOption.flatMap(_.parentSnapshotId) match {
+    if (!rest.hasNext) range.lastOption.fold(Option(to))(_.parentSnapshotId) match {
+      case Some(`from`)  => () // the walk ran up to an expired `from`
       case Some(expired) =>
         val oldest = committer.oldestRetainedAncestorOf(meta, to)
         throw new IllegalStateException(

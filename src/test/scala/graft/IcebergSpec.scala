@@ -308,6 +308,11 @@ class IcebergSpec extends AnyFunSuite {
     assert(c.activeDataFilesAt(r1.snapshotId).map(_.filePath) === Seq(a.filePath))
     assert(c.resolveVersionOf(c.load().get, "keep-r1") === r1.snapshotId)
     assertThrows[IllegalArgumentException](c.resolveVersionOf(c.load().get, "nope"))
+    // the chain r3 → r1 now crosses the expired r2: walks from the head
+    // name the missing snapshot, not a non-ancestor
+    Seq(intercept[IllegalArgumentException](c.rollbackTo(r1.snapshotId)),
+        intercept[IllegalArgumentException](c.appendsBetween(r1.snapshotId, r3.snapshotId)))
+      .foreach(ex => assert(ex.getMessage === s"snapshot ${r2.snapshotId} missing from metadata"))
     // dropping the tag releases the snapshot to the next expiry
     c.dropTag("keep-r1")
     assertThrows[IllegalArgumentException](c.dropTag("keep-r1"))

@@ -209,6 +209,35 @@ class StreamIngestSpec extends AnyFunSuite {
     }
   }
 
+  test("a caught-up changefeed resumes after expiry removed its checkpointed snapshot") {
+    val root = TestSpark.tempDir("graft-cfexp-").toString
+    val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
+    val base = c.load().get.currentSnapshotId.get
+    val sink = TestSpark.tempDir("graft-cfexp-sink-").toString
+    def drain(): Unit = graft.table.TailBatch.drain(spark, sink) {
+      spark.readStream.format("graft")
+        .option("changefeed", "true").option("fromSnapshot", base.toString).load(root)
+    }
+    def append(kShift: Long, prefix: String): Unit =
+      EventTable.appendBatch(spark, root, graft.table.TailBatch.of(
+        EventTable.readCommitted(spark, root), n = 5, maxPart = 2, kShift = Some(kShift), prefix = prefix))
+    append(246000L, "e")
+    drain() // caught up: the checkpoint holds the head
+    val caughtUp = c.load().get.currentSnapshotId.get
+    // K appends, then keep only those K: the checkpointed snapshot is
+    // expired, but (checkpoint, head] is still whole in metadata
+    append(357000L, "f"); append(468000L, "g")
+    c.expireSnapshots(keepLast = 2)
+    assert(!c.load().get.snapshots.exists(_.snapshotId == caughtUp),
+      "fixture expects the checkpointed snapshot to be expired")
+    drain()
+    val inserts = spark.read.parquet(s"$sink/data").filter(col("_change_type") === "insert")
+      .groupBy(substring(col("idempotency_key"), 1, 1).as("batch")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(inserts === Map("e" -> 10L, "f" -> 10L, "g" -> 10L),
+      "the resumed feed must deliver exactly the appends after the expired checkpoint")
+  }
+
   test("changefeed fromTimestamp resolves head ancestry; expired history names the restart point") {
     val root = TestSpark.tempDir("graft-cfts-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
