@@ -746,27 +746,31 @@ final class IcebergCommitter(val io: TableIO, val topic: String = "events",
                              skipDeleteSnapshots: Boolean): Seq[DataFile] = {
     val known = meta.snapshots.iterator.map(_.snapshotId).toSet
     require(known(toSnapshotId), s"unknown snapshot $toSnapshotId")
-    if (!known(fromSnapshotId)) {
-      // a tail lagging past retention: name the restart point (same lag-
-      // guard contract as the changefeed), same exception type as any
-      // unknown id so existing callers' handling is unchanged
-      val oldest = oldestRetainedAncestorOf(meta, toSnapshotId)
-      throw new IllegalArgumentException(
-        s"unknown snapshot $fromSnapshotId — not in the table metadata (expired or never " +
-          s"committed); history before ${oldest.timestampMs} is expired — restart the tail " +
-          s"from snapshot ${oldest.snapshotId} or a full read")
-    }
     if (fromSnapshotId == toSnapshotId) return Seq.empty
     // Walk the PARENT chain from `to` back to `from` — not snapshot-list
     // order: a rollback re-points current without creating a snapshot, so
     // a list-position range would validate abandoned appends as live and
     // return a diff the consumer cannot apply. Unreachable base = the
-    // base was abandoned by a rollback → refuse.
+    // base was abandoned by a rollback → refuse. A walk that runs up to an
+    // expired `from` (the parent of the chain's oldest retained snapshot)
+    // still holds all of (from, to].
     val (walk, rest) = ancestors(meta, toSnapshotId).span(_.snapshotId != fromSnapshotId)
     val range = walk.toSeq
-    if (!rest.hasNext) throw new IllegalArgumentException(brokenChain(range,
-      s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
-        "(abandoned by a rollback?) — fall back to a full read"))
+    if (!rest.hasNext && !range.lastOption.flatMap(_.parentSnapshotId).contains(fromSnapshotId)) {
+      if (!known(fromSnapshotId)) {
+        // a tail lagging past retention: name the restart point (same lag-
+        // guard contract as the changefeed), same exception type as any
+        // unknown id so existing callers' handling is unchanged
+        val oldest = oldestRetainedAncestorOf(meta, toSnapshotId)
+        throw new IllegalArgumentException(
+          s"unknown snapshot $fromSnapshotId — not in the table metadata (expired or never " +
+            s"committed); history before ${oldest.timestampMs} is expired — restart the tail " +
+            s"from snapshot ${oldest.snapshotId} or a full read")
+      }
+      throw new IllegalArgumentException(brokenChain(range,
+        s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId " +
+          "(abandoned by a rollback?) — fall back to a full read"))
+    }
     // Forward walk: emit the files each APPEND added; a manifest REWRITE
     // changes no file identity and a DATA-PRESERVING replace changes no
     // live row — both contribute nothing. (For an append-only range this

@@ -25,16 +25,17 @@ import scala.jdk.CollectionConverters._
   *    overload (`handlers.rs:64-111,187-232`)
   *  - Q1–Q6: operational reads with projection validation, since-filter,
   *    limit+has_more, and JSON/Arrow content negotiation
-  *  - F2–F7 via [[flushNow]]: hot events → Spark sorted size-targeted write
-  *    → distributed stats → Iceberg append commit → hot cleanup (F11) —
-  *    the flusher pipeline triggered by POST /tables/{t}/flush (F12)
+  *  - F2–F7 via [[flushNow]]: hot events → sorted size-targeted write on
+  *    driver threads → footer stats → Iceberg append commit → hot cleanup
+  *    (F11) — the flusher pipeline triggered by POST /tables/{t}/flush (F12)
   *  - C1–C3 via POST /tables/{t}/compact with the in-progress guard (409)
   *  - X1: health/ready/stats/metrics/metadata/watermark admin routes
   *  - X2: the read-only Iceberg REST catalog (`src/api/catalog.rs:193-366`)
   *  - F13: optional auto-registration against an external REST catalog
   *    after each commit ([[CatalogClient]])
   *
-  * Spark is involved ONLY in flush/compact (the distributed jobs); the hot
+  * Spark is involved ONLY in flush (planning the batch's projections,
+  * which fold into driver rows) and compact (distributed jobs); the hot
   * path is pure JVM, like the reference's axum front-end.
   */
 final class GatewayServer(
@@ -734,7 +735,7 @@ final class GatewayServer(
   }
 
   /** F2–F8 + F11: flush hot events past the committed watermark through the
-    * Spark write path, commit snapshots, evict covered events. The call
+    * driver write path, commit snapshots, evict covered events. The call
     * captures the hot tier's high watermarks when it starts and commits
     * every event acknowledged before that point — later arrivals wait for
     * the next call, so under steady load one call makes one commit and
@@ -802,9 +803,9 @@ final class GatewayServer(
     while (batch.nonEmpty) {
       val t0 = System.nanoTime()
       val (frame, stats) = batchFrame(batch)
-      val base = frame
-        .withColumn("event_date", expr("date_add(date '1970-01-01', cast(timestamp_ms div 86400000 as int))"))
-        .withColumn("event_hour", expr("cast((timestamp_ms div 3600000) % 24 as int)"))
+      val base = frame.withColumns(Map(
+        "event_date" -> expr("date_add(date '1970-01-01', cast(timestamp_ms div 86400000 as int))"),
+        "event_hour" -> expr("cast((timestamp_ms div 3600000) % 24 as int)")))
       val df = tableSchemaConfig(topic) match {
         case None =>
           base.select("sequence", "topic", "payload", "timestamp_ms", "idempotency_key",
@@ -844,27 +845,16 @@ final class GatewayServer(
     last
   }
 
-  /** A flush batch as a DataFrame laid out on the Spark driver, with its
-    * per-partition `(partition, rows, bytes)` profile (the reference's
-    * payload+64B estimate) — so the write needs no profiling job. Slices
-    * hold whole log partitions, at most `defaultParallelism` of them,
-    * balanced by bytes (largest partition first onto the lightest slice),
-    * so the write needs no shuffle either. */
+  /** A flush batch as a driver-local DataFrame (a `LocalRelation`, so the
+    * write runs on driver threads with no Spark job), with its per-partition
+    * `(partition, rows, bytes)` profile (the reference's payload+64B
+    * estimate) — so the write needs no profiling pass either. */
   private def batchFrame(batch: Seq[StoredEvent]): (DataFrame, Seq[(Int, Long, Long)]) = {
-    val stats = batch.groupBy(_.partition).toSeq
-      .map { case (p, es) => (p, es, es.iterator.map(_.payload.length + 64L).sum) }
-      .sortBy { case (p, _, bytes) => (-bytes, p) }
-    val n      = math.max(1, math.min(stats.size, spark.sparkContext.defaultParallelism))
-    val load   = Array.fill(n)(0L)
-    val slices = Array.fill(n)(Vector.newBuilder[Row])
-    stats.foreach { case (_, es, bytes) =>
-      val k = load.indices.minBy(load(_))
-      es.foreach(e => slices(k) += Row(e.sequence, e.topic, e.payload, e.timestampMs, e.idempotencyKey.orNull, e.partition))
-      load(k) += bytes
-    }
-    val rows = spark.sparkContext.parallelize(slices.toSeq.map(_.result()), n).flatMap(identity)
+    val rows = new java.util.ArrayList[Row](batch.size)
+    batch.foreach(e => rows.add(Row(e.sequence, e.topic, e.payload, e.timestampMs, e.idempotencyKey.orNull, e.partition)))
     (spark.createDataFrame(rows, GatewayServer.FlushSchema),
-     stats.map { case (p, es, bytes) => (p, es.size.toLong, bytes) })
+     batch.groupBy(_.partition).toSeq.sortBy(_._1)
+       .map { case (p, es) => (p, es.size.toLong, es.iterator.map(_.payload.length + 64L).sum) })
   }
 
   // ----------------------------------------------------- auto-maintenance
@@ -1016,7 +1006,7 @@ final class GatewayServer(
 }
 
 object GatewayServer {
-  /** Hot events as the flush hands them to Spark. */
+  /** Hot events as the flush hands them to the writer. */
   private val FlushSchema = StructType(Seq(
     StructField("sequence", LongType, nullable = false),
     StructField("topic", StringType, nullable = false),

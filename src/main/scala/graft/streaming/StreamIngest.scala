@@ -168,7 +168,8 @@ final class StreamIngest(
   private var lastStats: Option[Map[Int, (Long, Long)]] = None
 
   /** (cached key frame, broadcast bloom over "part:key") — built lazily so
-    * the common fresh-table case pays nothing. */
+    * the common fresh-table case pays nothing; None when the committed
+    * table holds no non-null key. */
   private lazy val bootstrap: Option[(DataFrame, org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])] =
     if (bootstrapFiles.isEmpty) None
     else {
@@ -178,16 +179,21 @@ final class StreamIngest(
       // outputPartitioning — so every trigger reuses this one-time shuffle
       // instead of re-exchanging the (at scale, enormous) committed-keys
       // frame per micro-batch. Small tables broadcast anyway; this is for
-      // the 100 TB shape where the keys side must stay shuffle-free.
+      // the 100 TB shape where the keys side must stay shuffle-free. Null
+      // keys never dedup (no equi-join match), so they are left out of both.
       val keys = EventTable
         .readCommitted(spark, tableRoot, bootstrapFiles)
         .select(col("partition").cast("int").as("part_id"), col("idempotency_key"))
+        .filter(col("idempotency_key").isNotNull)
         .repartition(col("part_id"), col("idempotency_key"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val expected = math.max(1000L, bootstrapFiles.map(_.recordCount).sum)
-      val bloom = keys.stat.bloomFilter(
-        concat(col("part_id").cast("string"), lit(":"), col("idempotency_key")), expected, 0.01)
-      Some((keys, spark.sparkContext.broadcast(bloom)))
+      if (keys.isEmpty) { keys.unpersist(); None } // no committed key to dedup against
+      else {
+        val expected = math.max(1000L, bootstrapFiles.map(_.recordCount).sum)
+        val bloom = keys.stat.bloomFilter(
+          concat(col("part_id").cast("string"), lit(":"), col("idempotency_key")), expected, 0.01)
+        Some((keys, spark.sparkContext.broadcast(bloom)))
+      }
     }
 
   private def sinceStartKeys(): DataFrame =

@@ -9,7 +9,8 @@ import java.nio.file.Paths
   * Reference behaviors matched:
   *  - C1 candidate selection: active files from the current snapshot, grouped
   *    by partition dir; keep files under `maxCandidateSize`; keep groups with
-  *    at least `minFilesPerGroup`; cap `maxFilesPerRun` per run
+  *    at least `minFilesPerGroup` (and never fewer than 2); cap
+  *    `maxFilesPerRun` per run
   *    (`/root/reference/src/storage/compaction.rs:25-34,139-171`)
   *  - C2 merge-rewrite: read candidates, re-sort, re-slice toward
   *    `targetFileSize` into the same partition dirs
@@ -50,13 +51,17 @@ object Compaction {
     if (i < 0) "" else f.filePath.substring(0, i)
   }
 
+  /** The smallest group the size rules take: a lone file rewrites into one
+    * file in the same dir, which would be a candidate again forever. */
+  private def minGroup(cfg: Config): Int = math.max(2, cfg.minFilesPerGroup)
+
   /** C1: whole partition-dir groups of small files, capped per run. */
   def selectCandidates(active: Seq[DataFile], cfg: Config): Seq[DataFile] = {
     val groups = active
       .filter(_.fileSizeInBytes < cfg.maxCandidateSize)
       .groupBy(dirOf)
       .toSeq
-      .filter(_._2.size >= cfg.minFilesPerGroup)
+      .filter(_._2.size >= minGroup(cfg))
       .sortBy(_._1)
     var budget = cfg.maxFilesPerRun
     groups.flatMap { case (_, fs) =>
@@ -93,7 +98,7 @@ object Compaction {
     try {
       // job 1: group counts only (O(dirs) rows to the driver)
       val groupCounts = files.groupBy("dir").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= cfg.minFilesPerGroup)
+        .filter(col("n") >= minGroup(cfg))
         .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
       var budget = cfg.maxFilesPerRun.toLong
       val chosen = groupCounts.collect {

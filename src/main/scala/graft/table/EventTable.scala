@@ -85,8 +85,10 @@ object EventTable {
     * every (partition, bucket) run it holds straight to its final
     * `data/partition=P/b<B>-<uuid>.parquet` name and returns the file's
     * stats from the footer it just wrote — no staging dir, no rename, no
-    * footer re-read. Exactness guarantees, both load-bearing for
-    * concurrent writers and the manifest-totals arithmetic:
+    * footer re-read. Input whose plan folds to a driver-local relation (a
+    * gateway flush batch) runs the same layout and task writer on driver
+    * threads instead, with no job. Exactness guarantees, both load-bearing
+    * for concurrent writers and the manifest-totals arithmetic:
     *  - the returned list is the job's own output, never a before/after
     *    directory diff that could adopt (or later delete) a concurrent
     *    writer's files; files are invisible until a snapshot references
@@ -140,16 +142,14 @@ object EventTable {
     // measurable per-trigger cost on the streaming path); a huge profile
     // (very wide bulk load) falls back to a broadcast join rather than
     // bloating the plan tree.
-    val withChunk =
+    val (withChunk, chunkCol) =
       if (chunks.length > 1024) {
         val chunkDf = chunks.map { case (p, chunk, _) => (p, chunk) }.toSeq.toDF("partition", "seq_chunk")
-        df.join(broadcast(chunkDf), Seq("partition"), "left")
-          .withColumn("_chunk", coalesce(col("seq_chunk"), lit(Long.MaxValue)))
-          .drop("seq_chunk")
+        (df.join(broadcast(chunkDf), Seq("partition"), "left"), coalesce(col("seq_chunk"), lit(Long.MaxValue)))
       } else if (chunks.nonEmpty) {
         val m = typedLit(chunks.map { case (p, chunk, _) => p -> chunk }.toMap)
-        df.withColumn("_chunk", coalesce(element_at(m, col("partition")), lit(Long.MaxValue)))
-      } else df.withColumn("_chunk", lit(Long.MaxValue))
+        (df, coalesce(element_at(m, col("partition")), lit(Long.MaxValue)))
+      } else (df, lit(Long.MaxValue))
     // `seqBase` anchors bucket 0 at each partition's pre-write watermark so
     // bucket boundaries align with THIS write's sequence range: an append
     // whose sequences continue from an arbitrary watermark still cuts
@@ -158,20 +158,15 @@ object EventTable {
     val baseCol =
       if (seqBase.isEmpty) lit(0L)
       else coalesce(element_at(typedLit(seqBase), col("partition")), lit(0L))
+    // one projection: every analysis pass walks a driver-local input's rows
     val bucketed = withChunk
-      .withColumn("bucket", ((col("sequence") - lit(1L) - baseCol) / col("_chunk")).cast("int"))
-      .drop("_chunk")
+      .withColumn("bucket", ((col("sequence") - lit(1L) - baseCol) / chunkCol).cast("int"))
+      .drop("seq_chunk")
     // `dateLayout` = the evolved spec (identity partition + event_date):
     // event_date becomes a directory key too. It derives from timestamp_ms,
     // so each (partition, bucket) run splits into contiguous sorted runs.
     val keys  = Seq("partition", "bucket") ++ (if (dateLayout) Seq("event_date") else Nil)
-    val order = (keys ++ Seq("timestamp_ms", "sequence")).map(col)
-    // `clustered` callers (the streaming per-partition sequencing pass)
-    // already hold each log partition whole on one task — write straight
-    // from those tasks instead of paying a bucket re-shuffle.
-    val arranged =
-      if (clustered) bucketed.sortWithinPartitions(order: _*)
-      else bucketed.repartition(totalBuckets, col("partition"), col("bucket")).sortWithinPartitions(order: _*)
+    val order = keys ++ Seq("timestamp_ms", "sequence")
     // Guardrail for clustered writes whose bucketing profile may not cover
     // every partition (e.g. a stream's first batch): cap records per file so
     // an unprofiled huge partition still splits near the size target instead
@@ -186,8 +181,23 @@ object EventTable {
         val bytesPerRow = if (pr > 0 && pb > 0) math.max(1L, pb / pr) else 64L
         math.max(1L, target / bytesPerRow)
       } else spark.sessionState.conf.maxRecordsPerFile
-    TaskWriter.write(arranged, tableRoot, keys, if (maxRecords > 0) maxRecords else Long.MaxValue)(
-      TaskWriter.dataFilePath)
+    val cap = if (maxRecords > 0) maxRecords else Long.MaxValue
+    TaskWriter.localRows(bucketed) match {
+      // rows built on the driver (a gateway flush batch): every projection
+      // above folded into them, so driver threads write them, one log
+      // partition each, with no Spark job
+      case Some(rows) =>
+        TaskWriter.writeLocal(spark, rows, bucketed.schema, tableRoot, keys, order, cap)(TaskWriter.dataFilePath)
+      case None =>
+        // `clustered` callers (the streaming per-partition sequencing pass)
+        // already hold each log partition whole on one task — write straight
+        // from those tasks instead of paying a bucket re-shuffle.
+        val sorted = order.map(col)
+        val arranged =
+          if (clustered) bucketed.sortWithinPartitions(sorted: _*)
+          else bucketed.repartition(totalBuckets, col("partition"), col("bucket")).sortWithinPartitions(sorted: _*)
+        TaskWriter.write(arranged, tableRoot, keys, cap)(TaskWriter.dataFilePath)
+    }
   }
 
   /** [[writeFiles]]' table-root-relative paths — the same single write. */

@@ -2,6 +2,7 @@ package graft.table
 
 import graft.core.{FileMemo, Oracle}
 import graft.iceberg.{FieldIds, IcebergCommitter, TableIO}
+import graft.spark.GraftDataSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,9 +109,11 @@ object IcebergQueries {
     // The custom DataSource V2: spark.read.format("graft") resolves the
     // file list from OUR manifests and file-prunes on pushed filters via
     // manifest bounds (partition identity + sequence/timestamp min-max).
+    // Engine-internal reads name the provider class: the short name needs
+    // the META-INF/services registration, absent from a classes-only build.
     "v2_source_read" -> { (s, dir) =>
       val root = CommittedTables.tableRoot(s, dir)
-      s.read.format("graft").load(root)
+      s.read.format(classOf[GraftDataSource].getName).load(root)
         .filter(col("partition") === 4 && col("sequence") >= 25L)
         .orderBy("sequence")
         .limit(250)
@@ -363,7 +366,7 @@ object IcebergQueries {
     // the expiry's physical GC fails the read outright.
     "x14_tag_travel" -> { (s, dir) =>
       val root = TaggedTables.tableRoot(s, dir)
-      s.read.format("graft").option("versionAsOf", "pre-tail").load(root)
+      s.read.format(classOf[GraftDataSource].getName).option("versionAsOf", "pre-tail").load(root)
         .groupBy(col("partition").cast("int").as("part_id"))
         .agg(
           count(lit(1)).as("n"),
@@ -1099,7 +1102,8 @@ object TailedTables {
       val root = tmp("graft-tail-")
       EventTable.ingestAndCommit(spark, sfDir, root, fragmentInto = Some(8))
       val sink = tmp("graft-tailsink-")
-      def run(): Unit = TailBatch.drain(spark, sink)(spark.readStream.format("graft").load(root))
+      def run(): Unit =
+        TailBatch.drain(spark, sink)(spark.readStream.format(classOf[GraftDataSource].getName).load(root))
       run()
       val n1 = spark.read.parquet(s"$sink/data").count()
       val batch = TailBatch.of(EventTable.readCommitted(spark, root),
@@ -1151,7 +1155,7 @@ object StreamedChangefeedTables {
         mapLog = TailBatch.kLessEvery13th)
       val base = committer.load().get.currentSnapshotId.get
       val sink = tmp("graft-w8sink-")
-      def run(): Unit = TailBatch.drain(spark, sink)(spark.readStream.format("graft")
+      def run(): Unit = TailBatch.drain(spark, sink)(spark.readStream.format(classOf[GraftDataSource].getName)
         .option("changefeed", "true").option("fromSnapshot", base.toString).load(root))
       val batch = TailBatch.of(EventTable.readCommitted(spark, root),
                                n = 5, maxPart = 2, kShift = Some(444000L), prefix = "c")

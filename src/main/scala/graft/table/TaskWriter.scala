@@ -8,17 +8,25 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.{LocalOutputFile, OutputFile, PositionOutputStream}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+import org.apache.spark.sql.catalyst.optimizer.CollapseProject
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
+import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Success, Try}
 
 /** The one table-file writer: a single Spark job whose tasks write sorted
   * parquet straight to final table paths and return each file's
-  * [[DataFile]] stats from the writer's own footer.
+  * [[DataFile]] stats from the writer's own footer — or, for rows already
+  * in driver memory ([[localRows]]), the same per-task writer run on
+  * driver threads with no job at all ([[writeLocal]]).
   *
   * Spark's `DataFrameWriter.parquet` (FileFormatWriter) ships the session
   * Hadoop `Configuration` inside every task closure twice (job description
@@ -46,23 +54,89 @@ object TaskWriter extends Serializable {
     * (stats, uncompressed bytes), sorted by path. */
   def write(df: DataFrame, tableRoot: String, keys: Seq[String], maxRecords: Long)
            (relPathOf: InternalRow => String): Seq[(DataFile, Long)] = {
-    val spark      = df.sparkSession
-    val schema     = df.schema
-    val dataSchema = StructType(schema.filterNot(f => keys.contains(f.name)))
-    val job        = Job.getInstance(spark.sessionState.newHadoopConf())
-    new ParquetFileFormat().prepareWrite(spark, job, Map("compression" -> "zstd"), dataSchema)
-    val confB      = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
-    def refs(fields: Seq[String]) =
-      fields.map { n => val i = schema.fieldIndex(n); BoundReference(i, schema(i).dataType, schema(i).nullable) }
-    val keyRefs  = refs(keys)
-    val dataRefs = refs(dataSchema.fieldNames.toIndexedSeq)
-    val qe       = df.queryExecution
+    val spark                     = df.sparkSession
+    val (conf, keyRefs, dataRefs) = prepare(spark, df.schema, keys)
+    val confB = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    val qe    = df.queryExecution
     try SQLExecution.withNewExecutionId(qe, Some("writeFiles")) {
       qe.toRdd.mapPartitions { rows =>
         writeTask(rows, tableRoot, confB.value.value, UnsafeProjection.create(keyRefs),
                   UnsafeProjection.create(dataRefs), maxRecords, relPathOf).iterator
       }.collect().toSeq.sortBy(_._1.filePath)
     } finally confB.destroy()
+  }
+
+  /** `df`'s rows when its optimized plan is a driver-local relation — the
+    * optimizer (`ConvertToLocalRelation`) folded every projection over rows
+    * built on the driver into new driver rows — so no job is needed to
+    * reach them. The projections are collapsed first, so the fold (and
+    * every optimizer rule, each of which walks the relation's rows) runs
+    * once over the batch instead of once per `withColumn`. A plan with any
+    * other leaf is not optimized here. */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    val plan = df.queryExecution.analyzed
+    if (!plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.sparkSession.sessionState.executePlan(CollapseProject(plan)).optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _                => None
+    }
+  }
+
+  /** [[write]] for rows already on the driver, with no Spark job: the rows
+    * are grouped by the first key (the log partition), and each group is
+    * sorted by `order` with Spark's generated ordering and written by the
+    * same [[writeTask]] on the shared [[writerPool]] — the reference
+    * flusher's per-partition fan-out. Every group's write ends before a failure is
+    * rethrown, so a failed call leaves only finished or abandoned orphan
+    * files behind. */
+  def writeLocal(spark: SparkSession, rows: Seq[InternalRow], schema: StructType, tableRoot: String,
+                 keys: Seq[String], order: Seq[String], maxRecords: Long)
+                (relPathOf: InternalRow => String): Seq[(DataFile, Long)] = {
+    val (conf, keyRefs, dataRefs) = prepare(spark, schema, keys)
+    val sortOrder = refs(schema, order).map(SortOrder(_, Ascending))
+    val first     = schema.fieldIndex(keys.head)
+    val groupKey  = InternalRow.getAccessor(schema(first).dataType, nullable = true)
+    val writers   = writerPool(spark.sparkContext.defaultParallelism)
+    val writes = rows.groupBy(groupKey(_, first)).values.toSeq.map { group =>
+      writers.submit(new Callable[Seq[(DataFile, Long)]] {
+        def call(): Seq[(DataFile, Long)] =
+          writeTask(group.sorted(GenerateOrdering.generate(sortOrder)).iterator, tableRoot, conf,
+                    UnsafeProjection.create(keyRefs), UnsafeProjection.create(dataRefs), maxRecords, relPathOf)
+      })
+    }
+    writes.map(w => Try(w.get())).flatMap { // every write has ended here
+      case Success(files)                 => files
+      case Failure(e: ExecutionException) => throw e.getCause
+      case Failure(e)                     => throw e
+    }.sortBy(_._1.filePath)
+  }
+
+  /** The write conf, prepared ONCE by Spark's own `prepareWrite` for the
+    * data columns, and the key and data column references into `schema`. */
+  private def prepare(spark: SparkSession, schema: StructType, keys: Seq[String])
+      : (Configuration, Seq[BoundReference], Seq[BoundReference]) = {
+    val dataSchema = StructType(schema.filterNot(f => keys.contains(f.name)))
+    val job        = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map("compression" -> "zstd"), dataSchema)
+    (job.getConfiguration, refs(schema, keys), refs(schema, dataSchema.fieldNames.toIndexedSeq))
+  }
+
+  private def refs(schema: StructType, fields: Seq[String]): Seq[BoundReference] =
+    fields.map { n => val i = schema.fieldIndex(n); BoundReference(i, schema(i).dataType, schema(i).nullable) }
+
+  /** The driver writers' threads, shared by every [[writeLocal]] call: as
+    * many as the first writing session's `defaultParallelism`, daemons that
+    * end after a minute idle. */
+  private var pool: ThreadPoolExecutor = _
+
+  private def writerPool(threads: Int): ThreadPoolExecutor = synchronized {
+    if (pool == null) {
+      val n = new AtomicInteger(0)
+      pool = new ThreadPoolExecutor(threads, threads, 60L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+        (r: Runnable) => { val t = new Thread(r, s"graft-file-writer-${n.incrementAndGet()}"); t.setDaemon(true); t })
+      pool.allowCoreThreadTimeOut(true)
+    }
+    pool
   }
 
   /** A new data file's name for a (partition, bucket[, event_date]) key:

@@ -48,6 +48,25 @@ class CompactionSpec extends AnyFunSuite {
     assert(Compaction.selectCandidates(g, cfg).size === 10)
   }
 
+  test("C1: a lone file is never a size group, so minFilesPerGroup = 1 compaction ends") {
+    val cfg  = Compaction.Config(minFilesPerGroup = 1)
+    val lone = (0 to 2).map(p => df(s"data/partition=$p/f.parquet", 1000))
+    val pair = (1 to 2).map(i => df(s"data/partition=9/f$i.parquet", 1000))
+    assert(Compaction.selectCandidates(lone ++ pair, cfg).toSet === pair.toSet)
+    assert(Compaction.selectCandidatesDistributed(spark, lone ++ pair, cfg, threshold = 0).toSet === pair.toSet)
+    import spark.implicits._
+    def events(tag: String, parts: Int) =
+      (0 until parts).flatMap(p => (1 to 5).map(i => (p, s"$tag-$i", 1000L + i, s"$tag-$p-$i")))
+        .toDF("partition", "payload", "timestamp_ms", "idempotency_key")
+    val root = TestSpark.tempDir("graft-compact-lone-").toString
+    graft.streaming.StreamIngest.appendEvents(spark, root, events("a", 3))
+    graft.streaming.StreamIngest.appendEvents(spark, root, events("b", 1))
+    var runs = 0 // bounded, so a regression fails instead of looping
+    while (runs < 5 && Compaction.compact(spark, root, cfg).isDefined) runs += 1
+    assert(runs === 1, "one pass merges partition 0's two files; the lone files stay put")
+    assert(EventTable.readCommitted(spark, root).count() === 20L)
+  }
+
   test("C2+C3: compaction merges fragments and preserves every row") {
     val root = TestSpark.tempDir("graft-compact-spec-").toString
     EventTable.ingestAndCommit(spark, "/root/testdata/sf0.001", root, fragmentInto = Some(32))

@@ -811,51 +811,15 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally bpGw.stop()
   }
 
-  test("F2: a flush is one shuffle-free Spark job writing one sorted file per (partition, bucket)") {
-    import org.apache.spark.scheduler._
+  test("F2: a flush runs no Spark job; one sorted file per bucket") {
     // skewed batch: partition 0 is hot; timestamps arrive out of order so
     // the per-file sort is observable
     val topic = "flush_shape"
     (1 to 3000).foreach(i => server.hot.write(topic, 0, s"hot-$i".getBytes, 5000L - (i * 7919) % 4000, None))
     (1 to 6).foreach(p => (1 to 25).foreach(i =>
       server.hot.write(topic, p, ("c" * (10 * p)).getBytes, 3000L - i * 11, None)))
-
-    val group        = "flush-shape"
-    val jobs         = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val stages       = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-    val fenceJob     = new java.util.concurrent.atomic.AtomicInteger(-1)
-    @volatile var fenceDone = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_))
-          case Some("fence") => fenceJob.set(e.jobId)
-          case _             => ()
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == fenceJob.get()) fenceDone = true
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "flush under test")
-      try assert(server.flushNow(topic).isDefined)
-      finally sc.clearJobGroup()
-      // the listener bus is FIFO: once a later marker job is seen, every
-      // event of the flush has been delivered
-      sc.setJobGroup("fence", "listener fence")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!fenceDone && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-
-    assert(jobs.get() === 1, "the flush must run exactly one Spark job")
-    assert(shuffleBytes.get() === 0L, "the flush must write no shuffle data")
+    assert(TestSpark.jobsDuring(assert(server.flushNow(topic).isDefined)) === 0,
+      "the flush batch is written from the driver")
     val root  = s"$baseDir/$topic"
     val files = new graft.iceberg.IcebergCommitter(graft.iceberg.TableIO.forRoot(root), topic)
       .activeDataFiles().map(_.filePath)
@@ -870,6 +834,28 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
       val rows = spark.read.parquet(path).select("timestamp_ms", "sequence").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(rows === rows.sorted, s"$f is not sorted by (timestamp_ms, sequence)")
+    }
+  }
+
+  test("an extraction-topic flush runs no Spark job and extracts every row") {
+    val topic = "flush_extract"
+    val root  = java.nio.file.Paths.get(baseDir, topic)
+    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.writeString(root.resolve("table_schema.json"),
+      """{"payload_format":"json","fields":[{"name":"v","json_path":"m.v","data_type":"Int32","nullable":true}]}""")
+    (0 until 3).foreach(p => (1 to 40).foreach { i =>
+      val payload = if (i % 10 == 0) "not json" else s"""{"m":{"v":$i},"keep":$p}"""
+      server.hot.write(topic, p, payload.getBytes("UTF-8"), 1000L + i, Some(s"k$p-$i"))
+    })
+    assert(TestSpark.jobsDuring(assert(server.flushNow(topic).isDefined)) === 0,
+      "the extraction projection folds into the driver batch")
+    val rows = EventTable.readCommitted(spark, root.toString)
+      .select("partition", "sequence", "v", "_payload_overflow").collect()
+    assert(rows.length === 120)
+    rows.foreach { r =>
+      val i = r.getLong(1).toInt
+      if (i % 10 == 0) assert(r.isNullAt(2) && r.getString(3) === "not json", r)
+      else assert(r.getInt(2) === i && r.getString(3) === s"""{"keep":${r.getInt(0)}}""", r)
     }
   }
 }

@@ -238,6 +238,33 @@ class StreamIngestSpec extends AnyFunSuite {
       "the resumed feed must deliver exactly the appends after the expired checkpoint")
   }
 
+  test("a caught-up append tail resumes after expiry removed its checkpointed snapshot") {
+    val root = TestSpark.tempDir("graft-tailexp-").toString
+    val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
+    val n0   = EventTable.readCommitted(spark, root).count()
+    val sink = TestSpark.tempDir("graft-tailexp-sink-").toString
+    def drain(): Unit = graft.table.TailBatch.drain(spark, sink)(spark.readStream.format("graft").load(root))
+    def append(kShift: Long, prefix: String): Unit =
+      EventTable.appendBatch(spark, root, graft.table.TailBatch.of(
+        EventTable.readCommitted(spark, root), n = 5, maxPart = 2, kShift = Some(kShift), prefix = prefix))
+    drain() // bootstrap: the whole table
+    append(246000L, "e")
+    drain() // caught up: the checkpoint holds the head
+    val caughtUp = c.load().get.currentSnapshotId.get
+    append(357000L, "f"); append(468000L, "g")
+    c.expireSnapshots(keepLast = 2)
+    assert(!c.load().get.snapshots.exists(_.snapshotId == caughtUp),
+      "fixture expects the checkpointed snapshot to be expired")
+    drain()
+    val tail = spark.read.parquet(s"$sink/data")
+    assert(tail.count() === n0 + 30L)
+    val appended = tail.filter(col("idempotency_key").rlike("^[efg]"))
+      .groupBy(substring(col("idempotency_key"), 1, 1).as("batch")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(appended === Map("e" -> 10L, "f" -> 10L, "g" -> 10L),
+      "the resumed tail must deliver exactly the appends after the expired checkpoint")
+  }
+
   test("changefeed fromTimestamp resolves head ancestry; expired history names the restart point") {
     val root = TestSpark.tempDir("graft-cfts-").toString
     val c    = EventTable.ingestAndCommit(spark, sf, root, fragmentInto = Some(4))
@@ -580,6 +607,18 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(afterSecond.count() === 170L)
     assert(afterSecond.filter(col("idempotency_key").isNull).count() === 20L,
       "key-less appends land with NULL keys, not synthetic ones")
+  }
+
+  test("appendEvents: a second keyless append on a keyless table lands in full") {
+    import spark.implicits._
+    val root = TestSpark.tempDir("graft-append-keyless-").toString
+    def mk(ids: Range) = ids.map(i => (i % 4, s"payload-$i", 1000L + i)).toDF("partition", "payload", "timestamp_ms")
+    assert(StreamIngest.appendEvents(spark, root, mk(0 until 20)).isDefined)
+    // the bootstrap dedup over a table holding only null keys
+    assert(StreamIngest.appendEvents(spark, root, mk(0 until 20)).isDefined)
+    val committed = EventTable.readCommitted(spark, root)
+    assert(committed.count() === 40L)
+    assert(committed.filter(col("idempotency_key").isNull).count() === 40L)
   }
 
   test("appendEvents: concurrent appends retry on conflict, never overlap sequences") {
