@@ -122,10 +122,11 @@ object PayloadExtractor {
       val (vals, overflow) = extractOne(cfg, payload)
       (vals.map(_.orNull), overflow.orNull)
     }
-    val withEx = df.withColumn("_ex", exUdf(payloadCol.cast("string")))
-    val typed = fields.zipWithIndex.foldLeft(withEx) { case (d, (f, i)) =>
-      d.withColumn(f.name, element_at(col("_ex._1"), i + 1).cast(sparkType(f.dataType)))
-    }
-    typed.withColumn("_payload_overflow", col("_ex._2")).drop("_ex")
+    val added = fields.zipWithIndex.map { case (f, i) =>
+      element_at(col("_ex._1"), i + 1).cast(sparkType(f.dataType)).as(f.name)
+    } :+ col("_ex._2").as("_payload_overflow")
+    val names = fields.map(_.name).toSet + "_payload_overflow"
+    df.withColumn("_ex", exUdf(payloadCol.cast("string")))
+      .select(df.columns.filterNot(names).map(c => col(s"`$c`")).toSeq ++ added: _*)
   }
 }

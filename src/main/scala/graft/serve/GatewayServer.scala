@@ -62,8 +62,8 @@ final class GatewayServer(
   private val mapper  = new ObjectMapper()
   // INV-2: accepted-but-unflushed events survive a gateway crash via the
   // write-ahead log (the reference gets this from RocksDB's WAL).
-  val hot = new HotBuffer(
-    if (walEnabled) Some(new WriteAheadLog(Paths.get(baseDir, "_wal"))) else None)
+  private val wal = if (walEnabled) Some(new WriteAheadLog(Paths.get(baseDir, "_wal"))) else None
+  val hot = new HotBuffer(wal)
   val metrics         = new Metrics
   private val permits = new Semaphore(maxInflight)
   private val inflightBytes = new AtomicLong(0)
@@ -75,6 +75,8 @@ final class GatewayServer(
   private def tableLock(t: String): Object = tableLocks.computeIfAbsent(t, _ => new Object)
 
   metrics.gauge("zombi_hot_events")(hot.topics.map(hot.size).sum.toDouble)
+  metrics.gauge("zombi_wal_segments")(wal.fold(0)(_.segments).toDouble)
+  metrics.gauge("zombi_wal_bytes")(wal.fold(0L)(_.bytes).toDouble)
   // per-(topic,partition) hot storage events, read live at render time
   metrics.labelledGauge("zombi_hot_storage_events") {
     hot.topics.flatMap { t =>

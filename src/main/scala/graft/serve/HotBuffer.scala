@@ -22,10 +22,10 @@ final case class StoredEvent(
   * The reference stores this tier in RocksDB with its WAL on by default
   * (`rocksdb.rs:579-592`): a 202-acknowledged write survives a crash. The
   * optional [[WriteAheadLog]] restores that invariant here — accepted
-  * writes are appended before the ack and replayed on construction; the
-  * log is compacted to the live buffer after flush eviction. All methods
-  * are synchronized — this is the single-node front-end, not the
-  * distributed path.
+  * writes are appended before the ack and replayed on construction;
+  * [[cleanup]] rolls the log to a new segment and deletes the segments
+  * whose events are all committed. All methods are synchronized — this is
+  * the single-node front-end, not the distributed path.
   */
 final class HotBuffer(wal: Option[WriteAheadLog] = None) {
   private val events = mutable.Map.empty[(String, Int), mutable.ArrayBuffer[StoredEvent]]
@@ -53,8 +53,6 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
     }
   }
 
-  /** Returns (offset, isDuplicate); duplicates return the original offset
-    * and consume no sequence number. */
   /** Buffer insert WITHOUT the WAL append — callers append (single or
     * batched) and must hold this buffer's monitor. */
   private def insert(topic: String, partition: Int, payload: Array[Byte], timestampMs: Long,
@@ -89,6 +87,8 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
     ev.idempotencyKey.foreach(k => idem.remove((ev.topic, ev.partition, k)))
   }
 
+  /** Returns (offset, isDuplicate); duplicates return the original offset
+    * and consume no sequence number. */
   def write(topic: String, partition: Int, payload: Array[Byte], timestampMs: Long,
             idempotencyKey: Option[String]): (Long, Boolean) = synchronized {
     val (off, dup, e) = insert(topic, partition, payload, timestampMs, idempotencyKey)
@@ -210,47 +210,29 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
 
   /** F11: evict events covered by the committed watermark, except those
     * within the retention window; drop idempotency entries for evicted
-    * events (the reference's cleanup-watermark semantics). */
+    * events (the reference's cleanup-watermark semantics). Then roll the
+    * WAL to a new segment headed by every sequence counter, and delete the
+    * closed segments whose events are all committed and that closed at
+    * least `retainMs` ago. Appends take this monitor too, so none races the
+    * roll. */
   def cleanup(topic: String, watermarks: Map[Int, Long], retainMs: Long = 0L,
-              nowMs: Long = System.currentTimeMillis()): Int = {
-    // evict under the buffer lock; snapshot (refs only) what the WAL
-    // rewrite needs and run the compaction OUTSIDE the lock — holding it
-    // across a full live-set file rewrite blocked every concurrent write
-    // for the compaction's duration (the burst worst-cycle p99). Writes
-    // racing the rewrite stay durable: the WAL captures frames appended
-    // mid-compaction and drains them into the swapped file.
-    def run(): Int = {
-      val (evicted, seqSnap, liveSnap, token) = synchronized {
-        var n = 0
-        watermarks.foreach { case (p, wm) =>
-          events.get((topic, p)).foreach { buf =>
-            val (drop, keep) = buf.partition(e => e.sequence <= wm && e.timestampMs < nowMs - retainMs)
-            n += drop.size
-            drop.foreach(e => e.idempotencyKey.foreach(k => idem.remove((topic, p, k))))
-            buf.clear(); buf ++= keep
-          }
-        }
-        // arm the WAL's catch-up capture BEFORE the snapshot escapes this
-        // lock: a write landing after the snapshot is then guaranteed to be
-        // drained into the rewritten log
-        val tok = if (n > 0) wal.map(_.beginCapture()) else None
-        (n, seqs.toMap, if (n > 0) events.values.flatten.toVector else Vector.empty, tok)
+              nowMs: Long = System.currentTimeMillis()): Int = synchronized {
+    var n = 0
+    watermarks.foreach { case (p, wm) =>
+      events.get((topic, p)).foreach { buf =>
+        val (drop, keep) = buf.partition(e => e.sequence <= wm && e.timestampMs < nowMs - retainMs)
+        n += drop.size
+        // a replayed committed event may share its key with a later live one
+        drop.foreach(e => e.idempotencyKey.foreach { k =>
+          if (idem.get((topic, p, k)).contains(e.sequence)) idem.remove((topic, p, k))
+        })
+        buf.clear(); buf ++= keep
       }
-      // bound the WAL at O(live buffer): rewrite to seq-marks + live events
-      if (evicted > 0) wal.foreach(_.compact(seqSnap, liveSnap, token.getOrElse(-1L)))
-      evicted
     }
-    // the whole arm→snapshot→compact sequence runs under the WAL's
-    // compaction mutex: cleanup is called concurrently (flush daemon +
-    // POST /flush on HTTP pool threads) over ONE shared buffer/WAL, and
-    // two interleaved sequences can drop an acked event from the rewritten
-    // log (the first compact drains and disarms the capture the second
-    // cleanup armed; a write acked between the first swap and the second
-    // re-arm is in neither the second snapshot nor its side buffer).
-    // Appends never take this mutex, so the burst-p99 property is intact.
-    wal match {
-      case Some(w) => w.exclusively(run())
-      case None    => run()
+    wal.foreach { w =>
+      w.roll(seqs, nowMs)
+      w.dropCommitted(watermarks.map { case (p, wm) => (topic, p) -> wm }, retainMs, nowMs)
     }
+    n
   }
 }

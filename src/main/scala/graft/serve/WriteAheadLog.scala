@@ -1,8 +1,10 @@
 package graft.serve
 
 import java.io.{BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, FileOutputStream}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, StandardOpenOption}
 import java.util.zip.CRC32
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Local write-ahead log for the hot tier (INV-2 analogue).
@@ -15,74 +17,67 @@ import scala.jdk.CollectionConverters._
   * before the 202, and a restarting gateway replays the log to rebuild the
   * buffer — a crash between accept and flush loses nothing.
   *
-  * Format: length-prefixed CRC32-framed records. Replay stops at the first
-  * torn/corrupt record (a crash mid-append leaves a bad tail, never a bad
-  * prefix). Two record types:
-  *  - event: the full [[StoredEvent]]
-  *  - seq-mark: (topic, partition, sequence) — written during compaction so
-  *    sequence counters survive even when all of a partition's events have
-  *    been evicted
+  * The log is a run of segment files `hot-<id>.wal`, as RocksDB recycles
+  * whole WAL files once their memtables flush. Appends go to the head
+  * segment. [[roll]] (called by [[HotBuffer.cleanup]] after each flush)
+  * closes the head and opens the next one; [[dropCommitted]] deletes each
+  * closed segment whose events are all at or under the committed
+  * watermarks and that closed at least `retainMs` ago. No live event is
+  * ever rewritten.
   *
-  * [[compact]] rewrites the log to the current live buffer contents
-  * (new file + atomic rename), bounding the log at O(hot buffer) — called
-  * after flush eviction, playing the reference's cleanup-watermark role.
+  * Format: length-prefixed CRC32-framed records. Replay reads the segments
+  * in id order and stops at the first torn/corrupt record: it cuts that
+  * segment there and deletes the later ones, so a crash mid-append leaves
+  * a bad tail, never a bad prefix or a sequence gap. Two record types:
+  *  - event: the full [[StoredEvent]]
+  *  - seq-mark: (topic, partition, sequence) — one per counter at the head
+  *    of every segment, so sequence counters survive after the segments
+  *    holding a partition's events are deleted
+  * A legacy single-file `hot.wal` (same format) replays as the oldest
+  * segment.
   *
   * Durability level matches RocksDB's default WAL: records are flushed to
   * the OS page cache per append (survives process crash); pass
   * `fsyncEachAppend = true` to also survive power loss, at a latency cost.
   */
 final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
-  private val logPath = dir.resolve("hot.wal")
+  import WriteAheadLog._
   Files.createDirectories(dir)
-  // a crash between writing and renaming a compaction tmp leaves the main
-  // log intact and the tmp as garbage — sweep stale tmps on open
-  locally {
+
+  // segments already on disk, read (then registered as closed) by [[replay]]
+  private var found: Seq[Path] = {
     val s = Files.list(dir)
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("hot.wal.compact."))
-      .foreach(Files.deleteIfExists(_))
+    try s.iterator().asScala.filter(p => idOf(p).isDefined).toSeq.sortBy(idOf(_).get)
     finally s.close()
   }
+  private var closed = Vector.empty[Closed]
+  // max-merged committed watermark per (topic, partition), from cleanup
+  private val committed = mutable.Map.empty[(String, Int), Long]
 
+  private var headId: Long = found.lastOption.flatMap(idOf).getOrElse(0L) + 1
+  private var head: Path = _
   private var out: DataOutputStream = _
   private var fileOut: FileOutputStream = _
-  // serializes whole compaction SEQUENCES (arm → snapshot → compact, via
-  // [[exclusively]]); `side` (guarded by this WAL's monitor) captures
-  // frames appended while a compaction rewrite is in flight, and
-  // `sideToken` names the capture so a compaction can only drain/disarm
-  // the capture IT armed — never one a concurrent cleanup just armed
-  private val compactLock = new Object
-  private var side: scala.collection.mutable.ArrayBuffer[Array[Byte]] = null
-  private var sideToken: Long = 0L
-  // TEST-ONLY fault injection: when set, the next compaction throws at the
-  // worst point — after the append stream is closed, before the rename —
-  // exercising the reopen-on-failure path a real rename error would hit
-  private[graft] var failNextSwap: Boolean = false
+  // bytes known durably flushed (through the OS page cache) to the head —
+  // the clean-tail watermark a failed append truncates back to
+  private var committedLen: Long = 0L
+  // highest event sequence per (topic, partition) in the head
+  private val headMax = mutable.Map.empty[(String, Int), Long]
+
   // TEST-ONLY: the next appendFrames throws after buffering its frames but
   // before the flush — simulating a mid-append IO failure, exercising the
   // clean-tail recovery plus the HotBuffer rollback
   private[graft] var failNextAppend: Boolean = false
-  openAppend()
+  // TEST-ONLY: the next roll throws after creating the next segment, before
+  // the swap — the head must stay the append target
+  private[graft] var failNextRoll: Boolean = false
+  openHead(segmentPath(dir, headId))
 
-  /** Run `body` holding the compaction mutex. A caller that arms the
-    * catch-up capture ([[beginCapture]]), snapshots its live set, and then
-    * calls [[compact]] MUST wrap the whole sequence here: with two
-    * concurrent cleanups over one shared WAL (flush daemon + HTTP flush),
-    * an unserialized first compact would drain-and-disarm the capture the
-    * second cleanup just armed, and a write acked between the first swap
-    * and the second compact would land in neither the second snapshot nor
-    * its side buffer — dropped from the WAL on the second swap. Appends
-    * never take this lock, so writes are not stalled. Reentrant. */
-  def exclusively[T](body: => T): T = compactLock.synchronized(body)
-
-  // bytes known durably flushed (through the OS page cache) to the log —
-  // the clean-tail watermark a failed append truncates back to
-  private var committedLen: Long = 0L
-
-  private def openAppend(): Unit = {
-    fileOut = new FileOutputStream(logPath.toFile, true)
+  private def openHead(path: Path): Unit = {
+    fileOut = new FileOutputStream(path.toFile, true)
     out = new DataOutputStream(new BufferedOutputStream(fileOut, 1 << 16))
-    committedLen = if (Files.exists(logPath)) Files.size(logPath) else 0L
+    head = path
+    committedLen = Files.size(path)
   }
 
   private def encode(tpe: Byte)(write: DataOutputStream => Unit): Array[Byte] = {
@@ -94,14 +89,14 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
     body.toByteArray
   }
 
-  /** Caller must hold this WAL's monitor. */
-  private def writeFrame(bytes: Array[Byte]): Unit = {
+  private def writeFrame(o: DataOutputStream)(bytes: Array[Byte]): Unit = {
     val crc = new CRC32(); crc.update(bytes)
-    out.writeInt(bytes.length)
-    out.writeLong(crc.getValue)
-    out.write(bytes)
-    if (side != null) side += bytes // a compaction is rewriting: capture
+    o.writeInt(bytes.length)
+    o.writeLong(crc.getValue)
+    o.write(bytes)
   }
+
+  private def frameBytes(frames: Seq[Array[Byte]]): Long = frames.iterator.map(b => 12L + b.length.toLong).sum
 
   /** Replay rejects frames above this as corrupt and TRUNCATES the log
     * there — so append must never produce one: an oversized admitted
@@ -114,27 +109,25 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
       throw new IllegalArgumentException(
         s"event frame of ${bytes.length} bytes exceeds the $MaxFrameBytes-byte WAL replay cap")
 
-  /** Write + flush a batch of pre-encoded frames under the monitor. On ANY
-    * failure the log is restored to its last clean tail (close, truncate
-    * to [[committedLen]], reopen) and captured side frames are rolled
-    * back — continuing to append past a torn tail would make every later
-    * acked event unreachable to replay (which stops at the first torn
-    * frame). The caller ([[HotBuffer]]) rolls its buffer state back too,
-    * so a failed append leaves NO trace: the client's retry is safe. */
+  /** Write + flush a batch of pre-encoded frames to the head. On ANY
+    * failure the head is restored to its last clean tail (close, truncate
+    * to [[committedLen]], reopen) — continuing to append past a torn tail
+    * would make every later acked event unreachable to replay (which stops
+    * at the first torn frame). The caller ([[HotBuffer]]) rolls its buffer
+    * state back too, so a failed append leaves NO trace: the client's
+    * retry is safe. */
   private def appendFrames(frames: Seq[Array[Byte]]): Unit = synchronized {
-    val sideMark = if (side != null) side.size else -1
     try {
-      frames.foreach(writeFrame)
+      frames.foreach(writeFrame(out))
       if (failNextAppend) {
         failNextAppend = false
         throw new java.io.IOException("injected append failure (test hook)")
       }
       out.flush()
       if (fsyncEachAppend) fileOut.getFD.sync()
-      committedLen += frames.iterator.map(b => 12L + b.length.toLong).sum
+      committedLen += frameBytes(frames)
     } catch {
       case t: Throwable =>
-        if (side != null && sideMark >= 0 && side.size > sideMark) side.takeInPlace(sideMark)
         recoverTail()
         throw t
     }
@@ -145,17 +138,8 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
     * appends stay replayable. Caller holds the monitor. */
   private def recoverTail(): Unit = {
     try out.close() catch { case _: Exception => () }
-    try {
-      val ch = java.nio.channels.FileChannel.open(logPath, java.nio.file.StandardOpenOption.WRITE)
-      try ch.truncate(committedLen) finally ch.close()
-    } catch { case _: Exception => () }
-    try openAppend() catch { case _: Exception => () }
-  }
-
-  private def frame(tpe: Byte)(write: DataOutputStream => Unit): Unit = {
-    val bytes = encode(tpe)(write)
-    checkFrame(bytes)
-    appendFrames(Seq(bytes))
+    try truncate(head, committedLen) catch { case _: Exception => () }
+    try openHead(head) catch { case _: Exception => () }
   }
 
   private def eventBody(e: StoredEvent)(d: DataOutputStream): Unit = {
@@ -169,7 +153,12 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
     d.write(e.payload)
   }
 
-  def appendEvent(e: StoredEvent): Unit = frame(0)(eventBody(e))
+  private def seqMarks(counters: Iterable[((String, Int), Long)]): Seq[Array[Byte]] =
+    counters.toSeq.sortBy(_._1).map { case ((t, p), s) =>
+      encode(1) { d => d.writeUTF(t); d.writeInt(p); d.writeLong(s) }
+    }
+
+  def appendEvent(e: StoredEvent): Unit = appendEvents(Seq(e))
 
   /** Bulk append: every event framed individually (replay sees the same
     * record stream as N single appends) but ONE flush — and one fsync when
@@ -182,21 +171,110 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
     if (es.isEmpty) return
     val frames = es.iterator.map(e => encode(0)(eventBody(e))).toArray
     frames.foreach(checkFrame) // validate ALL before writing ANY (atomic batch)
-    appendFrames(frames.toSeq)
+    synchronized {
+      appendFrames(frames.toSeq)
+      es.foreach(e => raise(headMax, (e.topic, e.partition), e.sequence))
+    }
   }
 
-  def appendSeqMark(topic: String, partition: Int, sequence: Long): Unit = frame(1) { d =>
-    d.writeUTF(topic)
-    d.writeInt(partition)
-    d.writeLong(sequence)
+  /** Close the head and make a new segment, headed by one seq-mark per
+    * entry of `counters`, the append target. A no-op while the head holds
+    * no event. If the next segment cannot be written, the current head
+    * stays the append target and the error is rethrown. The caller holds
+    * the monitor its appends take ([[HotBuffer]]'s), so `counters` is
+    * current and no append meets a closed stream. */
+  def roll(counters: collection.Map[(String, Int), Long], nowMs: Long = System.currentTimeMillis()): Unit =
+    synchronized {
+      if (headMax.isEmpty) return
+      val next  = segmentPath(dir, headId + 1)
+      val marks = seqMarks(counters)
+      val nf    = new FileOutputStream(next.toFile, true)
+      val no    = new DataOutputStream(new BufferedOutputStream(nf, 1 << 16))
+      try {
+        if (failNextRoll) {
+          failNextRoll = false
+          throw new java.io.IOException("injected roll failure (test hook)")
+        }
+        marks.foreach(writeFrame(no))
+        no.flush()
+        if (fsyncEachAppend) nf.getFD.sync()
+      } catch {
+        case t: Throwable =>
+          try no.close() catch { case _: Exception => () }
+          Files.deleteIfExists(next)
+          throw t
+      }
+      try out.close() catch { case _: Exception => () } // every frame is already flushed
+      closed :+= Closed(head, committedLen, headMax.toMap, nowMs)
+      headMax.clear()
+      headId += 1
+      head = next; out = no; fileOut = nf
+      committedLen = frameBytes(marks)
+    }
+
+  /** Max-merge `watermarks` into the committed marks, then delete every
+    * closed segment whose events are all at or under them and that closed
+    * at least `retainMs` before `nowMs`. Retention is wall clock from the
+    * close, never event time: a future-dated event cannot pin a segment. */
+  def dropCommitted(watermarks: Iterable[((String, Int), Long)], retainMs: Long,
+                    nowMs: Long = System.currentTimeMillis()): Unit = synchronized {
+    watermarks.foreach { case (k, wm) => raise(committed, k, wm) }
+    closed = closed.filter { s =>
+      val done = nowMs - s.closedAtMs >= retainMs &&
+        s.maxSeq.forall { case (k, seq) => seq <= committed.getOrElse(k, 0L) }
+      if (done) Files.deleteIfExists(s.path)
+      !done
+    }
   }
 
-  /** Replay every intact record in append order; stops (and truncates the
-    * file) at the first torn or corrupt frame. */
+  /** Segment files on disk (closed + head). */
+  def segments: Int = synchronized(closed.size + 1)
+
+  /** Bytes on disk across the segments. */
+  def bytes: Long = synchronized(closed.iterator.map(_.bytes).sum + committedLen)
+
+  /** Replay every intact record of the segments found on open, oldest
+    * first, then head the new segment with the replayed counters. At the
+    * first torn or corrupt frame the segment is cut there and every later
+    * one is deleted. Call once, before the first append. */
   def replay(onEvent: StoredEvent => Unit, onSeqMark: (String, Int, Long) => Unit): Unit = synchronized {
-    if (!Files.exists(logPath)) return
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(logPath), 1 << 16))
+    val counters = mutable.Map.empty[(String, Int), Long]
+    var torn = false
+    found.foreach { path =>
+      if (torn) Files.deleteIfExists(path)
+      else {
+        val maxSeq = mutable.Map.empty[(String, Int), Long]
+        val good = readFrames(path) { d =>
+          d.readByte() match {
+            case 0 =>
+              val topic = d.readUTF(); val part = d.readInt()
+              val seq = d.readLong(); val ts = d.readLong()
+              val key = if (d.readBoolean()) Some(d.readUTF()) else None
+              val payload = new Array[Byte](d.readInt()); d.readFully(payload)
+              raise(maxSeq, (topic, part), seq)
+              raise(counters, (topic, part), seq)
+              onEvent(StoredEvent(seq, topic, part, payload, ts, key))
+              true
+            case 1 =>
+              val (t, p, s) = (d.readUTF(), d.readInt(), d.readLong())
+              raise(counters, (t, p), s)
+              onSeqMark(t, p, s)
+              true
+            case _ => false
+          }
+        }
+        if (good < Files.size(path)) { truncate(path, good); torn = true }
+        closed :+= Closed(path, good, maxSeq.toMap, Files.getLastModifiedTime(path).toMillis)
+      }
+    }
+    found = Nil
+    if (counters.nonEmpty) appendFrames(seqMarks(counters))
+  }
+
+  /** Feed each intact frame body of `path` to `onFrame` (false: corrupt);
+    * returns the length of the intact prefix. */
+  private def readFrames(path: Path)(onFrame: DataInputStream => Boolean): Long = {
+    val in = new DataInputStream(new java.io.BufferedInputStream(Files.newInputStream(path), 1 << 16))
     var good = 0L
     try {
       var ok = true
@@ -204,138 +282,45 @@ final class WriteAheadLog(dir: Path, fsyncEachAppend: Boolean = false) {
         try {
           val len = in.readInt()
           val crcExpect = in.readLong()
-          if (len < 1 || len > (64 << 20)) ok = false
+          if (len < 1 || len > MaxFrameBytes) ok = false
           else {
             val bytes = new Array[Byte](len)
             in.readFully(bytes)
             val crc = new CRC32(); crc.update(bytes)
-            if (crc.getValue != crcExpect) ok = false
-            else {
-              val d = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
-              d.readByte() match {
-                case 0 =>
-                  val topic = d.readUTF(); val part = d.readInt()
-                  val seq = d.readLong(); val ts = d.readLong()
-                  val key = if (d.readBoolean()) Some(d.readUTF()) else None
-                  val payload = new Array[Byte](d.readInt()); d.readFully(payload)
-                  onEvent(StoredEvent(seq, topic, part, payload, ts, key))
-                case 1 =>
-                  onSeqMark(d.readUTF(), d.readInt(), d.readLong())
-                case _ => ok = false
-              }
-              if (ok) good += 4L + 8L + len
-            }
+            ok = crc.getValue == crcExpect &&
+              onFrame(new DataInputStream(new java.io.ByteArrayInputStream(bytes)))
+            if (ok) good += 12L + len
           }
         } catch { case _: EOFException => ok = false }
       }
     } finally in.close()
-    // drop any torn tail so the next append starts at a clean frame
-    if (good < Files.size(logPath)) {
-      val ch = java.nio.channels.FileChannel.open(logPath, java.nio.file.StandardOpenOption.WRITE)
-      try ch.truncate(good) finally ch.close()
-      out.close()
-      openAppend()
-    }
-  }
-
-  /** Arm the compaction catch-up capture: every frame appended from now on
-    * is ALSO retained in memory until the [[compact]] holding the returned
-    * token drains it into the rewritten log. The caller arms this while it
-    * still holds whatever lock makes its live-set snapshot consistent, so
-    * no append can fall between the snapshot and the rewrite — and wraps
-    * the whole arm→snapshot→compact sequence in [[exclusively]], so a
-    * concurrent cleanup can neither steal nor disarm this capture. */
-  def beginCapture(): Long = synchronized {
-    if (side == null) {
-      sideToken += 1
-      side = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    }
-    sideToken
-  }
-
-  /** Atomically rewrite the log to `seqs` marks + `live` events WITHOUT
-    * stalling appends for the duration of the rewrite. The snapshot is
-    * written to a tmp file OUTSIDE the append monitor; concurrent appends
-    * keep landing in the current log (still the durable copy) AND are
-    * captured as raw frames in a side buffer; the final swap — bounded by
-    * what arrived during the rewrite, not by the live set — drains the
-    * side buffer into the tmp under the monitor and renames. Holding the
-    * monitor across the whole rewrite meant every write blocked behind a
-    * full live-set file write; with a large mid-burst live buffer that
-    * stall was the gateway's burst worst-cycle p99. Crash safety is
-    * unchanged: a crash mid-compaction leaves the old log (including every
-    * frame appended meanwhile) intact, and stale tmps are swept on open. */
-  def compact(seqs: Map[(String, Int), Long], live: Iterable[StoredEvent],
-              token: Long = -1L): Unit =
-    compactLock.synchronized {
-      val tmp        = dir.resolve(s"hot.wal.compact.${java.util.UUID.randomUUID()}")
-      val tmpLog     = new TmpWal(tmp)
-      var swapped    = false
-      var mainClosed = false
-      // capture may already be armed by beginCapture() (the caller arms it
-      // BEFORE snapshotting its live set, closing the window where a write
-      // lands after the snapshot but before the rewrite starts, and passes
-      // the returned token here); a tokenless call self-arms
-      val tok = synchronized {
-        if (side == null) {
-          sideToken += 1
-          side = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          sideToken
-        } else if (token >= 0L) token else sideToken
-      }
-      try {
-        seqs.toSeq.sortBy(t => (t._1._1, t._1._2)).foreach { case ((t, p), s) => tmpLog.appendSeqMark(t, p, s) }
-        live.foreach(tmpLog.appendEvent)
-        synchronized {
-          side.foreach(tmpLog.writeRaw) // catch-up: frames appended during the rewrite
-          side = null
-          tmpLog.close()
-          out.close()
-          mainClosed = true
-          if (failNextSwap) {
-            failNextSwap = false
-            throw new java.io.IOException("injected swap failure (test hook)")
-          }
-          Files.move(tmp, logPath, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-          openAppend()
-          swapped = true
-        }
-      } finally {
-        synchronized {
-          // disarm ONLY the capture this compaction owns: an unconditional
-          // clear on the failure path would silently disarm a capture a
-          // concurrent cleanup armed after our swap
-          if (sideToken == tok) side = null
-          // if the rename threw AFTER the append stream was closed, reopen
-          // it on the (still intact) old log — otherwise every later
-          // append throws on a closed stream and the gateway bricks until
-          // restart while the old log remains perfectly usable
-          if (!swapped && mainClosed) openAppend()
-        }
-        if (!swapped) {
-          try tmpLog.close() catch { case _: Exception => () }
-          Files.deleteIfExists(tmp)
-        }
-      }
-    }
-
-  /** Minimal writer over an arbitrary path. Record bodies come from the
-    * OUTER [[encode]]/[[eventBody]] — format-identical to the live log BY
-    * CONSTRUCTION (an independent encoding here could drift and make
-    * compacted logs unreadable on the next restart). */
-  private final class TmpWal(path: Path) {
-    private val o = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path.toFile), 1 << 16))
-    def appendEvent(e: StoredEvent): Unit = writeRaw(encode(0)(eventBody(e)))
-    def appendSeqMark(t: String, p: Int, s: Long): Unit = writeRaw(encode(1) { d =>
-      d.writeUTF(t); d.writeInt(p); d.writeLong(s)
-    })
-    /** CRC-frame an encoded body (also the compaction catch-up path). */
-    def writeRaw(body: Array[Byte]): Unit = {
-      val crc = new CRC32(); crc.update(body)
-      o.writeInt(body.length); o.writeLong(crc.getValue); o.write(body)
-    }
-    def close(): Unit = o.close()
+    good
   }
 
   def close(): Unit = synchronized { out.close() }
+}
+
+object WriteAheadLog {
+  /** A closed segment: its size, the highest event sequence it holds per
+    * (topic, partition), and when it closed (wall clock). */
+  private final case class Closed(path: Path, bytes: Long, maxSeq: Map[(String, Int), Long], closedAtMs: Long)
+
+  private val Segment = """hot-(\d{20})\.wal""".r
+
+  private def segmentPath(dir: Path, id: Long): Path = dir.resolve(f"hot-$id%020d.wal")
+
+  /** A segment's id; the legacy single-file log is segment 0. */
+  private def idOf(p: Path): Option[Long] = p.getFileName.toString match {
+    case Segment(id) => Some(id.toLong)
+    case "hot.wal"   => Some(0L)
+    case _           => None
+  }
+
+  private def raise(m: mutable.Map[(String, Int), Long], k: (String, Int), v: Long): Unit =
+    if (m.getOrElse(k, 0L) < v) m.update(k, v)
+
+  private def truncate(path: Path, len: Long): Unit = {
+    val ch = FileChannel.open(path, StandardOpenOption.WRITE)
+    try ch.truncate(len) finally ch.close()
+  }
 }

@@ -4,6 +4,7 @@ import graft.serve._
 import graft.table.EventTable
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** INV-2 analogue: a 202-acknowledged write survives a gateway crash (the
   * reference gets this from RocksDB's WAL, `rocksdb.rs:579-592`), and the
@@ -12,6 +13,20 @@ import java.nio.file.Files
   * `flusher/mod.rs:338-456`). */
 class DurabilitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private def segmentFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".wal")).toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  private def replayedSeqs(dir: java.nio.file.Path): Seq[Long] = {
+    val seqs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val wal  = new WriteAheadLog(dir)
+    wal.replay(e => seqs += e.sequence, (_, _, _) => ())
+    wal.close()
+    seqs.toSeq
+  }
 
   test("gateway crash after 202: restart replays the WAL, flush loses nothing") {
     val dir = TestSpark.tempDir("graft-wal-crash-").toString
@@ -129,30 +144,28 @@ class DurabilitySpec extends AnyFunSuite {
     assert(rebuilt.size("t") === 3)
   }
 
-  test("failed compaction swap: the WAL stays appendable and loses nothing") {
-    // The swap closes the append stream before the atomic rename; if the
-    // rename throws, the failure path must reopen the stream on the (still
-    // intact) old log — without that, every later append hits a closed
-    // stream and the gateway 500s all writes until restart.
-    val dir = TestSpark.tempDir("graft-wal-swapfail-")
+  test("failed roll: the WAL stays appendable and loses nothing") {
+    // A roll opens the next segment before it closes the head; if that
+    // fails, the head must stay the append target — without that, every
+    // later append hits a closed stream and the gateway 500s all writes
+    // until restart.
+    val dir = TestSpark.tempDir("graft-wal-rollfail-")
     val wal = new WriteAheadLog(dir)
-    val e1  = StoredEvent(1L, "t", 0, "a".getBytes, 100L, None)
-    val e2  = StoredEvent(2L, "t", 0, "b".getBytes, 101L, None)
-    wal.appendEvent(e1)
-    wal.failNextSwap = true
-    intercept[java.io.IOException] { wal.compact(Map(("t", 0) -> 1L), Seq(e1)) }
-    wal.appendEvent(e2) // would throw on a closed stream before the fix
+    val hot = new HotBuffer(Some(wal))
+    hot.write("t", 0, "a".getBytes, 100L, None)
+    wal.failNextRoll = true
+    intercept[java.io.IOException] { hot.cleanup("t", Map(0 -> 1L)) }
+    assert(segmentFiles(dir).size === 1 && wal.segments === 1, "the failed roll must leave no partial segment")
+    hot.write("t", 0, "b".getBytes, 101L, None) // would throw on a closed stream
     wal.close()
-    val replayed = scala.collection.mutable.ArrayBuffer.empty[Long]
-    new WriteAheadLog(dir).replay(e => replayed += e.sequence, (_, _, _) => ())
-    assert(replayed.toSeq === Seq(1L, 2L), "both events must survive the failed swap")
-    // and a later compaction over the same WAL succeeds normally
+    assert(replayedSeqs(dir) === Seq(1L, 2L), "both events must survive the failed roll")
+    // and a later roll over the same WAL succeeds and drops the committed segments
     val wal2 = new WriteAheadLog(dir)
-    wal2.compact(Map(("t", 0) -> 2L), Seq(e2))
-    val after = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val hot2 = new HotBuffer(Some(wal2))
+    hot2.write("t", 0, "c".getBytes, 102L, None)
+    hot2.cleanup("t", Map(0 -> 2L))
     wal2.close()
-    new WriteAheadLog(dir).replay(e => after += e.sequence, (_, _, _) => ())
-    assert(after.toSeq === Seq(2L))
+    assert(replayedSeqs(dir) === Seq(3L))
   }
 
   test("torn WAL tail: replay keeps the intact prefix and drops the partial frame") {
@@ -161,8 +174,8 @@ class DurabilitySpec extends AnyFunSuite {
     wal.appendEvent(StoredEvent(1L, "t", 0, "aaa".getBytes, 100L, Some("k1")))
     wal.appendEvent(StoredEvent(2L, "t", 0, "bbb".getBytes, 200L, None))
     wal.close()
-    // simulate a crash mid-append: chop the last 3 bytes
-    val log = dir.resolve("hot.wal")
+    // simulate a crash mid-append: chop the last 3 bytes of the last segment
+    val log = segmentFiles(dir).last
     val ch  = java.nio.channels.FileChannel.open(log, java.nio.file.StandardOpenOption.WRITE)
     try ch.truncate(Files.size(log) - 3) finally ch.close()
     val replayed = scala.collection.mutable.ArrayBuffer.empty[StoredEvent]
@@ -176,6 +189,58 @@ class DurabilitySpec extends AnyFunSuite {
     val wal3  = new WriteAheadLog(dir)
     wal3.replay(again += _, (_, _, _) => ())
     assert(again.map(_.sequence) === Seq(1L, 2L))
+  }
+
+  test("a torn frame in a middle segment cuts it there and drops the later segments") {
+    val dir = TestSpark.tempDir("graft-wal-tornmid-")
+    val wal = new WriteAheadLog(dir)
+    val hot = new HotBuffer(Some(wal))
+    def write(n: Int): Unit = (1 to n).foreach(i => hot.write("t", 0, s"p$i".getBytes, 100L + i, None))
+    write(2); hot.cleanup("t", Map.empty) // segment 1: events 1-2
+    write(2); hot.cleanup("t", Map.empty) // segment 2: events 3-4
+    write(1)                              // segment 3 (head): event 5
+    wal.close()
+    val Seq(_, mid, last) = segmentFiles(dir)
+    // corrupt the payload of the middle segment's last frame (event 4)
+    val bytes = Files.readAllBytes(mid)
+    bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0xff).toByte
+    Files.write(mid, bytes)
+    val rebuilt = new HotBuffer(Some(new WriteAheadLog(dir)))
+    assert(rebuilt.readPartition("t", 0, 0L, 10).map(_.sequence) === Seq(1L, 2L, 3L),
+      "replay must stop at the torn frame: no sequence gap")
+    assert(!Files.exists(last), "segments after the torn one must be deleted")
+    assert(rebuilt.highWatermarks("t") === Map(0 -> 3L))
+    assert(rebuilt.write("t", 0, "next".getBytes, 200L, None) === ((4L, false)))
+  }
+
+  test("a legacy single-file hot.wal with leading seq-marks replays whole") {
+    // a compacted log of the single-file format: counters first, then the
+    // live events
+    val dir = TestSpark.tempDir("graft-wal-legacy-")
+    val legacy = dir.resolve("hot.wal")
+    val out = new java.io.DataOutputStream(Files.newOutputStream(legacy))
+    def frame(body: java.io.DataOutputStream => Unit): Unit = {
+      val b = new java.io.ByteArrayOutputStream(); val d = new java.io.DataOutputStream(b)
+      body(d); d.flush()
+      val crc = new java.util.zip.CRC32(); crc.update(b.toByteArray)
+      out.writeInt(b.size()); out.writeLong(crc.getValue); out.write(b.toByteArray)
+    }
+    def mark(p: Int, s: Long) = frame { d => d.writeByte(1); d.writeUTF("t"); d.writeInt(p); d.writeLong(s) }
+    def event(s: Long, key: Option[String]) = frame { d =>
+      d.writeByte(0); d.writeUTF("t"); d.writeInt(0); d.writeLong(s); d.writeLong(1000L + s)
+      d.writeBoolean(key.isDefined); key.foreach(d.writeUTF); d.writeInt(1); d.write('x')
+    }
+    mark(0, 5L); mark(1, 7L)
+    event(6L, Some("k6")); event(7L, None)
+    out.close()
+    val hot = new HotBuffer(Some(new WriteAheadLog(dir)))
+    assert(hot.readPartition("t", 0, 0L, 10).map(_.sequence) === Seq(6L, 7L))
+    assert(hot.highWatermarks("t") === Map(0 -> 7L, 1 -> 7L))
+    assert(hot.write("t", 0, "retry".getBytes, 2000L, Some("k6")) === ((6L, true)))
+    assert(hot.write("t", 1, "next".getBytes, 2000L, None) === ((8L, false)))
+    // once its events are committed, the legacy file is deleted like any segment
+    hot.cleanup("t", Map(0 -> 7L))
+    assert(!Files.exists(legacy))
   }
 
   test("S4: a chunked body without Content-Length cannot bypass the byte budget") {
@@ -198,7 +263,7 @@ class DurabilitySpec extends AnyFunSuite {
     } finally gw.stop()
   }
 
-  test("orphan GC: stale staging dirs and WAL compact tmps are swept") {
+  test("orphan GC: stale staging dirs are swept") {
     val root = TestSpark.tempDir("graft-sweep-").toString
     val stale = java.nio.file.Paths.get(root, ".staging", "dead-beef")
     Files.createDirectories(stale)
@@ -212,12 +277,63 @@ class DurabilitySpec extends AnyFunSuite {
     Files.createDirectories(fresh)
     assert(EventTable.sweepStaging(root) === 0)
     assert(Files.exists(fresh))
+  }
 
-    val walDir = TestSpark.tempDir("graft-walsweep-")
-    Files.writeString(walDir.resolve("hot.wal.compact.abc"), "garbage")
-    new WriteAheadLog(walDir).close()
-    assert(!Files.exists(walDir.resolve("hot.wal.compact.abc")),
-      "stale compact tmp must be swept on open")
+  test("segments left by a crash between roll and delete are replayed in order, and the next cleanup deletes them") {
+    val dir = TestSpark.tempDir("graft-wal-rolled-")
+    val wal = new WriteAheadLog(dir)
+    (1 to 3).foreach { i =>
+      wal.appendEvent(StoredEvent(i.toLong, "t", 0, s"p$i".getBytes, 100L + i, Some(s"k$i")))
+      wal.roll(Map(("t", 0) -> i.toLong))
+    }
+    wal.close() // crash: rolled three times, nothing deleted
+    assert(segmentFiles(dir).size === 4)
+    val hot = new HotBuffer(Some(new WriteAheadLog(dir)))
+    assert(hot.readPartition("t", 0, 0L, 10).map(_.sequence) === Seq(1L, 2L, 3L))
+    assert(hot.write("t", 0, "retry".getBytes, 200L, Some("k2")) === ((2L, true)))
+    hot.cleanup("t", Map(0 -> 3L))
+    assert(segmentFiles(dir).size === 1, s"only the new head may remain: ${segmentFiles(dir)}")
+    // the counter survives in the head's seq-marks
+    val again = new HotBuffer(Some(new WriteAheadLog(dir)))
+    assert(again.size("t") === 0)
+    assert(again.write("t", 0, "next".getBytes, 300L, None) === ((4L, false)))
+  }
+
+  test("a steady write + flush loop keeps a bounded number of WAL segments") {
+    Seq(0L, 2000L).foreach { retainMs =>
+      val dir  = TestSpark.tempDir("graft-wal-bound-")
+      val hot  = new HotBuffer(Some(new WriteAheadLog(dir)))
+      var prev = Map.empty[Int, Long]
+      (1 to 40).foreach { i =>
+        (1 to 20).foreach(k => hot.write("t", k % 4, s"p$i-$k".getBytes, 1000L * i, None))
+        // a flush commits what was acked before it started; later writes wait
+        hot.cleanup("t", prev, retainMs, nowMs = 1000L * i)
+        prev = hot.highWatermarks("t")
+        val n = segmentFiles(dir).size
+        assert(n <= 2 + retainMs / 1000L + 1, s"retainMs=$retainMs: $n segments after flush $i")
+      }
+    }
+  }
+
+  test("a future-dated event under retention does not keep WAL segments past retainMs") {
+    val dir = TestSpark.tempDir("graft-wal-future-")
+    val wal = new WriteAheadLog(dir)
+    val hot = new HotBuffer(Some(wal))
+    val (t0, retainMs) = (1000000L, 2000L)
+    hot.write("t", 0, "future".getBytes, t0 + 86400000L, None)
+    val futureSeg = segmentFiles(dir).last
+    (1 to 5).foreach { i =>
+      hot.write("t", 0, s"p$i".getBytes, t0, None)
+      hot.cleanup("t", hot.highWatermarks("t"), retainMs, nowMs = t0 + 1000L * i)
+    }
+    assert(hot.readPartition("t", 0, 0L, 10).map(_.sequence) === Seq(1L),
+      "the future-dated event stays hot in memory")
+    assert(!Files.exists(futureSeg), "its segment is deleted once closed longer than retainMs")
+    assert(segmentFiles(dir).size <= 2 + retainMs / 1000L)
+    wal.close()
+    // after a restart it is served cold only
+    val restarted = new HotBuffer(Some(new WriteAheadLog(dir)))
+    assert(!restarted.readPartition("t", 0, 0L, 10).exists(_.sequence == 1L))
   }
 
   test("bounded flush drains a backlog in multiple size-capped passes, sequences dense") {

@@ -698,6 +698,13 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.contains("""zombi_hot_storage_events{topic="gw1",partition="2"}"""))
     assert(m.contains("zombi_flush_events_total"))
     assert(m.contains("zombi_flush_bytes_total"))
+    // WAL gauges are read live: a write grows the head segment
+    def gauge(body: String, name: String) =
+      body.linesIterator.collectFirst { case l if l.startsWith(s"$name ") => l.drop(name.length + 1).toDouble }.get
+    assert(gauge(m, "zombi_wal_segments") >= 1)
+    val bytes = gauge(m, "zombi_wal_bytes")
+    assert(post("/tables/gwwal", """{"payload":"x","partition":0}""").statusCode() === 202)
+    assert(gauge(get("/metrics").body(), "zombi_wal_bytes") > bytes)
   }
 
   test("F13: flush auto-registers the table against an external catalog (with F14 retry)") {
